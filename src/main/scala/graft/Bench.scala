@@ -1,5 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, StandardCopyOption}
+
+/** Query-surface bench: `runMain graft.Bench [name ...]` times every
+  * SparkEntry query (or only the named ones) on `$SPARK_GRAFT_SF_DIR`
+  * and prints one compact JSON line; the full artifact goes to
+  * `BENCH_FULL.<pid>.json` and its `BENCH_FULL.last.json` alias. */
 object Bench {
   /** Full-materialization sink for every timed query (harness v2,
     * round 15): `count()` let Catalyst PRUNE work that does not affect
@@ -17,7 +22,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val unknown = args.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val selected = SparkEntry.queries.filter { case (k, _) =>
+      args.isEmpty || args.contains(k)
+    }
     // Shuffle/spill scratch on tmpfs when the host has one: scratch is
     // ephemeral by contract (dies with the app), and on a single-node
     // harness tmpfs takes disk fsync latency — the dominant VARIANCE
@@ -43,14 +52,7 @@ object Bench {
         d.getAbsolutePath
       } else sys.props("java.io.tmpdir")
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.local.dir", localDir)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("spark.local.dir" -> localDir)
     // Steady-state warmup (excluded from timings, like JIT warmup in any
     // benchmark): the first streaming query in a JVM pays ~6s of
     // machinery class-loading/state-store init, the first parquet scan
@@ -98,7 +100,7 @@ object Bench {
     // contention burst does maximum damage to the artifact (round 9:
     // the s/st segment read 3-9x inflated while m/p/r sat at 1.2x).
     // Interleaving decorrelates segment-local noise from family totals.
-    val byFamily = SparkEntry.queries.toSeq.sortBy(_._1)
+    val byFamily = selected.toSeq.sortBy(_._1)
       .groupBy { case (k, _) => k.takeWhile(_.isLetter) }
       .toSeq.sortBy(_._1).map(_._2)
     val order = (0 until byFamily.map(_.size).max)
@@ -230,11 +232,16 @@ object Bench {
     val hostJson =
       s"""{"pass1":${HostLoad.json(HostLoad.delta(h0, h1))},""" +
         s""""pass2":${HostLoad.json(HostLoad.delta(h1, h2))}}"""
+    //  - `run_id` = pid plus JVM start ms: names the run that wrote the
+    //    `BENCH_FULL.last.json` alias, without mtime matching.
+    val runId = s"${ProcessHandle.current().pid()}-" +
+      java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime
     val fullJson =
       s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","queries":${qmap(results, 6)},""" +
       s""""pass1":${qmap(pass1, 6)},"pass2":${qmap(pass2, 6)},""" +
       s""""warmup":$warmupJson,"host":$hostJson,""" +
-      s""""order":"family-interleaved","passes":2$failed$errJson,"sf":$sfNum}"""
+      s""""order":"family-interleaved","passes":2$failed$errJson,"sf":$sfNum,""" +
+      s""""run_id":"$runId"}"""
     // RUN-SCOPED evidence file: a third party (judge, CI) running the
     // bench must NOT clobber the committed BENCH_FULL.json in the
     // working tree. Each run writes BENCH_FULL.<pid>.json (or the
@@ -253,12 +260,19 @@ object Bench {
     // reconstruct per-query truth by matching pid files to driver
     // wrappers by the second). Same content, overwritten per run; the
     // deliberately-promoted BENCH_FULL.json is still never clobbered.
+    // Each file is written to a temp sibling and renamed into place, so
+    // a kill mid-write leaves the previous file whole, never a
+    // truncated one; `run_id` names the run that wrote it.
     val lastAlias = benchOut.resolveSibling("BENCH_FULL.last.json")
     Seq(benchOut, lastAlias).foreach { p =>
+      val tmp = p.resolveSibling(s"${p.getFileName}.$runId.tmp")
       try {
-        java.nio.file.Files.writeString(p, fullJson + "\n")
+        Files.writeString(tmp, fullJson + "\n")
+        Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
+          StandardCopyOption.REPLACE_EXISTING)
         System.err.println(s"[bench] full evidence -> $p")
       } catch { case e: Exception =>
+        tmp.toFile.delete()
         System.err.println(s"[bench] $p write failed: $e")
       }
     }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints `explain("formatted")` for selected queries so
   * scan pruning (PushedFilters/ReadSchema), join strategies (broadcast
   * vs shuffle) and WholeStageCodegen spans can be reviewed — the
@@ -48,11 +46,7 @@ object Explain {
         // the key-pruned label fetch + bounded rerank), t22's
         // zero-shuffle memoized encode scan
         "s25_graph_filtered", "t22_unigram_encode")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -1,46 +1,38 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Sweep-scale gate audit: run named SparkEntry queries against any
-  * corpus dir and report every boolean `*_ok` gate column's MIN (all
-  * rows must hold) plus any `recall4`/`reach4` measurements. The
-  * sf0.01 Verify gate enforces these in-run; this main is how a
-  * deep-decade sweep proves the same gates hold where the oracle
-  * harness doesn't reach (e.g. recall floors after an index-kernel
-  * change at scales where the new lane actually engages). */
+  * corpus dir, apply the Verify invariant gate
+  * ([[Verify.gateInvariants]]: every `pass`/`*_pass`/`*_ok` column
+  * must hold on every row) and report any `recall4`/`reach4`
+  * measurements' MAX. The sf0.01 Verify gate enforces these in-run;
+  * this main is how a deep-decade sweep proves the same gates hold
+  * where the oracle harness doesn't reach (e.g. recall floors after an
+  * index-kernel change at scales where the new lane actually engages).
+  * Exits 1 when any query fails its gate or errors. */
 object GateCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     var bad = 0
     args.drop(1).foreach { name =>
       try {
         val df = SparkEntry.queries(name)(spark, sfDir).localCheckpoint(true)
-        val okCols = df.schema.fields
-          .filter(f => f.dataType == org.apache.spark.sql.types.BooleanType &&
-            (f.name.endsWith("_ok") || f.name == "pass")).map(_.name)
+        val gate = try { Verify.gateInvariants(df); "" } catch {
+          case e: IllegalStateException =>
+            bad += 1
+            s"  <-- GATE FAILED: ${e.getMessage}"
+        }
         val measureCols = df.schema.fields.map(_.name)
           .filter(n => n.endsWith("4") && (n.startsWith("recall") || n.startsWith("reach")))
-        val aggs = okCols.map(c => min(col(c)).as(c)) ++
-          measureCols.map(c => max(col(c)).as(c))
-        val n = df.count()
-        if (aggs.isEmpty) println(s"[gate] $name rows=$n (no gate columns)")
-        else {
-          val r = df.agg(aggs.head, aggs.tail: _*).head() // bounded: ONE aggregate row
-          val rendered = (okCols ++ measureCols).zipWithIndex
-            .map { case (c, i) => s"$c=${r.get(i)}" }.mkString(" ")
-          val allOk = okCols.indices.forall(i => r.getBoolean(i))
-          if (!allOk) bad += 1
-          println(s"[gate] $name rows=$n $rendered${if (allOk) "" else "  <-- GATE FAILED"}")
-        }
+        val measures =
+          if (measureCols.isEmpty) ""
+          else {
+            val aggs = measureCols.map(c => max(col(c)).as(c))
+            val r = df.agg(aggs.head, aggs.tail: _*).head() // bounded: ONE aggregate row
+            measureCols.zipWithIndex.map { case (c, i) => s" $c=${r.get(i)}" }.mkString
+          }
+        println(s"[gate] $name rows=${df.count()}$measures$gate")
         spark.catalog.clearCache()
       } catch {
         case e: Throwable =>

@@ -29,7 +29,7 @@ object RewriteSelfVecDot extends Rule[LogicalPlan] {
   *
   * {{{
   *   spark.sql.extensions=graft.GraftExtensions          // config, or
-  *   SparkSession.builder().withExtensions(new GraftExtensions)
+  *   SparkSession.builder.withExtensions(new GraftExtensions)
   * }}}
   *
   * `vec_dot(a, b)` and `vec_norm2(a)` become SQL functions planned as

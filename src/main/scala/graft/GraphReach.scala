@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Sweep-scale serving audit for the graph index: serve a corpus dir's
   * base graph artifact at explicit beam widths and print (beam,
   * recall, reach) rows — how [[graft.operators.Similarity.beamForAnchors]]'s
@@ -19,18 +17,13 @@ object GraphReach {
       if (args.length > 1) args(1).split(",").map(_.toInt).toSeq
       else Seq(8, 16, 32)
     val incr = args.contains("incr")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // deep-decade runs scale shuffle partitions past the core count so
     // the build's diversify shuffle spills instead of OOMing (the x30
     // envelope lesson: partition count, not algorithm)
-    val parts = if (args.length > 2) args(2) else cpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val parts =
+      if (args.length > 2) Seq("spark.sql.shuffle.partitions" -> args(2))
+      else Nil
+    val spark = GraftSession.local(parts: _*)
     val t0 = System.nanoTime()
     val rows =
       if (incr) graft.operators.Similarity.graphIncrReachAt(spark, dir, beams)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Ad-hoc single-query runner: `runMain graft.Run <sfDir> <name> [n]`
   * prints the first n rows WITHOUT the Verify invariant gate — the tool
@@ -8,13 +7,7 @@ object Run {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val name = args(1)
     val n = if (args.length > 2) args(2).toInt else 20
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     SparkEntry.queries(name)(spark, sfDir).show(n, truncate = false)
     spark.stop()
   }

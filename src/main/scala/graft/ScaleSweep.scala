@@ -283,14 +283,8 @@ object ScaleSweep {
       "t20_unigram_train" -> (graft.operators.TextAnalysis.t20UnigramTrain _),
       "t21_kn_perplexity" -> (graft.operators.TextAnalysis.t21KnPerplexity _),
       "t22_unigram_encode" -> (graft.operators.TextAnalysis.t22UnigramEncode _))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
+    val cpus = spark.sparkContext.defaultParallelism // local[n] ⇒ n
 
     val flagships: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
       "p1_minhash_lsh"   -> (graft.operators.Dedup.p1MinHashLsh _),
@@ -486,8 +480,7 @@ object ScaleSweep {
       // state only needs to fit the heap, not shrink forever. This is
       // exactly what a 1000-executor cluster does: shuffle width grows
       // with data until tasks fit, then stops.
-      val shufP = math.min(8 * cpus.toInt,
-        math.max(cpus.toInt, cpus.toInt * n / 10))
+      val shufP = math.min(8 * cpus, math.max(cpus, cpus * n / 10))
       spark.conf.set("spark.sql.shuffle.partitions", shufP.toString)
       if (n > 1)
         ensureScaled(spark, base, dir, n, full = !docsOnly,

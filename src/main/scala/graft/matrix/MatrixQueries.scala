@@ -1576,8 +1576,6 @@ object MatrixQueries {
     }.reduce((a, b) => (a._1 + b._1, a._2 + b._2))
     val sigma2 = rqNum / rqDen
     val delta = math.sqrt(math.max(sigma2, 0.0)) / 7.0
-    if (sys.env.contains("GRAFT_M19_TRACE"))
-      System.err.println(s"[m19] power done t=${System.nanoTime() / 1e9}")
     // A·v = S·v + δ·v — one bvMatvec plus a narrow co-partitioned axpy
     def amat(v: BlockVec): BlockVec =
       bvMatvec(sByCol, v, part).join(v, part).mapValues { case (sv, vv) =>
@@ -1725,15 +1723,10 @@ object MatrixQueries {
         var j = 0
         var inner = true
         while (inner && j < mRestart) {
-          val trace = sys.env.contains("GRAFT_M19_TRACE")
-          def tr(tag: String): Unit = if (trace)
-            System.err.println(s"[m19] $tag t=${System.nanoTime / 1e9}")
           var w: BlockVec = keep(aop(v))
-          tr("w-built")
           // fused two-pass CGS2 — the shared Arnoldi core (see cgs2Step)
           val (hCol, hj1, w2) = cgs2Step(basis, w, part, j,
             (x: BlockVec) => keep(x))
-          tr("c2-done")
           w = w2
           var i = 0
           while (i <= j) { h(i)(j) = hCol(i); i += 1 }
@@ -1752,9 +1745,6 @@ object MatrixQueries {
           g(j + 1) = -sn(j) * g(j); g(j) = cs(j) * g(j)
           iters += 1
           j += 1
-          if (sys.env.contains("GRAFT_M19_TRACE"))
-            System.err.println(
-              s"[m19] iter $iters t=${System.nanoTime() / 1e9}")
           if (math.abs(g(j)) / bNrm < tol) inner = false // converged
           else if (hj1 < 1e-300) inner = false // happy breakdown
           else if (j < mRestart) {
@@ -1774,7 +1764,6 @@ object MatrixQueries {
             basis.foreachPartition(_ => ())
             v = keep(basis.mapValues(_.last))
             retireCached(cached, Seq(basis, v, x, b0, xStar, sByCol, pv))
-            tr("ckpt-done")
           }
         }
         // back-substitute y from the rotated triangular H, blend

@@ -1929,15 +1929,7 @@ object Similarity {
     }
 
   def s14AnnLifecycle(s: SparkSession, d: String): DataFrame = {
-    val trace = sys.env.contains("GRAFT_S14_TRACE")
-    var tT = System.nanoTime()
-    def mark(what: String): Unit = if (trace) {
-      val t1 = System.nanoTime()
-      System.err.println(f"[s14-trace] $what ${(t1 - tT) / 1e9}%.2f s")
-      tT = t1
-    }
     val (gen0, anchors, nCells) = ivfIndex(s, d)
-    mark("ivfIndex")
     val nProbe = math.max(4, nCells / 4)
     val books = pqBooks(s, d, prepared(s, d))
     val tomb = tombstones(s, d)
@@ -1961,9 +1953,7 @@ object Similarity {
       // The delta is the LSM memtable: broadcast-sized by construction,
       // so it lands as one file per touched partition (coalesce(1) is
       // the scale-honest write shape for a frame that small)
-      mark("prep")
       compactIndex(s, gen0, gen1.getAbsolutePath, stale)
-      mark("compact")
       // one file per touched partition dir, like the compaction's own
       // rewrite: clustering by the partition columns keeps the
       // one-file-per-dir layout while the ~|touched dirs| parquet
@@ -1974,23 +1964,19 @@ object Similarity {
       delta.repartition(col("label"), col("cell"))
         .write.mode("append").partitionBy("label", "cell")
         .parquet(gen1.getAbsolutePath)
-      mark("fold+append")
       // serve gen1 plain (the whole point: no mask, no delta)
       val probe = probeIndex(s, gen1.getAbsolutePath, prepared(s, d),
         anchors, nProbe)
       registerGatedPlan(s, "s14", probe)
       val res = probe.localCheckpoint(true)
-      mark("probe gen1")
       // identity witness: the probe ANSWER over the durable from-scratch
       // final-corpus index — index static, probe deterministic, so the
       // answer itself is a durable frame; only the gen1 side (folded
       // this run) is probed live
       val ref = s14FoldRef(s, d)
-      mark("foldRef")
       val resRows = res.collect() // bounded: <= NQueries*K gate rows — shared by fold and recall gates
       val foldOk = resRows.map(_.toSeq).toSet ==
         ref.collect().map(_.toSeq).toSet // bounded: <= NQueries*K witness rows
-      mark("foldOk")
       // S11 through gen1: label dirs pruned first, exact inside labels.
       // The finalCorpus reference side is bit-deterministic from the
       // corpus alone, so it is a durable witness — only the gen1 side
@@ -1999,7 +1985,6 @@ object Similarity {
         s14FilteredTopK(s, d, s.read.parquet(gen1.getAbsolutePath))
           .collect().map(_.toSeq).toSet == // bounded: <= NQueries*K gate rows
           s14FilteredWitness(s, d).collect().map(_.toSeq).toSet
-      mark("filteredOk")
       // recall vs the durable exact-top-K witness over the final corpus,
       // computed DRIVER-SIDE from the already-collected gate rows:
       // intersect().count() paid two extra jobs plus a shuffle for
@@ -2010,7 +1995,6 @@ object Similarity {
       val ni = res.schema.fieldIndex("neighbor_id")
       val resPairs = resRows.map(r => (r.getLong(qi), r.getLong(ni))).toSet
       val recall = (resPairs & exactPairs).size.toDouble / exactPairs.size
-      mark("recall")
       res
         .withColumn("recall4", lit(math.round(recall * 1e4) / 1e4))
         .withColumn("recall_ok", lit(recall >= 0.7))

@@ -1749,22 +1749,12 @@ object Streaming {
     * served union still bit-matches the one-shot witness. */
   def st18StreamAnnServe(s0: SparkSession, d: String): DataFrame = {
     val s = scoped(s0)
-    val trace = sys.env.contains("GRAFT_ST18_TRACE")
-    var tT = System.nanoTime()
-    def mark(what: String): Unit = if (trace) {
-      val t1 = System.nanoTime()
-      System.err.println(f"[st18-trace] $what ${(t1 - tT) / 1e9}%.2f s")
-      tT = t1
-    }
     withWorkspace("st18") { (work, ckpt) =>
       val inDir = s"$work/in"
       val outDir = s"$work/out"
       val schema = st18WriteInputs(s, d, inDir)
-      mark("stage inputs")
-      val q = st18StartServing(s, d, schema, inDir, outDir,
-        ckpt.getAbsolutePath, afterBatch = id => mark(s"batch $id"))
-      q.awaitTermination()
-      mark("stream drained")
+      st18StartServing(s, d, schema, inDir, outDir, ckpt.getAbsolutePath)
+        .awaitTermination()
       val served = s.read.parquet(s"$outDir/batch-*")
       // bounded: the identity gate compares ≤ NQueries·K rows — driver-side
       // multiset equality, not exceptAll shuffles
@@ -1816,8 +1806,7 @@ object Streaming {
     * overwrite never changes surviving bytes, only restores them. */
   private[graft] def st18StartServing(s: SparkSession, d: String,
                                       schema: StructType, inDir: String,
-                                      outDir: String, ckpt: String,
-                                      afterBatch: Long => Unit = _ => ())
+                                      outDir: String, ckpt: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Similarity
     import graft.functions.VectorFunctions.vecNorm2
@@ -1834,8 +1823,6 @@ object Streaming {
         Similarity.probeIndex(s, path, prep, anchors, nProbe)
           .withColumn("batch_id", lit(id))
           .write.mode("overwrite").parquet(s"$outDir/batch-$id")
-        afterBatch(id)
-        ()
       }
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow()).start()
@@ -1986,13 +1973,6 @@ object Streaming {
     val raw = graft.sources.Tables.embeddings(s, d)
     val (incrPath, anchors) = Similarity.graphIncrPath(s, d)
     withWorkspace("st19") { (work, ckpt) =>
-      val trace = sys.env.contains("GRAFT_ST19_TRACE")
-      var t0 = System.nanoTime()
-      def mark(what: String): Unit = if (trace) {
-        val t1 = System.nanoTime()
-        System.err.println(f"[st19-trace] $what ${(t1 - t0) / 1e9}%.2f s")
-        t0 = t1
-      }
       val gDir = s"$work/graph"
       // hardlink the immutable base generation + entry reps into the
       // workspace (st12's staging; links cost metadata only and the
@@ -2003,12 +1983,8 @@ object Streaming {
       val inDir = s"$work/in"
       raw.filter(col("vec_id") % 10 === 9).repartition(nEpochs)
         .write.parquet(inDir)
-      mark("stage inputs")
-      val q = st19StartIngest(s, raw.schema, inDir, gDir, anchors,
-        ckpt.getAbsolutePath, lane = lane,
-        afterEpoch = id => mark(s"epoch $id"))
-      q.awaitTermination()
-      mark("stream drained")
+      st19StartIngest(s, raw.schema, inDir, gDir, anchors,
+        ckpt.getAbsolutePath, lane = lane).awaitTermination()
       // exactly-once audit: the delta store holds every batch id
       // exactly once and nothing else
       val batchIds = raw.filter(col("vec_id") % 10 === 9).select(col("vec_id"))
@@ -2019,7 +1995,6 @@ object Streaming {
         deltaIds.join(batchIds, Seq("vec_id"), "left_anti").count() == 0
       // serve through the streamed artifact: the same 3-way merged
       // point fetch + fused serve/reach beam as s22
-      mark("append audit")
       val e = Similarity.prepared(s, d)
       val sample = e.filter(col("vec_id") % 10 === 9)
         .orderBy(col("vec_id")).limit(32).localCheckpoint(true)
@@ -2028,8 +2003,7 @@ object Streaming {
         Similarity.fetchIncrFn(s, gDir), anchors, reps, e, sample)
       val all = scored.filter(col("query_id") < Similarity.nQueries &&
         col("query_id") =!= col("neighbor_id"))
-      mark("serve beam")
-      val res = Similarity.withRecallGate(s, d, "st19",
+      Similarity.withRecallGate(s, d, "st19",
         Similarity.rerank(all).select(col("query_id"), col("neighbor_id"),
           col("cos4"), col("rn")),
         floor = 0.7)
@@ -2037,15 +2011,9 @@ object Streaming {
         .withColumn("reach_ok", lit(reachFrac >= 0.9))
         .withColumn("append_ok", lit(appendedOk))
         .localCheckpoint(true) // eager: the workspace dies with the return
-      mark("gates")
-      res
     }
   }
 
-  /** Starts (or RESTARTS, from the same checkpoint) st19's graph
-    * ingest stream. Sink contract as documented on
-    * [[st19StreamGraphIngest]]; `beforeEpoch`/`afterEpoch` are the
-    * spec's kill-window hooks (st12's pattern). */
   /** Applied-state point fetch for the search lane: base + the APPLIED
     * epochs' delta/back files only (the replay-determinism contract —
     * a half-published epoch's own files must not feed its recompute),
@@ -2149,11 +2117,12 @@ object Streaming {
     if (SearchLaneSecPerInsert * nBatch <
         BatchLaneSecPerRow * (nBase.toDouble + nBatch)) "search" else "batch"
 
+  /** Starts (or RESTARTS, from the same checkpoint) st19's graph
+    * ingest stream. Sink contract as documented on
+    * [[st19StreamGraphIngest]]. */
   private[graft] def st19StartIngest(s: SparkSession, schema: StructType,
       inDir: String, gDir: String,
       anchors: Array[(Int, Array[Double])], ckpt: String,
-      beforeEpoch: Long => Unit = _ => (),
-      afterEpoch: Long => Unit = _ => (),
       lane: String = "batch")
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Similarity
@@ -2164,7 +2133,6 @@ object Streaming {
       .option("maxFilesPerTrigger", "1").parquet(inDir)
       .writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        beforeEpoch(id)
         val applied = readAppliedEpochs(gDir)
         if (!applied.contains(id)) {
           // candidate state = base + APPLIED epochs only: a replay of
@@ -2289,8 +2257,6 @@ object Streaming {
           rm(new java.io.File(stage))
           markEpochApplied(gDir, applied + id)
         }
-        afterEpoch(id)
-        ()
       }
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow()).start()

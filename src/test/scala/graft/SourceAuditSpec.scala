@@ -85,4 +85,56 @@ class SourceAuditSpec extends AnyFunSuite {
         "Dataset) on or within 4 lines above each:\n" +
         unannotated.mkString("\n"))
   }
+
+  /** Code part of a source line: scaladoc/block-comment lines and
+    * trailing `//` comments removed, so a documented example is not
+    * counted as a call site. */
+  private def code(line: String): String = {
+    val t = line.trim
+    if (t.startsWith("*") || t.startsWith("/*")) ""
+    else line.indexOf("//") match { case -1 => line; case i => line.take(i) }
+  }
+
+  private val envAllowlist = Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR",
+    "SPARK_GRAFT_BENCH_OUT", "SPARK_GRAFT_REPO", "SPARK_GRAFT_INDEX_ROOT",
+    "SPARK_GRAFT_GRAPH_TREND")
+
+  test("one session factory and no env-gated debug paths: GraftSession " +
+    "is the only SparkSession.builder( site and every env read is an " +
+    "allowlisted setting") {
+    val root = repoRoot
+    val envRead = java.util.regex.Pattern.compile("""sys\.env|System\.getenv""")
+    val envName = java.util.regex.Pattern
+      .compile("""(?:sys\.env(?:\.\w+)?|System\.getenv)\(\s*"([^"]*)"""")
+    val builders = scala.collection.mutable.ArrayBuffer.empty[String]
+    val envNames = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    scalaFiles(new java.io.File(root, "src/main/scala")).foreach { f =>
+      val rel = root.toPath.relativize(f.toPath.toAbsolutePath.normalize)
+      scala.io.Source.fromFile(f, "UTF-8").getLines().zipWithIndex
+        .foreach { case (line, i) =>
+          val c = code(line)
+          val at = s"$rel:${i + 1}"
+          if (c.contains("SparkSession.builder(")) builders += at
+          val m = envRead.matcher(c)
+          while (m.find()) {
+            val n = envName.matcher(c).region(m.start(), c.length)
+            // a key that is not a string literal cannot be audited, so
+            // it is reported as a name of its own
+            envNames += at ->
+              (if (n.lookingAt()) n.group(1) else "<non-literal key>")
+          }
+        }
+    }
+    assert(builders.size == 1 &&
+      builders.head.startsWith("src/main/scala/graft/GraftSession.scala:"),
+      s"expected exactly one SparkSession.builder( call site, in " +
+        s"GraftSession; found ${builders.size}:\n${builders.mkString("\n")}")
+    assert(envNames.exists(_._2 == "SPARK_GRAFT_CPUS"),
+      "the walk found no SPARK_GRAFT_CPUS read — the scan regressed")
+    val stray = envNames.filterNot(e => envAllowlist(e._2))
+    assert(stray.isEmpty,
+      s"${stray.size} env reads outside the settings allowlist " +
+        s"(${envAllowlist.toSeq.sorted.mkString(", ")}):\n" +
+        stray.map { case (at, n) => s"$at: $n" }.mkString("\n"))
+  }
 }
