@@ -11,10 +11,7 @@ import org.apache.spark.mllib.linalg.distributed.BlockMatrix
   * This replaces the reference's HDFS side-file data plane — its dense
   * block files carry the global extent in-band
   * (/root/reference/Matrix/LUDecomposition.java:153-192); here the extent
-  * is the block index, and "manifest" zero-copy partitioning
-  * (/root/reference/Matrix/Partition.java:220-236) becomes plain RDD
-  * lineage: quadrant views are narrow `filter`s on the block index that
-  * never materialize (SURVEY.md §1.3).
+  * is the block index, and an absent block is a zero block.
   */
 object BlockModel {
   type Blocks = RDD[((Int, Int), MlDM)]
@@ -45,9 +42,6 @@ object BlockModel {
     val d = toDense(a)
     new MlDM(d.numRows, d.numCols, d.values.map(v => -v))
   }
-
-  def shift(b: Blocks, di: Int, dj: Int): Blocks =
-    b.map { case ((i, j), m) => ((i + di, j + dj), m) }
 
   /** maxAbs(A − I) over the blocks of a square matrix — the M4 residual
     * check once A·A⁻¹ has been formed. */

@@ -1,95 +1,92 @@
 package graft.matrix
 
-import org.apache.spark.SparkContext
+import org.apache.spark.{HashPartitioner, SparkContext}
 import org.apache.spark.mllib.linalg.{DenseMatrix => MlDM}
+import org.apache.spark.rdd.RDD
 import BlockModel._
-import LocalLA.{fromDM, toDM, invUnitLower, invUpper => localInvUpper}
+import LocalLA.{backSolveUpper, forwardSolveUnitLower, fromDM, toDM}
 
-/** Distributed triangular inversion (operator O17,
-  * /root/reference/Matrix/LUInverse.java:88-167) and the full
-  * A⁻¹ = U⁻¹·L⁻¹·P pipeline (O18, :169-389).
+/** Distributed inversion (the reference's operators O17/O18,
+  * Matrix/LUInverse.java) and substitution solves.
   *
-  * The reference back-substitutes strided column sets per task; here the
-  * inversion is the recursive block identity
+  * The inverse is one in-place block Gauss-Jordan sweep over the block
+  * rows M of A, the same 2n³ flops as LU + triangular inverses + GEMM:
   *
-  *   [[L1, 0 ], [L2, L3]]⁻¹ = [[L1⁻¹, 0], [−L3⁻¹·L2·L1⁻¹, L3⁻¹]]
-  *   [[U1, U2], [0,  U3]]⁻¹ = [[U1⁻¹, −U1⁻¹·U2·U3⁻¹], [0, U3⁻¹]]
+  *   for k in 0..q-1:  D⁻¹ = M_kk⁻¹ on the driver, then one narrow job
+  *     row k:   M_kj ← D⁻¹·M_kj (j≠k), M_kk ← D⁻¹
+  *     row i≠k: C = M_ik·D⁻¹, M_ij ← M_ij − C·M_kj (j≠k), M_ik ← −C
   *
-  * — driver recursion of depth log₂(q) over lazy RDD views (quadrant =
-  * narrow block-index filter, the zero-copy partitioning the reference's
-  * manifests emulate), with `BlockMatrix.multiply` doing the distributed
-  * GEMM. Base case inverts all diagonal blocks in one distributed map —
-  * no per-leaf driver collect, so the recursion stays fully distributed
-  * at any q (SURVEY.md §7 step 6).
-  */
+  * A is grouped by block row once, its only shuffle; each step
+  * broadcasts (row k, D⁻¹), n·blk doubles, the bound of BlockLU's panel.
+  * The pivot blocks are the Schur complements BlockLU factors, so
+  * pivoting stays inside diagonal blocks (the reference's contract), and
+  * D⁻¹ = U⁻¹·L⁻¹·P carries the permutation. Absent blocks are zero
+  * blocks and stay absent, so triangular input costs triangular flops. */
 object Inversion {
 
-  /** Inverse of a unit-lower block-triangular matrix (q×q blocks). */
-  def invLower(l: Blocks, q: Int, blk: Int): Blocks =
-    if (q == 1) l.mapValues(m => toDM(invUnitLower(fromDM(m))))
-    else {
-      val mid = q / 2
-      val l1 = l.filter { case ((i, j), _) => i < mid && j < mid }
-      val l2 = shift(l.filter { case ((i, j), _) => i >= mid && j < mid }, -mid, 0)
-      val l3 = shift(l.filter { case ((i, j), _) => i >= mid && j >= mid }, -mid, -mid)
-      val inv1 = invLower(l1, mid, blk)
-      val inv3 = invLower(l3, q - mid, blk)
-      val n1 = mid.toLong * blk; val n3 = (q - mid).toLong * blk
-      val t = multiply(inv3, l2, blk, n3, n3, n1)
-      val x = multiply(t, inv1, blk, n3, n1, n1).mapValues(dmNeg)
-      inv1.union(shift(x, mid, 0)).union(shift(inv3, mid, mid))
-    }
+  private type Rows = RDD[(Int, Array[MlDM])] // block row i by block column; null = zero block
 
-  /** Inverse of an upper block-triangular matrix (q×q blocks). */
-  def invUpper(u: Blocks, q: Int, blk: Int): Blocks =
-    if (q == 1) u.mapValues(m => toDM(localInvUpper(fromDM(m))))
-    else {
-      val mid = q / 2
-      val u1 = u.filter { case ((i, j), _) => i < mid && j < mid }
-      val u2 = shift(u.filter { case ((i, j), _) => i < mid && j >= mid }, 0, -mid)
-      val u3 = shift(u.filter { case ((i, j), _) => i >= mid && j >= mid }, -mid, -mid)
-      val inv1 = invUpper(u1, mid, blk)
-      val inv3 = invUpper(u3, q - mid, blk)
-      val n1 = mid.toLong * blk; val n3 = (q - mid).toLong * blk
-      val t = multiply(inv1, u2, blk, n1, n1, n3)
-      val x = multiply(t, inv3, blk, n1, n3, n3).mapValues(dmNeg)
-      inv1.union(shift(x, 0, mid)).union(shift(inv3, mid, mid))
-    }
+  /** Inverses of a unit-lower and of an upper block-triangular matrix (q×q blocks). */
+  def invLower(l: Blocks, q: Int, blk: Int): Blocks = sweep(l.sparkContext, l, q, blk)
+  def invUpper(u: Blocks, q: Int, blk: Int): Blocks = sweep(u.sparkContext, u, q, blk)
 
-  /** Full inverse: factor, invert both triangles, multiply, fold the
-    * block-diagonal permutation in as within-block column remaps
-    * (verified identity A⁻¹[:, indx] = U⁻¹·L⁻¹ — SURVEY.md §0). */
+  /** Full inverse: q jobs, the last step runs in the caller's action. */
   def inverse(sc: SparkContext, a: Blocks, n: Int, blk: Int): Blocks = {
+    require(n % blk == 0, s"n=$n must be a multiple of blk=$blk")
     inverseInvocations.incrementAndGet()
-    val lu = BlockLU.factor(sc, a, n, blk)
-    inverseFromLU(sc, lu)
+    sweep(sc, a, n / blk, blk)
   }
 
-  def inverseFromLU(sc: SparkContext, lu: BlockLUResult): Blocks = {
-    val q = lu.n / lu.blk
-    val linv = invLower(lu.l, q, lu.blk)
-    val uinv = invUpper(lu.u, q, lu.blk)
-    val prod = multiply(uinv, linv, lu.blk, lu.n.toLong, lu.n.toLong, lu.n.toLong)
-    val permsB = sc.broadcast(lu.perms)
-    prod.map { case ((i, k), m) =>
-      val d = toDense(m)
-      val out = new Array[Double](d.values.length)
-      val indx = permsB.value(k)
-      var c = 0
-      while (c < d.numCols) {
-        System.arraycopy(d.values, c * d.numRows, out, indx(c) * d.numRows, d.numRows)
-        c += 1
-      }
-      ((i, k), new MlDM(d.numRows, d.numCols, out))
+  private def sweep(sc: SparkContext, a: Blocks, q: Int, blk: Int): Blocks = {
+    var prev: Rows = null
+    var rows: Rows = a.map { case ((i, j), m) => (i, (j, m)) }.groupByKey(new HashPartitioner(q))
+      .mapValues { bs => val row = new Array[MlDM](q); bs.foreach { case (j, m) => row(j) = m }; row }
+    for (k <- 0 until q) {
+      graft.Lineage.truncate(rows.persist())
+      // the step's one job materializes the previous step and fetches pivot row k
+      val rowK = rows.flatMap { case (i, row) => if (i == k) Iterator.single(row) else Iterator.empty }
+        .collect().headOption.getOrElse(new Array[MlDM](q)) // bounded: ONE block row
+      if (prev != null) prev.unpersist(blocking = false)
+      prev = rows
+      val bc = sc.broadcast((rowK, invertPivot(Option(rowK(k)).getOrElse(MlDM.zeros(blk, blk)))))
+      rows = rows.mapPartitions(_.map { case (i, row) => (i, eliminate(row, i, k, bc.value._1, bc.value._2)) },
+        preservesPartitioning = true)
     }
+    rows.flatMap { case (i, row) => row.iterator.zipWithIndex.collect { case (m, j) if m != null => ((i, j), m) } }
+  }
+
+  /** Step k of the sweep on block row i; `rowK` is row k before the step. */
+  private def eliminate(row: Array[MlDM], i: Int, k: Int, rowK: Array[MlDM], dInv: MlDM): Array[MlDM] =
+    if (i == k) row.indices.map(j => if (j == k) dInv else if (row(j) == null) null else dInv.multiply(row(j))).toArray
+    else if (row(k) == null) row // C = 0
+    else {
+      val c = row(k).multiply(dInv)
+      row.indices.map { j =>
+        if (j == k) dmNeg(c)
+        else if (rowK(j) == null) row(j)
+        else if (row(j) == null) dmNeg(c.multiply(rowK(j)))
+        else dmSub(row(j), c.multiply(rowK(j)))
+      }.toArray
+    }
+
+  /** D⁻¹ with partial pivoting inside the block: ludcmp gives P·D = L·U,
+    * so D⁻¹ = U⁻¹·L⁻¹·P, two substitutions against P·I. Pivots ludcmp
+    * clamped to [[LocalLA.Tiny]] are added to [[pivotClamps]]. */
+  private def invertPivot(d: MlDM): MlDM = {
+    val packed = fromDM(d)
+    val indx = LocalLA.ludcmp(packed)
+    pivotClamps.addAndGet(packed.indices.count(j => packed(j)(j) == LocalLA.Tiny))
+    val (l, u) = LocalLA.splitLU(packed)
+    val pI = Array.tabulate(packed.length, packed.length)((r, c) => if (indx(r) == c) 1.0 else 0.0)
+    toDM(backSolveUpper(u, forwardSolveUnitLower(l, pI)))
   }
 
   /** Inverse for ARBITRARY n (not a block multiple) over a row
     * representation: pad to `[[A, 0], [0, I]]` (identity corner keeps
     * the factorization well-defined), invert, slice the top-left back
     * out. The padding adds ≤ blk−1 rows — negligible at any scale. */
-  def inverseAny(sc: SparkContext, rows: org.apache.spark.rdd.RDD[(Long, Array[Double])],
-                 n: Int, blk: Int): org.apache.spark.rdd.RDD[(Long, Array[Double])] = {
+  def inverseAny(sc: SparkContext, rows: RDD[(Long, Array[Double])],
+                 n: Int, blk: Int): RDD[(Long, Array[Double])] = {
     val np = ((n + blk - 1) / blk) * blk
     val inv = inverse(sc, fromRowsPadded(rows, n, blk), np, blk)
     toRows(inv, np, blk)
@@ -102,6 +99,11 @@ object Inversion {
     * not solve-by-inverse). */
   val inverseInvocations = new java.util.concurrent.atomic.AtomicLong(0)
 
+  /** Pivots clamped to [[LocalLA.Tiny]] while inverting pivot blocks:
+    * nonzero means a pivot block was exactly singular, so block-confined
+    * pivoting did not invert A faithfully even if A is nonsingular. */
+  val pivotClamps = new java.util.concurrent.atomic.AtomicLong(0)
+
   /** solve(A, X) = B by TRUE blocked triangular substitution (the
     * reference's O12 TRSM semantics,
     * /root/reference/Matrix/LUDecomposition.java:410-493 — forward
@@ -112,7 +114,7 @@ object Inversion {
     *
     * Distributed shape (wavefront TRSM): at step k the solved block row
     * Y_k (blk×m doubles — the RHS is assumed skinny; for m ≈ n prefer
-    * [[inverseFromLU]]+multiply) is broadcast, and the remaining RHS
+    * [[inverse]]+multiply) is broadcast, and the remaining RHS
     * rows take the rank-blk update B_i ← B_i − L_ik·Y_k as one job that
     * joins the RHS blocks with the L column panel by block row — the
     * same broadcast-the-factor insight as the reference's replication-20
@@ -164,7 +166,6 @@ object Inversion {
   }
 
   def solveFactored(sc: SparkContext, lu: BlockLUResult, b: Blocks, m: Int): Blocks = {
-    import LocalLA.{backSolveUpper, forwardSolveUnitLower}
     val blk = lu.blk; val q = lu.n / blk
     val permsB = sc.broadcast(lu.perms)
     val lDiag = lu.l.filter { case ((i, j), _) => i == j }.collectAsMap()

@@ -266,43 +266,47 @@ object LocalLA {
     x
   }
 
-  /** Inverse of unit-lower-triangular L (column-wise forward substitution,
-    * the local analog of /root/reference/Matrix/LUInverse.java:133-147). */
+  /** Inverse of unit-lower-triangular L by row axpys: row i of L⁻¹ is
+    * e_i − Σ_{k<i} l_ik·(row k of L⁻¹), and row k is zero past column k. */
   def invUnitLower(l: Array[Array[Double]]): Array[Array[Double]] = {
     val n = l.length
     val inv = Array.ofDim[Double](n, n)
-    var c = 0
-    while (c < n) {
-      inv(c)(c) = 1.0
-      var i = c + 1
-      while (i < n) {
-        var s = 0.0
-        var k = c
-        while (k < i) { s += l(i)(k) * inv(k)(c); k += 1 }
-        inv(i)(c) = -s
-        i += 1
+    var i = 0
+    while (i < n) {
+      val xi = inv(i); val li = l(i)
+      var k = 0
+      while (k < i) {
+        val lik = li(k); val xk = inv(k)
+        var j = 0
+        while (j <= k) { xi(j) -= lik * xk(j); j += 1 }
+        k += 1
       }
-      c += 1
+      xi(i) = 1.0
+      i += 1
     }
     inv
   }
 
-  /** Inverse of upper-triangular U (back substitution per column). */
+  /** Inverse of upper-triangular U by row axpys, bottom-up: row i of U⁻¹
+    * is (e_i − Σ_{k>i} u_ik·(row k of U⁻¹)) / u_ii, row k zero before k. */
   def invUpper(u: Array[Array[Double]]): Array[Array[Double]] = {
     val n = u.length
     val inv = Array.ofDim[Double](n, n)
-    var c = 0
-    while (c < n) {
-      inv(c)(c) = 1.0 / (if (u(c)(c) == 0.0) Tiny else u(c)(c))
-      var i = c - 1
-      while (i >= 0) {
-        var s = 0.0
-        var k = i + 1
-        while (k <= c) { s += u(i)(k) * inv(k)(c); k += 1 }
-        inv(i)(c) = -s / (if (u(i)(i) == 0.0) Tiny else u(i)(i))
-        i -= 1
+    var i = n - 1
+    while (i >= 0) {
+      val xi = inv(i); val ui = u(i)
+      xi(i) = 1.0
+      var k = i + 1
+      while (k < n) {
+        val uik = ui(k); val xk = inv(k)
+        var j = k
+        while (j < n) { xi(j) -= uik * xk(j); j += 1 }
+        k += 1
       }
-      c += 1
+      val d = if (ui(i) == 0.0) Tiny else ui(i)
+      var j = i
+      while (j < n) { xi(j) /= d; j += 1 }
+      i -= 1
     }
     inv
   }

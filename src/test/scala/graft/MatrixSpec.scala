@@ -119,15 +119,80 @@ class MatrixSpec extends AnyFunSuite {
     val n = 128; val blk = 32
     val a = MatrixGen.blocks(sc, n, blk, seed, diagBoost = n.toDouble)
     val dist = toLocal(Inversion.inverse(sc, a, n, blk), n, n, blk)
-    // local oracle: inverse via local LU of the same matrix
-    val loc = MatrixGen.local(n, blk, seed, diagBoost = n.toDouble)
-    val packed = loc.map(_.clone())
+    val oracle = gepInverse(MatrixGen.local(n, blk, seed, diagBoost = n.toDouble))
+    assert(LocalLA.maxAbsDiff(dist, oracle) < 1e-9 * n)
+  }
+
+  /** Local oracle: A⁻¹ by GEPP over the whole matrix,
+    * A⁻¹[:, indx] = U⁻¹·L⁻¹. */
+  private def gepInverse(a: Array[Array[Double]]): Array[Array[Double]] = {
+    val n = a.length
+    val packed = a.map(_.clone())
     val indx = LocalLA.ludcmp(packed)
     val (l, u) = LocalLA.splitLU(packed)
     val uiLi = LocalLA.gemm(LocalLA.invUpper(u), LocalLA.invUnitLower(l))
     val oracle = Array.ofDim[Double](n, n)
     for (i <- 0 until n; c <- 0 until n) oracle(i)(indx(c)) = uiLi(i)(c)
-    assert(LocalLA.maxAbsDiff(dist, oracle) < 1e-9 * n)
+    oracle
+  }
+
+  /** ‖A·X − I‖∞ (max-abs entry) of local matrices. */
+  private def residual(a: Array[Array[Double]], x: Array[Array[Double]]): Double =
+    LocalLA.maxAbsDiff(LocalLA.gemm(a, x),
+      Array.tabulate(a.length, a.length)((i, j) => if (i == j) 1.0 else 0.0))
+
+  test("inverse: odd and single block counts q ∈ {1, 3, 5} match the local oracle") {
+    val blk = 16
+    for (q <- Seq(1, 3, 5)) {
+      val n = q * blk
+      val a = MatrixGen.blocks(sc, n, blk, seed + q, diagBoost = n.toDouble)
+      val dist = toLocal(Inversion.inverse(sc, a, n, blk), n, n, blk)
+      val loc = MatrixGen.local(n, blk, seed + q, diagBoost = n.toDouble)
+      assert(residual(loc, dist) < 1e-6 * n, s"q=$q residual")
+      assert(LocalLA.maxAbsDiff(dist, gepInverse(loc)) < 1e-9 * n, s"q=$q vs oracle")
+    }
+  }
+
+  test("inverse: zero-diagonal pivot blocks fold the in-block permutation in") {
+    // block-reversal permutations on the diagonal (every diagonal entry
+    // 0, so each pivot block needs row swaps) plus a small coupling in
+    // the off-diagonal blocks
+    val blk = 8; val q = 3; val n = q * blk
+    val rng = new scala.util.Random(seed)
+    val a = Array.tabulate(n, n) { (i, j) =>
+      if (i / blk != j / blk) 0.01 * rng.nextDouble()
+      else if (i % blk + j % blk == blk - 1) 1.0 else 0.0
+    }
+    val dist = toLocal(Inversion.inverse(sc, localToBlocks(sc, a, blk), n, blk), n, n, blk)
+    assert(residual(a, dist) < 1e-6 * n)
+    assert(LocalLA.maxAbsDiff(dist, gepInverse(a)) < 1e-9 * n)
+  }
+
+  test("inverse(...).count() launches at most q+1 jobs (q=4, q=8)") {
+    val blk = 16
+    for (q <- Seq(4, 8)) {
+      val n = q * blk
+      val a = MatrixGen.blocks(sc, n, blk, seed, diagBoost = n.toDouble).persist()
+      a.count()
+      val (jobs, _) = org.apache.spark.JobCounter(sc)(Inversion.inverse(sc, a, n, blk).count())
+      assert(jobs <= q + 1, s"q=$q: $jobs jobs")
+      a.unpersist()
+    }
+  }
+
+  test("inverse: an exactly singular leading pivot block raises pivotClamps") {
+    // A = [[0, I], [I, I]] is nonsingular (A⁻¹ = [[−I, I], [I, 0]]), but
+    // its leading diagonal block is zero: block-confined pivoting must
+    // clamp every pivot of it, and say so
+    val blk = 8; val n = 2 * blk
+    val a = Array.tabulate(n, n)((i, j) => if (i >= blk && i == j || (i - j).abs == blk) 1.0 else 0.0)
+    val before = Inversion.pivotClamps.get()
+    Inversion.inverse(sc, localToBlocks(sc, a, blk), n, blk).count()
+    assert(Inversion.pivotClamps.get() - before == blk)
+    // a pivot-safe matrix clamps nothing
+    val ok = Inversion.pivotClamps.get()
+    Inversion.inverse(sc, MatrixGen.blocks(sc, n, blk, seed, diagBoost = n.toDouble), n, blk).count()
+    assert(Inversion.pivotClamps.get() == ok)
   }
 
   test("inverseAny: arbitrary n (not a block multiple) via identity padding") {

@@ -137,4 +137,19 @@ class SourceAuditSpec extends AnyFunSuite {
         s"(${envAllowlist.toSeq.sorted.mkString(", ")}):\n" +
         stray.map { case (at, n) => s"$at: $n" }.mkString("\n"))
   }
+
+  test("the inverse is one Gauss-Jordan sweep: Inversion.scala builds no " +
+    "BlockMatrix and calls no BlockModel.multiply GEMM pipeline") {
+    val f = new java.io.File(repoRoot, "src/main/scala/graft/matrix/Inversion.scala")
+    val lines = scala.io.Source.fromFile(f, "UTF-8").getLines().toVector
+    assert(lines.exists(_.contains("object Inversion")), s"$f is not the inversion source")
+    // a bare `multiply` is BlockModel's (imported with BlockModel._);
+    // `m.multiply(...)` is a local DenseMatrix GEMM inside a task
+    val gemmPipeline = java.util.regex.Pattern
+      .compile("""BlockMatrix|BlockModel\.multiply|(?<![.\w])multiply\b""")
+    val hits = lines.zipWithIndex.collect {
+      case (line, i) if gemmPipeline.matcher(code(line)).find() => s"Inversion.scala:${i + 1}: ${line.trim}"
+    }
+    assert(hits.isEmpty, s"the distributed GEMM pipeline is back in the inverse:\n${hits.mkString("\n")}")
+  }
 }
