@@ -72,6 +72,7 @@ object BlockLU {
       // base case: factor the (updated) diagonal block on the driver
       val packed = fromDM(diagBlock)
       val indx = ludcmp(packed)
+      Inversion.countClamps(packed)
       perms(k) = indx
       val (lkk, ukk) = splitLU(packed)
       diagL += (((k, k), toDM(lkk)))

@@ -1,6 +1,8 @@
 package graft.matrix
 
+import java.util.stream.IntStream
 import org.apache.spark.{HashPartitioner, SparkContext}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.mllib.linalg.{DenseMatrix => MlDM}
 import org.apache.spark.rdd.RDD
 import BlockModel._
@@ -16,8 +18,13 @@ import LocalLA.{backSolveUpper, forwardSolveUnitLower, fromDM, toDM}
   *     row k:   M_kj ← D⁻¹·M_kj (j≠k), M_kk ← D⁻¹
   *     row i≠k: C = M_ik·D⁻¹, M_ij ← M_ij − C·M_kj (j≠k), M_ik ← −C
   *
-  * A is grouped by block row once, its only shuffle; each step
-  * broadcasts (row k, D⁻¹), n·blk doubles, the bound of BlockLU's panel.
+  * A is grouped by block row once, its only shuffle. Each step
+  * broadcasts row k with D⁻¹ in place of M_kk (n·blk doubles, the bound
+  * of BlockLU's panel), one broadcast per block, created concurrently,
+  * and releases the previous step's once its job has materialized the
+  * rows. The pivot inversion is the driver's serial work between two
+  * step jobs, while every executor core idles; its solves run in column
+  * panels across the driver's cores.
   * The pivot blocks are the Schur complements BlockLU factors, so
   * pivoting stays inside diagonal blocks (the reference's contract), and
   * D⁻¹ = U⁻¹·L⁻¹·P carries the permutation. Absent blocks are zero
@@ -39,6 +46,7 @@ object Inversion {
 
   private def sweep(sc: SparkContext, a: Blocks, q: Int, blk: Int): Blocks = {
     var prev: Rows = null
+    var prevPiv = Array.empty[Broadcast[MlDM]]
     var rows: Rows = a.map { case ((i, j), m) => (i, (j, m)) }.groupByKey(new HashPartitioner(q))
       .mapValues { bs => val row = new Array[MlDM](q); bs.foreach { case (j, m) => row(j) = m }; row }
     for (k <- 0 until q) {
@@ -46,39 +54,76 @@ object Inversion {
       // the step's one job materializes the previous step and fetches pivot row k
       val rowK = rows.flatMap { case (i, row) => if (i == k) Iterator.single(row) else Iterator.empty }
         .collect().headOption.getOrElse(new Array[MlDM](q)) // bounded: ONE block row
+      // rows is materialized and truncated: nothing reads the previous step's RDD or broadcasts again.
+      // Its closure still ships inside the next step's tasks, so the released handles leave it.
       if (prev != null) prev.unpersist(blocking = false)
+      for (j <- prevPiv.indices if prevPiv(j) != null) { prevPiv(j).destroy(); prevPiv(j) = null }
       prev = rows
-      val bc = sc.broadcast((rowK, invertPivot(Option(rowK(k)).getOrElse(MlDM.zeros(blk, blk)))))
-      rows = rows.mapPartitions(_.map { case (i, row) => (i, eliminate(row, i, k, bc.value._1, bc.value._2)) },
+      val piv = broadcastPivotRow(sc, rowK, k, invertPivot(Option(rowK(k)).getOrElse(MlDM.zeros(blk, blk))))
+      prevPiv = piv
+      rows = rows.mapPartitions(_.map { case (i, row) => (i, eliminate(row, i, k, piv)) },
         preservesPartitioning = true)
     }
     rows.flatMap { case (i, row) => row.iterator.zipWithIndex.collect { case (m, j) if m != null => ((i, j), m) } }
   }
 
-  /** Step k of the sweep on block row i; `rowK` is row k before the step. */
-  private def eliminate(row: Array[MlDM], i: Int, k: Int, rowK: Array[MlDM], dInv: MlDM): Array[MlDM] =
-    if (i == k) row.indices.map(j => if (j == k) dInv else if (row(j) == null) null else dInv.multiply(row(j))).toArray
-    else if (row(k) == null) row // C = 0
+  /** One broadcast per block of pivot row k, created concurrently: slot k
+    * holds D⁻¹ (no task reads M_kk), slot j≠k holds M_kj, null if absent. */
+  private def broadcastPivotRow(sc: SparkContext, rowK: Array[MlDM], k: Int, dInv: MlDM): Array[Broadcast[MlDM]] = {
+    val piv = new Array[Broadcast[MlDM]](rowK.length)
+    IntStream.range(0, rowK.length).parallel().forEach { j =>
+      val m = if (j == k) dInv else rowK(j)
+      if (m != null) piv(j) = sc.broadcast(m)
+    }
+    piv
+  }
+
+  /** Step k of the sweep on block row i; `piv` is [[broadcastPivotRow]]'s. */
+  private def eliminate(row: Array[MlDM], i: Int, k: Int, piv: Array[Broadcast[MlDM]]): Array[MlDM] =
+    if (i != k && row(k) == null) row // C = 0
     else {
-      val c = row(k).multiply(dInv)
-      row.indices.map { j =>
-        if (j == k) dmNeg(c)
-        else if (rowK(j) == null) row(j)
-        else if (row(j) == null) dmNeg(c.multiply(rowK(j)))
-        else dmSub(row(j), c.multiply(rowK(j)))
-      }.toArray
+      val dInv = piv(k).value
+      if (i == k) row.indices.map(j => if (j == k) dInv else if (row(j) == null) null else dInv.multiply(row(j))).toArray
+      else {
+        val c = row(k).multiply(dInv)
+        row.indices.map { j =>
+          if (j == k) dmNeg(c)
+          else if (piv(j) == null) row(j)
+          else if (row(j) == null) dmNeg(c.multiply(piv(j).value))
+          else dmSub(row(j), c.multiply(piv(j).value))
+        }.toArray
+      }
     }
 
   /** D⁻¹ with partial pivoting inside the block: ludcmp gives P·D = L·U,
-    * so D⁻¹ = U⁻¹·L⁻¹·P, two substitutions against P·I. Pivots ludcmp
-    * clamped to [[LocalLA.Tiny]] are added to [[pivotClamps]]. */
-  private def invertPivot(d: MlDM): MlDM = {
+    * so D⁻¹ = U⁻¹·L⁻¹·P, two substitutions against P·I. They run in
+    * column panels, one per driver core, each on its own slice of P·I,
+    * writing its columns of D⁻¹ in place. A column's flops and their
+    * order do not depend on the panel, so D⁻¹ is bit-identical to one
+    * serial solve. */
+  private[graft] def invertPivot(d: MlDM): MlDM = {
+    val n = d.numRows
     val packed = fromDM(d)
     val indx = LocalLA.ludcmp(packed)
-    pivotClamps.addAndGet(packed.indices.count(j => packed(j)(j) == LocalLA.Tiny))
-    val (l, u) = LocalLA.splitLU(packed)
-    val pI = Array.tabulate(packed.length, packed.length)((r, c) => if (indx(r) == c) 1.0 else 0.0)
-    toDM(backSolveUpper(u, forwardSolveUnitLower(l, pI)))
+    countClamps(packed)
+    val inv = new Array[Double](n * n)
+    val panels = math.max(1, math.min(Runtime.getRuntime.availableProcessors, n / 64))
+    IntStream.range(0, panels).parallel().forEach { p =>
+      val c0 = p * n / panels; val w = (p + 1) * n / panels - c0
+      val pI = Array.ofDim[Double](n, w)
+      var r = 0
+      while (r < n) { val c = indx(r) - c0; if (c >= 0 && c < w) pI(r)(c) = 1.0; r += 1 }
+      // packed is L below its diagonal, U on and above; each solve reads only its own triangle
+      val x = backSolveUpper(packed, forwardSolveUnitLower(packed, pI))
+      var c = 0
+      while (c < w) {
+        val off = (c0 + c) * n
+        r = 0
+        while (r < n) { inv(off + r) = x(r)(c); r += 1 }
+        c += 1
+      }
+    }
+    new MlDM(n, n, inv)
   }
 
   /** Inverse for ARBITRARY n (not a block multiple) over a row
@@ -99,10 +144,15 @@ object Inversion {
     * not solve-by-inverse). */
   val inverseInvocations = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Pivots clamped to [[LocalLA.Tiny]] while inverting pivot blocks:
-    * nonzero means a pivot block was exactly singular, so block-confined
-    * pivoting did not invert A faithfully even if A is nonsingular. */
+  /** Pivots clamped to [[LocalLA.Tiny]] by block-confined pivoting, in
+    * the sweep's pivot blocks and in [[BlockLU.factor]]'s diagonal
+    * blocks: nonzero means such a block was exactly singular, so the
+    * result is not faithful to A even if A is nonsingular. */
   val pivotClamps = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** Adds the pivots `ludcmp` clamped in `packed`, its in-place result, to [[pivotClamps]]. */
+  private[matrix] def countClamps(packed: Array[Array[Double]]): Unit =
+    pivotClamps.addAndGet(packed.indices.count(j => packed(j)(j) == LocalLA.Tiny))
 
   /** solve(A, X) = B by TRUE blocked triangular substitution (the
     * reference's O12 TRSM semantics,

@@ -149,7 +149,15 @@ object LocalLA {
 
   def transpose(a: Array[Array[Double]]): Array[Array[Double]] = {
     val n = a.length; val m = if (n == 0) 0 else a(0).length
-    Array.tabulate(m, n)((i, j) => a(j)(i))
+    val t = Array.ofDim[Double](m, n)
+    var j = 0
+    while (j < n) {
+      val aj = a(j)
+      var i = 0
+      while (i < m) { t(i)(j) = aj(i); i += 1 }
+      j += 1
+    }
+    t
   }
 
   /** Split a packed LU (from ludcmp) into explicit L (unit diag) and U. */

@@ -195,6 +195,67 @@ class MatrixSpec extends AnyFunSuite {
     assert(Inversion.pivotClamps.get() == ok)
   }
 
+  test("pivot inverse: column panels are bit-identical to one serial solve, same clamps") {
+    import org.apache.spark.mllib.linalg.{DenseMatrix => MlDM}
+    val rng = new scala.util.Random(seed)
+    // the last block has three zero columns, so ludcmp clamps three pivots
+    val blocks = Seq(1, 2, 7, 63, 64, 300, 512).map(n => Array.fill(n, n)(rng.nextDouble())) :+
+      Array.tabulate(7, 7)((i, j) => if (j < 3) 0.0 else (i + 1) * (j + 2) % 5 + 1.0)
+    val clamped = for (a <- blocks) yield {
+      val n = a.length
+      val packed = a.map(_.clone())
+      val indx = LocalLA.ludcmp(packed)
+      val clamps = packed.indices.count(j => packed(j)(j) == LocalLA.Tiny)
+      val (l, u) = LocalLA.splitLU(packed)
+      val pI = Array.tabulate(n, n)((r, c) => if (indx(r) == c) 1.0 else 0.0)
+      val serial = LocalLA.toDM(LocalLA.backSolveUpper(u, LocalLA.forwardSolveUnitLower(l, pI)))
+      val before = Inversion.pivotClamps.get()
+      val panel = Inversion.invertPivot(LocalLA.toDM(a))
+      assert(Inversion.pivotClamps.get() - before == clamps, s"n=$n clamps")
+      assert(java.util.Arrays.equals(panel.values, serial.values), s"n=$n not bit-identical")
+      clamps
+    }
+    assert(clamped.last >= 3)
+  }
+
+  test("BlockLU.factor counts clamped diagonal-block pivots in pivotClamps") {
+    val blk = 8; val n = 2 * blk
+    val a = Array.tabulate(n, n)((i, j) => if (i >= blk && i == j || (i - j).abs == blk) 1.0 else 0.0)
+    val before = Inversion.pivotClamps.get()
+    BlockLU.factor(sc, localToBlocks(sc, a, blk), n, blk)
+    assert(Inversion.pivotClamps.get() - before == blk)
+    val ok = Inversion.pivotClamps.get()
+    BlockLU.factor(sc, MatrixGen.blocks(sc, n, blk, seed, diagBoost = n.toDouble), n, blk)
+    assert(Inversion.pivotClamps.get() == ok)
+  }
+
+  test("transpose equals the index definition on n×n, 1×n and n×1") {
+    val rng = new scala.util.Random(seed)
+    for ((r, c) <- Seq((5, 5), (1, 7), (7, 1), (1, 1))) {
+      val a = Array.fill(r, c)(rng.nextDouble())
+      val t = LocalLA.transpose(a)
+      assert(t.length == c && t.forall(_.length == r))
+      assert(t.indices.forall(i => t(i).indices.forall(j => t(i)(j) == a(j)(i))))
+    }
+    assert(LocalLA.transpose(Array.empty[Array[Double]]).isEmpty)
+  }
+
+  test("inverse releases every step's broadcasts but the last's (q=4)") {
+    import org.apache.spark.mllib.linalg.{DenseMatrix => MlDM}
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val blk = 16; val q = 4; val n = q * blk
+    val a = MatrixGen.blocks(sc, n, blk, seed, diagBoost = n.toDouble).persist()
+    a.count()
+    val before = org.apache.spark.LiveBroadcasts[MlDM](sc)
+    Inversion.inverse(sc, a, n, blk).count()
+    // the last step's q blocks (D⁻¹ and row q−1) stay for the caller's action
+    eventually(timeout(10.seconds)) {
+      assert((org.apache.spark.LiveBroadcasts[MlDM](sc) -- before).size <= q)
+    }
+    a.unpersist()
+  }
+
   test("inverseAny: arbitrary n (not a block multiple) via identity padding") {
     val n = 300; val blk = 64
     val a = MatrixGen.local(n, n, 5L, diagBoost = n.toDouble)
