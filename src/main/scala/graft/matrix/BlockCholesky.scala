@@ -1,9 +1,10 @@
 package graft.matrix
 
-import org.apache.spark.{HashPartitioner, SparkContext}
+import java.util.stream.IntStream
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.mllib.linalg.{DenseMatrix => MlDM}
-import scala.collection.mutable.ArrayBuffer
-import BlockModel.{Blocks, dmSub}
+import BlockModel.{Blocks, dmNeg, dmSub}
 import LocalLA._
 
 /** Right-looking blocked Cholesky factorization A = L·Lᵀ for symmetric
@@ -11,107 +12,57 @@ import LocalLA._
   * (its only factorization is pivoted LU,
   * /root/reference/Matrix/LUDecomposition.java:55-106).
   *
-  * Why it earns its place at 100 TB: half the flops of LU (one
-  * triangular factor instead of two), and NO pivoting — so there is no
-  * per-panel permutation state to carry, the trailing update touches
-  * only the lower triangle (half the blocks of LU's Schur update), and
-  * the only per-iteration synchronization is the broadcast of one
-  * factored diagonal block. Structure mirrors [[BlockLU.factor]]:
+  * Half the flops of LU (one triangular factor instead of two) and NO
+  * pivoting, so there is no permutation state to carry and the update
+  * touches only the lower triangle. One [[BlockSweep]] on the block
+  * columns of the lower triangle (q+1 jobs):
   *
   *   for k in 0..q-1:
-  *     L_kk = chol(A_kk)                  [driver, ≤ blk² doubles]
-  *     L_ik = A_ik · L_kkᵀ⁻¹   (i>k)      [map over the column panel]
-  *     A_ij -= L_ik·L_jkᵀ     (i≥j>k)     [panel-broadcast SYRK map,
-  *                                         partition-preserving]
+  *     L_kk = chol(A_kk)                  [driver]
+  *     L_ik = A_ik·L_kkᵀ⁻¹    (i>k)       [driver, in parallel]
+  *     broadcast column k of L            [≤ n·blk doubles]
+  *     column j>k: A_ij −= L_ik·L_jkᵀ (i≥j)
   *
   * Only blocks with i ≥ j are ever stored or updated — the upper
-  * triangle is implicit by symmetry. Lineage is truncated per
-  * iteration via [[graft.Lineage.truncate]] (reliable checkpoint when
-  * a checkpoint dir is set, local otherwise), the same hazard control
-  * as the LU loop.
+  * triangle is implicit by symmetry. An absent block is a zero block: it
+  * stays absent until an update fills it in.
   */
 object BlockCholesky {
 
   /** Distributed lower Cholesky factor of the SPD matrix given by its
     * LOWER-triangle blocks (keys with i ≥ j; any upper blocks in the
     * input are ignored). Returns the lower-triangular L as blocks with
-    * i ≥ j.
-    *
-    * Like [[BlockLU.factor]], the trailing update broadcasts the column
-    * panel only while it fits `broadcastPanelBytes`; above that the
-    * SYRK becomes two RDD joins (L_ik by block row, L_jk by block col),
-    * so the driver never collects O(q·blk²) doubles per iteration. */
-  def factor(sc: SparkContext, blocks: Blocks, n: Int, blk: Int,
-             broadcastPanelBytes: Long = 256L << 20): Blocks = {
+    * i ≥ j: a narrow view of the one persisted factor. */
+  def factor(sc: SparkContext, blocks: Blocks, n: Int, blk: Int): Blocks = {
     require(n % blk == 0, s"n=$n must be a multiple of blk=$blk")
     val q = n / blk
-    val parts = math.min(q * (q + 1) / 2, 64).max(1)
+    val lower = blocks.filter { case ((i, j), _) => i >= j }
+    BlockSweep.run(sc, BlockSweep.group(lower, q, byColumn = true), q, materialize = true) { (k, colK) =>
+      val lkk = cholesky(fromDM(Option(colK(k)).getOrElse(MlDM.zeros(blk, blk))))
+      // L_kkᵀ is upper-triangular, so solveXU applies unchanged
+      val lkkT = transpose(lkk)
+      val piv = new Array[MlDM](q)
+      piv(k) = toDM(lkk)
+      IntStream.range(k + 1, q).parallel().forEach { i =>
+        if (colK(i) != null) piv(i) = toDM(solveXU(fromDM(colK(i)), lkkT))
+      }
+      BlockSweep.Step(piv, (j, col, b) => update(col, j, k, b))
+    }.flatMap { case (j, col) => col.indices.iterator.filter(col(_) != null).map(i => ((i, j), col(i))) }
+  }
 
-    var rest: Blocks = blocks
-      .filter { case ((i, j), _) => i >= j }
-      .partitionBy(new HashPartitioner(parts)).persist()
-    graft.Lineage.truncate(rest)
-    def materializeAndFetchDiag(r: Blocks, kk: (Int, Int)): MlDM =
-      r.flatMap { case (key, m) => if (key == kk) Iterator.single(m) else Iterator.empty }
-        .collect().head // bounded: ONE diagonal block
-    var diagBlock: MlDM = materializeAndFetchDiag(rest, (0, 0))
-
-    val diagL = new ArrayBuffer[((Int, Int), MlDM)]
-    val panels = new ArrayBuffer[Blocks]
-
-    for (k <- 0 until q) {
-      val lkk = cholesky(fromDM(diagBlock))
-      diagL += (((k, k), toDM(lkk)))
-
-      if (k < q - 1) {
-        // L_ik = A_ik·(L_kkᵀ)⁻¹ — a triangular solve against the
-        // broadcast factor (L_kkᵀ is upper-triangular, so solveXU
-        // applies unchanged). Never a distributed triangular solve.
-        val lkkT = transpose(lkk)
-        val bc = sc.broadcast(lkkT)
-        val panel = rest
-          .filter { case ((i, j), _) => j == k && i > k }
-          .mapValues(m => toDM(solveXU(fromDM(m), bc.value)))
-          .persist()
-        graft.Lineage.truncate(panel)
-        panels += panel
-
-        // Trailing SYRK: A_ij -= L_ik·L_jkᵀ for i ≥ j > k. Below the
-        // broadcast threshold the (q−k−1)-block panel ships whole and
-        // keys are unchanged, so the map preserves the hash partitioning
-        // and the trailing matrix is never re-shuffled; above it, the
-        // update is two RDD joins (same fallback as BlockLU — the panel
-        // plays both the L-row and U-col roles here by symmetry).
-        val trailing = rest.filter { case ((i, j), _) => i >= j && j > k }
-        val panelBytes = (q - k - 1).toLong * blk * blk * 8
-        val newRest: Blocks =
-          if (panelBytes <= broadcastPanelBytes) {
-            val panelMap = sc.broadcast(panel.map { case ((i, _), m) => (i, m) }.collectAsMap())
-            trailing.mapPartitions(_.map { case ((i, j), m) =>
-              ((i, j), dmSub(m, panelMap.value(i).multiply(panelMap.value(j).transpose)))
-            }, preservesPartitioning = true)
-          } else {
-            val byRow = panel.map { case ((i, _), m) => (i, m) }
-            trailing.map { case ((i, j), m) => (i, (j, m)) }
-              .join(byRow)
-              .map { case (i, ((j, m), lik)) => (j, (i, m, lik)) }
-              .join(byRow)
-              .map { case (j, ((i, m, lik), ljk)) => ((i, j), dmSub(m, lik.multiply(ljk.transpose))) }
-          }
-        val materialized = newRest.partitionBy(new HashPartitioner(parts)).persist()
-        graft.Lineage.truncate(materialized)
-        diagBlock = materializeAndFetchDiag(materialized, (k + 1, k + 1))
-        rest.unpersist(blocking = false)
-        rest = materialized
+  /** Step k on block column j; `piv` holds column k of L. */
+  private def update(col: Array[MlDM], j: Int, k: Int, piv: Array[Broadcast[MlDM]]): Array[MlDM] =
+    if (j < k) col
+    else if (j == k) piv.map(b => if (b == null) null else b.value)
+    else if (piv(j) == null) col // L_jk = 0
+    else {
+      val ljkT = piv(j).value.transpose
+      Array.tabulate(col.length) { i =>
+        if (i < j || piv(i) == null) col(i)
+        else if (col(i) == null) dmNeg(piv(i).value.multiply(ljkT))
+        else dmSub(col(i), piv(i).value.multiply(ljkT))
       }
     }
-    rest.unpersist(blocking = false)
-
-    val below =
-      if (panels.isEmpty) sc.emptyRDD[((Int, Int), MlDM)]
-      else sc.union(panels.toSeq)
-    below.union(sc.parallelize(diagL.toSeq, math.min(q, 32)))
-  }
 
   /** Symmetric-positive-definite seeded generator: block (i,j) of
     * (A + Aᵀ)/2 + boost·I for the [[MatrixGen]] matrix A — each block

@@ -1,7 +1,7 @@
 package graft.matrix
 
 import java.util.stream.IntStream
-import org.apache.spark.{HashPartitioner, SparkContext}
+import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.mllib.linalg.{DenseMatrix => MlDM}
 import org.apache.spark.rdd.RDD
@@ -18,67 +18,40 @@ import LocalLA.{backSolveUpper, forwardSolveUnitLower, fromDM, toDM}
   *     row k:   M_kj ← D⁻¹·M_kj (j≠k), M_kk ← D⁻¹
   *     row i≠k: C = M_ik·D⁻¹, M_ij ← M_ij − C·M_kj (j≠k), M_ik ← −C
   *
-  * A is grouped by block row once, its only shuffle. Each step
-  * broadcasts row k with D⁻¹ in place of M_kk (n·blk doubles, the bound
-  * of BlockLU's panel), one broadcast per block, created concurrently,
-  * and releases the previous step's once its job has materialized the
-  * rows. The pivot inversion is the driver's serial work between two
-  * step jobs, while every executor core idles; its solves run in column
-  * panels across the driver's cores.
+  * It runs on [[BlockSweep]], the protocol BlockLU and BlockCholesky
+  * share: A is grouped by block row once, its only shuffle; each step
+  * broadcasts row k with D⁻¹ in place of M_kk, one broadcast per block
+  * (at most n·blk doubles), and releases the previous step's RDD and
+  * broadcasts once its job has materialized the rows. The pivot
+  * inversion is the driver's serial work between two step jobs, while
+  * every executor core idles; its solves run in column panels across
+  * the driver's cores. The last step runs in the caller's action.
   * The pivot blocks are the Schur complements BlockLU factors, so
   * pivoting stays inside diagonal blocks (the reference's contract), and
   * D⁻¹ = U⁻¹·L⁻¹·P carries the permutation. Absent blocks are zero
   * blocks and stay absent, so triangular input costs triangular flops. */
 object Inversion {
 
-  private type Rows = RDD[(Int, Array[MlDM])] // block row i by block column; null = zero block
-
   /** Inverses of a unit-lower and of an upper block-triangular matrix (q×q blocks). */
-  def invLower(l: Blocks, q: Int, blk: Int): Blocks = sweep(l.sparkContext, l, q, blk)
-  def invUpper(u: Blocks, q: Int, blk: Int): Blocks = sweep(u.sparkContext, u, q, blk)
+  def invLower(l: Blocks, q: Int, blk: Int): Blocks = sweep(l, q, blk)
+  def invUpper(u: Blocks, q: Int, blk: Int): Blocks = sweep(u, q, blk)
 
   /** Full inverse: q jobs, the last step runs in the caller's action. */
   def inverse(sc: SparkContext, a: Blocks, n: Int, blk: Int): Blocks = {
     require(n % blk == 0, s"n=$n must be a multiple of blk=$blk")
     inverseInvocations.incrementAndGet()
-    sweep(sc, a, n / blk, blk)
+    sweep(a, n / blk, blk)
   }
 
-  private def sweep(sc: SparkContext, a: Blocks, q: Int, blk: Int): Blocks = {
-    var prev: Rows = null
-    var prevPiv = Array.empty[Broadcast[MlDM]]
-    var rows: Rows = a.map { case ((i, j), m) => (i, (j, m)) }.groupByKey(new HashPartitioner(q))
-      .mapValues { bs => val row = new Array[MlDM](q); bs.foreach { case (j, m) => row(j) = m }; row }
-    for (k <- 0 until q) {
-      graft.Lineage.truncate(rows.persist())
-      // the step's one job materializes the previous step and fetches pivot row k
-      val rowK = rows.flatMap { case (i, row) => if (i == k) Iterator.single(row) else Iterator.empty }
-        .collect().headOption.getOrElse(new Array[MlDM](q)) // bounded: ONE block row
-      // rows is materialized and truncated: nothing reads the previous step's RDD or broadcasts again.
-      // Its closure still ships inside the next step's tasks, so the released handles leave it.
-      if (prev != null) prev.unpersist(blocking = false)
-      for (j <- prevPiv.indices if prevPiv(j) != null) { prevPiv(j).destroy(); prevPiv(j) = null }
-      prev = rows
-      val piv = broadcastPivotRow(sc, rowK, k, invertPivot(Option(rowK(k)).getOrElse(MlDM.zeros(blk, blk))))
-      prevPiv = piv
-      rows = rows.mapPartitions(_.map { case (i, row) => (i, eliminate(row, i, k, piv)) },
-        preservesPartitioning = true)
-    }
-    rows.flatMap { case (i, row) => row.iterator.zipWithIndex.collect { case (m, j) if m != null => ((i, j), m) } }
-  }
+  /** Step k broadcasts row k with D⁻¹ in slot k (no task reads M_kk). */
+  private def sweep(a: Blocks, q: Int, blk: Int): Blocks =
+    BlockSweep.run(a.sparkContext, BlockSweep.group(a, q), q, materialize = false) { (k, rowK) =>
+      val piv = rowK.clone()
+      piv(k) = invertPivot(Option(rowK(k)).getOrElse(MlDM.zeros(blk, blk)))
+      BlockSweep.Step(piv, (i, row, b) => eliminate(row, i, k, b))
+    }.flatMap { case (i, row) => row.iterator.zipWithIndex.collect { case (m, j) if m != null => ((i, j), m) } }
 
-  /** One broadcast per block of pivot row k, created concurrently: slot k
-    * holds D⁻¹ (no task reads M_kk), slot j≠k holds M_kj, null if absent. */
-  private def broadcastPivotRow(sc: SparkContext, rowK: Array[MlDM], k: Int, dInv: MlDM): Array[Broadcast[MlDM]] = {
-    val piv = new Array[Broadcast[MlDM]](rowK.length)
-    IntStream.range(0, rowK.length).parallel().forEach { j =>
-      val m = if (j == k) dInv else rowK(j)
-      if (m != null) piv(j) = sc.broadcast(m)
-    }
-    piv
-  }
-
-  /** Step k of the sweep on block row i; `piv` is [[broadcastPivotRow]]'s. */
+  /** Step k of the sweep on block row i; `piv` holds row k's broadcasts. */
   private def eliminate(row: Array[MlDM], i: Int, k: Int, piv: Array[Broadcast[MlDM]]): Array[MlDM] =
     if (i != k && row(k) == null) row // C = 0
     else {

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.matrix._
 import graft.matrix.BlockModel._
+import org.apache.spark.mllib.linalg.{DenseMatrix => MlDM}
 
 /** Invariant tests for the matrix engine (FIXTURES.md A4, SURVEY.md §5):
   * residual bounds against the verified semantics L·U = A[indx,:] and
@@ -63,13 +64,129 @@ class MatrixSpec extends AnyFunSuite {
     assert(maxAbsDiff(prod, pa) < 1e-8 * n)
   }
 
-  test("distributed LU agrees with shuffle (join) trailing-update path") {
-    val n = 128; val blk = 32
-    val a = MatrixGen.blocks(sc, n, blk, seed)
-    val broad = BlockLU.factor(sc, a, n, blk)
-    val joined = BlockLU.factor(sc, a, n, blk, broadcastPanelBytes = 0L)
-    assert(maxAbsDiff(broad.l, joined.l) == 0.0)
-    assert(maxAbsDiff(broad.u, joined.u) == 0.0)
+  /** A's blocks as a local q×q grid, null where a block is absent. */
+  private def grid(a: Blocks, q: Int): Array[Array[MlDM]] = {
+    val g = Array.ofDim[MlDM](q, q)
+    a.collect().foreach { case ((i, j), m) => g(i)(j) = m }
+    g
+  }
+
+  /** Exactly equal block sets: same keys, same bits in every block. */
+  private def assertSameBits(got: Blocks, want: Map[(Int, Int), MlDM], what: String): Unit = {
+    val g = got.collect().toMap
+    assert(g.keySet == want.keySet, s"$what: block keys differ")
+    for ((key, m) <- want)
+      assert(java.util.Arrays.equals(toDense(g(key)).values, toDense(m).values), s"$what $key not bit-identical")
+  }
+
+  /** Blocked LU on the driver in the per-step loop's order: per block
+    * the same LocalLA kernels, DenseMatrix.multiply and dmSub. */
+  private def blockedLU(a0: Array[Array[MlDM]]) = {
+    import LocalLA._
+    val q = a0.length; val a = a0.map(_.clone())
+    val perms = new Array[Array[Int]](q)
+    val l = scala.collection.mutable.Map.empty[(Int, Int), MlDM]
+    val u = scala.collection.mutable.Map.empty[(Int, Int), MlDM]
+    for (k <- 0 until q) {
+      val packed = fromDM(a(k)(k))
+      perms(k) = ludcmp(packed)
+      val (lkk, ukk) = splitLU(packed)
+      l((k, k)) = toDM(lkk); u((k, k)) = toDM(ukk)
+      for (j <- k + 1 until q) u((k, j)) = toDM(forwardSolveUnitLower(lkk, permuteRows(fromDM(a(k)(j)), perms(k))))
+      for (i <- k + 1 until q) l((i, k)) = toDM(solveXU(fromDM(a(i)(k)), ukk))
+      for (i <- k + 1 until q; j <- k + 1 until q) a(i)(j) = dmSub(a(i)(j), l((i, k)).multiply(u((k, j))))
+    }
+    val lp = l.map { case ((i, j), m) => ((i, j), if (i > j) toDM(permuteRows(fromDM(m), perms(i))) else m) }
+    (lp.toMap, u.toMap, perms)
+  }
+
+  /** Blocked Cholesky on the driver in the per-step loop's order. */
+  private def blockedCholesky(a0: Array[Array[MlDM]]): Map[(Int, Int), MlDM] = {
+    import LocalLA._
+    val q = a0.length; val a = a0.map(_.clone())
+    val l = scala.collection.mutable.Map.empty[(Int, Int), MlDM]
+    for (k <- 0 until q) {
+      val lkk = cholesky(fromDM(a(k)(k)))
+      l((k, k)) = toDM(lkk)
+      val lkkT = transpose(lkk)
+      for (i <- k + 1 until q) l((i, k)) = toDM(solveXU(fromDM(a(i)(k)), lkkT))
+      for (j <- k + 1 until q; i <- j until q) a(i)(j) = dmSub(a(i)(j), l((i, k)).multiply(l((j, k)).transpose))
+    }
+    l.toMap
+  }
+
+  private val bitCheckShapes = Seq((1, 16), (3, 16), (4, 32), (16, 8))
+
+  test("block LU is bit-identical to the blocked driver loop (q ∈ {1, 3, 4, 16})") {
+    for ((q, blk) <- bitCheckShapes) {
+      val n = q * blk
+      val a = MatrixGen.blocks(sc, n, blk, seed + q)
+      val lu = BlockLU.factor(sc, a, n, blk)
+      val (l, u, perms) = blockedLU(grid(a, q))
+      assert(lu.perms.map(_.toSeq).toSeq == perms.map(_.toSeq).toSeq, s"q=$q perms differ")
+      assertSameBits(lu.l, l, s"q=$q L")
+      assertSameBits(lu.u, u, s"q=$q U")
+    }
+  }
+
+  test("block Cholesky is bit-identical to the blocked driver loop (q ∈ {1, 3, 4, 16})") {
+    for ((q, blk) <- bitCheckShapes) {
+      val n = q * blk
+      val spd = BlockCholesky.spdBlocks(sc, n, blk, seed + q, boost = n.toDouble)
+      assertSameBits(BlockCholesky.factor(sc, spd, n, blk), blockedCholesky(grid(spd, q)), s"q=$q Cholesky L")
+    }
+  }
+
+  test("block-sparse arrowhead: LU, Cholesky and solve treat absent blocks as zero blocks") {
+    // a dense first block row and column plus the diagonal blocks, every
+    // other block absent; symmetric and diagonally dominant, so SPD
+    val blk = 16; val q = 4; val n = q * blk
+    val rng = new scala.util.Random(seed)
+    val full = Array.ofDim[Double](n, n)
+    for (i <- 0 until n; j <- 0 to i if i / blk == j / blk || j / blk == 0) {
+      val v = rng.nextDouble() + (if (i == j) n else 0)
+      full(i)(j) = v; full(j)(i) = v
+    }
+    val a = localToBlocks(sc, full, blk).filter { case ((i, j), _) => i == j || i == 0 || j == 0 }
+    val lu = BlockLU.factor(sc, a, n, blk)
+    val lLoc = toLocal(lu.l, n, n, blk); val uLoc = toLocal(lu.u, n, n, blk)
+    val luResid = LocalLA.maxAbsDiff(LocalLA.gemm(lLoc, uLoc), LocalLA.permuteRows(full, lu.globalPerm))
+    assert(luResid < 1e-8 * n, s"‖L·U − P·A‖ = $luResid")
+    val l = toLocal(BlockCholesky.factor(sc, a, n, blk), n, n, blk)
+    val cholResid = LocalLA.maxAbsDiff(LocalLA.gemm(l, LocalLA.transpose(l)), full)
+    assert(cholResid < 1e-8 * n, s"‖L·Lᵀ − A‖ = $cholResid")
+    val b = MatrixGen.blocks(sc, n, blk, seed + 1).filter { case ((_, j), _) => j == 0 }
+    val x = Inversion.solve(sc, a, b, n, blk, blk)
+    val resid = maxAbsDiff(multiply(a, x, blk, n.toLong, n.toLong, blk.toLong), b)
+    assert(resid < 1e-8 * n, s"solve residual $resid")
+  }
+
+  test("BlockLU and BlockCholesky: at most q+1 jobs, every broadcast released, one RDD persisted (q=4, q=8)") {
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val blk = 16
+    for (q <- Seq(4, 8); name <- Seq("LU", "Cholesky")) {
+      val n = q * blk
+      val a = (if (name == "LU") MatrixGen.blocks(sc, n, blk, seed, diagBoost = n.toDouble)
+               else BlockCholesky.spdBlocks(sc, n, blk, seed, boost = n.toDouble)).persist()
+      a.count()
+      // any value type but byte arrays: the scheduler's task binaries live until GC
+      def live() = org.apache.spark.LiveBroadcasts[AnyRef](sc) -- org.apache.spark.LiveBroadcasts[Array[Byte]](sc)
+      val bcBefore = live()
+      val rddBefore = sc.getPersistentRDDs.keySet
+      val (jobs, _) = org.apache.spark.JobCounter(sc) {
+        if (name == "LU") BlockLU.factor(sc, a, n, blk) else BlockCholesky.factor(sc, a, n, blk)
+      }
+      assert(jobs <= q + 1, s"$name q=$q: $jobs jobs")
+      val persisted = sc.getPersistentRDDs.keySet -- rddBefore
+      assert(persisted.size == 1, s"$name q=$q: ${persisted.size} RDDs left persisted")
+      eventually(timeout(10.seconds)) {
+        val left = live() -- bcBefore
+        assert(left.isEmpty, s"$name q=$q: broadcasts $left still live")
+      }
+      persisted.foreach(id => sc.getPersistentRDDs(id).unpersist())
+      a.unpersist()
+    }
   }
 
   test("m11 least squares: normal-equations residual ~ 0, matches local solve") {
@@ -77,14 +194,6 @@ class MatrixSpec extends AnyFunSuite {
     val row = df.collect()(0)
     assert(row.getAs[Boolean]("pass"),
       s"resid_rel=${row.getAs[Double]("resid_rel")} vs_local=${row.getAs[Double]("vs_local")}")
-  }
-
-  test("distributed Cholesky agrees with shuffle (join) trailing-update path") {
-    val n = 128; val blk = 32
-    val a = BlockCholesky.spdBlocks(sc, n, blk, seed, boost = n.toDouble)
-    val broad = BlockCholesky.factor(sc, a, n, blk)
-    val joined = BlockCholesky.factor(sc, a, n, blk, broadcastPanelBytes = 0L)
-    assert(maxAbsDiff(broad, joined) == 0.0)
   }
 
   test("distributed triangular inversion") {

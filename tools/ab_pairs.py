@@ -3,7 +3,7 @@
 
 Usage (from anywhere):
   python3 tools/ab_pairs.py PARENT_DIR CHANGE_DIR --workload W --pairs N \
-      [--seed S] [--seconds T] [--metric NAME]
+      [--seed S] [--seconds T] [--metric NAME] [--trace-seed S]
 
 Pair i runs `python3 perfbench/run.py --workload W --seed S+i --seconds T
 --trace 0` once in each checkout, the parent first in even pairs and the
@@ -13,7 +13,10 @@ metric it prints each side's median and quartiles; for --metric
 (default op_s_p50) it also prints the win count and whether the gain
 rule holds: the change wins at least 9/10 of the pairs (ties count for
 neither) and the medians differ by more than the parent's quartile
-spread. The last stdout line is one JSON object with every run.
+spread. With --trace-seed S it then runs `run.py --trace 1 --seed S` once
+in each checkout and prints every *.jobs, *.tasks, *.shuffle_bytes and
+*.wall_s counter side by side. The last stdout line is one JSON object
+with every run.
 Nothing is written into either checkout beyond what run.py writes.
 """
 import argparse
@@ -24,9 +27,9 @@ import subprocess
 import sys
 
 
-def run_once(checkout, workload, seed, seconds):
+def run_once(checkout, workload, seed, seconds, trace=0):
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
     p = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE,
                        stderr=subprocess.PIPE, text=True)
     lines = p.stdout.strip().splitlines()
@@ -34,6 +37,12 @@ def run_once(checkout, workload, seed, seconds):
         sys.stderr.write(p.stderr[-4000:])
         sys.exit(f"ab_pairs: run.py failed in {checkout} (exit {p.returncode})")
     return json.loads(lines[-1])
+
+
+def fmt(v):
+    if v is None:
+        return "-"
+    return str(int(v)) if float(v).is_integer() else f"{v:.6g}"
 
 
 def quartiles(xs):
@@ -52,6 +61,7 @@ def main():
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--seconds", type=float, default=10)
     ap.add_argument("--metric", default="op_s_p50")
+    ap.add_argument("--trace-seed", type=int)
     args = ap.parse_args()
 
     with open(os.path.join(args.parent, "BENCHMARK.json")) as f:
@@ -92,9 +102,19 @@ def main():
     print(f"{args.metric}: change wins {wins}/{args.pairs}; median gain {gap:.4g} "
           f"vs parent IQR {iqr:.4g}; gain rule {'holds' if holds else 'does not hold'}; "
           f"failed parent {failed['parent']} change {failed['change']}")
+    traced = {}
+    if args.trace_seed is not None:
+        for side in ("parent", "change"):
+            traced[side] = run_once(sides[side], args.workload, args.trace_seed, args.seconds, trace=1)
+        counters = (".jobs", ".tasks", ".shuffle_bytes", ".wall_s")
+        names = sorted({n for t in traced.values() for n in t["metrics"] if n.endswith(counters)})
+        print(f"traced, seed {args.trace_seed}: parent / change")
+        for name in names:
+            p, c = (fmt(traced[s]["metrics"].get(name, {}).get("value")) for s in ("parent", "change"))
+            print(f"  {name:40s} {p} / {c}")
     print(json.dumps({"workload": args.workload, "metric": args.metric, "wins": wins,
                       "pairs": args.pairs, "holds": holds, "failed": failed,
-                      "summary": summary, "runs": runs}))
+                      "summary": summary, "runs": runs, "traced": traced}))
 
 
 if __name__ == "__main__":
