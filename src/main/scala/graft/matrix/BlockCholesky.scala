@@ -33,11 +33,17 @@ object BlockCholesky {
     * LOWER-triangle blocks (keys with i ≥ j; any upper blocks in the
     * input are ignored). Returns the lower-triangular L as blocks with
     * i ≥ j: a narrow view of the one persisted factor. */
-  def factor(sc: SparkContext, blocks: Blocks, n: Int, blk: Int): Blocks = {
+  def factor(sc: SparkContext, blocks: Blocks, n: Int, blk: Int): Blocks = view(columns(sc, blocks, n, blk))
+
+  private[matrix] def view(cols: BlockSweep.Lines): Blocks =
+    cols.flatMap { case (j, col) => col.indices.iterator.filter(col(_) != null).map(i => ((i, j), col(i))) }
+
+  /** The persisted factor behind [[factor]]: column j of L in line j. */
+  private[matrix] def columns(sc: SparkContext, blocks: Blocks, n: Int, blk: Int): BlockSweep.Lines = {
     require(n % blk == 0, s"n=$n must be a multiple of blk=$blk")
     val q = n / blk
     val lower = blocks.filter { case ((i, j), _) => i >= j }
-    BlockSweep.run(sc, BlockSweep.group(lower, q, byColumn = true), q, materialize = true) { (k, colK) =>
+    BlockSweep.run(sc, BlockSweep.group(lower, q, q, byColumn = true), 0 until q, q, materialize = true) { (k, colK) =>
       val lkk = cholesky(fromDM(Option(colK(k)).getOrElse(MlDM.zeros(blk, blk))))
       // L_kkᵀ is upper-triangular, so solveXU applies unchanged
       val lkkT = transpose(lkk)
@@ -47,7 +53,7 @@ object BlockCholesky {
         if (colK(i) != null) piv(i) = toDM(solveXU(fromDM(colK(i)), lkkT))
       }
       BlockSweep.Step(piv, (j, col, b) => update(col, j, k, b))
-    }.flatMap { case (j, col) => col.indices.iterator.filter(col(_) != null).map(i => ((i, j), col(i))) }
+    }
   }
 
   /** Step k on block column j; `piv` holds column k of L. */

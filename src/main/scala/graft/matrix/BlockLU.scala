@@ -10,11 +10,22 @@ import LocalLA._
 /** Result of a distributed block LU: P·A = L·U where P = ⊕ₖ Pₖ permutes
   * rows only within each block row (the reference's contract — pivoting
   * confined to base-case blocks with the permutation carried as an index
-  * vector, /root/reference/Matrix/LUDecomposition.java:92-106,141-146). */
-final case class BlockLUResult(l: Blocks, u: Blocks, perms: Array[Array[Int]], n: Int, blk: Int) {
+  * vector, reference Matrix/LUDecomposition.java:92-106,141-146).
+  * `lines` is the persisted factor, partitioned by `HashPartitioner(q)`:
+  * line i holds L_ij (j<i), the packed L\U_ii and U_ij (j>i); L and U
+  * are narrow views of it. */
+final case class BlockLUResult(lines: BlockSweep.Lines, perms: Array[Array[Int]], n: Int, blk: Int) {
+  val l: Blocks = view(_ >= _, splitLU(_)._1)
+  val u: Blocks = view(_ <= _, splitLU(_)._2)
   /** Global permutation: row i of L·U is original row globalPerm(i). */
   def globalPerm: Array[Int] =
     perms.zipWithIndex.flatMap { case (p, k) => p.map(_ + k * blk) }
+
+  private def view(keep: (Int, Int) => Boolean, diag: Array[Array[Double]] => Array[Array[Double]]): Blocks =
+    lines.flatMap { case (i, row) =>
+      row.indices.iterator.filter(j => row(j) != null && keep(i, j))
+        .map(j => ((i, j), if (i == j) toDM(diag(fromDM(row(j)))) else row(j)))
+    }
 }
 
 /** Right-looking blocked LU factorization on block rows, one
@@ -39,8 +50,8 @@ final case class BlockLUResult(l: Blocks, u: Blocks, perms: Array[Array[Int]], n
   *     row i>k: L_ik = A_ik·U_kk⁻¹, A_ij −= L_ik·U_kj (j>k)
   *
   * An absent block is a zero block: it stays absent until an update
-  * fills it in. The factor is persisted once, as block rows; L and U are
-  * narrow views of it.
+  * fills it in. The factor is persisted once, as block rows
+  * ([[BlockLUResult.lines]]); L and U are narrow views of it.
   */
 object BlockLU {
 
@@ -48,7 +59,7 @@ object BlockLU {
     require(n % blk == 0, s"n=$n must be a multiple of blk=$blk")
     val q = n / blk
     val perms = new Array[Array[Int]](q)
-    val lu = BlockSweep.run(sc, BlockSweep.group(blocks, q), q, materialize = true) { (k, rowK) =>
+    val lu = BlockSweep.run(sc, BlockSweep.group(blocks, q, q), 0 until q, q, materialize = true) { (k, rowK) =>
       val packed = fromDM(Option(rowK(k)).getOrElse(MlDM.zeros(blk, blk)))
       val indx = ludcmp(packed)
       Inversion.countClamps(packed)
@@ -61,12 +72,7 @@ object BlockLU {
       }
       BlockSweep.Step(piv, (i, row, b) => eliminate(row, i, k, indx, b))
     }
-    def view(keep: (Int, Int) => Boolean, diag: Array[Array[Double]] => Array[Array[Double]]): Blocks =
-      lu.flatMap { case (i, row) =>
-        row.indices.iterator.filter(j => row(j) != null && keep(i, j))
-          .map(j => ((i, j), if (i == j) toDM(diag(fromDM(row(j)))) else row(j)))
-      }
-    BlockLUResult(view(_ >= _, splitLU(_)._1), view(_ <= _, splitLU(_)._2), perms, n, blk)
+    BlockLUResult(lu, perms, n, blk)
   }
 
   /** Step k on block row i; `piv` holds L\U_kk in slot k and U_kj in slot j>k. */

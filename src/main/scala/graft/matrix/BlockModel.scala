@@ -63,9 +63,11 @@ object BlockModel {
       mx
     }.fold(0.0)(math.max)
 
+  /** maxAbs(A − B), a block absent on one side counting as a zero block. */
   def maxAbsDiff(a: Blocks, b: Blocks): Double =
-    a.join(b).map { case (_, (x, y)) =>
-      val xv = toDense(x).values; val yv = toDense(y).values
+    a.fullOuterJoin(b).map { case (_, (x, y)) =>
+      lazy val zero = new Array[Double](x.orElse(y).get.values.length)
+      val xv = x.fold(zero)(toDense(_).values); val yv = y.fold(zero)(toDense(_).values)
       var mx = 0.0
       var i = 0
       while (i < xv.length) { val d = math.abs(xv(i) - yv(i)); if (d > mx) mx = d; i += 1 }

@@ -7,21 +7,23 @@ import org.apache.spark.mllib.linalg.{DenseMatrix => MlDM}
 import org.apache.spark.rdd.RDD
 import BlockModel.Blocks
 
-/** The per-step protocol every factorization here runs on: the
-  * inverse's Gauss-Jordan sweep ([[Inversion]]), [[BlockLU]] on block
-  * rows and [[BlockCholesky]] on block columns. A q×q block matrix is
-  * held as q lines, each an array of its q blocks, null for an absent
-  * (zero) block:
+/** The per-step protocol every factorization and solve here runs on:
+  * the inverse's Gauss-Jordan sweep ([[Inversion]]), [[BlockLU]] on
+  * block rows, [[BlockCholesky]] on block columns and the substitution
+  * solves on [factor row | right-hand side] lines. A q×q block matrix
+  * is held as q lines, each an array of its blocks (q slots, more when
+  * the lines carry a right-hand side), null for an absent (zero) block:
   *
   *   group the blocks into lines once               [the only shuffle]
-  *   for k in 0..q-1:
+  *   for k in the step order:
   *     one job materializes step k−1, fetches line k
   *     pivot work on line k                         [driver, its cores]
   *     broadcast the step's blocks, one per broadcast, concurrently
   *     one narrow mapPartitions update of every line
   *     release step k−1's RDD and broadcasts
   *
-  * A step broadcasts at most one line, n·blk doubles. Each step's lines
+  * A step broadcasts at most one line: n·blk doubles in a factorization,
+  * blk·m in a solve with m right-hand sides. Each step's lines
   * are persisted and cut by [[graft.Lineage.truncate]] before its job
   * (reliable checkpoint when a checkpoint dir is set, local otherwise),
   * so the DAG never grows with q. */
@@ -35,18 +37,20 @@ private[matrix] object BlockSweep {
   final case class Step(blocks: Array[MlDM], update: (Int, Line, Array[Broadcast[MlDM]]) => Line)
 
   /** Block (i, j) goes to line i at slot j, or to line j at slot i when
-    * `byColumn`. */
-  def group(a: Blocks, q: Int, byColumn: Boolean = false): Lines =
+    * `byColumn`; q lines of `slots` slots, one partition per line. */
+  def group(a: Blocks, q: Int, slots: Int, byColumn: Boolean = false): Lines =
     a.map { case ((i, j), m) => if (byColumn) (j, (i, m)) else (i, (j, m)) }
       .groupByKey(new HashPartitioner(q))
-      .mapValues { bs => val line = new Array[MlDM](q); bs.foreach { case (s, m) => line(s) = m }; line }
+      .mapValues { bs => val line = new Array[MlDM](slots); bs.foreach { case (s, m) => line(s) = m }; line }
 
-  /** Runs the q steps, `step(k, line k)` on the driver. With
-    * `materialize` the result is persisted, truncated and computed by one
-    * more job, and every step's RDD and broadcasts are released: q+1
-    * jobs. Without it the last step runs in the caller's action, and its
-    * input RDD and broadcasts stay for it: q jobs. */
-  def run(sc: SparkContext, lines0: Lines, q: Int, materialize: Boolean)(step: (Int, Line) => Step): Lines = {
+  /** One job per step, one step per line index in `order`: `step(s,
+    * line order(s))` on the driver, an absent line read as `width` nulls.
+    * With `materialize` one more job computes the persisted, truncated
+    * result, and every step's RDD and broadcasts are released. Without
+    * it the last step runs in the caller's action, its RDD and
+    * broadcasts kept for it. */
+  def run(sc: SparkContext, lines0: Lines, order: Seq[Int], width: Int, materialize: Boolean)
+      (step: (Int, Line) => Step): Lines = {
     var lines = lines0
     var prev: Lines = null
     var prevPiv = Array.empty[Broadcast[MlDM]]
@@ -57,17 +61,17 @@ private[matrix] object BlockSweep {
       if (prev != null) prev.unpersist(blocking = false)
       for (j <- prevPiv.indices if prevPiv(j) != null) { prevPiv(j).destroy(); prevPiv(j) = null }
     }
-    for (k <- 0 until q) {
+    for ((k, s) <- order.zipWithIndex) {
       graft.Lineage.truncate(lines.persist())
       val lineK = lines.flatMap { case (i, line) => if (i == k) Iterator.single(line) else Iterator.empty }
-        .collect().headOption.getOrElse(new Array[MlDM](q)) // bounded: ONE line
+        .collect().headOption.getOrElse(new Array[MlDM](width)) // bounded: ONE line
       release()
       prev = lines
-      val s = step(k, lineK)
-      val piv = new Array[Broadcast[MlDM]](q)
-      IntStream.range(0, q).parallel().forEach(j => if (s.blocks(j) != null) piv(j) = sc.broadcast(s.blocks(j)))
+      val st = step(s, lineK)
+      val piv = new Array[Broadcast[MlDM]](st.blocks.length)
+      IntStream.range(0, piv.length).parallel().forEach(j => if (st.blocks(j) != null) piv(j) = sc.broadcast(st.blocks(j)))
       prevPiv = piv
-      val update = s.update // not s: its blocks reach the tasks only as broadcasts
+      val update = st.update // not st: its blocks reach the tasks only as broadcasts
       lines = lines.mapPartitions(_.map { case (i, line) => (i, update(i, line, piv)) }, preservesPartitioning = true)
     }
     if (materialize) {

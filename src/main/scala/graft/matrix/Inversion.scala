@@ -1,7 +1,7 @@
 package graft.matrix
 
 import java.util.stream.IntStream
-import org.apache.spark.SparkContext
+import org.apache.spark.{HashPartitioner, SparkContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.mllib.linalg.{DenseMatrix => MlDM}
 import org.apache.spark.rdd.RDD
@@ -45,7 +45,7 @@ object Inversion {
 
   /** Step k broadcasts row k with D⁻¹ in slot k (no task reads M_kk). */
   private def sweep(a: Blocks, q: Int, blk: Int): Blocks =
-    BlockSweep.run(a.sparkContext, BlockSweep.group(a, q), q, materialize = false) { (k, rowK) =>
+    BlockSweep.run(a.sparkContext, BlockSweep.group(a, q, q), 0 until q, q, materialize = false) { (k, rowK) =>
       val piv = rowK.clone()
       piv(k) = invertPivot(Option(rowK(k)).getOrElse(MlDM.zeros(blk, blk)))
       BlockSweep.Step(piv, (i, row, b) => eliminate(row, i, k, b))
@@ -127,110 +127,88 @@ object Inversion {
   private[matrix] def countClamps(packed: Array[Array[Double]]): Unit =
     pivotClamps.addAndGet(packed.indices.count(j => packed(j)(j) == LocalLA.Tiny))
 
-  /** solve(A, X) = B by TRUE blocked triangular substitution (the
+  /** solve(A, X) = B by blocked triangular substitution (the
     * reference's O12 TRSM semantics,
-    * /root/reference/Matrix/LUDecomposition.java:410-493 — forward
-    * substitution at :477-486): factor P·A = L·U once, then L·Y = P·B by
-    * a forward block sweep and U·X = Y by a backward block sweep. Half
-    * the flops of inverse-then-multiply and numerically stronger (no
-    * explicit inverse is ever formed).
-    *
-    * Distributed shape (wavefront TRSM): at step k the solved block row
-    * Y_k (blk×m doubles — the RHS is assumed skinny; for m ≈ n prefer
-    * [[inverse]]+multiply) is broadcast, and the remaining RHS
-    * rows take the rank-blk update B_i ← B_i − L_ik·Y_k as one job that
-    * joins the RHS blocks with the L column panel by block row — the
-    * same broadcast-the-factor insight as the reference's replication-20
-    * HDFS side files (:148-150). Per sweep: q tiny base solves + q
-    * panel-update jobs over B-sized data only; A-sized data is touched
-    * exactly once, by the factorization. */
-  def solve(sc: SparkContext, a: Blocks, b: Blocks, n: Int, m: Int, blk: Int): Blocks =
-    solveFactored(sc, BlockLU.factor(sc, a, n, blk), b, m)
+    * reference Matrix/LUDecomposition.java:410-493): factor
+    * P·A = L·U once, then L·Y = P·B by a forward block sweep and U·X = Y
+    * by a backward one. Half the flops of inverse-then-multiply, and no
+    * inverse is formed. The factor is released after the sweeps: at most
+    * 3q+2 jobs with the caller's action. */
+  def solve(sc: SparkContext, a: Blocks, b: Blocks, n: Int, m: Int, blk: Int): Blocks = {
+    val lu = BlockLU.factor(sc, a, n, blk)
+    val x = solveFactored(sc, lu, b, m)
+    lu.lines.unpersist(blocking = false)
+    x
+  }
 
-  /** One triangular wavefront: solve block row k against the broadcast
-    * diagonal factor, push the update into the remaining rows through
-    * the `panels` column k, repeat in `order`. Consumes (and
-    * unpersists) `cur0`. Shared by the LU and Cholesky solves. */
-  private def sweepSolve(sc: SparkContext, cur0: Blocks,
-      diag: scala.collection.Map[(Int, Int), MlDM],
-      panels: Blocks,
-      order: Seq[Int],
-      remains: (Int, Int) => Boolean,
-      base: (Array[Array[Double]], Array[Array[Double]]) => Array[Array[Double]])
-      : Seq[((Int, Int), MlDM)] = {
-    var cur = cur0
-    val solved = scala.collection.mutable.ArrayBuffer.empty[((Int, Int), MlDM)]
-    for (k <- order) {
-      val dkk = fromDM(diag((k, k)))
-      val rowK = cur.filter { case ((i, _), _) => i == k }
-        .mapValues(mb => toDM(base(dkk, fromDM(mb))))
-        .collect() // bounded: one q-block panel row
-      solved ++= rowK
-      if (order.last != k) {
-        val rowB = sc.broadcast(rowK.map { case ((_, j), mm) => (j, mm) }.toMap)
-        val pan = panels
-          .filter { case ((i, j2), _) => j2 == k && remains(i, k) }
-          .map { case ((i, _), mm) => (i, mm) }
-        val next: Blocks = cur
-          .filter { case ((i, _), _) => remains(i, k) }
-          .map { case ((i, j), mm) => (i, (j, mm)) }
-          .join(pan)
-          .map { case (i, ((j, mm), pik)) =>
-            ((i, j), dmSub(mm, pik.multiply(rowB.value(j)))) }
-          .persist()
-        graft.Lineage.truncate(next)
-        next.count()
-        cur.unpersist(blocking = false)
-        cur = next
+  /** [[solve]] against an existing factor, which stays persisted. P·B
+    * is joined onto the factor's lines, a shuffle of B only. 2q jobs, and
+    * the last step runs in the caller's action: 2q+1 with it. */
+  def solveFactored(sc: SparkContext, lu: BlockLUResult, b: Blocks, m: Int): Blocks = {
+    val blk = lu.blk; val q = lu.n / blk; val w = (m + blk - 1) / blk; val perms = lu.perms
+    // the permutation is block-diagonal: within-block row remaps
+    val pb = b.map { case ((i, j), mb) => (i, (j, toDM(LocalLA.permuteRows(fromDM(mb), perms(i))))) }
+    val lines = lu.lines.cogroup(pb, new HashPartitioner(q)).mapValues { case (rows, bs) =>
+      val line = java.util.Arrays.copyOf(rows.headOption.getOrElse(new Array[MlDM](q)), q + w)
+      bs.foreach { case (j, mb) => line(q + j) = mb }
+      line
+    }
+    substitute(sc, lines, q, w, blk, forwardSolveUnitLower, backSolveUpper)
+  }
+
+  /** solve(A, B) for SPD A through the Cholesky factor, which is
+    * released after the sweeps: L·Y = B forward, Lᵀ·X = Y backward. */
+  def solveSPD(sc: SparkContext, a: Blocks, b: Blocks, n: Int, m: Int, blk: Int): Blocks = {
+    val cols = BlockCholesky.columns(sc, a, n, blk)
+    val x = solveCholFactored(sc, BlockCholesky.view(cols), b, n, blk)
+    cols.unpersist(blocking = false)
+    x
+  }
+
+  /** [[solveSPD]] against an existing factor: one job finds the width
+    * of B, then L_ij goes to line i, L_ijᵀ to line j (the row of Lᵀ the
+    * backward sweep reads) and B_ij to line i, one shuffle. */
+  def solveCholFactored(sc: SparkContext, l: Blocks, b: Blocks, n: Int, blk: Int): Blocks = {
+    import LocalLA.{forwardSolveLower, transpose}
+    val q = n / blk; val w = b.map(_._1._2 + 1).fold(0)(math.max)
+    val entries = l.flatMap { case ((i, j), mm) =>
+      if (i == j) Iterator(((i, j), mm)) else Iterator(((i, j), mm), ((j, i), toDM(transpose(fromDM(mm)))))
+    }.union(b.map { case ((i, j), mb) => ((i, q + j), mb) })
+    substitute(sc, BlockSweep.group(entries, q, q + w), q, w, blk, forwardSolveLower,
+      (d, y) => backSolveUpper(transpose(d), y))
+  }
+
+  /** Forward then backward block substitution on lines [factor row i |
+    * B row i]: the lower factor left of the diagonal, the upper right of
+    * it, B_ij in slot q+j. Step k solves line k's B slots against its
+    * diagonal block on the driver and broadcasts them (blk·m doubles);
+    * forward, lines i>k apply B_i −= L_ik·Y_k, backward lines i<k apply
+    * Y_i −= U_ik·X_k. An absent block is a zero block, filled in. */
+  private def substitute(sc: SparkContext, lines: BlockSweep.Lines, q: Int, w: Int, blk: Int,
+      forward: (Array[Array[Double]], Array[Array[Double]]) => Array[Array[Double]],
+      backward: (Array[Array[Double]], Array[Array[Double]]) => Array[Array[Double]]): Blocks = {
+    val order = (0 until q) ++ (q - 1 to 0 by -1)
+    BlockSweep.run(sc, lines, order, q + w, materialize = false) { (s, line) =>
+      val k = order(s); val down = s < q
+      val solve = if (down) forward else backward
+      val d = fromDM(Option(line(k)).getOrElse(MlDM.zeros(blk, blk)))
+      val piv = new Array[MlDM](q + w)
+      IntStream.range(q, q + w).parallel().forEach(c => if (line(c) != null) piv(c) = toDM(solve(d, fromDM(line(c)))))
+      BlockSweep.Step(piv, (i, row, b) => substituteRow(row, if (down) i > k else i < k, i == k, k, b))
+    }.flatMap { case (i, line) => (q until q + w).iterator.filter(line(_) != null).map(c => ((i, c - q), line(c))) }
+  }
+
+  /** One line's step k; `piv` holds line k's solved B slots. */
+  private def substituteRow(row: Array[MlDM], updated: Boolean, pivot: Boolean, k: Int,
+      piv: Array[Broadcast[MlDM]]): Array[MlDM] =
+    if (pivot) Array.tabulate(row.length)(c => if (piv(c) == null) row(c) else piv(c).value)
+    else if (!updated || row(k) == null) row
+    else {
+      val f = row(k)
+      Array.tabulate(row.length) { c =>
+        if (piv(c) == null) row(c)
+        else if (row(c) == null) dmNeg(f.multiply(piv(c).value))
+        else dmSub(row(c), f.multiply(piv(c).value))
       }
     }
-    cur.unpersist(blocking = false)
-    solved.toSeq
-  }
-
-  def solveFactored(sc: SparkContext, lu: BlockLUResult, b: Blocks, m: Int): Blocks = {
-    val blk = lu.blk; val q = lu.n / blk
-    val permsB = sc.broadcast(lu.perms)
-    val lDiag = lu.l.filter { case ((i, j), _) => i == j }.collectAsMap()
-    val uDiag = lu.u.filter { case ((i, j), _) => i == j }.collectAsMap()
-
-    // P·B: the permutation is block-diagonal, so it folds in as
-    // within-block row remaps — a narrow map.
-    val pb: Blocks = b.map { case ((i, j), mb) =>
-      ((i, j), toDM(LocalLA.permuteRows(fromDM(mb), permsB.value(i))))
-    }.persist()
-
-    // forward: L·Y = P·B (unit-lower diag solves, update rows below)
-    val y = sweepSolve(sc, pb, lDiag, lu.l, 0 until q, (i, k) => i > k, forwardSolveUnitLower)
-    val yR: Blocks = sc.parallelize(y, math.min(y.size.max(1), 32)).persist()
-    // backward: U·X = Y (upper diag solves, update rows above)
-    val x = sweepSolve(sc, yR, uDiag, lu.u, (q - 1) to 0 by -1, (i, k) => i < k, backSolveUpper)
-    sc.parallelize(x, math.min(x.size.max(1), 32))
-  }
-
-  /** solve(A, B) for SPD A through the Cholesky factorization — the
-    * same two-sweep wavefront as [[solveFactored]] but with ONE factor:
-    * L·Y = B forward, then Lᵀ·X = Y backward (the Lᵀ panels and
-    * diagonals are per-block transposes of L — a narrow map, nothing
-    * re-factored). No permutation fold-in: Cholesky never pivots. */
-  def solveSPD(sc: SparkContext, a: Blocks, b: Blocks, n: Int, m: Int, blk: Int): Blocks =
-    solveCholFactored(sc, BlockCholesky.factor(sc, a, n, blk), b, n, blk)
-
-  def solveCholFactored(sc: SparkContext, l: Blocks, b: Blocks, n: Int, blk: Int): Blocks = {
-    import LocalLA.{backSolveUpper, forwardSolveLower, transpose}
-    val q = n / blk
-    val lc = l.persist()
-    val lDiag = lc.filter { case ((i, j), _) => i == j }.collectAsMap()
-    val ltDiag = lDiag.map { case (k, mm) => (k, toDM(transpose(fromDM(mm)))) }
-    val lt: Blocks = lc.map { case ((i, j), mm) => ((j, i), toDM(transpose(fromDM(mm)))) }
-
-    val cur0: Blocks = b.persist()
-    // forward: L·Y = B (non-unit lower diag solves, update rows below)
-    val y = sweepSolve(sc, cur0, lDiag, lc, 0 until q, (i, k) => i > k, forwardSolveLower)
-    val yR: Blocks = sc.parallelize(y, math.min(y.size.max(1), 32)).persist()
-    // backward: Lᵀ·X = Y (upper diag solves, update rows above)
-    val x = sweepSolve(sc, yR, ltDiag, lt, (q - 1) to 0 by -1, (i, k) => i < k, backSolveUpper)
-    lc.unpersist(blocking = false)
-    sc.parallelize(x, math.min(x.size.max(1), 32))
-  }
 }

@@ -254,7 +254,9 @@ object LocalLA {
     x
   }
 
-  /** X = B·U⁻¹ for upper-triangular U (m×m), B n×m (the L-panel solve). */
+  /** X = B·U⁻¹ for upper-triangular U (m×m), B n×m (the L-panel solve).
+    * Row-oriented: x_j, once divided, is axpy'd along row j of U into
+    * every x_c (c>j), so x_c gets its subtractions in k order. */
   def solveXU(b: Array[Array[Double]], u: Array[Array[Double]]): Array[Array[Double]] = {
     val n = b.length; val m = u.length
     val x = b.map(_.clone())
@@ -263,10 +265,11 @@ object LocalLA {
       val xr = x(r)
       var j = 0
       while (j < m) {
-        var s = xr(j)
-        var k = 0
-        while (k < j) { s -= xr(k) * u(k)(j); k += 1 }
-        xr(j) = s / (if (u(j)(j) == 0.0) Tiny else u(j)(j))
+        val uj = u(j)
+        val xj = xr(j) / (if (uj(j) == 0.0) Tiny else uj(j))
+        xr(j) = xj
+        var c = j + 1
+        while (c < m) { xr(c) -= xj * uj(c); c += 1 }
         j += 1
       }
       r += 1

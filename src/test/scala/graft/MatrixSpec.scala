@@ -64,9 +64,9 @@ class MatrixSpec extends AnyFunSuite {
     assert(maxAbsDiff(prod, pa) < 1e-8 * n)
   }
 
-  /** A's blocks as a local q×q grid, null where a block is absent. */
-  private def grid(a: Blocks, q: Int): Array[Array[MlDM]] = {
-    val g = Array.ofDim[MlDM](q, q)
+  /** A's blocks as a local rows×cols grid, null where a block is absent. */
+  private def grid(a: Blocks, rows: Int, cols: Int): Array[Array[MlDM]] = {
+    val g = Array.ofDim[MlDM](rows, cols)
     a.collect().foreach { case ((i, j), m) => g(i)(j) = m }
     g
   }
@@ -122,7 +122,7 @@ class MatrixSpec extends AnyFunSuite {
       val n = q * blk
       val a = MatrixGen.blocks(sc, n, blk, seed + q)
       val lu = BlockLU.factor(sc, a, n, blk)
-      val (l, u, perms) = blockedLU(grid(a, q))
+      val (l, u, perms) = blockedLU(grid(a, q, q))
       assert(lu.perms.map(_.toSeq).toSeq == perms.map(_.toSeq).toSeq, s"q=$q perms differ")
       assertSameBits(lu.l, l, s"q=$q L")
       assertSameBits(lu.u, u, s"q=$q U")
@@ -133,7 +133,7 @@ class MatrixSpec extends AnyFunSuite {
     for ((q, blk) <- bitCheckShapes) {
       val n = q * blk
       val spd = BlockCholesky.spdBlocks(sc, n, blk, seed + q, boost = n.toDouble)
-      assertSameBits(BlockCholesky.factor(sc, spd, n, blk), blockedCholesky(grid(spd, q)), s"q=$q Cholesky L")
+      assertSameBits(BlockCholesky.factor(sc, spd, n, blk), blockedCholesky(grid(spd, q, q)), s"q=$q Cholesky L")
     }
   }
 
@@ -459,6 +459,187 @@ class MatrixSpec extends AnyFunSuite {
     assert(resid < 1e-8 * n, s"Cholesky-solve residual $resid")
     val xLU = Inversion.solve(sc, aFull, b, n, blk, blk)
     assert(maxAbsDiff(x, xLU) < 1e-8 * n, "SPD solve disagrees with LU solve")
+  }
+
+  test("solveXU: the row-oriented loop is bit-identical to the column loop (n ∈ {1, 2, 7, 64, 300, 512}, rectangular B)") {
+    // the column loop solveXU ran before: x_j = (b_j − Σ_{k<j} x_k·u_kj) / u_jj
+    def columnLoop(b: Array[Array[Double]], u: Array[Array[Double]]): Array[Array[Double]] = {
+      val x = b.map(_.clone())
+      for (xr <- x; j <- u.indices) {
+        var s = xr(j)
+        var k = 0
+        while (k < j) { s -= xr(k) * u(k)(j); k += 1 }
+        xr(j) = s / (if (u(j)(j) == 0.0) LocalLA.Tiny else u(j)(j))
+      }
+      x
+    }
+    val rng = new scala.util.Random(seed)
+    for (n <- Seq(1, 2, 7, 64, 300, 512); rows <- Seq(n, n / 2 + 3)) {
+      val u = Array.tabulate(n, n)((i, j) => if (j < i) 0.0 else rng.nextDouble() + (if (i == j) 1 else 0))
+      if (n == 7) u(3)(3) = 0.0 // a clamped pivot
+      val b = Array.fill(rows, n)(rng.nextDouble())
+      val got = LocalLA.solveXU(b, u); val want = columnLoop(b, u)
+      assert(got.length == rows, s"n=$n rows=$rows")
+      assert(got.indices.forall(r => java.util.Arrays.equals(got(r), want(r))), s"n=$n rows=$rows not bit-identical")
+    }
+  }
+
+  test("maxAbsDiff counts a block absent on one side as a zero block") {
+    val n = 64; val blk = 16
+    val a = MatrixGen.blocks(sc, n, blk, seed)
+    val dropped = a.filter { case (key, _) => key != (1, 2) }
+    val block = a.lookup((1, 2)).head.values.map(math.abs).max
+    assert(block > 0)
+    assert(maxAbsDiff(a, dropped) == block)
+    assert(maxAbsDiff(dropped, a) == block)
+    assert(maxAbsDiff(a, a) == 0.0)
+  }
+
+  /** ‖A·X − B‖ < 1e-8·n through toLocal, and X holds every block of the
+    * local GEPP solution that has a nonzero entry. */
+  private def assertSolves(aLoc: Array[Array[Double]], b: Blocks, x: Blocks, m: Int, blk: Int, what: String): Unit = {
+    val n = aLoc.length
+    val bLoc = toLocal(b, n, m, blk)
+    val resid = LocalLA.maxAbsDiff(LocalLA.gemm(aLoc, toLocal(x, n, m, blk)), bLoc)
+    assert(resid < 1e-8 * n, s"$what: ‖A·X − B‖ = $resid")
+    val packed = aLoc.map(_.clone())
+    val indx = LocalLA.ludcmp(packed)
+    val (l, u) = LocalLA.splitLU(packed)
+    val exact = LocalLA.backSolveUpper(u, LocalLA.forwardSolveUnitLower(l, LocalLA.permuteRows(bLoc, indx)))
+    val nonzero = for (bi <- 0 until n / blk; bj <- 0 until m / blk
+      if (0 until blk).exists(r => (0 until blk).exists(c => exact(bi * blk + r)(bj * blk + c) != 0.0))) yield (bi, bj)
+    val keys = x.keys.collect().toSet
+    assert(nonzero.nonEmpty && nonzero.forall(keys), s"$what: X lacks blocks ${nonzero.filterNot(keys)}")
+  }
+
+  /** The blocks of a local matrix, keeping only those `keep` selects. */
+  private def blocksOf(a: Array[Array[Double]], blk: Int)(keep: (Int, Int) => Boolean): Blocks =
+    localToBlocks(sc, a, blk).filter { case ((i, j), _) => keep(i, j) }
+
+  test("block-diagonal A: solve and solveFactored return every X block") {
+    val blk = 16; val q = 4; val n = q * blk
+    val dense = MatrixGen.local(n, blk, seed, diagBoost = n.toDouble)
+    val aLoc = Array.tabulate(n, n)((i, j) => if (i / blk == j / blk) dense(i)(j) else 0.0)
+    val a = blocksOf(aLoc, blk)(_ == _)
+    for (w <- Seq(1, 2)) {
+      val b = MatrixGen.blocks(sc, n, blk, seed + 1).filter { case ((_, j), _) => j < w }
+      assertSolves(aLoc, b, Inversion.solve(sc, a, b, n, w * blk, blk), w * blk, blk, s"solve m=${w * blk}")
+      val lu = BlockLU.factor(sc, a, n, blk)
+      assertSolves(aLoc, b, Inversion.solveFactored(sc, lu, b, w * blk), w * blk, blk, s"solveFactored m=${w * blk}")
+      lu.lines.unpersist()
+    }
+  }
+
+  test("block-diagonal SPD A: solveSPD and solveCholFactored return every X block") {
+    val blk = 16; val q = 4; val n = q * blk
+    val spd = BlockCholesky.spdLocal(n, blk, seed, boost = n.toDouble)
+    val aLoc = Array.tabulate(n, n)((i, j) => if (i / blk == j / blk) spd(i)(j) else 0.0)
+    val a = blocksOf(aLoc, blk)(_ == _)
+    for (w <- Seq(1, 2)) {
+      val b = MatrixGen.blocks(sc, n, blk, seed + 1).filter { case ((_, j), _) => j < w }
+      assertSolves(aLoc, b, Inversion.solveSPD(sc, a, b, n, w * blk, blk), w * blk, blk, s"solveSPD m=${w * blk}")
+      val l = BlockCholesky.factor(sc, a, n, blk)
+      assertSolves(aLoc, b, Inversion.solveCholFactored(sc, l, b, n, blk), w * blk, blk, s"solveCholFactored m=${w * blk}")
+    }
+  }
+
+  test("B present only in block row 0: the LU and Cholesky solves fill in every X block") {
+    val blk = 16; val q = 4; val n = q * blk; val m = 2 * blk
+    val b = MatrixGen.blocks(sc, n, blk, seed + 1).filter { case ((i, j), _) => i == 0 && j < 2 }
+    val aLoc = MatrixGen.local(n, blk, seed, diagBoost = n.toDouble)
+    val a = blocksOf(aLoc, blk)((_, _) => true)
+    assertSolves(aLoc, b, Inversion.solve(sc, a, b, n, m, blk), m, blk, "solve")
+    val lu = BlockLU.factor(sc, a, n, blk)
+    assertSolves(aLoc, b, Inversion.solveFactored(sc, lu, b, m), m, blk, "solveFactored")
+    lu.lines.unpersist()
+    val spd = BlockCholesky.spdLocal(n, blk, seed, boost = n.toDouble)
+    val lower = blocksOf(spd, blk)(_ >= _)
+    assertSolves(spd, b, Inversion.solveSPD(sc, lower, b, n, m, blk), m, blk, "solveSPD")
+    val l = BlockCholesky.factor(sc, lower, n, blk)
+    assertSolves(spd, b, Inversion.solveCholFactored(sc, l, b, n, blk), m, blk, "solveCholFactored")
+  }
+
+  /** Forward then backward blocked substitution on the driver in the
+    * per-step loop's order, per block the same LocalLA kernels,
+    * DenseMatrix.multiply and dmSub: `lower`/`upper` are the factor
+    * grids, `b` the right-hand side's q×w grid, all blocks present. */
+  private def blockedSubstitution(lower: Array[Array[MlDM]], upper: Array[Array[MlDM]], b: Array[Array[MlDM]],
+      forward: (Array[Array[Double]], Array[Array[Double]]) => Array[Array[Double]],
+      backward: (Array[Array[Double]], Array[Array[Double]]) => Array[Array[Double]]): Map[(Int, Int), MlDM] = {
+    import LocalLA.{fromDM, toDM}
+    val q = b.length; val y = b.map(_.clone())
+    for (k <- 0 until q) {
+      for (j <- y(k).indices) y(k)(j) = toDM(forward(fromDM(lower(k)(k)), fromDM(y(k)(j))))
+      for (i <- k + 1 until q; j <- y(i).indices) y(i)(j) = dmSub(y(i)(j), lower(i)(k).multiply(y(k)(j)))
+    }
+    for (k <- q - 1 to 0 by -1) {
+      for (j <- y(k).indices) y(k)(j) = toDM(backward(fromDM(upper(k)(k)), fromDM(y(k)(j))))
+      for (i <- 0 until k; j <- y(i).indices) y(i)(j) = dmSub(y(i)(j), upper(i)(k).multiply(y(k)(j)))
+    }
+    (for (i <- 0 until q; j <- y(i).indices) yield ((i, j), y(i)(j))).toMap
+  }
+
+  test("solveFactored and solveCholFactored are bit-identical to the blocked substitution loop (q ∈ {1, 3, 4}, m ∈ {blk, 2·blk})") {
+    import LocalLA._
+    for ((q, blk) <- Seq((1, 16), (3, 16), (4, 32)); w <- Seq(1, 2)) {
+      val n = q * blk; val m = w * blk
+      val ids = for (i <- 0 until q; j <- 0 until w) yield (i, j)
+      val bSeed = seed + 7 // not seed: the closure would capture the suite
+      val b: Blocks = sc.parallelize(ids, ids.size).map { case (i, j) =>
+        ((i, j), LocalLA.toDM(MatrixGen.localBlock(blk, bSeed, i, j, 0.0)))
+      }
+      val bGrid = grid(b, q, w)
+      val lu = BlockLU.factor(sc, MatrixGen.blocks(sc, n, blk, seed + q), n, blk)
+      val pb = bGrid.zipWithIndex.map { case (row, i) => row.map(mb => toDM(permuteRows(fromDM(mb), lu.perms(i)))) }
+      assertSameBits(Inversion.solveFactored(sc, lu, b, m),
+        blockedSubstitution(grid(lu.l, q, q), grid(lu.u, q, q), pb, forwardSolveUnitLower, backSolveUpper),
+        s"q=$q m=$m LU X")
+      lu.lines.unpersist()
+      val l = BlockCholesky.factor(sc, BlockCholesky.spdBlocks(sc, n, blk, seed + q, boost = n.toDouble), n, blk)
+      val lGrid = grid(l, q, q)
+      val ltGrid = Array.tabulate(q, q)((i, k) => if (i > k) null else toDM(transpose(fromDM(lGrid(k)(i)))))
+      assertSameBits(Inversion.solveCholFactored(sc, l, b, n, blk),
+        blockedSubstitution(lGrid, ltGrid, bGrid, forwardSolveLower, backSolveUpper), s"q=$q m=$m Cholesky X")
+    }
+  }
+
+  test("solveFactored(...).count(): at most 2q+2 jobs, only the last step's RDD and broadcasts left, the factor " +
+    "kept; solve at most 3q+3 jobs, solve and solveSPD release their factor (q=4, q=8)") {
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val blk = 16; val m = 2 * blk
+    for (q <- Seq(4, 8)) {
+      val n = q * blk
+      val a = MatrixGen.blocks(sc, n, blk, seed, diagBoost = n.toDouble).persist()
+      val spd = BlockCholesky.spdBlocks(sc, n, blk, seed, boost = n.toDouble).persist()
+      val b = MatrixGen.blocks(sc, n, blk, seed + 1).filter { case ((_, j), _) => j < 2 }.persist()
+      a.count(); spd.count(); b.count()
+      val lu = BlockLU.factor(sc, a, n, blk)
+      val bcBefore = org.apache.spark.LiveBroadcasts[MlDM](sc)
+      val rddBefore = sc.getPersistentRDDs.keySet
+      val (jobs, _) = org.apache.spark.JobCounter(sc)(Inversion.solveFactored(sc, lu, b, m).count())
+      assert(jobs <= 2 * q + 2, s"q=$q: solveFactored took $jobs jobs")
+      val persisted = sc.getPersistentRDDs.keySet -- rddBefore
+      assert(persisted.size <= 1, s"q=$q: ${persisted.size} RDDs left persisted")
+      assert(sc.getPersistentRDDs.contains(lu.lines.id), s"q=$q: the factor was unpersisted")
+      eventually(timeout(10.seconds)) {
+        val left = org.apache.spark.LiveBroadcasts[MlDM](sc) -- bcBefore
+        assert(left.size <= m / blk, s"q=$q: broadcasts $left still live")
+      }
+      persisted.foreach(id => sc.getPersistentRDDs(id).unpersist())
+      lu.lines.unpersist()
+      for (name <- Seq("solve", "solveSPD")) {
+        val before = sc.getPersistentRDDs.keySet
+        val (solveJobs, _) = org.apache.spark.JobCounter(sc) {
+          (if (name == "solve") Inversion.solve(sc, a, b, n, m, blk) else Inversion.solveSPD(sc, spd, b, n, m, blk)).count()
+        }
+        if (name == "solve") assert(solveJobs <= 3 * q + 3, s"q=$q: solve took $solveJobs jobs")
+        val left = sc.getPersistentRDDs.keySet -- before
+        assert(left.size <= 1, s"q=$q: $name left ${left.size} RDDs persisted")
+        left.foreach(id => sc.getPersistentRDDs(id).unpersist())
+      }
+      a.unpersist(); spd.unpersist(); b.unpersist()
+    }
   }
 
   test("M6: golden fixture byte round trip (out/A.0, out/A.1)") {

@@ -152,4 +152,16 @@ class SourceAuditSpec extends AnyFunSuite {
     }
     assert(hits.isEmpty, s"the distributed GEMM pipeline is back in the inverse:\n${hits.mkString("\n")}")
   }
+
+  test("the solves keep the solution and the factor diagonals off the driver: " +
+    "Inversion.scala calls no collectAsMap or parallelize") {
+    val f = new java.io.File(repoRoot, "src/main/scala/graft/matrix/Inversion.scala")
+    val lines = scala.io.Source.fromFile(f, "UTF-8").getLines().toVector
+    assert(lines.exists(_.contains("object Inversion")), s"$f is not the inversion source")
+    val driverRoundTrip = java.util.regex.Pattern.compile("""\b(collectAsMap|parallelize)\b""")
+    val hits = lines.zipWithIndex.collect {
+      case (line, i) if driverRoundTrip.matcher(code(line)).find() => s"Inversion.scala:${i + 1}: ${line.trim}"
+    }
+    assert(hits.isEmpty, s"a driver round trip is back in Inversion.scala:\n${hits.mkString("\n")}")
+  }
 }
