@@ -4,7 +4,7 @@ import java.util.stream.IntStream
 import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.mllib.linalg.{DenseMatrix => MlDM}
-import BlockModel.{Blocks, dmNeg, dmSub}
+import BlockModel.Blocks
 import LocalLA._
 
 /** Right-looking blocked Cholesky factorization A = L·Lᵀ for symmetric
@@ -21,7 +21,7 @@ import LocalLA._
   *     L_kk = chol(A_kk)                  [driver]
   *     L_ik = A_ik·L_kkᵀ⁻¹    (i>k)       [driver, in parallel]
   *     broadcast column k of L            [≤ n·blk doubles]
-  *     column j>k: A_ij −= L_ik·L_jkᵀ (i≥j)
+  *     column j>k: A_ij −= L_ik·L_jkᵀ (i≥j)   [one BlockKernel.gemm]
   *
   * Only blocks with i ≥ j are ever stored or updated — the upper
   * triangle is implicit by symmetry. An absent block is a zero block: it
@@ -65,8 +65,7 @@ object BlockCholesky {
       val ljkT = piv(j).value.transpose
       Array.tabulate(col.length) { i =>
         if (i < j || piv(i) == null) col(i)
-        else if (col(i) == null) dmNeg(piv(i).value.multiply(ljkT))
-        else dmSub(col(i), piv(i).value.multiply(ljkT))
+        else BlockKernel.gemm(col(i), -1, piv(i).value, ljkT)
       }
     }
 

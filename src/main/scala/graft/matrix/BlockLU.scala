@@ -4,7 +4,7 @@ import java.util.stream.IntStream
 import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.mllib.linalg.{DenseMatrix => MlDM}
-import BlockModel.{Blocks, dmNeg, dmSub}
+import BlockModel.Blocks
 import LocalLA._
 
 /** Result of a distributed block LU: P·A = L·U where P = ⊕ₖ Pₖ permutes
@@ -40,7 +40,7 @@ final case class BlockLUResult(lines: BlockSweep.Lines, perms: Array[Array[Int]]
   * against the broadcast base-case factor only (never a distributed
   * triangular solve — same insight the reference exploits with its
   * replication-20 HDFS "broadcast" of l/u/index, :148-150), and the
-  * Schur/trailing update is block GEMM:
+  * Schur/trailing update is one [[BlockKernel.gemm]] pass per block:
   *
   *   for k in 0..q-1:
   *     ludcmp on diag block (k,k)          [driver]
@@ -90,8 +90,7 @@ object BlockLU {
         if (j < k) row(j)
         else if (j == k) lik
         else if (piv(j) == null) row(j)
-        else if (row(j) == null) dmNeg(lik.multiply(piv(j).value))
-        else dmSub(row(j), lik.multiply(piv(j).value))
+        else BlockKernel.gemm(row(j), -1, lik, piv(j).value)
       }
     }
 }

@@ -30,19 +30,6 @@ object BlockModel {
     case other => new MlDM(other.numRows, other.numCols, other.toArray)
   }
 
-  def dmSub(a: MlDM, b: MlDM): MlDM = {
-    val av = toDense(a).values; val bv = toDense(b).values
-    val out = new Array[Double](av.length)
-    var i = 0
-    while (i < av.length) { out(i) = av(i) - bv(i); i += 1 }
-    new MlDM(a.numRows, a.numCols, out)
-  }
-
-  def dmNeg(a: MlDM): MlDM = {
-    val d = toDense(a)
-    new MlDM(d.numRows, d.numCols, d.values.map(v => -v))
-  }
-
   /** maxAbs(A − I) over the blocks of a square matrix — the M4 residual
     * check once A·A⁻¹ has been formed. */
   def maxAbsMinusIdentity(blocks: Blocks, blk: Int): Double =

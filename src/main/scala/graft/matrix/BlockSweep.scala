@@ -22,8 +22,9 @@ import BlockModel.Blocks
   *     one narrow mapPartitions update of every line
   *     release step k−1's RDD and broadcasts
   *
-  * A step broadcasts at most one line: n·blk doubles in a factorization,
-  * blk·m in a solve with m right-hand sides. Each step's lines
+  * A step fetches and broadcasts at most one line: n·blk doubles in a
+  * factorization; a solve with m right-hand sides fetches only the
+  * diagonal block and B's slots and broadcasts blk·m. Each step's lines
   * are persisted and cut by [[graft.Lineage.truncate]] before its job
   * (reliable checkpoint when a checkpoint dir is set, local otherwise),
   * so the DAG never grows with q. */
@@ -45,12 +46,13 @@ private[matrix] object BlockSweep {
 
   /** One job per step, one step per line index in `order`: `step(s,
     * line order(s))` on the driver, an absent line read as `width` nulls.
-    * With `materialize` one more job computes the persisted, truncated
-    * result, and every step's RDD and broadcasts are released. Without
-    * it the last step runs in the caller's action, its RDD and
-    * broadcasts kept for it. */
-  def run(sc: SparkContext, lines0: Lines, order: Seq[Int], width: Int, materialize: Boolean)
-      (step: (Int, Line) => Step): Lines = {
+    * Step k fetches only the slots j of line k with `fetch(k, j)`, the
+    * others read as null. With `materialize` one more job computes the
+    * persisted, truncated result, and every step's RDD and broadcasts
+    * are released. Without it the last step runs in the caller's action,
+    * its RDD and broadcasts kept for it. */
+  def run(sc: SparkContext, lines0: Lines, order: Seq[Int], width: Int, materialize: Boolean,
+      fetch: (Int, Int) => Boolean = (_, _) => true)(step: (Int, Line) => Step): Lines = {
     var lines = lines0
     var prev: Lines = null
     var prevPiv = Array.empty[Broadcast[MlDM]]
@@ -63,8 +65,10 @@ private[matrix] object BlockSweep {
     }
     for ((k, s) <- order.zipWithIndex) {
       graft.Lineage.truncate(lines.persist())
-      val lineK = lines.flatMap { case (i, line) => if (i == k) Iterator.single(line) else Iterator.empty }
-        .collect().headOption.getOrElse(new Array[MlDM](width)) // bounded: ONE line
+      val lineK = lines.flatMap { case (i, line) =>
+        if (i == k) Iterator.single(Array.tabulate(line.length)(j => if (fetch(k, j)) line(j) else null))
+        else Iterator.empty
+      }.collect().headOption.getOrElse(new Array[MlDM](width)) // bounded: ONE line
       release()
       prev = lines
       val st = step(s, lineK)

@@ -6,6 +6,7 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.mllib.linalg.{DenseMatrix => MlDM}
 import org.apache.spark.rdd.RDD
 import BlockModel._
+import BlockKernel.gemm
 import LocalLA.{backSolveUpper, forwardSolveUnitLower, fromDM, toDM}
 
 /** Distributed inversion (the reference's operators O17/O18,
@@ -16,8 +17,10 @@ import LocalLA.{backSolveUpper, forwardSolveUnitLower, fromDM, toDM}
   *
   *   for k in 0..q-1:  D⁻¹ = M_kk⁻¹ on the driver, then one narrow job
   *     row k:   M_kj ← D⁻¹·M_kj (j≠k), M_kk ← D⁻¹
-  *     row i≠k: C = M_ik·D⁻¹, M_ij ← M_ij − C·M_kj (j≠k), M_ik ← −C
+  *     row i≠k: N = −M_ik·D⁻¹, M_ij ← M_ij + N·M_kj (j≠k), M_ik ← N
   *
+  * Each block product, fused with its update, is one
+  * [[BlockKernel.gemm]] pass (C + s·A·B), as in every sweep here.
   * It runs on [[BlockSweep]], the protocol BlockLU and BlockCholesky
   * share: A is grouped by block row once, its only shuffle; each step
   * broadcasts row k with D⁻¹ in place of M_kk, one broadcast per block
@@ -53,18 +56,17 @@ object Inversion {
 
   /** Step k of the sweep on block row i; `piv` holds row k's broadcasts. */
   private def eliminate(row: Array[MlDM], i: Int, k: Int, piv: Array[Broadcast[MlDM]]): Array[MlDM] =
-    if (i != k && row(k) == null) row // C = 0
+    if (i != k && row(k) == null) row // N = 0
     else {
       val dInv = piv(k).value
-      if (i == k) row.indices.map(j => if (j == k) dInv else if (row(j) == null) null else dInv.multiply(row(j))).toArray
+      if (i == k) Array.tabulate(row.length)(j => if (j == k) dInv else if (row(j) == null) null else gemm(null, 1, dInv, row(j)))
       else {
-        val c = row(k).multiply(dInv)
-        row.indices.map { j =>
-          if (j == k) dmNeg(c)
+        val negC = gemm(null, -1, row(k), dInv)
+        Array.tabulate(row.length) { j =>
+          if (j == k) negC
           else if (piv(j) == null) row(j)
-          else if (row(j) == null) dmNeg(c.multiply(piv(j).value))
-          else dmSub(row(j), c.multiply(piv(j).value))
-        }.toArray
+          else gemm(row(j), 1, negC, piv(j).value)
+        }
       }
     }
 
@@ -180,15 +182,16 @@ object Inversion {
 
   /** Forward then backward block substitution on lines [factor row i |
     * B row i]: the lower factor left of the diagonal, the upper right of
-    * it, B_ij in slot q+j. Step k solves line k's B slots against its
-    * diagonal block on the driver and broadcasts them (blk·m doubles);
+    * it, B_ij in slot q+j. Step k fetches only line k's diagonal block
+    * and B slots, solves the B slots against the block on the driver and
+    * broadcasts them (blk·m doubles);
     * forward, lines i>k apply B_i −= L_ik·Y_k, backward lines i<k apply
     * Y_i −= U_ik·X_k. An absent block is a zero block, filled in. */
   private def substitute(sc: SparkContext, lines: BlockSweep.Lines, q: Int, w: Int, blk: Int,
       forward: (Array[Array[Double]], Array[Array[Double]]) => Array[Array[Double]],
       backward: (Array[Array[Double]], Array[Array[Double]]) => Array[Array[Double]]): Blocks = {
     val order = (0 until q) ++ (q - 1 to 0 by -1)
-    BlockSweep.run(sc, lines, order, q + w, materialize = false) { (s, line) =>
+    BlockSweep.run(sc, lines, order, q + w, materialize = false, fetch = (k, c) => c == k || c >= q) { (s, line) =>
       val k = order(s); val down = s < q
       val solve = if (down) forward else backward
       val d = fromDM(Option(line(k)).getOrElse(MlDM.zeros(blk, blk)))
@@ -205,10 +208,6 @@ object Inversion {
     else if (!updated || row(k) == null) row
     else {
       val f = row(k)
-      Array.tabulate(row.length) { c =>
-        if (piv(c) == null) row(c)
-        else if (row(c) == null) dmNeg(f.multiply(piv(c).value))
-        else dmSub(row(c), f.multiply(piv(c).value))
-      }
+      Array.tabulate(row.length)(c => if (piv(c) == null) row(c) else gemm(row(c), -1, f, piv(c).value))
     }
 }

@@ -79,9 +79,29 @@ class MatrixSpec extends AnyFunSuite {
       assert(java.util.Arrays.equals(toDense(g(key)).values, toDense(m).values), s"$what $key not bit-identical")
   }
 
+  /** Close block sets: same keys, every block within `tol` of its pair. */
+  private def assertClose(got: Blocks, want: Map[(Int, Int), MlDM], tol: Double, what: String): Unit = {
+    val g = got.collect().toMap
+    assert(g.keySet == want.keySet, s"$what: block keys differ")
+    for ((key, m) <- want) {
+      val d = toDense(g(key)).values.zip(toDense(m).values).map { case (x, y) => math.abs(x - y) }.max
+      assert(d <= tol, s"$what $key differs by $d > $tol")
+    }
+  }
+
+  /** A block update C − A·B: `kernelUpdate` is the sweeps' one kernel,
+    * `mllibUpdate` the MLlib product and elementwise subtraction the
+    * sweeps ran before it. */
+  private type Update = (MlDM, MlDM, MlDM) => MlDM
+  private val kernelUpdate: Update = (c, a, b) => BlockKernel.gemm(c, -1, a, b)
+  private val mllibUpdate: Update = (c, a, b) => {
+    val cv = toDense(c).values; val p = a.multiply(b).values
+    new MlDM(c.numRows, c.numCols, Array.tabulate(cv.length)(i => cv(i) - p(i)))
+  }
+
   /** Blocked LU on the driver in the per-step loop's order: per block
-    * the same LocalLA kernels, DenseMatrix.multiply and dmSub. */
-  private def blockedLU(a0: Array[Array[MlDM]]) = {
+    * the same LocalLA kernels and `update`. */
+  private def blockedLU(a0: Array[Array[MlDM]], update: Update) = {
     import LocalLA._
     val q = a0.length; val a = a0.map(_.clone())
     val perms = new Array[Array[Int]](q)
@@ -94,14 +114,14 @@ class MatrixSpec extends AnyFunSuite {
       l((k, k)) = toDM(lkk); u((k, k)) = toDM(ukk)
       for (j <- k + 1 until q) u((k, j)) = toDM(forwardSolveUnitLower(lkk, permuteRows(fromDM(a(k)(j)), perms(k))))
       for (i <- k + 1 until q) l((i, k)) = toDM(solveXU(fromDM(a(i)(k)), ukk))
-      for (i <- k + 1 until q; j <- k + 1 until q) a(i)(j) = dmSub(a(i)(j), l((i, k)).multiply(u((k, j))))
+      for (i <- k + 1 until q; j <- k + 1 until q) a(i)(j) = update(a(i)(j), l((i, k)), u((k, j)))
     }
     val lp = l.map { case ((i, j), m) => ((i, j), if (i > j) toDM(permuteRows(fromDM(m), perms(i))) else m) }
     (lp.toMap, u.toMap, perms)
   }
 
   /** Blocked Cholesky on the driver in the per-step loop's order. */
-  private def blockedCholesky(a0: Array[Array[MlDM]]): Map[(Int, Int), MlDM] = {
+  private def blockedCholesky(a0: Array[Array[MlDM]], update: Update): Map[(Int, Int), MlDM] = {
     import LocalLA._
     val q = a0.length; val a = a0.map(_.clone())
     val l = scala.collection.mutable.Map.empty[(Int, Int), MlDM]
@@ -110,9 +130,36 @@ class MatrixSpec extends AnyFunSuite {
       l((k, k)) = toDM(lkk)
       val lkkT = transpose(lkk)
       for (i <- k + 1 until q) l((i, k)) = toDM(solveXU(fromDM(a(i)(k)), lkkT))
-      for (j <- k + 1 until q; i <- j until q) a(i)(j) = dmSub(a(i)(j), l((i, k)).multiply(l((j, k)).transpose))
+      for (j <- k + 1 until q; i <- j until q) a(i)(j) = update(a(i)(j), l((i, k)), l((j, k)).transpose)
     }
     l.toMap
+  }
+
+  test("BlockKernel.gemm equals C + s·A·B through DenseMatrix.multiply and an elementwise add, to 1e-12·k·max|A|·max|B|") {
+    val rng = new scala.util.Random(seed)
+    def rand(rows: Int, cols: Int, scale: Double) = new MlDM(rows, cols, Array.fill(rows * cols)(scale * (2 * rng.nextDouble() - 1)))
+    def maxAbs(m: MlDM) = m.values.foldLeft(0.0)((x, v) => math.max(x, math.abs(v)))
+    // C stored: None = absent, Some(false) = column-major, Some(true) = a transposed view
+    def check(m: Int, k: Int, n: Int, tA: Boolean, tB: Boolean, s: Double, cForm: Option[Boolean]): Unit = {
+      val a = if (tA) rand(k, m, 3.0).transpose else rand(m, k, 3.0)
+      val b = if (tB) rand(n, k, 0.5).transpose else rand(k, n, 0.5)
+      val c = cForm.map(t => if (t) rand(n, m, 1.0).transpose else rand(m, n, 1.0))
+      val cBefore = c.map(_.values.clone())
+      val got = BlockKernel.gemm(c.orNull, s, a, b)
+      val what = s"m=$m k=$k n=$n transA=$tA transB=$tB s=$s C=$cForm"
+      assert(got.numRows == m && got.numCols == n && !got.isTransposed, s"$what: shape")
+      val p = a.multiply(b)
+      val want = Array.tabulate(m * n)(e => c.fold(0.0)(cm => cm(e % m, e / m)) + s * p.values(e))
+      val tol = 1e-12 * k * maxAbs(a) * maxAbs(b)
+      val err = got.values.zip(want).map { case (x, y) => math.abs(x - y) }.max
+      assert(err <= tol, s"$what: max error $err > $tol")
+      assert(c.map(_.values.toSeq) == cBefore.map(_.toSeq), s"$what: C was written")
+    }
+    val sizes = Seq(1, 7, 8, 31, 33, 100, 128, 300, 512)
+    for (m <- sizes; k <- sizes; n <- sizes) check(m, k, n, tA = false, tB = false, s = -1, cForm = Some(false))
+    for (m <- Seq(1, 7, 33, 100); k <- Seq(1, 8, 31, 300); n <- Seq(1, 7, 33, 100);
+         tA <- Seq(false, true); tB <- Seq(false, true); s <- Seq(-1.0, 1.0); cForm <- Seq(None, Some(false), Some(true)))
+      check(m, k, n, tA, tB, s, cForm)
   }
 
   private val bitCheckShapes = Seq((1, 16), (3, 16), (4, 32), (16, 8))
@@ -122,10 +169,14 @@ class MatrixSpec extends AnyFunSuite {
       val n = q * blk
       val a = MatrixGen.blocks(sc, n, blk, seed + q)
       val lu = BlockLU.factor(sc, a, n, blk)
-      val (l, u, perms) = blockedLU(grid(a, q, q))
+      val (l, u, perms) = blockedLU(grid(a, q, q), kernelUpdate)
       assert(lu.perms.map(_.toSeq).toSeq == perms.map(_.toSeq).toSeq, s"q=$q perms differ")
       assertSameBits(lu.l, l, s"q=$q L")
       assertSameBits(lu.u, u, s"q=$q U")
+      val (lOld, uOld, permsOld) = blockedLU(grid(a, q, q), mllibUpdate)
+      assert(lu.perms.map(_.toSeq).toSeq == permsOld.map(_.toSeq).toSeq, s"q=$q perms differ from the MLlib loop")
+      assertClose(lu.l, lOld, 1e-10 * n, s"q=$q L vs the MLlib loop")
+      assertClose(lu.u, uOld, 1e-10 * n, s"q=$q U vs the MLlib loop")
     }
   }
 
@@ -133,7 +184,9 @@ class MatrixSpec extends AnyFunSuite {
     for ((q, blk) <- bitCheckShapes) {
       val n = q * blk
       val spd = BlockCholesky.spdBlocks(sc, n, blk, seed + q, boost = n.toDouble)
-      assertSameBits(BlockCholesky.factor(sc, spd, n, blk), blockedCholesky(grid(spd, q, q)), s"q=$q Cholesky L")
+      val l = BlockCholesky.factor(sc, spd, n, blk)
+      assertSameBits(l, blockedCholesky(grid(spd, q, q), kernelUpdate), s"q=$q Cholesky L")
+      assertClose(l, blockedCholesky(grid(spd, q, q), mllibUpdate), 1e-10 * n, s"q=$q Cholesky L vs the MLlib loop")
     }
   }
 
@@ -560,21 +613,22 @@ class MatrixSpec extends AnyFunSuite {
   }
 
   /** Forward then backward blocked substitution on the driver in the
-    * per-step loop's order, per block the same LocalLA kernels,
-    * DenseMatrix.multiply and dmSub: `lower`/`upper` are the factor
-    * grids, `b` the right-hand side's q×w grid, all blocks present. */
+    * per-step loop's order, per block the same LocalLA kernels and
+    * `update`: `lower`/`upper` are the factor grids, `b` the right-hand
+    * side's q×w grid, all blocks present. */
   private def blockedSubstitution(lower: Array[Array[MlDM]], upper: Array[Array[MlDM]], b: Array[Array[MlDM]],
       forward: (Array[Array[Double]], Array[Array[Double]]) => Array[Array[Double]],
-      backward: (Array[Array[Double]], Array[Array[Double]]) => Array[Array[Double]]): Map[(Int, Int), MlDM] = {
+      backward: (Array[Array[Double]], Array[Array[Double]]) => Array[Array[Double]],
+      update: Update): Map[(Int, Int), MlDM] = {
     import LocalLA.{fromDM, toDM}
     val q = b.length; val y = b.map(_.clone())
     for (k <- 0 until q) {
       for (j <- y(k).indices) y(k)(j) = toDM(forward(fromDM(lower(k)(k)), fromDM(y(k)(j))))
-      for (i <- k + 1 until q; j <- y(i).indices) y(i)(j) = dmSub(y(i)(j), lower(i)(k).multiply(y(k)(j)))
+      for (i <- k + 1 until q; j <- y(i).indices) y(i)(j) = update(y(i)(j), lower(i)(k), y(k)(j))
     }
     for (k <- q - 1 to 0 by -1) {
       for (j <- y(k).indices) y(k)(j) = toDM(backward(fromDM(upper(k)(k)), fromDM(y(k)(j))))
-      for (i <- 0 until k; j <- y(i).indices) y(i)(j) = dmSub(y(i)(j), upper(i)(k).multiply(y(k)(j)))
+      for (i <- 0 until k; j <- y(i).indices) y(i)(j) = update(y(i)(j), upper(i)(k), y(k)(j))
     }
     (for (i <- 0 until q; j <- y(i).indices) yield ((i, j), y(i)(j))).toMap
   }
@@ -591,15 +645,19 @@ class MatrixSpec extends AnyFunSuite {
       val bGrid = grid(b, q, w)
       val lu = BlockLU.factor(sc, MatrixGen.blocks(sc, n, blk, seed + q), n, blk)
       val pb = bGrid.zipWithIndex.map { case (row, i) => row.map(mb => toDM(permuteRows(fromDM(mb), lu.perms(i)))) }
-      assertSameBits(Inversion.solveFactored(sc, lu, b, m),
-        blockedSubstitution(grid(lu.l, q, q), grid(lu.u, q, q), pb, forwardSolveUnitLower, backSolveUpper),
-        s"q=$q m=$m LU X")
+      val x = Inversion.solveFactored(sc, lu, b, m)
+      def luLoop(update: Update) =
+        blockedSubstitution(grid(lu.l, q, q), grid(lu.u, q, q), pb, forwardSolveUnitLower, backSolveUpper, update)
+      assertSameBits(x, luLoop(kernelUpdate), s"q=$q m=$m LU X")
+      assertClose(x, luLoop(mllibUpdate), 1e-10 * n, s"q=$q m=$m LU X vs the MLlib loop")
       lu.lines.unpersist()
       val l = BlockCholesky.factor(sc, BlockCholesky.spdBlocks(sc, n, blk, seed + q, boost = n.toDouble), n, blk)
       val lGrid = grid(l, q, q)
       val ltGrid = Array.tabulate(q, q)((i, k) => if (i > k) null else toDM(transpose(fromDM(lGrid(k)(i)))))
-      assertSameBits(Inversion.solveCholFactored(sc, l, b, n, blk),
-        blockedSubstitution(lGrid, ltGrid, bGrid, forwardSolveLower, backSolveUpper), s"q=$q m=$m Cholesky X")
+      val xChol = Inversion.solveCholFactored(sc, l, b, n, blk)
+      def cholLoop(update: Update) = blockedSubstitution(lGrid, ltGrid, bGrid, forwardSolveLower, backSolveUpper, update)
+      assertSameBits(xChol, cholLoop(kernelUpdate), s"q=$q m=$m Cholesky X")
+      assertClose(xChol, cholLoop(mllibUpdate), 1e-10 * n, s"q=$q m=$m Cholesky X vs the MLlib loop")
     }
   }
 

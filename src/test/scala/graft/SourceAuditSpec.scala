@@ -153,6 +153,21 @@ class SourceAuditSpec extends AnyFunSuite {
     assert(hits.isEmpty, s"the distributed GEMM pipeline is back in the inverse:\n${hits.mkString("\n")}")
   }
 
+  test("one block kernel: Inversion, BlockLU and BlockCholesky update blocks only through BlockKernel.gemm, " +
+    "calling no DenseMatrix .multiply(, dmSub or dmNeg") {
+    val secondPath = java.util.regex.Pattern.compile("""\.multiply\(|\bdmSub\b|\bdmNeg\b""")
+    val sources = Seq("Inversion", "BlockLU", "BlockCholesky").map { name =>
+      val f = new java.io.File(repoRoot, s"src/main/scala/graft/matrix/$name.scala")
+      name -> scala.io.Source.fromFile(f, "UTF-8").getLines().map(code).toVector
+    }
+    val hits = sources.flatMap { case (name, lines) =>
+      lines.zipWithIndex.collect { case (c, i) if secondPath.matcher(c).find() => s"$name.scala:${i + 1}: ${c.trim}" }
+    }
+    assert(hits.isEmpty, s"a second block-update path is back in the sweeps:\n${hits.mkString("\n")}")
+    val noKernel = sources.collect { case (name, lines) if !lines.exists(_.contains("gemm(")) => name }
+    assert(noKernel.isEmpty, s"no block kernel call in ${noKernel.mkString(", ")}")
+  }
+
   test("the solves keep the solution and the factor diagonals off the driver: " +
     "Inversion.scala calls no collectAsMap or parallelize") {
     val f = new java.io.File(repoRoot, "src/main/scala/graft/matrix/Inversion.scala")
