@@ -2,20 +2,22 @@ package graft.matrix
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import BlockModel._
+import BlockVecs.BlockVec
 
-/** The matrix capability surface as driver-checkable queries (M1–M6 +
-  * M10, SURVEY.md §2.3). Floating-point residual checks (m2–m5, m7–m10)
-  * are
-  * not SQL-expressible, so they carry their correctness as boolean
-  * `pass` columns that [[graft.Verify.gateInvariants]] enforces
+/** The matrix capability surface as driver-checkable queries m1–m20
+  * (SURVEY.md §2.3). Floating-point residual checks (m2–m5, m7–m20)
+  * are not SQL-expressible, so they carry their correctness as boolean
+  * `pass`/`*_ok` columns that [[graft.Verify.gateInvariants]] enforces
   * driver-side; the tight assertions also live in MatrixSpec. m1 and
   * m6 produce fully deterministic integer/string output, so they DO
   * carry pinned-constant DuckDB oracles ([[oracles]]) and get the full
   * rows+schema+hash verdict.
   *
   * Sizes are kept moderate (n=512) so the per-round Verify stays fast;
-  * the same code paths scale by construction (block-level parallelism,
-  * broadcast-or-join panel updates, log-depth recursion).
+  * the same code paths scale by construction: the factorizations run
+  * one block-line sweep ([[BlockSweep]]) of one narrow job per pivot
+  * step, and the iterative family (m9, m15–m20) runs on the
+  * [[BlockVecs]] block-vector layer.
   */
 object MatrixQueries {
   private val Seed = 42L
@@ -263,65 +265,41 @@ object MatrixQueries {
     * round is TWO distributed matvecs y = A·(Aᵀ·x) (the Gram matrix is
     * never materialized: at 100 TB A·Aᵀ is a dense n×n product you
     * cannot afford, but a matvec is one pass over the blocks). The
-    * iterate lives as a DISTRIBUTED block vector co-partitioned with
-    * the matrix layout ([[bvMatvec]] — m15/m16's machinery): each
-    * round is two narrow join+GEMV+reduce matvecs whose shuffle
-    * carries ≤ q² partials of blk doubles, one scalar dot product to
-    * the driver, and a narrow per-block rescale. Nothing O(n) ever
-    * reaches the driver (the round-7 form collected and re-broadcast
-    * the full iterate every round — documented and priced then,
-    * retired now that the block-vector machinery exists; the iterative
-    * family is uniformly collect-free). A is nonsymmetric, so TWO
+    * iterate is a [[BlockVecs]] block vector co-partitioned with the
+    * matrix layout: each round is two narrow join+GEMV+reduce matvecs
+    * whose shuffle carries ≤ q² partials of blk doubles, one scalar dot
+    * product to the driver, and a narrow per-block rescale. Nothing
+    * O(n) ever reaches the driver. A is nonsymmetric, so TWO
     * column-keyed layouts are laid out once: A by column (for A·z) and
     * Aᵀ by ITS column = A's row (for Aᵀ·x). A·Aᵀ is symmetric PSD, so
     * convergence is monotone — no complex-eigenpair oscillation risk
-    * on the nonsymmetric A itself. Lineage is localCheckpoint-
-    * truncated every 8 rounds (m15's hygiene). Checked against the
-    * same iteration run driver-locally, plus the
-    * ‖A‖₂ ≤ √(‖A‖₁·‖A‖∞) and ≥ ‖A‖F/√n norm-equivalence bounds. */
+    * on the nonsymmetric A itself. Lineage is checkpointed every 8
+    * rounds. Checked against the same iteration run driver-locally,
+    * plus the ‖A‖₂ ≤ √(‖A‖₁·‖A‖∞) and ≥ ‖A‖F/√n norm-equivalence
+    * bounds. */
   def m9SpectralNorm(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val sc = s.sparkContext
     val n = 256; val blk = 64; val iters = 15
-    val q = n / blk
-    val part = new org.apache.spark.HashPartitioner(q)
-    val blocks = MatrixGen.blocks(sc, n, blk, Seed, diagBoost = n.toDouble)
-      .mapValues(m => LocalLA.fromDM(toDense(m)))
-    // two SpMV layouts, built in one pass each and cached: A keyed by
-    // column block, Aᵀ keyed by Aᵀ's column block (= A's row block)
-    val aByCol = blocks.map { case ((bi, bj), d) => (bj, (bi, d)) }
-      .partitionBy(part).cache()
-    val atByCol = blocks.map { case ((bi, bj), d) =>
-      (bi, (bj, LocalLA.transpose(d)))
-    }.partitionBy(part).cache()
-
-    def dot(u: BlockVec, v: BlockVec): Double =
-      u.join(v, part).map { case (_, (a, b)) =>
-        var acc = 0.0; var i = 0
-        while (i < a.length) { acc += a(i) * b(i); i += 1 }
-        acc
-      }.sum()
-
     val x0 = 1.0 / math.sqrt(n.toDouble)
-    var x: BlockVec = sc.parallelize(0 until q, q)
-      .map(b => (b, Array.fill(blk)(x0))).partitionBy(part).cache()
-    var sigma2 = 0.0
-    var it = 0
-    while (it < iters) {
-      val z = bvMatvec(atByCol, x, part) // Aᵀ·x
-      val y = bvMatvec(aByCol, z, part).cache() // A·(Aᵀ·x)
-      val s2acc = dot(y, y) // the ONLY driver traffic: one scalar
-      val nrm = math.sqrt(s2acc)
-      sigma2 = nrm // ‖AAᵀx‖ for unit x → λmax(AAᵀ) at convergence
-      x = y.mapValues { v =>
-        val w = new Array[Double](v.length); var i = 0
-        while (i < w.length) { w(i) = v(i) / nrm; i += 1 }
-        w
-      }.cache()
-      if (it % 8 == 7) { x.localCheckpoint(); x.foreachPartition(_ => ()) }
-      it += 1
+    val sigma = BlockVecs.scoped(sc, n / blk, blk) { bv =>
+      val blocks = MatrixGen.blocks(sc, n, blk, Seed, diagBoost = n.toDouble)
+        .mapValues(m => LocalLA.fromDM(toDense(m)))
+      val aByCol = bv.byCol(blocks)
+      val atByCol = bv.byCol(blocks.map { case ((bi, bj), d) => ((bj, bi), LocalLA.transpose(d)) })
+      var x = bv.keep(bv.vec(_ => x0))
+      var sigma2 = 0.0
+      var it = 0
+      while (it < iters) {
+        val y = bv.keep(bv.matvec(aByCol, bv.matvec(atByCol, x))) // A·(Aᵀ·x)
+        val nrm = math.sqrt(bv.dot(y, y)) // the ONLY driver traffic: one scalar
+        sigma2 = nrm // ‖AAᵀx‖ for unit x → λmax(AAᵀ) at convergence
+        x = bv.keep(bv.scale(y, 1.0 / nrm))
+        if (it % 8 == 7) bv.checkpoint(x)
+        it += 1
+      }
+      math.sqrt(sigma2)
     }
-    val sigma = math.sqrt(sigma2)
 
     // driver-local replica of the same iteration (same arithmetic graph
     // up to block-summation order)
@@ -732,147 +710,28 @@ object MatrixQueries {
         "rel_top8", "align1", "v_orth", "tail_ratio", "pass")
   }
 
-  /** A distributed block vector: (block row index → blk doubles). */
-  private[graft] type BlockVec = org.apache.spark.rdd.RDD[(Int, Array[Double])]
-
-  /** y = A·x over the column-keyed full-symmetric block layout: a
-    * NARROW join (both sides share the partitioner — each stored block
-    * is co-located with the iterate block it consumes), a per-block
-    * GEMV, and a reduceByKey whose shuffle carries ≤ q² partials of blk
-    * doubles (map-side combined). No broadcast of the iterate, no
-    * driver collect — the building block of [[m15ConjugateGradient]]'s
-    * fully distributed loop, spec'd against a local matvec in
-    * MatrixSpec. */
-  private[graft] def bvMatvec(
-      aByCol: org.apache.spark.rdd.RDD[(Int, (Int, Array[Array[Double]]))],
-      x: BlockVec, part: org.apache.spark.Partitioner): BlockVec =
-    aByCol.join(x, part).map { case (_, ((bi, d), xv)) =>
-      val rows = d.length
-      val y = new Array[Double](rows)
-      var i = 0
-      while (i < rows) {
-        val di = d(i); var acc = 0.0; var j = 0
-        while (j < di.length) { acc += di(j) * xv(j); j += 1 }
-        y(i) = acc; i += 1
-      }
-      (bi, y)
-    }.reduceByKey(part, (u: Array[Double], v: Array[Double]) => {
-      val w = u.clone(); var i = 0
-      while (i < w.length) { w(i) += v(i); i += 1 }
-      w
-    })
-
-  /** After a localCheckpoint barrier, every per-iteration RDD not in
-    * `live` is unreachable (the checkpoint just truncated the lineage
-    * that could have re-read it) — drop it from the block manager
-    * immediately, keeping the cached footprint O(live) instead of
-    * O(iterations): a near-breakdown solve at the n-iteration cap
-    * would otherwise accumulate thousands of dead cached iterates
-    * before the final bulk unpersist. */
-  private def retireCached[T <: org.apache.spark.rdd.RDD[_]](
-      cached: scala.collection.mutable.ArrayBuffer[T],
-      live: Seq[org.apache.spark.rdd.RDD[_]]): Unit = {
-    val liveIds = live.map(_.id).toSet
-    val (stay, drop) = cached.partition(v => liveIds.contains(v.id))
-    drop.foreach(_.unpersist(false))
-    cached.clear(); cached ++= stay
-  }
-
-  /** Fused two-pass CGS2 orthogonalization of `w0` against the basis
-    * slab — the Arnoldi step's distributed core, shared by the GMRES
-    * (m19) and eigen (m20) members. Pass 1 returns the Gram
-    * coefficients c1; pass 2 returns (c2, ‖w₁‖²) in ONE traversal, and
-    * ‖w₂‖² = ‖w₁‖² − ‖c2‖² under the (reorthogonalized) basis's
-    * orthonormality — c2 is machine-eps-sized after pass 1, so the
-    * correction never cancels. That drops the separate norm job m17's
-    * shape would have paid. Returns (the j+1 projections, h_{j+1,j},
-    * the orthogonalized w); `keep` is the caller's cache-bookkeeping
-    * hook. */
-  private def cgs2Step(
-      basis: org.apache.spark.rdd.RDD[(Int, Array[Array[Double]])],
-      w0: BlockVec, part: org.apache.spark.Partitioner, j: Int,
-      keep: BlockVec => BlockVec): (Array[Double], Double, BlockVec) = {
-    val hCol = new Array[Double](j + 1)
-    val c1 = basis.join(w0, part).map { case (_, (vb, wb)) =>
-      Array.tabulate(vb.length) { i =>
-        val bi = vb(i); var acc = 0.0; var t = 0
-        while (t < wb.length) { acc += bi(t) * wb(t); t += 1 }
-        acc
-      }
-    }.reduce { (a0, b1) =>
-      val z = a0.clone(); var i = 0
-      while (i < z.length) { z(i) += b1(i); i += 1 }
-      z
-    }
-    var i = 0
-    while (i <= j) { hCol(i) += c1(i); i += 1 }
-    val w1 = keep(basis.join(w0, part).mapValues { case (vb, wb) =>
-      val out = wb.clone()
-      var k = 0
-      while (k < vb.length) {
-        val bk = vb(k); val ck = c1(k); var t = 0
-        while (t < out.length) { out(t) -= ck * bk(t); t += 1 }
-        k += 1
-      }
-      out
-    })
-    val (c2, w1n2) = basis.join(w1, part).map { case (_, (vb, wb)) =>
-      var n2 = 0.0; var t = 0
-      while (t < wb.length) { n2 += wb(t) * wb(t); t += 1 }
-      (Array.tabulate(vb.length) { i2 =>
-        val bi = vb(i2); var acc = 0.0; var u = 0
-        while (u < wb.length) { acc += bi(u) * wb(u); u += 1 }
-        acc
-      }, n2)
-    }.reduce { (a0, b1) =>
-      val z = a0._1.clone(); var i2 = 0
-      while (i2 < z.length) { z(i2) += b1._1(i2); i2 += 1 }
-      (z, a0._2 + b1._2)
-    }
-    var c2n2 = 0.0
-    i = 0
-    while (i <= j) { hCol(i) += c2(i); c2n2 += c2(i) * c2(i); i += 1 }
-    val w2 = keep(basis.join(w1, part).mapValues { case (vb, wb) =>
-      val out = wb.clone()
-      var k = 0
-      while (k < vb.length) {
-        val bk = vb(k); val ck = c2(k); var t = 0
-        while (t < out.length) { out(t) -= ck * bk(t); t += 1 }
-        k += 1
-      }
-      out
-    })
-    (hCol, math.sqrt(math.max(w1n2 - c2n2, 0.0)), w2)
-  }
-
-
   /** M15: conjugate-gradient solve of the SPD system A·x = b — the
     * ITERATIVE member of the solver family (direct LU m3–m5, Cholesky
     * m10, QR m12, randomized m13/m14): when a factorization is
     * unaffordable, CG needs only a matvec per iteration. The loop is
-    * FULLY distributed: x/r/p live as block vectors co-partitioned
-    * with the matrix layout, every vector update (axpy) is a narrow
-    * co-partitioned join, the matvec is [[bvMatvec]], and the ONLY
-    * values that ever reach the driver are the CG scalars — two dot
-    * products per iteration, 16 bytes regardless of n (the round-5
-    * form collected the full O(n) matvec result and re-broadcast the
-    * iterate every iteration; both are gone).
+    * FULLY distributed on [[BlockVecs]]: x/r/p are block vectors
+    * co-partitioned with the matrix layout, every vector update (axpy)
+    * is a narrow co-partitioned join, and the ONLY values that ever
+    * reach the driver are the CG scalars — two dot products per
+    * iteration, 16 bytes regardless of n.
     *
     * Storage trade, stated: the symmetric matrix is laid out ONCE in
-    * full block form keyed by COLUMN block — the distributed SpMV
-    * layout; each off-diagonal block's transposed twin is materialized
-    * in the same pass, 2× block storage for a broadcast-free,
-    * collect-free iteration. The factorizations keep lower-only
-    * storage ([[BlockCholesky]]) because their driver never needs the
-    * iterate; an iterative solver's hot loop earns the duplicate.
-    * Lineage: every iteration's vectors are cached (q·blk doubles —
-    * trivial) and localCheckpoint-truncated every 8 iterations, so a
-    * long solve can neither rebuild past iterations nor grow an
-    * unbounded DAG; all per-iteration caches are dropped before
-    * returning. b is PLANTED as A·x* through the same distributed
-    * matvec, so recovering x* is a real end-to-end invariant; the gate
-    * checks the TRUE residual (one extra matvec), not the recurrence
-    * residual. */
+    * full block form keyed by COLUMN block ([[BlockVecs.spdByCol]]),
+    * 2× block storage for a broadcast-free, collect-free iteration. The
+    * factorizations keep lower-only storage ([[BlockCholesky]]) because
+    * their driver never needs the iterate; an iterative solver's hot
+    * loop earns the duplicate. Lineage: every iteration's vectors are
+    * cached (q·blk doubles — trivial) and checkpointed every 8
+    * iterations, so a long solve can neither rebuild past iterations
+    * nor grow an unbounded DAG. b is PLANTED as A·x* through the same
+    * distributed matvec, so recovering x* is a real end-to-end
+    * invariant; the gate checks the TRUE residual (one extra matvec),
+    * not the recurrence residual, in the same job as the x* error. */
   def m15ConjugateGradient(s: SparkSession, dir: String): DataFrame =
     m15At(s, 512, 128)
 
@@ -882,83 +741,30 @@ object MatrixQueries {
     * claims (everything else about the loop is identical). */
   private[graft] def m15At(s: SparkSession, n: Int, blk: Int): DataFrame = {
     import s.implicits._
-    val sc = s.sparkContext
-    val q = n / blk
-    val part = new org.apache.spark.HashPartitioner(q)
-    val aByCol = BlockCholesky.spdBlocks(sc, n, blk, Seed, boost = n.toDouble)
-      .flatMap { case ((bi, bj), dm) =>
-        val d = LocalLA.fromDM(dm)
-        if (bi == bj) Iterator((bj, (bi, d)))
-        else Iterator((bj, (bi, d)), (bi, (bj, LocalLA.transpose(d))))
-      }.partitionBy(part).cache()
-    val cached = scala.collection.mutable.ArrayBuffer.empty[BlockVec]
-    def keep(v: BlockVec): BlockVec = { v.cache(); cached += v; v }
-
-    def dot(u: BlockVec, v: BlockVec): Double =
-      u.join(v, part).map { case (_, (a, b)) =>
-        var acc = 0.0; var i = 0
-        while (i < a.length) { acc += a(i) * b(i); i += 1 }
-        acc
-      }.sum()
-    // alpha·u + v, narrow (both sides co-partitioned by `part`)
-    def axpy(alpha: Double, u: BlockVec, v: BlockVec): BlockVec =
-      u.join(v, part).mapValues { case (a, b) =>
-        val w = b.clone(); var i = 0
-        while (i < w.length) { w(i) += alpha * a(i); i += 1 }
-        w
+    val (iters, (residTrue, relErr)) = BlockVecs.scoped(s.sparkContext, n / blk, blk) { bv =>
+      val aByCol = bv.spdByCol(Seed)
+      val sys = bv.plant(bv.matvec(aByCol, _))
+      var x = bv.keep(bv.vec(_ => 0.0))
+      var r = sys.b
+      var p = r
+      var rs = bv.dot(r, r)
+      var it = 0
+      while (it < n && math.sqrt(rs) / sys.bNrm > 1e-12) {
+        val ap = bv.keep(bv.matvec(aByCol, p))
+        val alpha = rs / bv.dot(p, ap)
+        val xN = bv.keep(bv.axpy(alpha, p, x))
+        val rN = bv.keep(bv.axpy(-alpha, ap, r))
+        val rsN = bv.dot(rN, rN)
+        val pN = bv.keep(bv.axpy(rsN / rs, p, rN))
+        if (it % 8 == 7) bv.checkpoint(xN, rN, pN)
+        x = xN; r = rN; p = pN
+        rs = rsN
+        it += 1
       }
-    def bvec(f: Int => Double): BlockVec =
-      sc.parallelize(0 until q, q)
-        .map(b => (b, Array.tabulate(blk)(i => f(b * blk + i))))
-        .partitionBy(part)
-
-    val xStar = keep(bvec(i => 1.0 + (i % 7) * 0.25))
-    val b0 = keep(bvMatvec(aByCol, xStar, part))
-    val bNrm = math.sqrt(dot(b0, b0))
-
-    var x: BlockVec = keep(bvec(_ => 0.0))
-    var r: BlockVec = b0
-    var p: BlockVec = r
-    var rs = dot(r, r)
-    var it = 0
-    while (it < n && math.sqrt(rs) / bNrm > 1e-12) {
-      val ap = keep(bvMatvec(aByCol, p, part))
-      val alpha = rs / dot(p, ap)
-      val xN = keep(axpy(alpha, p, x))
-      val rN = keep(axpy(-alpha, ap, r))
-      val rsN = dot(rN, rN)
-      val beta = rsN / rs
-      val pN = keep(axpy(beta, p, rN))
-      if (it % 8 == 7) {
-        // truncate lineage: materialize + localCheckpoint the three live
-        // vectors in ONE union job (blocks are GC-cleanable, DAG bounded)
-        xN.localCheckpoint(); rN.localCheckpoint(); pN.localCheckpoint()
-        sc.union(Seq(xN, rN, pN)).foreachPartition(_ => ())
-        retireCached(cached, Seq(xN, rN, pN, b0, xStar))
-      }
-      x = xN; r = rN; p = pN
-      rs = rsN
-      it += 1
+      (it, bv.check(sys, x))
     }
-    // TRUE residual via one more distributed matvec (the recurrence
-    // residual can drift from the real one)
-    val ax = bvMatvec(aByCol, x, part)
-    val tr = ax.join(b0, part).map { case (_, (a, b)) =>
-      var acc = 0.0; var i = 0
-      while (i < a.length) { val d0 = a(i) - b(i); acc += d0 * d0; i += 1 }
-      acc
-    }.sum()
-    val err = x.join(xStar, part).map { case (_, (xa, xs)) =>
-      var m = 0.0; var i = 0
-      while (i < xa.length) { m = math.max(m, math.abs(xa(i) - xs(i))); i += 1 }
-      m
-    }.max()
-    val residTrue = math.sqrt(tr) / bNrm
-    val relErr = err / 2.5 // max|x*| = 1 + 6·0.25
-    cached.foreach(_.unpersist(false))
-    aByCol.unpersist(false)
     val pass = residTrue < 1e-10 && relErr < 1e-8
-    Seq((n, blk, it, residTrue, relErr, pass))
+    Seq((n, blk, iters, residTrue, relErr, pass))
       .toDF("n", "blk", "iters", "resid_rel", "err_rel", "pass")
   }
 
@@ -970,121 +776,64 @@ object MatrixQueries {
     * D = diag(1 + i mod 4) — SPD is preserved, the condition number
     * inflates ~16×, and Jacobi exactly undoes the scaling, so the
     * preconditioned iteration count must fall back to the unscaled
-    * regime. Both solves run the same distributed machinery
-    * ([[bvMatvec]], narrow axpy joins) at exactly TWO scalar-reduction
-    * jobs per iteration — the PCG recurrence's r·z and convergence r·r
-    * come out of one fused [[dot2]] job, since launch overhead (not
-    * data) dominates these reductions; the query reports BOTH
-    * iteration counts and gates on pcg_iters < cg_iters in addition to
-    * the true-residual/solution invariants, so a silently broken
-    * preconditioner (z = r) flips the driver's correctness row. */
+    * regime. Both solves run on [[BlockVecs]] at exactly TWO
+    * scalar-reduction jobs per iteration — the PCG recurrence's r·z
+    * and convergence r·r come out of one [[BlockVecs.dots]] job, since
+    * launch overhead (not data) dominates these reductions; the query
+    * reports BOTH iteration counts and gates on pcg_iters < cg_iters in
+    * addition to the true-residual/solution invariants, so a silently
+    * broken preconditioner (z = r) flips the driver's correctness row. */
   def m16PreconditionedCg(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sc = s.sparkContext
-    val n = 512; val blk = 128; val q = n / blk
-    val part = new org.apache.spark.HashPartitioner(q)
+    val n = 512; val blk = 128
     def scaleOf(i: Int): Double = 1.0 + (i % 4)
-    val aByCol = BlockCholesky.spdBlocks(sc, n, blk, Seed, boost = n.toDouble)
-      .flatMap { case ((bi, bj), dm) =>
-        val d0 = LocalLA.fromDM(dm)
-        val d = Array.tabulate(d0.length, d0(0).length)((i, j) =>
-          d0(i)(j) * scaleOf(bi * blk + i) * scaleOf(bj * blk + j))
-        if (bi == bj) Iterator((bj, (bi, d)))
-        else Iterator((bj, (bi, d)), (bi, (bj, LocalLA.transpose(d))))
-      }.partitionBy(part).cache()
-    val cached = scala.collection.mutable.ArrayBuffer.empty[BlockVec]
-    def keep(v: BlockVec): BlockVec = { v.cache(); cached += v; v }
-    def dot(u: BlockVec, v: BlockVec): Double =
-      u.join(v, part).map { case (_, (a, b)) =>
-        var acc = 0.0; var i = 0
-        while (i < a.length) { acc += a(i) * b(i); i += 1 }
-        acc
-      }.sum()
-    // (u·v, u·w) in ONE job — the PCG recurrence needs r·z and the
-    // convergence test r·r every iteration; fusing them halves the
-    // per-iteration action count (job launch overhead, not data,
-    // dominates these scalar reductions)
-    def dot2(u: BlockVec, v: BlockVec, w: BlockVec): (Double, Double) =
-      u.join(v, part).join(w, part).map { case (_, ((a, b), c)) =>
-        var s1 = 0.0; var s2 = 0.0; var i = 0
-        while (i < a.length) { s1 += a(i) * b(i); s2 += a(i) * c(i); i += 1 }
-        (s1, s2)
-      }.reduce((x, y) => (x._1 + y._1, x._2 + y._2))
-    def axpy(alpha: Double, u: BlockVec, v: BlockVec): BlockVec =
-      u.join(v, part).mapValues { case (a, b) =>
-        val w = b.clone(); var i = 0
-        while (i < w.length) { w(i) += alpha * a(i); i += 1 }
-        w
-      }
-    def bvec(f: Int => Double): BlockVec =
-      sc.parallelize(0 until q, q)
-        .map(b => (b, Array.tabulate(blk)(i => f(b * blk + i))))
-        .partitionBy(part)
-    // diag(A)⁻¹ extracted from the stored diagonal blocks — stays a
-    // distributed block vector like everything else in the loop
-    val invDiag = keep(aByCol
-      .flatMap { case (bj, (bi, d)) =>
-        if (bi == bj) Iterator((bi, Array.tabulate(d.length)(i => 1.0 / d(i)(i))))
-        else Iterator.empty
-      }.partitionBy(part))
-    def applyPrecond(r: BlockVec): BlockVec =
-      r.join(invDiag, part).mapValues { case (a, m) =>
-        Array.tabulate(a.length)(i => a(i) * m(i))
-      }
-
-    val xStar = keep(bvec(i => 1.0 + (i % 7) * 0.25))
-    val b0 = keep(bvMatvec(aByCol, xStar, part))
-    val bNrm = math.sqrt(dot(b0, b0))
-
-    /** One CG solve; identity preconditioner when `precond` is false.
-      * Returns (x, iterations, true relative residual). */
-    def solve(precond: Boolean): (BlockVec, Int, Double) = {
-      var x: BlockVec = keep(bvec(_ => 0.0))
-      var r: BlockVec = b0
-      var z: BlockVec = if (precond) keep(applyPrecond(r)) else r
-      var p: BlockVec = z
-      var rz = dot(r, z)
-      var rr = if (precond) dot(r, r) else rz // z = r without preconditioning
-      var it = 0
-      while (it < n && math.sqrt(rr) / bNrm > 1e-12) {
-        val ap = keep(bvMatvec(aByCol, p, part))
-        val alpha = rz / dot(p, ap)
-        val xN = keep(axpy(alpha, p, x))
-        val rN = keep(axpy(-alpha, ap, r))
-        val zN = if (precond) keep(applyPrecond(rN)) else rN
-        val (rzN, rrN) =
-          if (precond) dot2(rN, zN, rN)
-          else { val t = dot(rN, rN); (t, t) }
-        val beta = rzN / rz
-        val pN = keep(axpy(beta, p, zN))
-        if (it % 8 == 7) {
-          xN.localCheckpoint(); rN.localCheckpoint(); pN.localCheckpoint()
-          sc.union(Seq(xN, rN, pN)).foreachPartition(_ => ())
-          retireCached(cached, Seq(xN, rN, zN, pN, b0, xStar, invDiag))
+    val (cg, pcg) = BlockVecs.scoped(s.sparkContext, n / blk, blk) { bv =>
+      val aByCol = bv.spdByCol(Seed, (bi, bj, d) =>
+        Array.tabulate(d.length, d(0).length)((i, j) =>
+          d(i)(j) * scaleOf(bi * blk + i) * scaleOf(bj * blk + j)))
+      // diag(A)⁻¹ extracted from the stored diagonal blocks — stays a
+      // distributed block vector like everything else in the loop
+      val invDiag = bv.pin(aByCol
+        .flatMap { case (bj, (bi, d)) =>
+          if (bi == bj) Iterator((bi, Array.tabulate(d.length)(i => 1.0 / d(i)(i))))
+          else Iterator.empty
+        }.partitionBy(bv.part))
+      def applyPrecond(r: BlockVec): BlockVec =
+        r.join(invDiag, bv.part).mapValues { case (a, m) =>
+          Array.tabulate(a.length)(i => a(i) * m(i))
         }
-        x = xN; r = rN; z = zN; p = pN
-        rz = rzN; rr = rrN
-        it += 1
-      }
-      val ax = bvMatvec(aByCol, x, part)
-      val tr = ax.join(b0, part).map { case (_, (a, b)) =>
-        var acc = 0.0; var i = 0
-        while (i < a.length) { val d0 = a(i) - b(i); acc += d0 * d0; i += 1 }
-        acc
-      }.sum()
-      (x, it, math.sqrt(tr) / bNrm)
-    }
+      val sys = bv.plant(bv.matvec(aByCol, _))
 
-    val (xCg, itCg, residCg) = solve(precond = false)
-    val (xPcg, itPcg, residPcg) = solve(precond = true)
-    val err = xPcg.join(xStar, part).map { case (_, (xa, xs)) =>
-      var m = 0.0; var i = 0
-      while (i < xa.length) { m = math.max(m, math.abs(xa(i) - xs(i))); i += 1 }
-      m
-    }.max()
-    val relErr = err / 2.5
-    cached.foreach(_.unpersist(false))
-    aByCol.unpersist(false)
+      /** One CG solve; identity preconditioner when `precond` is false.
+        * Returns (iterations, (true relative residual, relative x* error)). */
+      def solve(precond: Boolean): (Int, (Double, Double)) = {
+        var x = bv.keep(bv.vec(_ => 0.0))
+        var r = sys.b
+        var z = if (precond) bv.keep(applyPrecond(r)) else r
+        var p = z
+        var rz = bv.dot(r, z)
+        var rr = if (precond) bv.dot(r, r) else rz // z = r without preconditioning
+        var it = 0
+        while (it < n && math.sqrt(rr) / sys.bNrm > 1e-12) {
+          val ap = bv.keep(bv.matvec(aByCol, p))
+          val alpha = rz / bv.dot(p, ap)
+          val xN = bv.keep(bv.axpy(alpha, p, x))
+          val rN = bv.keep(bv.axpy(-alpha, ap, r))
+          val zN = if (precond) bv.keep(applyPrecond(rN)) else rN
+          val Array(rzN, rrN) = bv.dots(rN -> zN, rN -> rN)
+          val pN = bv.keep(bv.axpy(rzN / rz, p, zN))
+          if (it % 8 == 7) bv.checkpoint(xN, rN, zN, pN)
+          x = xN; r = rN; z = zN; p = pN
+          rz = rzN; rr = rrN
+          it += 1
+        }
+        (it, bv.check(sys, x))
+      }
+
+      (solve(precond = false), solve(precond = true))
+    }
+    val (itCg, (residCg, _)) = cg
+    val (itPcg, (residPcg, relErr)) = pcg
     val pass = residCg < 1e-10 && residPcg < 1e-10 && relErr < 1e-8 &&
       itPcg < itCg
     Seq((n, blk, itCg, itPcg, residCg, residPcg, relErr, pass))
@@ -1121,9 +870,9 @@ object MatrixQueries {
     * eigenvectors of a matrix you can only afford to multiply by"
     * (spectral embeddings, PCA of huge Grams, stability analysis).
     *
-    * Distribution discipline = m15's: the matrix is the column-keyed
-    * full-symmetric block layout, every matvec is [[bvMatvec]] (narrow
-    * join + map-side-combined reduce), every vector op is a
+    * Distribution discipline = [[BlockVecs]]: the matrix is the
+    * column-keyed full-symmetric block layout, every matvec is a narrow
+    * join + map-side-combined reduce, every vector op is a
     * co-partitioned join, and the Krylov BASIS lives distributed as
     * one (block → m×blk slab) frame — so full reorthogonalization is
     * TWO jobs per iteration regardless of basis size (one fused
@@ -1140,192 +889,116 @@ object MatrixQueries {
     *
     * Scale: per iteration ONE matvec + a bounded number of narrow
     * joins; driver state = m scalars per reduction; basis storage
-    * m·n doubles spread over the blocks. Lineage truncated every 8
-    * iterations (m15's treatment). */
+    * m·n doubles spread over the blocks. Lineage is checkpointed every
+    * iteration. */
   def m17LanczosEigen(s: SparkSession, dir: String): DataFrame =
     m17At(s, 512, 128)
 
   private[graft] def m17At(s: SparkSession, n: Int, blk: Int): DataFrame = {
     import s.implicits._
-    val sc = s.sparkContext
-    val q = n / blk
-    val part = new org.apache.spark.HashPartitioner(q)
-    // m15's SPD core + THREE planted spectral spikes: uₖ = the uniform
-    // unit vector on block k's indices (disjoint supports ⇒ exactly
-    // orthonormal, each rank-1 bump touches ONE diagonal block:
-    // +cₖ/blk on every entry), cₖ = (3−k)·n. The boosted random bulk
-    // sits in n ± O(√n) — a CLUSTERED edge, the classic slow case for
-    // any Krylov method — while the planted extremes at ~4n/3n/2n are
-    // separated by n, so the top-3 extraction converges in tens of
-    // iterations; the dense-spectrum spec cross-checks against the
-    // SAME planted matrix, so the plant is tested, not assumed.
-    val plantK = 3
-    val aByCol = BlockCholesky.spdBlocks(sc, n, blk, Seed, boost = n.toDouble)
-      .flatMap { case ((bi, bj), dm) =>
-        val d0 = LocalLA.fromDM(dm)
-        val d = if (bi == bj && bi < plantK) {
-          val bump = (plantK - bi) * n.toDouble / blk
-          Array.tabulate(d0.length, d0(0).length)((i, j) => d0(i)(j) + bump)
-        } else d0
-        if (bi == bj) Iterator((bj, (bi, d)))
-        else Iterator((bj, (bi, d)), (bi, (bj, LocalLA.transpose(d))))
-      }.partitionBy(part).cache()
-    type Basis = org.apache.spark.rdd.RDD[(Int, Array[Array[Double]])]
-    val cached = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
-    def keep[T <: org.apache.spark.rdd.RDD[_]](v: T): T = { v.cache(); cached += v; v }
-    def dot(u: BlockVec, v: BlockVec): Double =
-      u.join(v, part).map { case (_, (a, b)) =>
-        var acc = 0.0; var i = 0
-        while (i < a.length) { acc += a(i) * b(i); i += 1 }
-        acc
-      }.sum()
-    def axpy(alpha: Double, u: BlockVec, v: BlockVec): BlockVec =
-      u.join(v, part).mapValues { case (a, b) =>
-        val w = b.clone(); var i = 0
-        while (i < w.length) { w(i) += alpha * a(i); i += 1 }
-        w
-      }
-    def bvec(f: Int => Double): BlockVec =
-      sc.parallelize(0 until q, q)
-        .map(b => (b, Array.tabulate(blk)(i => f(b * blk + i))))
-        .partitionBy(part)
-
     val K = 3
     val mMax = math.min(96, n)
-    // the |β·s| bound is ABSOLUTE — scale it to the spectrum (running
-    // max |α| tracks ‖T‖ within 2×) so the stop is ~1e-8 RELATIVE;
-    // an absolute 1e-9 against eigenvalues of size n never fires
-    var tScale = 0.0
-    // deterministic non-degenerate start, normalized
-    val v0raw = keep(bvec(i => 1.0 + math.sin(i * 0.7)))
-    val v0nrm = math.sqrt(dot(v0raw, v0raw))
-    var v: BlockVec = keep(v0raw.mapValues(_.map(_ / v0nrm)))
-    var vPrev: BlockVec = null
-    var basis: Basis = keep(v.mapValues(a => Array(a)))
     val alphas = scala.collection.mutable.ArrayBuffer.empty[Double]
     val betas = scala.collection.mutable.ArrayBuffer.empty[Double]
-    var beta = 0.0
-    var converged = false
-    var breakdown = false
-    while (alphas.length < mMax && !converged && !breakdown) {
-      var w: BlockVec = keep(bvMatvec(aByCol, v, part))
-      if (vPrev != null) w = keep(axpy(-beta, vPrev, w))
-      val alpha = dot(w, v)
-      w = keep(axpy(-alpha, v, w))
-      alphas += alpha
-      tScale = math.max(tScale, math.abs(alpha))
-      // full reorthogonalization, twice: c = Basisᵀw (ONE fused
-      // reduction job however wide the basis), then w −= Basis·c
-      for (_ <- 0 until 2) {
-        val c = basis.join(w, part).map { case (_, (vb, wb)) =>
-          Array.tabulate(vb.length) { i =>
-            val bi = vb(i); var acc = 0.0; var t = 0
-            while (t < wb.length) { acc += bi(t) * wb(t); t += 1 }
-            acc
-          }
-        }.reduce { (x, y) =>
-          val z = x.clone(); var i = 0
-          while (i < z.length) { z(i) += y(i); i += 1 }
-          z
-        }
-        w = keep(basis.join(w, part).mapValues { case (vb, wb) =>
-          val out = wb.clone()
-          var i = 0
-          while (i < vb.length) {
-            val bi = vb(i); val ci = c(i); var t = 0
-            while (t < out.length) { out(t) -= ci * bi(t); t += 1 }
-            i += 1
-          }
-          out
-        })
-      }
-      beta = math.sqrt(dot(w, w))
-      if (beta < 1e-12 * math.abs(alpha)) breakdown = true // invariant subspace
-      else {
-        betas += beta
-        vPrev = v
-        v = keep(w.mapValues(_.map(_ / beta)))
-        basis = keep(basis.join(v, part).mapValues { case (vb, nv) => vb :+ nv })
-        // truncate EVERY live reference the next iteration's joins will
-        // serialize, EVERY iteration (basis, v and vPrev — tasks ship
-        // the whole RDD object graph; caching does not cut it, only a
-        // checkpoint does; a chained vPrev overflows the task
-        // deserializer's stack within ~30 iterations). Blocks are
-        // already materialized in memory, so this is bookkeeping, not
-        // recompute.
-        basis.localCheckpoint(); v.localCheckpoint(); vPrev.localCheckpoint()
-        sc.union(Seq(v, vPrev)).foreachPartition(_ => ())
-        basis.foreachPartition(_ => ())
-        retireCached(cached, Seq(basis, v, vPrev))
-        // FREE residual bound from the tridiagonal: |β_m · s_{m,k}|
-        val m = alphas.length
-        if (m > K) {
-          val t = Array.tabulate(m, m)((i, j) =>
-            if (i == j) alphas(i)
-            else if (math.abs(i - j) == 1) betas(math.min(i, j)) else 0.0)
-          val (_, evec) = LocalLA.symEig(t)
-          converged = (0 until K).forall(k =>
-            math.abs(beta * evec(m - 1)(k)) < 1e-8 * tScale)
-        }
-      }
+    def tridiagonal: Array[Array[Double]] = {
+      val m = alphas.length
+      Array.tabulate(m, m)((i, j) =>
+        if (i == j) alphas(i)
+        else if (math.abs(i - j) == 1) betas(math.min(i, j)) else 0.0)
     }
-    val m = alphas.length
-    val t = Array.tabulate(m, m)((i, j) =>
-      if (i == j) alphas(i)
-      else if (math.abs(i - j) == 1) betas(math.min(i, j)) else 0.0)
-    val (theta, sVec) = LocalLA.symEig(t)
-    // an early invariant-subspace breakdown can leave m < K Ritz pairs
-    // — extract what exists, and record the shortfall as a GATE column
-    // (`rank_complete`): fewer-but-green rows would otherwise pass
-    // Verify.gateInvariants vacuously (boolean checks can't see a
-    // missing row)
-    val kEff = math.min(K, m)
+    val (theta, gram, r2) = BlockVecs.scoped(s.sparkContext, n / blk, blk) { bv =>
+      // m15's SPD core + THREE planted spectral spikes: uₖ = the uniform
+      // unit vector on block k's indices (disjoint supports ⇒ exactly
+      // orthonormal, each rank-1 bump touches ONE diagonal block:
+      // +cₖ/blk on every entry), cₖ = (3−k)·n. The boosted random bulk
+      // sits in n ± O(√n) — a CLUSTERED edge, the classic slow case for
+      // any Krylov method — while the planted extremes at ~4n/3n/2n are
+      // separated by n, so the top-3 extraction converges in tens of
+      // iterations; the dense-spectrum spec cross-checks against the
+      // SAME planted matrix, so the plant is tested, not assumed.
+      val plantK = 3
+      val aByCol = bv.spdByCol(Seed, (bi, bj, d) =>
+        if (bi == bj && bi < plantK) {
+          val bump = (plantK - bi) * n.toDouble / blk
+          Array.tabulate(d.length, d(0).length)((i, j) => d(i)(j) + bump)
+        } else d)
+      // the |β·s| bound is ABSOLUTE — scale it to the spectrum (running
+      // max |α| tracks ‖T‖ within 2×) so the stop is ~1e-8 RELATIVE;
+      // an absolute 1e-9 against eigenvalues of size n never fires
+      var tScale = 0.0
+      // deterministic non-degenerate start, normalized
+      val v0raw = bv.keep(bv.vec(i => 1.0 + math.sin(i * 0.7)))
+      var v = bv.keep(bv.scale(v0raw, 1.0 / math.sqrt(bv.dot(v0raw, v0raw))))
+      var vPrev: BlockVec = null
+      var basis = bv.slab(v)
+      var beta = 0.0
+      var converged = false
+      var breakdown = false
+      while (alphas.length < mMax && !converged && !breakdown) {
+        var w = bv.keep(bv.matvec(aByCol, v))
+        if (vPrev != null) w = bv.keep(bv.axpy(-beta, vPrev, w))
+        val alpha = bv.dot(w, v)
+        w = bv.keep(bv.axpy(-alpha, v, w))
+        alphas += alpha
+        tScale = math.max(tScale, math.abs(alpha))
+        // full reorthogonalization, twice: c = Basisᵀw (ONE fused
+        // reduction job however wide the basis), then w −= Basis·c
+        for (_ <- 0 until 2) w = bv.keep(bv.subtract(basis, w, bv.project(basis, w)._1))
+        beta = math.sqrt(bv.dot(w, w))
+        if (beta < 1e-12 * math.abs(alpha)) breakdown = true // invariant subspace
+        else {
+          betas += beta
+          vPrev = v
+          v = bv.keep(bv.scale(w, 1.0 / beta))
+          // truncate EVERY live reference the next iteration's joins
+          // will serialize, EVERY iteration: a chained vPrev overflows
+          // the task deserializer's stack within ~30 iterations
+          bv.checkpoint(v, vPrev, basis)
+          basis = bv.append(basis, v)
+          // FREE residual bound from the tridiagonal: |β_m · s_{m,k}|
+          val m = alphas.length
+          if (m > K) {
+            val (_, evec) = LocalLA.symEig(tridiagonal)
+            converged = (0 until K).forall(k =>
+              math.abs(beta * evec(m - 1)(k)) < 1e-8 * tScale)
+          }
+        }
+      }
+      val m = alphas.length
+      val (theta, sVec) = LocalLA.symEig(tridiagonal)
+      // an early invariant-subspace breakdown can leave m < K Ritz
+      // pairs; Ritz vectors y_k = V·s_k, each in ONE pass over the
+      // basis (which carries m+1 vectors — v_{m+1} is appended before
+      // the convergence check — the blend uses exactly the first m)
+      val ys = (0 until math.min(K, m)).map(k =>
+        bv.keep(bv.blend(basis, Array.tabulate(m)(i => sVec(i)(k)))))
+      // pairwise Gram of the Ritz vectors — one reduction job
+      val pairs = for (a <- ys.indices; b <- a until ys.length) yield (a, b)
+      val gram = Array.ofDim[Double](ys.length, ys.length)
+      pairs.zip(bv.dots(pairs.map { case (a, b) => ys(a) -> ys(b) }: _*)).foreach {
+        case ((a, b), x) => gram(a)(b) = x; gram(b)(a) = x
+      }
+      // TRUE residuals ‖A·y − θ·y‖² via a distributed matvec per pair
+      val r2 = ys.indices.map { k =>
+        val r = bv.axpy(-theta(k), ys(k), bv.matvec(aByCol, ys(k)))
+        bv.dot(r, r)
+      }
+      (theta, gram, r2)
+    }
+    // record a Ritz-pair shortfall as a GATE column (`rank_complete`):
+    // fewer-but-green rows would otherwise pass Verify.gateInvariants
+    // vacuously (boolean checks can't see a missing row)
+    val kEff = gram.length
     val rankComplete = kEff == K
-    // Ritz vectors Y = V·S_K in ONE pass over the basis
-    val sCols = Array.tabulate(kEff, m)((k, i) => sVec(i)(k))
-    // the basis carries m+1 vectors (v_{m+1} is appended before the
-    // convergence check) — the Ritz blend uses exactly the first m
-    val y: Basis = keep(basis.mapValues { vb =>
-      Array.tabulate(kEff) { k =>
-        val out = new Array[Double](vb(0).length)
-        var i = 0
-        while (i < m) {
-          val ci = sCols(k)(i); val bi = vb(i); var p = 0
-          while (p < out.length) { out(p) += ci * bi(p); p += 1 }
-          i += 1
-        }
-        out
-      }
-    })
-    // pairwise Gram of the Ritz vectors — one reduction job
-    val gram = y.map { case (_, arr) =>
-      Array.tabulate(kEff, kEff) { (a, b) =>
-        var acc = 0.0; var p = 0
-        while (p < arr(a).length) { acc += arr(a)(p) * arr(b)(p); p += 1 }
-        acc
-      }
-    }.reduce { (xa, xb) =>
-      Array.tabulate(kEff, kEff)((a, b) => xa(a)(b) + xb(a)(b))
-    }
     val orthoErr = (for (a <- 0 until kEff; b <- 0 until kEff) yield
       math.abs(gram(a)(b) - (if (a == b) 1.0 else 0.0))).max
-    // TRUE residuals via distributed matvec per pair
     val rows = (0 until kEff).map { k =>
-      val yk: BlockVec = y.mapValues(_(k))
-      val ay = bvMatvec(aByCol, yk, part)
       val th = theta(k)
-      val r2 = ay.join(yk, part).map { case (_, (a, b)) =>
-        var acc = 0.0; var i = 0
-        while (i < a.length) { val d0 = a(i) - th * b(i); acc += d0 * d0; i += 1 }
-        acc
-      }.sum()
-      val residRel = math.sqrt(r2) / (math.abs(th) * math.sqrt(gram(k)(k)))
-      (k + 1, th, residRel, orthoErr, m, rankComplete,
+      val residRel = math.sqrt(r2(k)) / (math.abs(th) * math.sqrt(gram(k)(k)))
+      (k + 1, th, residRel, orthoErr, alphas.length, rankComplete,
         residRel < 1e-7 && orthoErr < 1e-8 && th > 0.0 &&
           (k == 0 || th <= theta(k - 1)))
     }
-    cached.foreach(_.unpersist(false))
-    aByCol.unpersist(false)
     rows.toDF("rank", "theta", "resid_rel", "ortho_err", "iters",
         "rank_complete_ok", "pass")
       .orderBy("rank")
@@ -1335,12 +1008,11 @@ object MatrixQueries {
     * general-matrix member of the iterative family (m15/m16 require
     * SPD, m17 symmetric; until now a general dense A had only the
     * direct LU path when a factorization is unaffordable). Van der
-    * Vorst's stabilized bi-conjugate gradient: TWO distributed matvecs
-    * per iteration ([[bvMatvec]] on the column-keyed block layout),
-    * every vector update a narrow co-partitioned axpy join, and the
-    * ONLY driver traffic is five recurrence scalars per iteration
-    * (three fused reduction jobs), regardless of n — m15's discipline
-    * unchanged.
+    * Vorst's stabilized bi-conjugate gradient on [[BlockVecs]]: TWO
+    * distributed matvecs per iteration on the column-keyed block
+    * layout, every vector update a narrow co-partitioned axpy join,
+    * and the ONLY driver traffic is five recurrence scalars per
+    * iteration (three fused reduction jobs), regardless of n.
     *
     * The system is DELIBERATELY nonsymmetric: [[MatrixGen.blocks]]'s
     * seeded dense blocks (a_ij ≠ a_ji — MatrixSpec asserts the
@@ -1352,8 +1024,8 @@ object MatrixQueries {
     * distributed matvec; the gate checks the TRUE residual
     * ‖A·x̂−b‖/‖b‖ (one extra matvec) AND recovery of x*, and
     * MatrixSpec sandwiches x̂ against an independent driver-local LU
-    * solve of the same system. Lineage: localCheckpoint-truncated
-    * every 8 iterations; all per-iteration caches dropped on return. */
+    * solve of the same system. Lineage: checkpointed every 8
+    * iterations. */
   def m18BicgStab(s: SparkSession, dir: String): DataFrame =
     m18At(s, 512, 128)
 
@@ -1362,105 +1034,55 @@ object MatrixQueries {
   private[graft] def m18At(s: SparkSession, n: Int, blk: Int): DataFrame = {
     import s.implicits._
     val sc = s.sparkContext
-    val q = n / blk
-    val part = new org.apache.spark.HashPartitioner(q)
-    val aByCol = MatrixGen.blocks(sc, n, blk, Seed, diagBoost = n.toDouble)
-      .map { case ((bi, bj), m) => (bj, (bi, LocalLA.fromDM(toDense(m)))) }
-      .partitionBy(part).cache()
-    val cached = scala.collection.mutable.ArrayBuffer.empty[BlockVec]
-    def keep(v: BlockVec): BlockVec = { v.cache(); cached += v; v }
-    def dot(u: BlockVec, v: BlockVec): Double =
-      u.join(v, part).map { case (_, (a, b)) =>
-        var acc = 0.0; var i = 0
-        while (i < a.length) { acc += a(i) * b(i); i += 1 }
-        acc
-      }.sum()
-    // fused (⟨u,v⟩, ⟨v,v⟩) in ONE reduction job — BiCGSTAB needs two
-    // scalar pairs per iteration and each shares a join
-    def dotPair(u: BlockVec, v: BlockVec): (Double, Double) =
-      u.join(v, part).map { case (_, (a, b)) =>
-        var uv = 0.0; var vv = 0.0; var i = 0
-        while (i < b.length) { uv += a(i) * b(i); vv += b(i) * b(i); i += 1 }
-        (uv, vv)
-      }.reduce((x, y) => (x._1 + y._1, x._2 + y._2))
-    def axpy(alpha: Double, u: BlockVec, v: BlockVec): BlockVec =
-      u.join(v, part).mapValues { case (a, b) =>
-        val w = b.clone(); var i = 0
-        while (i < w.length) { w(i) += alpha * a(i); i += 1 }
-        w
-      }
-    def bvec(f: Int => Double): BlockVec =
-      sc.parallelize(0 until q, q)
-        .map(b => (b, Array.tabulate(blk)(i => f(b * blk + i))))
-        .partitionBy(part)
-
-    val xStar = keep(bvec(i => 1.0 + (i % 7) * 0.25))
-    val b0 = keep(bvMatvec(aByCol, xStar, part))
-    val bNrm = math.sqrt(dot(b0, b0))
-
-    var x: BlockVec = keep(bvec(_ => 0.0))
-    var r: BlockVec = b0 // r₀ = b − A·0
-    val rHat = b0 // shadow residual r̂₀ = r₀, fixed for the whole solve
-    var p: BlockVec = r
-    var rho = bNrm * bNrm // ⟨r̂,r⟩ with r = r̂ = b
-    var rNrm2 = rho
-    var it = 0
-    var breakdown = false
-    while (it < n && math.sqrt(rNrm2) / bNrm > 1e-12 && !breakdown) {
-      val av = keep(bvMatvec(aByCol, p, part))
-      val rhv = dot(rHat, av)
-      if (math.abs(rhv) < 1e-300) breakdown = true
-      else {
-        val alpha = rho / rhv
-        val sv = keep(axpy(-alpha, av, r))
-        val t = keep(bvMatvec(aByCol, sv, part))
-        val (ts, tt) = dotPair(sv, t) // (⟨s,t⟩, ⟨t,t⟩)
-        if (tt < 1e-300) {
-          // t = A·s = 0 with nonsingular A ⇒ s = 0: the half-step
-          // already converged — take it and let the loop condition exit
-          x = keep(axpy(alpha, p, x)); r = sv
-          rNrm2 = 0.0; it += 1
-        } else {
-          val omega = ts / tt
-          val xN = keep(axpy(omega, sv, keep(axpy(alpha, p, x))))
-          val rN = keep(axpy(-omega, t, sv))
-          val (rhoN, rN2) = dotPair(rHat, rN) // (⟨r̂,r⟩, ⟨r,r⟩)
-          if (math.abs(omega) < 1e-300 ||
-              (math.abs(rhoN) < 1e-300 && math.sqrt(rN2) / bNrm > 1e-12))
-            breakdown = true
-          else {
-            val beta = (rhoN / rho) * (alpha / omega)
-            val pN = keep(axpy(beta, keep(axpy(-omega, av, p)), rN))
-            if (it % 8 == 7) {
-              xN.localCheckpoint(); rN.localCheckpoint(); pN.localCheckpoint()
-              sc.union(Seq(xN, rN, pN)).foreachPartition(_ => ())
-              retireCached(cached, Seq(xN, rN, pN, b0, xStar))
+    val (iters, breakdown, (residTrue, relErr)) = BlockVecs.scoped(sc, n / blk, blk) { bv =>
+      val aByCol = bv.byCol(MatrixGen.blocks(sc, n, blk, Seed, diagBoost = n.toDouble)
+        .mapValues(m => LocalLA.fromDM(toDense(m))))
+      val sys = bv.plant(bv.matvec(aByCol, _))
+      var x = bv.keep(bv.vec(_ => 0.0))
+      var r = sys.b // r₀ = b − A·0
+      val rHat = sys.b // shadow residual r̂₀ = r₀, fixed for the whole solve
+      var p = r
+      var rho = sys.bNrm * sys.bNrm // ⟨r̂,r⟩ with r = r̂ = b
+      var rNrm2 = rho
+      var it = 0
+      var breakdown = false
+      while (it < n && math.sqrt(rNrm2) / sys.bNrm > 1e-12 && !breakdown) {
+        val av = bv.keep(bv.matvec(aByCol, p))
+        val rhv = bv.dot(rHat, av)
+        if (math.abs(rhv) < 1e-300) breakdown = true
+        else {
+          val alpha = rho / rhv
+          val sv = bv.keep(bv.axpy(-alpha, av, r))
+          val t = bv.keep(bv.matvec(aByCol, sv))
+          val Array(ts, tt) = bv.dots(sv -> t, t -> t)
+          if (tt < 1e-300) {
+            // t = A·s = 0 with nonsingular A ⇒ s = 0: the half-step
+            // already converged — take it and let the loop condition exit
+            x = bv.keep(bv.axpy(alpha, p, x)); r = sv
+            rNrm2 = 0.0; it += 1
+          } else {
+            val omega = ts / tt
+            val xN = bv.keep(bv.axpy(omega, sv, bv.keep(bv.axpy(alpha, p, x))))
+            val rN = bv.keep(bv.axpy(-omega, t, sv))
+            val Array(rhoN, rN2) = bv.dots(rHat -> rN, rN -> rN)
+            if (math.abs(omega) < 1e-300 ||
+                (math.abs(rhoN) < 1e-300 && math.sqrt(rN2) / sys.bNrm > 1e-12))
+              breakdown = true
+            else {
+              val beta = (rhoN / rho) * (alpha / omega)
+              val pN = bv.keep(bv.axpy(beta, bv.keep(bv.axpy(-omega, av, p)), rN))
+              if (it % 8 == 7) bv.checkpoint(xN, rN, pN)
+              x = xN; r = rN; p = pN
+              rho = rhoN; rNrm2 = rN2
             }
-            x = xN; r = rN; p = pN
-            rho = rhoN; rNrm2 = rN2
+            it += 1
           }
-          it += 1
         }
       }
+      (it, breakdown, bv.check(sys, x))
     }
-    // TRUE residual via one more distributed matvec
-    val ax = bvMatvec(aByCol, x, part)
-    val tr = ax.join(b0, part).map { case (_, (a, b)) =>
-      var acc = 0.0; var i = 0
-      while (i < a.length) { val d0 = a(i) - b(i); acc += d0 * d0; i += 1 }
-      acc
-    }.sum()
-    val err = x.join(xStar, part).map { case (_, (xa, xs)) =>
-      var m = 0.0; var i = 0
-      while (i < xa.length) { m = math.max(m, math.abs(xa(i) - xs(i))); i += 1 }
-      m
-    }.max()
-    val residTrue = math.sqrt(tr) / bNrm
-    val relErr = err / 2.5 // max|x*| = 1 + 6·0.25
-    cached.foreach(_.unpersist(false))
-    aByCol.unpersist(false)
     val pass = !breakdown && residTrue < 1e-10 && relErr < 1e-8
-    Seq((n, blk, it, residTrue, relErr, pass))
+    Seq((n, blk, iters, residTrue, relErr, pass))
       .toDF("n", "blk", "iters", "resid_rel", "err_rel", "pass")
   }
 
@@ -1475,23 +1097,21 @@ object MatrixQueries {
     * full Krylov subspace with complex-capable rotations and converges
     * in a handful of restarts.
     *
-    * Fully distributed, m15/m17's discipline end-to-end: the skew
-    * operator lives as column-keyed blocks (each block pairs the
-    * seeded (bi,bj)/(bj,bi) generators — deterministic, no transpose
+    * Fully distributed on [[BlockVecs]]: the skew operator lives as
+    * column-keyed blocks ([[BlockVecs.skewByCol]], no transpose
     * shuffle); δ is SELF-TUNED to the spectrum by a distributed power
-    * iteration on −S² (= SᵀS for skew S), never hardcoded to one n;
-    * every A·v is [[bvMatvec]] + a narrow δ-axpy join; the Arnoldi
-    * basis is m17's slab (one fused BasisᵀW reduction per CGS2 pass,
-    * re-orthogonalized twice); H̄ is (m+1)×m on the DRIVER, rotated
+    * iteration on −S² ([[BlockVecs.skewSigma2]]), never hardcoded to
+    * one n; every A·v is a matvec + a narrow δ-axpy join; the Arnoldi
+    * basis is the checkpointed slab with the fused two-pass CGS2
+    * ([[BlockVecs.cgs2]]); H̄ is (m+1)×m on the DRIVER, rotated
     * incrementally by Givens (m14's small-driver-solve discipline), so
     * driver traffic per iteration is one m-vector of coefficients +
     * two scalars regardless of n. Restarts blend x += V·y in ONE pass
     * over the basis, then re-derive the TRUE residual with a fresh
     * matvec — restarted GMRES's stagnation-proofing. Lineage:
-    * basis/v/x localCheckpoint-truncated every iteration (m17's task-
-    * serializer lesson), retired iterates dropped at each barrier.
-    * Gate: true residual < 1e-10 AND planted-x* recovery < 1e-8 AND
-    * no stagnation exit. */
+    * basis/x checkpointed every iteration/restart, retired iterates
+    * dropped at each barrier. Gate: true residual < 1e-10 AND
+    * planted-x* recovery < 1e-8 AND no stagnation exit. */
   def m19Gmres(s: SparkSession, dir: String): DataFrame =
     m19At(s, 512, 128, 40, polyDeg = 12)
 
@@ -1521,301 +1141,195 @@ object MatrixQueries {
     import s.implicits._
     val sc = s.sparkContext
     val q = n / blk
-    val part = new org.apache.spark.HashPartitioner(q)
-    val ids = for (bi <- 0 until q; bj <- 0 until q) yield (bi, bj)
-    // S = (M − Mᵀ)/2 without a transpose shuffle: the generator is
-    // deterministic per (seed, bi, bj), so each task derives BOTH the
-    // (bi,bj) and (bj,bi) blocks locally
-    val sByCol = sc.parallelize(ids, math.min(ids.size, 64)).map { case (bi, bj) =>
-      val a = MatrixGen.localBlock(blk, Seed, bi, bj, 0.0)
-      val b = MatrixGen.localBlock(blk, Seed, bj, bi, 0.0)
-      val m0 = Array.tabulate(blk, blk)((i, j) => (a(i)(j) - b(j)(i)) / 2)
-      (bj, (bi, m0))
-    }.partitionBy(part).cache()
-    type Basis = org.apache.spark.rdd.RDD[(Int, Array[Array[Double]])]
-    val cached = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.spark.rdd.RDD[_]]
-    def keep[T <: org.apache.spark.rdd.RDD[_]](v: T): T = { v.cache(); cached += v; v }
-    def dot(u: BlockVec, v: BlockVec): Double =
-      u.join(v, part).map { case (_, (a, b)) =>
-        var acc = 0.0; var i = 0
-        while (i < a.length) { acc += a(i) * b(i); i += 1 }
-        acc
-      }.sum()
-    def bvec(f: Int => Double): BlockVec =
-      sc.parallelize(0 until q, q)
-        .map(b => (b, Array.tabulate(blk)(i => f(b * blk + i))))
-        .partitionBy(part)
-    def scale(v: BlockVec, a: Double): BlockVec = v.mapValues(_.map(_ * a))
-
-    // σ(S) via distributed power iteration on −S² (SPD for skew S):
-    // 12 iterations pin the dominant eigenvalue σ² well inside the
-    // tolerance the c = σ/δ = 7 construction needs (BiCGSTAB fails and
-    // GMRES converges across c ∈ [6, 10] — measured while designing
-    // the system, so σ̂ drift is harmless)
-    // the 12 power steps are a LAZY chain (each z cached so the diamond
-    // into the final Rayleigh quotient memoizes) forced by ONE fused
-    // ⟨z₁₁,z₁₂⟩/⟨z₁₁,z₁₁⟩ job — the per-step normalize+dot shape paid
-    // ~36 job launches of pure scheduling at this problem size. No
-    // normalization needed: entries grow ~σ² per step, ~1e23 after 12
-    // steps at the gate spectrum — five orders inside double range —
-    // and the Rayleigh quotient is scale-invariant.
-    var pv = keep(scale(bvec(i => 1.0 + math.cos(i * 0.3)), 1.0))
-    var pvPrev = pv
-    for (_ <- 0 until 12) {
-      pvPrev = pv
-      pv = keep(bvMatvec(sByCol, bvMatvec(sByCol, pv, part), part)
-        .mapValues(_.map(-_)))
-    }
-    val (rqNum, rqDen) = pv.join(pvPrev, part).map { case (_, (za, pa)) =>
-      var nz = 0.0; var pp = 0.0; var i = 0
-      while (i < za.length) {
-        nz += pa(i) * za(i); pp += pa(i) * pa(i); i += 1
-      }
-      (nz, pp)
-    }.reduce((a, b) => (a._1 + b._1, a._2 + b._2))
-    val sigma2 = rqNum / rqDen
-    val delta = math.sqrt(math.max(sigma2, 0.0)) / 7.0
-    // A·v = S·v + δ·v — one bvMatvec plus a narrow co-partitioned axpy
-    def amat(v: BlockVec): BlockVec =
-      bvMatvec(sByCol, v, part).join(v, part).mapValues { case (sv, vv) =>
-        val w = sv.clone(); var i = 0
-        while (i < w.length) { w(i) += delta * vv(i); i += 1 }
-        w
-      }
-    // Ā·v = δ·v − S·v and B·v = (A·Ā)·v = δ²·v − S·(S·v) — the SPD
-    // collapse of the vertical-segment spectrum (scaladoc above)
-    def aadj(v: BlockVec): BlockVec =
-      bvMatvec(sByCol, v, part).join(v, part).mapValues { case (sv, vv) =>
-        Array.tabulate(vv.length)(i => delta * vv(i) - sv(i))
-      }
-    // C = S² blocks, built ONLY when the preconditioner runs: the
-    // generator's determinism removes the distributed-GEMM shuffle —
-    // each (bi,bj) task derives all q contributing S blocks locally
-    // (the same trick that builds sByCol transpose-free) and pays q
-    // local blk³ GEMMs. One extra matrix of block storage, bought so
-    // B·v costs ONE shuffle instead of the S·(S·v) chain's two — the
-    // polynomial's cost at bench scale is sequential-stage count.
-    lazy val cByCol = {
-      val qv = q
-      sc.parallelize(ids, math.min(ids.size, 64)).map { case (bi, bj) =>
-        val c0 = Array.ofDim[Double](blk, blk)
-        var bk = 0
-        while (bk < qv) {
-          val l = MatrixGen.localBlock(blk, Seed, bi, bk, 0.0)
-          val lt = MatrixGen.localBlock(blk, Seed, bk, bi, 0.0)
-          val r0 = MatrixGen.localBlock(blk, Seed, bk, bj, 0.0)
-          val rt = MatrixGen.localBlock(blk, Seed, bj, bk, 0.0)
-          var i = 0
-          while (i < blk) {
-            var k = 0
-            while (k < blk) {
-              val sik = (l(i)(k) - lt(k)(i)) / 2
-              if (sik != 0.0) {
-                val ci = c0(i); var j2 = 0
-                while (j2 < blk) {
-                  ci(j2) += sik * ((r0(k)(j2) - rt(j2)(k)) / 2); j2 += 1
+    val (restarts, iters, delta, (residTrue, relErr), stagnant) = BlockVecs.scoped(sc, q, blk) { bv =>
+      val sByCol = bv.skewByCol(Seed)
+      // 12 power steps pin the dominant eigenvalue σ² well inside the
+      // tolerance the c = σ/δ = 7 construction needs (BiCGSTAB fails and
+      // GMRES converges across c ∈ [6, 10] — measured while designing
+      // the system, so σ̂ drift is harmless)
+      val sigma2 = bv.skewSigma2(sByCol)
+      val delta = math.sqrt(math.max(sigma2, 0.0)) / 7.0
+      val amat = bv.shifted(sByCol, delta) _
+      // Ā·v = δ·v − S·v and B·v = (A·Ā)·v = δ²·v − S·(S·v) — the SPD
+      // collapse of the vertical-segment spectrum (scaladoc above)
+      def aadj(v: BlockVec): BlockVec = bv.axpy(-1.0, bv.matvec(sByCol, v), bv.scale(v, delta))
+      // C = S² blocks, built ONLY when the preconditioner runs: the
+      // generator's determinism removes the distributed-GEMM shuffle —
+      // each (bi,bj) task derives all q contributing S blocks locally
+      // (the same trick that builds sByCol transpose-free) and pays q
+      // local blk³ GEMMs. One extra matrix of block storage, bought so
+      // B·v costs ONE shuffle instead of the S·(S·v) chain's two — the
+      // polynomial's cost at bench scale is sequential-stage count.
+      lazy val cByCol = {
+        val ids = for (bi <- 0 until q; bj <- 0 until q) yield (bi, bj)
+        bv.byCol(sc.parallelize(ids, math.min(ids.size, 64)).map { case (bi, bj) =>
+          val c0 = Array.ofDim[Double](blk, blk)
+          var bk = 0
+          while (bk < q) {
+            val l = MatrixGen.localBlock(blk, Seed, bi, bk, 0.0)
+            val lt = MatrixGen.localBlock(blk, Seed, bk, bi, 0.0)
+            val r0 = MatrixGen.localBlock(blk, Seed, bk, bj, 0.0)
+            val rt = MatrixGen.localBlock(blk, Seed, bj, bk, 0.0)
+            var i = 0
+            while (i < blk) {
+              var k = 0
+              while (k < blk) {
+                val sik = (l(i)(k) - lt(k)(i)) / 2
+                if (sik != 0.0) {
+                  val ci = c0(i); var j2 = 0
+                  while (j2 < blk) {
+                    ci(j2) += sik * ((r0(k)(j2) - rt(j2)(k)) / 2); j2 += 1
+                  }
                 }
+                k += 1
               }
-              k += 1
+              i += 1
             }
-            i += 1
+            bk += 1
           }
-          bk += 1
-        }
-        (bj, (bi, c0))
-      }.partitionBy(part).cache()
-    }
-    def bmat(v: BlockVec): BlockVec =
-      bvMatvec(cByCol, v, part).join(v, part)
-        .mapValues { case (ssv, vv) =>
-          Array.tabulate(vv.length)(i => delta * delta * vv(i) - ssv(i))
-        }
-    // q_d(B)·v by polyDeg Chebyshev-iteration steps on [lo, hi] ⊇
-    // spec(B) — all LAZY RDD transformations: the caller's reduction
-    // evaluates the whole polynomial chain inside its own job. Every
-    // step's r/d/x IS cache()d (still lazy, zero extra jobs): each has
-    // TWO lazy consumers (r feeds r' and d'; d feeds d', x and B·d), and
-    // without block-level memoization that diamond makes the pure-DAG
-    // evaluation tree FIBONACCI-shaped in the degree — measured 0.6 →
-    // 9.7 → 75 s/iteration at d = 8/10/12 before the fix, flat after.
-    // The cached steps are registered with `keep` and retired at the
-    // iteration barrier like every other per-iteration intermediate.
-    def qcheb(v: BlockVec): BlockVec = {
-      val lo = 0.98 * delta * delta
-      val hi = delta * delta + 1.02 * sigma2
-      val theta = (hi + lo) / 2; val half = (hi - lo) / 2
-      val sigma1 = theta / half
-      val d2 = delta * delta
-      var rho = 1.0 / sigma1
-      // the whole (x, r, d) recurrence state rides ONE tuple-valued RDD
-      // per step: a three-RDD formulation costs ~30 RDD objects (and
-      // their closure-cleaning) per step on the DRIVER — measured at
-      // half the per-iteration wall time before this fusion
-      var st = keep(v.mapValues { a =>
-        val d0 = a.map(_ / theta)
-        (d0.clone(), a.clone(), d0)
-      })
-      var k = 0
-      while (k < polyDeg - 1) {
-        val rhoN = 1.0 / (2 * sigma1 - rho)
-        val cd = rhoN * rho; val cr = 2 * rhoN / half
-        val ssd = bvMatvec(cByCol, st.mapValues(_._3), part) // S²·d
-        st = keep(st.join(ssd, part).mapValues { case ((xa, ra, da), sv) =>
-          val m2 = da.length
-          val xn = new Array[Double](m2)
-          val rn = new Array[Double](m2)
-          val dn = new Array[Double](m2)
-          var i = 0
-          while (i < m2) {
-            val bd = d2 * da(i) - sv(i) // (B·d)(i)
-            rn(i) = ra(i) - bd
-            dn(i) = cd * da(i) + cr * rn(i)
-            xn(i) = xa(i) + dn(i)
-            i += 1
-          }
-          (xn, rn, dn)
+          ((bi, bj), c0)
         })
-        rho = rhoN
-        k += 1
       }
-      st.mapValues(_._1)
-    }
-    // Arnoldi operator and solution map of the right-preconditioned
-    // system: A·M⁻¹ = B·q(B); x = M⁻¹u = Ā·q(B)·u (S-polynomials
-    // commute). polyDeg = 0 degrades to plain GMRES.
-    def aop(v: BlockVec): BlockVec =
-      if (polyDeg == 0) amat(v) else bmat(qcheb(v))
-    def minv(v: BlockVec): BlockVec =
-      if (polyDeg == 0) v else aadj(qcheb(v))
-
-    val xStar = keep(bvec(i => 1.0 + (i % 7) * 0.25))
-    val b0 = keep(amat(xStar))
-    val bNrm = math.sqrt(dot(b0, b0))
-    val tol = 1e-12
-
-    var x: BlockVec = keep(bvec(_ => 0.0))
-    var restarts = 0
-    var iters = 0
-    var resid = 1.0
-    var stagnant = false
-    val maxRestarts = 16
-    var done = false
-    while (!done && !stagnant && restarts < maxRestarts) {
-      // r = b − A·x; the TRUE residual starts every cycle (restarted
-      // GMRES's defense against recurrence drift)
-      val r = keep(amat(x).join(b0, part).mapValues { case (ax, bb) =>
-        Array.tabulate(ax.length)(i => bb(i) - ax(i))
-      })
-      val beta0 = math.sqrt(dot(r, r))
-      val prevResid = resid
-      resid = beta0 / bNrm
-      if (resid < tol * 10) done = true // already at the gate target
-      else if (restarts > 0 && resid > prevResid * 0.99) {
-        stagnant = true // a full cycle bought < 1% — exit LOUD
-      } else {
-        var v: BlockVec = keep(scale(r, 1.0 / beta0))
-        var basis: Basis = keep(v.mapValues(a => Array(a)))
-        val h = Array.ofDim[Double](mRestart + 1, mRestart)
-        val g = new Array[Double](mRestart + 1); g(0) = beta0
-        val cs = new Array[Double](mRestart)
-        val sn = new Array[Double](mRestart)
-        var j = 0
-        var inner = true
-        while (inner && j < mRestart) {
-          var w: BlockVec = keep(aop(v))
-          // fused two-pass CGS2 — the shared Arnoldi core (see cgs2Step)
-          val (hCol, hj1, w2) = cgs2Step(basis, w, part, j,
-            (x: BlockVec) => keep(x))
-          w = w2
-          var i = 0
-          while (i <= j) { h(i)(j) = hCol(i); i += 1 }
-          h(j + 1)(j) = hj1
-          // incremental Givens: rotate the new column, update g
-          i = 0
-          while (i < j) {
-            val t0 = cs(i) * h(i)(j) + sn(i) * h(i + 1)(j)
-            h(i + 1)(j) = -sn(i) * h(i)(j) + cs(i) * h(i + 1)(j)
-            h(i)(j) = t0
-            i += 1
-          }
-          val dgn = math.hypot(h(j)(j), h(j + 1)(j))
-          cs(j) = h(j)(j) / dgn; sn(j) = h(j + 1)(j) / dgn
-          h(j)(j) = dgn; h(j + 1)(j) = 0.0
-          g(j + 1) = -sn(j) * g(j); g(j) = cs(j) * g(j)
-          iters += 1
-          j += 1
-          if (math.abs(g(j)) / bNrm < tol) inner = false // converged
-          else if (hj1 < 1e-300) inner = false // happy breakdown
-          else if (j < mRestart) {
-            // append the NORMALIZED w straight into the slab, then
-            // derive v as the slab's last column: ONE checkpointed +
-            // materialized RDD per iteration (m17's shape pays three
-            // jobs here), and v's lineage is depth-1 on the fresh
-            // checkpoint, so the task-serializer overflow m17 guards
-            // against can't chain. The checkpoint materialization is
-            // the barrier retireCached needs — with basis's blocks
-            // live, this window's w intermediates are dead.
-            val hInv = 1.0 / hj1
-            basis = keep(basis.join(w, part).mapValues { case (vb, wb) =>
-              vb :+ wb.map(_ * hInv)
-            })
-            basis.localCheckpoint()
-            basis.foreachPartition(_ => ())
-            v = keep(basis.mapValues(_.last))
-            retireCached(cached, Seq(basis, v, x, b0, xStar, sByCol, pv))
-          }
-        }
-        // back-substitute y from the rotated triangular H, blend
-        // x += V_j·y in ONE pass over the basis slab
-        val y = new Array[Double](j)
-        var bi = j - 1
-        while (bi >= 0) {
-          var acc = g(bi); var k = bi + 1
-          while (k < j) { acc -= h(bi)(k) * y(k); k += 1 }
-          y(bi) = acc / h(bi)(bi)
-          bi -= 1
-        }
-        val jf = j
-        // blend u = V_j·y in ONE pass over the slab, then map through
-        // M⁻¹ (identity when unpreconditioned): x += M⁻¹·u
-        val blend: BlockVec = basis.mapValues { vb =>
-          val out = new Array[Double](vb(0).length)
-          var k = 0
-          while (k < jf && k < vb.length) {
-            val bk = vb(k); val yk = y(k); var t = 0
-            while (t < out.length) { out(t) += yk * bk(t); t += 1 }
-            k += 1
-          }
-          out
-        }
-        x = keep(x.join(minv(blend), part).mapValues { case (xa, ua) =>
-          val out = xa.clone(); var t = 0
-          while (t < out.length) { out(t) += ua(t); t += 1 }
-          out
+      def bmat(v: BlockVec): BlockVec =
+        bv.axpy(-1.0, bv.matvec(cByCol, v), bv.scale(v, delta * delta))
+      // q_d(B)·v by polyDeg Chebyshev-iteration steps on [lo, hi] ⊇
+      // spec(B) — all LAZY RDD transformations: the caller's reduction
+      // evaluates the whole polynomial chain inside its own job. Every
+      // step's r/d/x IS kept (still lazy, zero extra jobs): each has
+      // TWO lazy consumers (r feeds r' and d'; d feeds d', x and B·d), and
+      // without block-level memoization that diamond makes the pure-DAG
+      // evaluation tree FIBONACCI-shaped in the degree — measured 0.6 →
+      // 9.7 → 75 s/iteration at d = 8/10/12 before the fix, flat after.
+      // The kept steps are retired at the iteration barrier like every
+      // other per-iteration intermediate.
+      def qcheb(v: BlockVec): BlockVec = {
+        val lo = 0.98 * delta * delta
+        val hi = delta * delta + 1.02 * sigma2
+        val theta = (hi + lo) / 2; val half = (hi - lo) / 2
+        val sigma1 = theta / half
+        val d2 = delta * delta
+        var rho = 1.0 / sigma1
+        // the whole (x, r, d) recurrence state rides ONE tuple-valued RDD
+        // per step: a three-RDD formulation costs ~30 RDD objects (and
+        // their closure-cleaning) per step on the DRIVER — measured at
+        // half the per-iteration wall time before this fusion
+        var st = bv.keep(v.mapValues { a =>
+          val d0 = a.map(_ / theta)
+          (d0.clone(), a.clone(), d0)
         })
-        x.localCheckpoint(); x.foreachPartition(_ => ())
-        restarts += 1
-      }
-    }
-    // TRUE residual + planted-x* recovery: one extra matvec and ONE
-    // fused reduction job for both gates
-    val ax = amat(x)
-    val (tr, err) = ax.join(b0, part).join(x.join(xStar, part), part)
-      .map { case (_, ((a, b), (xa, xs))) =>
-        var acc = 0.0; var m = 0.0; var i = 0
-        while (i < a.length) {
-          val d0 = a(i) - b(i); acc += d0 * d0
-          m = math.max(m, math.abs(xa(i) - xs(i)))
-          i += 1
+        var k = 0
+        while (k < polyDeg - 1) {
+          val rhoN = 1.0 / (2 * sigma1 - rho)
+          val cd = rhoN * rho; val cr = 2 * rhoN / half
+          val ssd = bv.matvec(cByCol, st.mapValues(_._3)) // S²·d
+          st = bv.keep(st.join(ssd, bv.part).mapValues { case ((xa, ra, da), sv) =>
+            val m2 = da.length
+            val xn = new Array[Double](m2)
+            val rn = new Array[Double](m2)
+            val dn = new Array[Double](m2)
+            var i = 0
+            while (i < m2) {
+              val bd = d2 * da(i) - sv(i) // (B·d)(i)
+              rn(i) = ra(i) - bd
+              dn(i) = cd * da(i) + cr * rn(i)
+              xn(i) = xa(i) + dn(i)
+              i += 1
+            }
+            (xn, rn, dn)
+          })
+          rho = rhoN
+          k += 1
         }
-        (acc, m)
-      }.reduce((u, v2) => (u._1 + v2._1, math.max(u._2, v2._2)))
-    val residTrue = math.sqrt(tr) / bNrm
-    val relErr = err / 2.5
-    cached.foreach(_.unpersist(false))
-    sByCol.unpersist(false)
-    if (polyDeg > 0) cByCol.unpersist(false)
+        st.mapValues(_._1)
+      }
+      // Arnoldi operator and solution map of the right-preconditioned
+      // system: A·M⁻¹ = B·q(B); x = M⁻¹u = Ā·q(B)·u (S-polynomials
+      // commute). polyDeg = 0 degrades to plain GMRES.
+      def aop(v: BlockVec): BlockVec =
+        if (polyDeg == 0) amat(v) else bmat(qcheb(v))
+      def minv(v: BlockVec): BlockVec =
+        if (polyDeg == 0) v else aadj(qcheb(v))
+
+      val sys = bv.plant(amat)
+      val tol = 1e-12
+      var x = bv.keep(bv.vec(_ => 0.0))
+      var restarts = 0
+      var iters = 0
+      var resid = 1.0
+      var stagnant = false
+      val maxRestarts = 16
+      var done = false
+      while (!done && !stagnant && restarts < maxRestarts) {
+        // r = b − A·x; the TRUE residual starts every cycle (restarted
+        // GMRES's defense against recurrence drift)
+        val r = bv.keep(bv.axpy(-1.0, amat(x), sys.b))
+        val beta0 = math.sqrt(bv.dot(r, r))
+        val prevResid = resid
+        resid = beta0 / sys.bNrm
+        if (resid < tol * 10) done = true // already at the gate target
+        else if (restarts > 0 && resid > prevResid * 0.99) {
+          stagnant = true // a full cycle bought < 1% — exit LOUD
+        } else {
+          var v = bv.keep(bv.scale(r, 1.0 / beta0))
+          var basis = bv.slab(v)
+          val h = Array.ofDim[Double](mRestart + 1, mRestart)
+          val g = new Array[Double](mRestart + 1); g(0) = beta0
+          val cs = new Array[Double](mRestart)
+          val sn = new Array[Double](mRestart)
+          var j = 0
+          var inner = true
+          while (inner && j < mRestart) {
+            val (hCol, hj1, w) = bv.cgs2(basis, bv.keep(aop(v)))
+            var i = 0
+            while (i <= j) { h(i)(j) = hCol(i); i += 1 }
+            h(j + 1)(j) = hj1
+            // incremental Givens: rotate the new column, update g
+            i = 0
+            while (i < j) {
+              val t0 = cs(i) * h(i)(j) + sn(i) * h(i + 1)(j)
+              h(i + 1)(j) = -sn(i) * h(i)(j) + cs(i) * h(i + 1)(j)
+              h(i)(j) = t0
+              i += 1
+            }
+            val dgn = math.hypot(h(j)(j), h(j + 1)(j))
+            cs(j) = h(j)(j) / dgn; sn(j) = h(j + 1)(j) / dgn
+            h(j)(j) = dgn; h(j + 1)(j) = 0.0
+            g(j + 1) = -sn(j) * g(j); g(j) = cs(j) * g(j)
+            iters += 1
+            j += 1
+            if (math.abs(g(j)) / sys.bNrm < tol) inner = false // converged
+            else if (hj1 < 1e-300) inner = false // happy breakdown
+            else if (j < mRestart) {
+              // append the NORMALIZED w straight into the slab, then
+              // derive v as the slab's last column: ONE checkpointed +
+              // materialized RDD per iteration, and v's lineage is
+              // depth-1 on the fresh checkpoint, so the task-serializer
+              // overflow can't chain. The checkpoint is the barrier
+              // retire needs — with basis's blocks live, this window's
+              // w intermediates are dead.
+              basis = bv.append(basis, bv.scale(w, 1.0 / hj1))
+              v = bv.keep(basis.mapValues(_.last))
+              bv.retire(basis, v, x)
+            }
+          }
+          // back-substitute y from the rotated triangular H
+          val y = new Array[Double](j)
+          var bi = j - 1
+          while (bi >= 0) {
+            var acc = g(bi); var k = bi + 1
+            while (k < j) { acc -= h(bi)(k) * y(k); k += 1 }
+            y(bi) = acc / h(bi)(bi)
+            bi -= 1
+          }
+          // blend u = V_j·y in ONE pass over the slab, then map through
+          // M⁻¹ (identity when unpreconditioned): x += M⁻¹·u
+          x = bv.keep(bv.axpy(1.0, minv(bv.blend(basis, y)), x))
+          bv.checkpoint(x)
+          restarts += 1
+        }
+      }
+      (restarts, iters, delta, bv.check(sys, x), stagnant)
+    }
     val pass = !stagnant && residTrue < 1e-10 && relErr < 1e-8
     Seq((n, blk, mRestart, polyDeg, restarts, iters, delta, residTrue,
       relErr, pass))
@@ -1832,12 +1346,13 @@ object MatrixQueries {
     * symmetric member is structurally blind — the same family-
     * separation argument that motivated m19 beside m18.
     *
-    * Distributed shape is m19's discipline verbatim: the skew operator
-    * as column-keyed paired-generator blocks (no transpose shuffle),
-    * σ̂ self-tuned by the fused lazy power iteration on −S², the
-    * Arnoldi basis as ONE checkpointed slab per step with the fused
-    * two-pass CGS2, so driver traffic per iteration is one j-vector of
-    * Gram coefficients + one scalar, whatever n. The eigensolve runs
+    * Distributed shape is m19's, on the same [[BlockVecs]] pieces: the
+    * skew operator as column-keyed paired-generator blocks (no
+    * transpose shuffle), σ̂ self-tuned by the same fused lazy power
+    * iteration on −S² (so m19 and m20 report the same δ at the same
+    * n), the Arnoldi basis as ONE checkpointed slab per step with the
+    * fused two-pass CGS2, so driver traffic per iteration is one
+    * j-vector of Gram coefficients + one scalar, whatever n. The eigensolve runs
     * on the m×m Hessenberg ON THE DRIVER via LAPACK dgeev
     * (`breeze.linalg.eig` — Spark's own bundled linalg; m14/m17
     * hand-roll Jacobi because their driver matrices are symmetric,
@@ -1867,100 +1382,33 @@ object MatrixQueries {
   private[graft] def m20At(s: SparkSession, n: Int, blk: Int,
                            mKrylov: Int): DataFrame = {
     import s.implicits._
-    val sc = s.sparkContext
-    val q = n / blk
-    val part = new org.apache.spark.HashPartitioner(q)
-    val ids = for (bi <- 0 until q; bj <- 0 until q) yield (bi, bj)
-    val sByCol = sc.parallelize(ids, math.min(ids.size, 64)).map { case (bi, bj) =>
-      val a = MatrixGen.localBlock(blk, Seed, bi, bj, 0.0)
-      val b = MatrixGen.localBlock(blk, Seed, bj, bi, 0.0)
-      val m0 = Array.tabulate(blk, blk)((i, j) => (a(i)(j) - b(j)(i)) / 2)
-      (bj, (bi, m0))
-    }.partitionBy(part).cache()
-    val cached = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.spark.rdd.RDD[_]]
-    def keep[T <: org.apache.spark.rdd.RDD[_]](v: T): T = { v.cache(); cached += v; v }
-    def bvec(f: Int => Double): BlockVec =
-      sc.parallelize(0 until q, q)
-        .map(b => (b, Array.tabulate(blk)(i => f(b * blk + i))))
-        .partitionBy(part)
-    def dot(u: BlockVec, v: BlockVec): Double =
-      u.join(v, part).map { case (_, (a, b)) =>
-        var acc = 0.0; var i = 0
-        while (i < a.length) { acc += a(i) * b(i); i += 1 }
-        acc
-      }.sum()
-    // σ̂ via the fused lazy power iteration on −S² (m19's shape)
-    var pv = keep(bvec(i => 1.0 + math.cos(i * 0.3)))
-    var pvPrev = pv
-    for (it <- 0 until 12) {
-      pvPrev = pv
-      pv = keep(bvMatvec(sByCol, bvMatvec(sByCol, pv, part), part)
-        .mapValues(_.map(-_)))
-      // rescale every 4 steps: unnormalized iterates grow as σ̂^(2·iters)
-      // and would overflow to Inf for spectral radii a few orders above
-      // the swept sizes; the Rayleigh quotient is scale-invariant, so
-      // dividing by the GLOBAL max-abs is free (one reduce job — a
-      // single block's max would turn the guard into an overflow
-      // source whenever that block is near-zero in the iterate)
-      if (it % 4 == 3) {
-        val scale = math.max(
-          pv.map { case (_, a) =>
-            var mx = 0.0; var i = 0
-            while (i < a.length) {
-              val x = math.abs(a(i)); if (x > mx) mx = x; i += 1
-            }
-            mx
-          }.reduce(math.max), 1e-300)
-        val pvS = keep(pv.mapValues(_.map(_ / scale)))
-        pvPrev = keep(pvPrev.mapValues(_.map(_ / scale)))
-        pv = pvS
+    val (h, j, sigma2, delta) = BlockVecs.scoped(s.sparkContext, n / blk, blk) { bv =>
+      val sByCol = bv.skewByCol(Seed)
+      val sigma2 = bv.skewSigma2(sByCol)
+      val delta = math.sqrt(math.max(sigma2, 0.0)) / 7.0
+      // one Arnoldi sweep — m19's slab + fused CGS2, minus Givens/solve
+      val v0 = bv.keep(bv.vec(i => 1.0 + math.sin(i * 0.7)))
+      var v = bv.keep(bv.scale(v0, 1.0 / math.sqrt(bv.dot(v0, v0))))
+      var basis = bv.slab(v)
+      val h = Array.ofDim[Double](mKrylov + 1, mKrylov)
+      var j = 0
+      var breakdown = false
+      while (j < mKrylov && !breakdown) {
+        val (hCol, hj1, w) = bv.cgs2(basis, bv.keep(bv.shifted(sByCol, delta)(v)))
+        var i = 0
+        while (i <= j) { h(i)(j) = hCol(i); i += 1 }
+        h(j + 1)(j) = hj1
+        j += 1
+        if (hj1 < 1e-300) breakdown = true // happy breakdown: H exact
+        else if (j < mKrylov) {
+          basis = bv.append(basis, bv.scale(w, 1.0 / hj1))
+          v = bv.keep(basis.mapValues(_.last))
+          bv.retire(basis, v)
+        }
       }
+      (h, j, sigma2, delta)
     }
-    val (rqNum, rqDen) = pv.join(pvPrev, part).map { case (_, (za, pa)) =>
-      var nz = 0.0; var pp = 0.0; var i = 0
-      while (i < za.length) { nz += pa(i) * za(i); pp += pa(i) * pa(i); i += 1 }
-      (nz, pp)
-    }.reduce((a, b) => (a._1 + b._1, a._2 + b._2))
-    val sigma2 = rqNum / rqDen
     val sigmaHat = math.sqrt(math.max(sigma2, 0.0))
-    val delta = sigmaHat / 7.0
-    def amat(v: BlockVec): BlockVec =
-      bvMatvec(sByCol, v, part).join(v, part).mapValues { case (sv, vv) =>
-        val w = sv.clone(); var i = 0
-        while (i < w.length) { w(i) += delta * vv(i); i += 1 }
-        w
-      }
-    // one Arnoldi sweep — m19's slab + fused CGS2, minus Givens/solve
-    type Basis = org.apache.spark.rdd.RDD[(Int, Array[Array[Double]])]
-    val v0 = keep(bvec(i => 1.0 + math.sin(i * 0.7)))
-    val v0n = math.sqrt(dot(v0, v0))
-    var v: BlockVec = keep(v0.mapValues(_.map(_ / v0n)))
-    var basis: Basis = keep(v.mapValues(a => Array(a)))
-    val h = Array.ofDim[Double](mKrylov + 1, mKrylov)
-    var j = 0
-    var breakdown = false
-    while (j < mKrylov && !breakdown) {
-      val w0: BlockVec = keep(amat(v))
-      // fused two-pass CGS2 — the shared Arnoldi core (see cgs2Step)
-      val (hCol, hj1, w) = cgs2Step(basis, w0, part, j,
-        (x: BlockVec) => keep(x))
-      var i = 0
-      while (i <= j) { h(i)(j) = hCol(i); i += 1 }
-      h(j + 1)(j) = hj1
-      j += 1
-      if (hj1 < 1e-300) breakdown = true // happy breakdown: H exact
-      else if (j < mKrylov) {
-        val hInv = 1.0 / hj1
-        basis = keep(basis.join(w, part).mapValues { case (vb, wb) =>
-          vb :+ wb.map(_ * hInv)
-        })
-        basis.localCheckpoint()
-        basis.foreachPartition(_ => ())
-        v = keep(basis.mapValues(_.last))
-        retireCached(cached, Seq(basis, v, sByCol, pv))
-      }
-    }
     // driver eigensolve of the j×j Hessenberg (dgeev via breeze)
     val hm = new breeze.linalg.DenseMatrix[Double](j, j)
     var r0 = 0
@@ -1996,8 +1444,6 @@ object MatrixQueries {
     }
     val scaleA = math.sqrt(delta * delta + sigma2) // ≈ ‖A‖₂ (normal)
     val top = ritz.sortBy(z => (-math.hypot(z.re, z.im), -z.im)).take(4) // local: j Ritz values on the driver
-    cached.foreach(_.unpersist(false))
-    sByCol.unpersist(false)
     // A is NORMAL: each Ritz value lies within its residual bound of a
     // true eigenvalue δ ± iσ_k ⇒ the gates below are theorems, not fits
     // local: top.head / forall over ≤4 driver-side Ritz records

@@ -848,29 +848,55 @@ class MatrixSpec extends AnyFunSuite {
       "top-8 singular values drifted beyond the projection-residual bound")
   }
 
+  /** Rows of `query` and the Spark jobs it launched (its collect
+    * included); fails when the query leaves an RDD persisted, since
+    * `spark.catalog.clearCache()` in Bench and Verify does not release
+    * RDDs. */
+  private def counted(query: => org.apache.spark.sql.DataFrame): (Int, Array[org.apache.spark.sql.Row]) = {
+    val before = sc.getPersistentRDDs.keySet
+    val (jobs, rows) = org.apache.spark.JobCounter(sc)(query.collect())
+    val left = sc.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"the query left ${left.size} RDDs persisted: ${left.toSeq.sorted.mkString(", ")}")
+    (jobs, rows)
+  }
+
   test("m9: block-vector power iteration matches the driver-local replica and norm bounds") {
-    val row = MatrixQueries.m9SpectralNorm(spark, "").collect()(0)
+    val (jobs, rows) = counted(MatrixQueries.m9SpectralNorm(spark, ""))
+    val row = rows(0)
     assert(row.getAs[Boolean]("pass"),
       s"m9 invariant gate failed after the collect-free rewrite: $row")
+    // 15 rounds: one dot job each, one checkpoint job at round 8
+    assert(jobs == 16, s"m9 launched $jobs jobs")
+  }
+
+  test("a block-vector scope unpersists everything it cached when its body throws") {
+    val before = sc.getPersistentRDDs.keySet
+    val boom = intercept[IllegalStateException] {
+      BlockVecs.scoped(sc, 4, 8) { bv =>
+        val a = bv.spdByCol(seed)
+        val x = bv.keep(bv.vec(i => i.toDouble))
+        val y = bv.keep(bv.matvec(a, x))
+        bv.checkpoint(x, y)
+        assert(bv.dot(y, y) > 0)
+        throw new IllegalStateException("failed inside the scope")
+      }
+    }
+    assert(boom.getMessage == "failed inside the scope")
+    val left = sc.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"${left.size} RDDs stayed persisted after the scope threw")
   }
 
   test("m15 block-vector matvec: distributed SpMV equals a local dense matvec") {
-    // the CG loop's kernel: column-keyed full-symmetric layout, narrow
-    // join against the block iterate, q²·blk-double partial reduce —
-    // verified against a driver-local dense matvec over the SAME matrix
+    // the CG loop's kernel on the layout the queries build: column-keyed
+    // full-symmetric blocks, narrow join against the block iterate,
+    // q²·blk-double partial reduce — verified against a driver-local
+    // dense matvec over the SAME matrix
     val n = 256; val blk = 64; val q = n / blk
-    val part = new org.apache.spark.HashPartitioner(q)
-    val aByCol = BlockCholesky.spdBlocks(sc, n, blk, seed, boost = n.toDouble)
-      .flatMap { case ((bi, bj), dm) =>
-        val d = LocalLA.fromDM(dm)
-        if (bi == bj) Iterator((bj, (bi, d)))
-        else Iterator((bj, (bi, d)), (bi, (bj, LocalLA.transpose(d))))
-      }.partitionBy(part)
     val xLoc = Array.tabulate(n)(i => math.sin(i + 1.0))
-    val x = sc.parallelize(0 until q, q)
-      .map(b => (b, xLoc.slice(b * blk, (b + 1) * blk))).partitionBy(part)
-    val got = MatrixQueries.bvMatvec(aByCol, x, part)
-      .collect().sortBy(_._1).flatMap(_._2)
+    val got = BlockVecs.scoped(sc, q, blk) { bv =>
+      bv.matvec(bv.spdByCol(seed), bv.vec(xLoc(_)))
+        .collect().sortBy(_._1).flatMap(_._2)
+    }
     assert(got.length == n)
     val aLoc = Array.ofDim[Double](n, n)
     for (bi <- 0 until q; bj <- 0 to bi) {
@@ -893,7 +919,8 @@ class MatrixSpec extends AnyFunSuite {
   }
 
   test("m15: CG recovers the planted SPD solution, true residual at tolerance") {
-    val row = MatrixQueries.m15ConjugateGradient(spark, "").collect()(0)
+    val (jobs, rows) = counted(MatrixQueries.m15ConjugateGradient(spark, ""))
+    val row = rows(0)
     info(f"iters=${row.getAs[Int]("iters")} resid=${row.getAs[Double]("resid_rel")}%.2e " +
       f"err=${row.getAs[Double]("err_rel")}%.2e")
     assert(row.getAs[Boolean]("pass"), row.toString)
@@ -901,10 +928,13 @@ class MatrixSpec extends AnyFunSuite {
     // CG must converge far below the n-iteration worst case
     assert(row.getAs[Int]("iters") < 100,
       s"CG took ${row.getAs[Int]("iters")} iterations — conditioning or recurrence broken")
+    // ‖b‖ and r·r, two dots per iteration, one residual-and-error check
+    assert(row.getAs[Int]("iters") == 7 && jobs == 17, s"m15 launched $jobs jobs")
   }
 
   test("m16: Jacobi PCG beats plain CG on the badly scaled system, solution exact") {
-    val row = MatrixQueries.m16PreconditionedCg(spark, "").collect()(0)
+    val (jobs, rows) = counted(MatrixQueries.m16PreconditionedCg(spark, ""))
+    val row = rows(0)
     info(s"cg_iters=${row.getAs[Int]("cg_iters")} pcg_iters=${row.getAs[Int]("pcg_iters")} " +
       f"resid_cg=${row.getAs[Double]("resid_cg")}%.2e resid_pcg=${row.getAs[Double]("resid_pcg")}%.2e")
     assert(row.getAs[Boolean]("pass"), row.toString)
@@ -913,12 +943,15 @@ class MatrixSpec extends AnyFunSuite {
     // (m15 converges in ~7), while plain CG pays for the scaling
     assert(row.getAs[Int]("pcg_iters") * 2 <= row.getAs[Int]("cg_iters"),
       s"preconditioner bought <2x: cg=${row.getAs[Int]("cg_iters")} pcg=${row.getAs[Int]("pcg_iters")}")
+    assert(row.getAs[Int]("cg_iters") == 26 && row.getAs[Int]("pcg_iters") == 7 && jobs == 81,
+      s"m16 launched $jobs jobs")
   }
 
   test("m17: Lanczos top-3 Ritz values match the dense spectrum; gates green") {
     val n = 256; val blk = 64; val q = n / blk
-    val rows = MatrixQueries.m17At(spark, n, blk).collect()
+    val (jobs, rows) = counted(MatrixQueries.m17At(spark, n, blk))
     assert(rows.length == 3)
+    assert(rows(0).getAs[Int]("iters") == 8 && jobs == 64, s"m17 launched $jobs jobs")
     rows.foreach(r => assert(r.getAs[Boolean]("pass") &&
       r.getAs[Boolean]("rank_complete_ok"), r.toString))
     info(rows.map(r => f"theta${r.getAs[Int]("rank")}=${r.getAs[Double]("theta")}%.6f " +
@@ -949,13 +982,16 @@ class MatrixSpec extends AnyFunSuite {
   test("m18: BiCGSTAB recovers the planted solution on a genuinely " +
     "nonsymmetric system; independent local LU solve agrees") {
     val n = 256; val blk = 64; val q = n / blk
-    val row = MatrixQueries.m18At(spark, n, blk).collect()(0)
+    val (jobs, rows) = counted(MatrixQueries.m18At(spark, n, blk))
+    val row = rows(0)
     info(f"iters=${row.getAs[Int]("iters")} resid=${row.getAs[Double]("resid_rel")}%.2e " +
       f"err=${row.getAs[Double]("err_rel")}%.2e")
     assert(row.getAs[Boolean]("pass"), row.toString)
     // row-dominant (boost n) ⇒ well-conditioned: far below the n cap
     assert(row.getAs[Int]("iters") < 60,
       s"BiCGSTAB took ${row.getAs[Int]("iters")} iterations — recurrence broken")
+    // ‖b‖, three fused reductions per iteration, one residual-and-error check
+    assert(row.getAs[Int]("iters") == 4 && jobs == 14, s"m18 launched $jobs jobs")
     // the SAME matrix assembled locally: m18 uses MatrixGen.blocks
     // as-is (NO symmetrization) — first prove the asymmetry has teeth
     val aLoc = Array.ofDim[Double](n, n)
@@ -1004,8 +1040,9 @@ class MatrixSpec extends AnyFunSuite {
   test("m19 Chebyshev right-preconditioner: same gates, same planted " +
     "answer, iteration count cut well below half of plain GMRES") {
     val n = 256; val blk = 64
-    val plain = MatrixQueries.m19At(spark, n, blk, 32).collect()(0)
-    val pre = MatrixQueries.m19At(spark, n, blk, 32, polyDeg = 12).collect()(0)
+    val (plainJobs, plainRows) = counted(MatrixQueries.m19At(spark, n, blk, 32))
+    val (preJobs, preRows) = counted(MatrixQueries.m19At(spark, n, blk, 32, polyDeg = 12))
+    val plain = plainRows(0); val pre = preRows(0)
     info(s"plain iters=${plain.getAs[Int]("iters")} " +
       s"restarts=${plain.getAs[Int]("restarts")}; " +
       s"precond iters=${pre.getAs[Int]("iters")} " +
@@ -1021,12 +1058,18 @@ class MatrixSpec extends AnyFunSuite {
     assert(pre.getAs[Int]("iters") * 2 < plain.getAs[Int]("iters"),
       s"preconditioner bought < 2x: ${pre.getAs[Int]("iters")} vs " +
         s"${plain.getAs[Int]("iters")} plain")
+    assert(plain.getAs[Int]("restarts") == 6 && plain.getAs[Int]("iters") == 188 && plainJobs == 574,
+      s"plain GMRES launched $plainJobs jobs")
+    assert(pre.getAs[Int]("restarts") == 1 && pre.getAs[Int]("iters") == 10 && preJobs == 35,
+      s"preconditioned GMRES launched $preJobs jobs")
   }
 
   test("m19: GMRES(m) converges on the skew-dominant system BiCGSTAB " +
     "demonstrably fails on; independent local LU solve agrees") {
     val n = 256; val blk = 64; val q = n / blk
-    val row = MatrixQueries.m19At(spark, n, blk, 32).collect()(0)
+    val (jobs, rows) = counted(MatrixQueries.m19At(spark, n, blk, 32))
+    val row = rows(0)
+    assert(jobs == 574, s"plain GMRES launched $jobs jobs")
     info(f"restarts=${row.getAs[Int]("restarts")} iters=${row.getAs[Int]("iters")} " +
       f"delta=${row.getAs[Double]("delta")}%.4f resid=${row.getAs[Double]("resid_rel")}%.2e " +
       f"err=${row.getAs[Double]("err_rel")}%.2e")
@@ -1199,8 +1242,11 @@ class MatrixSpec extends AnyFunSuite {
   test("m20: Arnoldi Ritz pairs sit within their own residual bounds of " +
     "a driver-side dgeev on the same operator (normality made concrete)") {
     val n = 256; val blk = 64; val q = n / blk
-    val rows = MatrixQueries.m20At(spark, n, blk, 64).collect()
+    val (jobs, rows) = counted(MatrixQueries.m20At(spark, n, blk, 64))
     assert(rows.forall(_.getAs[Boolean]("pass")), rows.mkString("\n"))
+    // the σ̂ chain's one Rayleigh job, ‖v₀‖, then 2 CGS2 jobs per step
+    // and one append job for each of the first 63
+    assert(rows(0).getAs[Int]("iters") == 64 && jobs == 193, s"m20 launched $jobs jobs")
     val delta = rows(0).getAs[Double]("delta")
     info(f"m20 delta=$delta%.4f sigmaHat=${rows(0).getAs[Double]("sigma_hat")}%.4f " +
       f"top resid=${rows(0).getAs[Double]("resid_rel")}%.2e")

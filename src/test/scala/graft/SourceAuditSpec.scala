@@ -179,4 +179,24 @@ class SourceAuditSpec extends AnyFunSuite {
     }
     assert(hits.isEmpty, s"a driver round trip is back in Inversion.scala:\n${hits.mkString("\n")}")
   }
+
+  test("one block-vector layer: MatrixQueries.scala defines no private dot, axpy, bvec or keep, " +
+    "no Basis type and no RDD cache list of its own — the Krylov queries run on BlockVecs") {
+    val f = new java.io.File(repoRoot, "src/main/scala/graft/matrix/MatrixQueries.scala")
+    val lines = scala.io.Source.fromFile(f, "UTF-8").getLines().map(code).toVector
+    assert(lines.exists(_.contains("object MatrixQueries")), s"$f is not the query source")
+    // matched over the whole text: a cache list may break its line
+    // before `.empty[`
+    val text = lines.mkString("\n")
+    val privateCopy = java.util.regex.Pattern.compile(
+      """def (dot|dot2|dotPair|axpy|bvec|bvMatvec|cgs2Step|retireCached)\(|def keep\b|type Basis\b|""" +
+        """ArrayBuffer\s*\.empty\[[^\]\n]*(RDD|BlockVec)""")
+    val m = privateCopy.matcher(text)
+    val hits = scala.collection.mutable.ArrayBuffer.empty[String]
+    while (m.find()) {
+      val i = text.substring(0, m.start()).count(_ == '\n')
+      hits += s"MatrixQueries.scala:${i + 1}: ${lines(i).trim}"
+    }
+    assert(hits.isEmpty, s"a private block-vector helper is back in MatrixQueries.scala:\n${hits.mkString("\n")}")
+  }
 }
