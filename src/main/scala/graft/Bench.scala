@@ -1,5 +1,4 @@
 package graft
-import java.nio.file.{Files, StandardCopyOption}
 
 /** Query-surface bench: `runMain graft.Bench [name ...]` times every
   * SparkEntry query (or only the named ones) on `$SPARK_GRAFT_SF_DIR`
@@ -42,13 +41,7 @@ object Bench {
       if (shm.isDirectory && shm.canWrite && shm.getUsableSpace >= shmBudget) {
         val d = new java.io.File(shm, s"graft-local-${ProcessHandle.current().pid()}")
         d.mkdirs()
-        Runtime.getRuntime.addShutdownHook(new Thread(() => {
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-            f.delete()
-          }
-          rm(d)
-        }))
+        Runtime.getRuntime.addShutdownHook(new Thread(() => FsUtil.deleteTree(d)))
         d.getAbsolutePath
       } else sys.props("java.io.tmpdir")
     }
@@ -260,19 +253,15 @@ object Bench {
     // reconstruct per-query truth by matching pid files to driver
     // wrappers by the second). Same content, overwritten per run; the
     // deliberately-promoted BENCH_FULL.json is still never clobbered.
-    // Each file is written to a temp sibling and renamed into place, so
-    // a kill mid-write leaves the previous file whole, never a
-    // truncated one; `run_id` names the run that wrote it.
+    // Each file is written by FsUtil.writeAtomic, so a kill mid-write
+    // leaves the previous file whole, never a truncated one; `run_id`
+    // names the run that wrote it.
     val lastAlias = benchOut.resolveSibling("BENCH_FULL.last.json")
     Seq(benchOut, lastAlias).foreach { p =>
-      val tmp = p.resolveSibling(s"${p.getFileName}.$runId.tmp")
       try {
-        Files.writeString(tmp, fullJson + "\n")
-        Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-          StandardCopyOption.REPLACE_EXISTING)
+        FsUtil.writeAtomic(p, fullJson + "\n")
         System.err.println(s"[bench] full evidence -> $p")
       } catch { case e: Exception =>
-        tmp.toFile.delete()
         System.err.println(s"[bench] $p write failed: $e")
       }
     }

@@ -27,8 +27,8 @@ import graft.matrix._
   * dedup sweeps to upgrade per-iteration lineage cuts to reliable
   * (executor-loss-safe) checkpoints — see [[Lineage]].
   *
-  * Query surface: [[SparkEntry.queries]] (77 named, oracle-checked
-  * queries) or the operator objects directly
+  * Query surface: [[SparkEntry.queries]] (185 named queries: 127
+  * oracle-checked, 58 invariant-gated) or the operator objects directly
   * ([[operators.Relational]], [[operators.Dedup]],
   * [[operators.Similarity]], [[operators.TextAnalysis]],
   * [[operators.Multimodal]], [[streaming.Streaming]],

@@ -54,14 +54,15 @@ private[graft] final class BlockVecs private (sc: SparkContext, q: Int, blk: Int
     * ship the whole RDD object graph, and caching does not cut it, only
     * a checkpoint does: an untruncated chain grows the DAG without
     * bound and overflows the task deserializer's stack within ~30
-    * Krylov steps. The union job reads no element, so the inputs'
-    * types do not matter; nor does it compute them — the checkpoint
-    * then computes each input still missing in a job of its own. */
+    * Krylov steps. The job drains every partition's iterator, so it
+    * computes (and caches) each input; the checkpoint then finds
+    * nothing missing and launches no job of its own. The inputs' types
+    * do not matter: no element is inspected. */
   private def materialize(rdds: Seq[RDD[_]]): Unit = {
     val all = rdds.distinct
     all.filterNot(_.isCheckpointed).foreach(_.localCheckpoint())
-    if (all.size == 1) all(0).foreachPartition(_ => ())
-    else sc.union(all.map(_.asInstanceOf[RDD[Any]])).foreachPartition(_ => ())
+    val one = if (all.size == 1) all(0) else sc.union(all.map(_.asInstanceOf[RDD[Any]]))
+    one.foreachPartition(_.foreach(_ => ()))
   }
 
   /** Truncates the lineage of `live`, then retires the rest. */

@@ -182,28 +182,14 @@ object Dedup {
     * information. The cached value is `localCheckpoint`ed (pairs are a
     * few rows per true dup — tiny next to the corpus), so a cache hit
     * costs one scan of materialized partitions. */
-  private val pairCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val PairCacheMax = 8
+  private val pairCache = new graft.FsUtil.SessionMemo[String, DataFrame]
 
   /** Verified near-dup pairs (doc_a, doc_b, inter, uni, jacc), unordered.
-    *
-    * Cache hygiene: entries for STOPPED sessions are dropped on every
-    * access (a stopped session's checkpointed blocks are gone anyway),
-    * and the cache is bounded at [[PairCacheMax]] entries — eviction
-    * just recomputes on the next call, since the checkpointed frame's
-    * blocks are freed once unreferenced. The cache assumes the dataset
-    * directory is IMMUTABLE for the life of the session (true for this
-    * engine's parquet inputs); a mutated directory must be read through
-    * a fresh session or a different path. */
-  private[operators] def nearDupPairs(s: SparkSession, d: String): DataFrame = {
-    pairCache.keys.foreach { case k @ (sess, _) =>
-      if (sess.sparkContext.isStopped) pairCache.remove(k)
-    }
-    if (pairCache.size >= PairCacheMax && !pairCache.contains((s, d)))
-      pairCache.remove(pairCache.head._1) // local: arbitrary (hash-order) eviction on a size-capped driver cache map; an evicted entry recomputes on next use (no on-disk artifact behind this cache)
+    * Cache hygiene is [[graft.FsUtil.SessionMemo]]'s: an evicted entry
+    * recomputes on the next call, since the checkpointed frame's blocks
+    * are freed once unreferenced. */
+  private[operators] def nearDupPairs(s: SparkSession, d: String): DataFrame =
     pairCache.getOrElseUpdate((s, d), graft.Lineage.truncate(computeNearDupPairs(s, d)))
-  }
 
   private def computeNearDupPairs(s: SparkSession, d: String): DataFrame =
     nearDupPairsOf(s, documents(s, d).select(col("doc_id"), col("text")))
@@ -489,19 +475,12 @@ object Dedup {
     * [[pairCache]] (stopped sessions evicted, bounded, immutable-dir
     * assumption); localCheckpoint'd — ≤ AuditCap rows, so a hit costs
     * one scan of tiny materialized partitions. */
-  private val p4DropCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val p4DropCache = new graft.FsUtil.SessionMemo[String, DataFrame]
 
-  private def p4DropSet(s: SparkSession, d: String): DataFrame = {
-    p4DropCache.keys.foreach { case k @ (sess, _) =>
-      if (sess.sparkContext.isStopped) p4DropCache.remove(k)
-    }
-    if (p4DropCache.size >= PairCacheMax && !p4DropCache.contains((s, d)))
-      p4DropCache.remove(p4DropCache.head._1) // local: arbitrary (hash-order) eviction on a size-capped driver cache map; an evicted entry recomputes on next use (no on-disk artifact behind this cache)
+  private def p4DropSet(s: SparkSession, d: String): DataFrame =
     p4DropCache.getOrElseUpdate((s, d),
       graft.Lineage.truncate(
         p4EmbeddingNearDup(s, d).select(col("vec_b")).distinct()))
-  }
 
   val p4Sql: String =
     s"""WITH ex AS (

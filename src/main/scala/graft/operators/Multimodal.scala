@@ -1162,26 +1162,10 @@ object Multimodal {
   private val MmNQueries = 10
 
   /** Content-version fingerprint of the DOCUMENTS table (the audio
-    * corpus's carrier) — Similarity.corpusFingerprint's recipe keyed
-    * to documents.parquet: MD5 over (relative path, length, mtime)
-    * file triples plus a layout-version string; metadata drift causes
-    * a FALSE REBUILD (safe), never a stale read. */
-  private def docsFingerprint(d: String): String = {
-    val root = new java.io.File(d, "documents.parquet")
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).map(_.toSeq.sortBy(_.getName))
-          .getOrElse(Nil).flatMap(walk)
-      else Seq(f)
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.update("graft-audio-v1\n".getBytes)
-    val rootPath = root.getAbsolutePath
-    walk(root).foreach { x =>
-      val rel = x.getAbsolutePath.stripPrefix(rootPath)
-      md.update(s"$rel:${x.length}:${x.lastModified}\n".getBytes)
-    }
-    md.digest().map(b => f"${b & 0xff}%02x").mkString.take(16) // local: String.take on a hex digest
-  }
+    * corpus's carrier): [[graft.FsUtil.fingerprint]] of
+    * documents.parquet under its own layout-version string. */
+  private def docsFingerprint(d: String): String =
+    graft.FsUtil.fingerprint(new java.io.File(d, "documents.parquet"), "graft-audio-v1")
 
   /** 4×16-bit band keys of a 64-bit fingerprint column — shared by the
     * durable-index build, the serve path, and the identity spec. */
@@ -1200,50 +1184,28 @@ object Multimodal {
     * (band, sig, doc_id, afp) frame range-partitioned AND sorted on
     * (band, sig) — a probe's ≤ 4·|queries| band keys prune to row
     * groups by min/max stats, the same point-read shape as the graph
-    * adjacency fetch. Write-once under `_graft_complete`; building is
-    * ingest work ([[graft.operators.Similarity.ensureIndexes]] wires
-    * it into the bench warmup). */
-  private val audioIdxCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), String]
-
-  /** Spec hook: drop the in-memory resolve cache so the next
-    * [[audioIndexPath]]/[[imageIndexPath]] call must take the on-disk
-    * `_graft_complete` marker path — the artifact-reuse property is
-    * untestable through a TrieMap hit. */
-  private[graft] def dropBandedIdxCacheEntry(s: SparkSession, d: String,
-                                             kind: String): Unit =
-    audioIdxCache.remove((s, d, kind))
+    * adjacency fetch. Published by [[graft.FsUtil.publishDir]];
+    * building is ingest work
+    * ([[graft.operators.Similarity.ensureIndexes]] wires it into the
+    * bench warmup). Memoized per (session, (corpus dir, kind)). */
+  private[graft] val bandedIdxMemo = new graft.FsUtil.SessionMemo[(String, String), String]
 
   /** Shared builder for durable banded fingerprint artifacts (audio
-    * `afp`, image `dhash`): fingerprint-keyed dir, write-once under
-    * `_graft_complete`, bands range-partitioned AND sorted on
-    * (band, sig) so a probe's pushed key filters prune to row groups. */
+    * `afp`, image `dhash`): fingerprint-keyed dir, bands
+    * range-partitioned AND sorted on (band, sig) so a probe's pushed
+    * key filters prune to row groups. */
   private def bandedIdxPath(s: SparkSession, d: String, kind: String)
-                           (build: => DataFrame): String = {
-    audioIdxCache.keys.foreach { case k @ (sess, _, _) =>
-      if (sess.sparkContext.isStopped) audioIdxCache.remove(k)
-    }
-    if (audioIdxCache.size >= 8 && !audioIdxCache.contains((s, d, kind)))
-      audioIdxCache.remove(audioIdxCache.head._1) // local: arbitrary (hash-order) eviction on a size-capped driver cache map; rebuild finds the on-disk marker
-    audioIdxCache.getOrElseUpdate((s, d, kind), {
+                           (build: => DataFrame): String =
+    bandedIdxMemo.getOrElseUpdate((s, (d, kind)), {
       val dir = new java.io.File(graft.operators.Similarity.indexRoot,
         s"graft-$kind-${docsFingerprint(d)}")
-      val done = new java.io.File(dir, "_graft_complete")
-      val path = dir.getAbsolutePath
-      if (done.isFile) {
-        graft.operators.Similarity.artifactStatus(path) = "found"
-        path
-      } else {
+      graft.FsUtil.publishDir(dir)(_ => Some(())) { tmp =>
         build
           .repartitionByRange(col("band"), col("sig"))
           .sortWithinPartitions("band", "sig")
-          .write.mode("overwrite").parquet(s"$path/bands")
-        java.nio.file.Files.writeString(done.toPath, "ok\n")
-        graft.operators.Similarity.artifactStatus(path) = "built"
-        path
-      }
+          .write.mode("overwrite").parquet(s"${tmp.getAbsolutePath}/bands")
+      }._1
     })
-  }
 
   private[graft] def audioIndexPath(s: SparkSession, d: String): String =
     bandedIdxPath(s, d, "audio")(

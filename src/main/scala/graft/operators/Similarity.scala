@@ -110,19 +110,12 @@ object Similarity {
     * blocks are GC-cleanable and survive Verify/Bench's per-query
     * CacheManager clear; same hygiene as Dedup's pair cache (stopped
     * sessions evicted, bounded size, immutable-directory assumption). */
-  private val exactCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val exactCache = new graft.FsUtil.SessionMemo[String, DataFrame]
 
-  private[operators] def exactTopK(s: SparkSession, d: String): DataFrame = {
-    exactCache.keys.foreach { case k @ (sess, _) =>
-      if (sess.sparkContext.isStopped) exactCache.remove(k)
-    }
-    if (exactCache.size >= 8 && !exactCache.contains((s, d)))
-      exactCache.remove(exactCache.head._1) // local: arbitrary (hash-order) eviction on a size-capped driver cache map; an evicted entry recomputes on next use (no on-disk artifact behind this cache)
+  private[operators] def exactTopK(s: SparkSession, d: String): DataFrame =
     exactCache.getOrElseUpdate((s, d),
       s1BruteForce(s, d).select(col("query_id"), col("neighbor_id"))
         .localCheckpoint(true))
-  }
 
   /** Plan-inspection hook for the plan-shape specs and [[graft.Explain]]:
     * gated queries checkpoint their approximate answer (so the probe
@@ -134,16 +127,11 @@ object Similarity {
     * specs clear their entry after asserting. s12/s13/s14 register
     * their masked/delta probe frames here too (they gate outside
     * [[withRecallGate]]). */
-  private[graft] val lastGatedApprox =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private[graft] val lastGatedApprox = new graft.FsUtil.SessionMemo[String, DataFrame]
 
   private[graft] def registerGatedPlan(s: SparkSession, tag: String,
-                                       df: DataFrame): Unit = {
-    lastGatedApprox.keys.foreach { case k @ (sess, _) =>
-      if (sess.sparkContext.isStopped) lastGatedApprox.remove(k)
-    }
+                                       df: DataFrame): Unit =
     lastGatedApprox((s, tag)) = df
-  }
 
   /** Driver-side (query_id, neighbor_id) set of a BOUNDED gate frame.
     * Every recall/identity gate compares ≤ K·NQueries-row frames, so
@@ -313,8 +301,7 @@ object Similarity {
     * that entry; no CacheManager entry is created here (the round-4
     * version's internal `prepared(s,d).cache()` leaked storage for
     * callers whose own plan differed — s6, p7). */
-  private val anchorCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Array[(Int, Array[Double])]]
+  private val anchorCache = new graft.FsUtil.SessionMemo[String, Array[(Int, Array[Double])]]
 
   private[graft] def ivfCells(n: Long): Int =
     math.max(16, math.ceil(math.sqrt(n.toDouble)).toInt)
@@ -351,17 +338,11 @@ object Similarity {
         CellRouter.of(anchors, CoarseProbe), k)
 
   private[graft] def trainedAnchors(s: SparkSession, d: String,
-                                    e: DataFrame): Array[(Int, Array[Double])] = {
-    anchorCache.keys.foreach { case k @ (sess, _) =>
-      if (sess.sparkContext.isStopped) anchorCache.remove(k)
-    }
-    if (anchorCache.size >= 8 && !anchorCache.contains((s, d)))
-      anchorCache.remove(anchorCache.head._1) // local: arbitrary (hash-order) eviction on a size-capped driver cache map; an evicted entry recomputes on next use (no on-disk artifact behind this cache)
+                                    e: DataFrame): Array[(Int, Array[Double])] =
     anchorCache.getOrElseUpdate((s, d), {
       val base = e.select(col("vec_id"), col("v"), col("nrm"))
       trainAnchors(base, ivfCells(base.count()), iters = 2)
     })
-  }
 
   /** IVF with TRAINED coarse anchors (k-means via [[trainAnchors]],
     * shared with P7 through [[trainedAnchors]]): every vector is
@@ -763,34 +744,24 @@ object Similarity {
   }
 
   // ------------------------------------------------------------- S7
-  /** Session-scoped registry of PERSISTED IVF index handles — (path,
-    * anchors, trained nCells) — keyed by (session, corpus dir) only to
-    * skip filesystem probing within a session. Durability itself comes
-    * from the on-disk layout being keyed by a CORPUS FINGERPRINT
+  /** Session memo of the PERSISTED IVF index handle — (path, anchors,
+    * trained nCells) — keyed by (session, corpus dir) only to skip
+    * filesystem probing within a session. Durability itself comes from
+    * the on-disk layout being keyed by a CORPUS FINGERPRINT
     * ([[corpusFingerprint]]), not the Spark application id: the index
     * is written ONCE per corpus version and probed forever, across
     * sessions — the ANN analog of the reference's write-factors-once
-    * design (/root/reference/Matrix/LUDecomposition.java:148-150:
-    * factors go to the shared filesystem once, every later task reads
-    * them). A sidecar `_anchors.txt` persists the trained anchors as
-    * raw IEEE-754 bits plus the trained cell sizing, so a fresh
-    * session probes BIT-IDENTICALLY without retraining; validity =
-    * parquet `_SUCCESS` + sidecar both present, anything less rebuilds
-    * under overwrite semantics. On a cluster this directory lives on
-    * the shared filesystem; a production service would key it by an
-    * explicit index version instead of file metadata. */
+    * design (`LUDecomposition.java` lines 148-150: factors go to the
+    * shared filesystem once, every later task reads them). A sidecar
+    * `_anchors.txt` persists the trained anchors as raw IEEE-754 bits
+    * plus the trained cell sizing, so a fresh session probes
+    * BIT-IDENTICALLY without retraining. Built, published and reused
+    * by [[graft.FsUtil.publishDir]], like every artifact here. On a
+    * cluster this directory lives on the shared filesystem; a
+    * production service would key it by an explicit index version
+    * instead of file metadata. */
   private val indexCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String),
-      (String, Array[(Int, Array[Double])], Int)]
-
-  /** What the LAST reuse/build decision for each durable artifact
-    * (keyed by its published path) actually did — "found" or "built",
-    * recorded at the decision point inside ivfIndex/incrIndexPath/
-    * pqBooks. [[ensureIndexes]] reports from this instead of a
-    * filesystem pre-check, which could race a concurrent builder or
-    * mislabel an in-memory-cache hit. */
-  private[graft] val artifactStatus =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    new graft.FsUtil.SessionMemo[String, (String, Array[(Int, Array[Double])], Int)]
 
   /** On-disk layout version, folded into every index fingerprint: a
     * layout change (new stored column, new sidecar format) must never
@@ -831,7 +802,11 @@ object Similarity {
   // of rebuilt — caught because a re-built artifact changed a reach
   // row that artifact identity said could not change). Version
   // strings are write-once even for reverted experiments.
-  private val IndexFormatVersion = "graft-index-v11"
+  // v12: every sidecar is the one count/lines/`#end` codec
+  // (graft.FsUtil.writeSidecar; the PQ/OPQ sidecars had no trailer and
+  // the anchor header no line count) and every dir artifact is
+  // published by rename with the marker written last.
+  private val IndexFormatVersion = "graft-index-v12"
 
   /** Root directory for the durable index artifacts (s7/s8 parquet
     * indexes, s9/s10 PQ codebooks). Production contract: the index
@@ -848,115 +823,61 @@ object Similarity {
     root
   }
 
-  /** Content-version fingerprint of the corpus: MD5 over the embeddings
-    * table's file (relative path, length, mtime) triples — the walk is
-    * RECURSIVE so nested/partitioned parquet layouts fingerprint their
-    * leaf files, not just the top-level directory entries — plus the
-    * [[IndexFormatVersion]] string. O(#files) at any corpus size, never
-    * scans data. Metadata drift causes a FALSE REBUILD (safe), never a
-    * stale read. */
-  private def corpusFingerprint(d: String): String = {
-    val root = new java.io.File(d, "embeddings.parquet")
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).map(_.toSeq.sortBy(_.getName)).getOrElse(Nil).flatMap(walk)
-      else Seq(f)
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.update(s"$IndexFormatVersion\n".getBytes)
-    val rootPath = root.getAbsolutePath
-    walk(root).foreach { x =>
-      val rel = x.getAbsolutePath.stripPrefix(rootPath)
-      md.update(s"$rel:${x.length}:${x.lastModified}\n".getBytes)
-    }
-    md.digest().map(b => f"${b & 0xff}%02x").mkString.take(16) // local: String.take on a hex digest
+  /** Content-version fingerprint of the corpus: [[graft.FsUtil.fingerprint]]
+    * of the embeddings table under [[IndexFormatVersion]]. */
+  private def corpusFingerprint(d: String): String =
+    graft.FsUtil.fingerprint(new java.io.File(d, "embeddings.parquet"), IndexFormatVersion)
+
+  /** The fingerprint-keyed home of the `kind` artifact of corpus `d`. */
+  private def artifactDir(kind: String, d: String): java.io.File =
+    new java.io.File(indexRoot, s"graft-$kind-${corpusFingerprint(d)}")
+
+  /** One vector as its coords' raw IEEE-754 long bits (bit-exact round
+    * trip: loaded anchors and books score identically to trained ones). */
+  private def bitsLine(v: Array[Double]): String =
+    v.map(x => java.lang.Double.doubleToLongBits(x).toString).mkString(" ")
+
+  private def bitsOf(tokens: Seq[String], dim: Int): Array[Double] = {
+    require(tokens.length == dim, "sidecar coord count drifted")
+    tokens.map(t => java.lang.Double.longBitsToDouble(t.toLong)).toArray
   }
 
-  /** Sidecar format: line 0 = "nCells nAnchors dim"; each further line =
-    * cellId then the anchor coords as raw long bits (bit-exact round
-    * trip — loaded anchors assign identically to trained ones); final
-    * line = "#end". The write goes to a temp file and renames into
-    * place, and the read validates the declared counts and the trailer,
-    * so a crash mid-write (or a truncation at a line boundary, which
-    * still parses line-by-line) can never hand a later session a
-    * partial anchor set — anything short or torn falls into the
-    * existing degrade-to-rebuild path. */
+  /** Anchor sidecar payload: "nCells nAnchors dim", then one line per
+    * anchor, cellId then its coords as raw bits. */
   private def writeAnchors(dir: java.io.File,
                            anchors: Array[(Int, Array[Double])], nCells: Int): Unit = {
     val dim = if (anchors.isEmpty) 0 else anchors(0)._2.length
-    val sb = new StringBuilder
-    sb.append(nCells).append(' ').append(anchors.length).append(' ').append(dim).append('\n')
-    anchors.foreach { case (c, v) =>
-      sb.append(c)
-      v.foreach(x => sb.append(' ').append(java.lang.Double.doubleToLongBits(x)))
-      sb.append('\n')
+    graft.FsUtil.writeSidecar(new java.io.File(dir, "_anchors.txt"),
+      s"$nCells ${anchors.length} $dim" +: anchors.map { case (c, v) => s"$c ${bitsLine(v)}" })
+  }
+
+  private[graft] def readAnchors(dir: java.io.File): Option[(Array[(Int, Array[Double])], Int)] =
+    graft.FsUtil.readSidecar(new java.io.File(dir, "_anchors.txt")) { ls =>
+      val Array(nCells, nAnchors, dim) = ls(0).trim.split(" ").map(_.toInt)
+      require(ls.size == nAnchors + 1, "anchor sidecar count drifted")
+      val anchors = ls.tail.map { l =>
+        val p = l.trim.split(" ")
+        (p(0).toInt, bitsOf(p.toSeq.tail, dim))
+      }.toArray
+      (anchors, nCells)
     }
-    sb.append("#end\n")
-    val tmp = java.io.File.createTempFile("_anchors", ".tmp", dir)
-    java.nio.file.Files.writeString(tmp.toPath, sb.toString)
-    java.nio.file.Files.move(tmp.toPath,
-      new java.io.File(dir, "_anchors.txt").toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
 
-  /** Label-histogram sidecar (`_labels.txt`) — one `(label, count)`
-    * line per distinct metadata label, written at graph-artifact build
-    * time so s25's selectivity estimate is a sidecar LOOKUP instead of
-    * a per-serve aggregate job (the anchor-sidecar discipline applied
-    * to the filter metadata; label cardinality is tiny next to the
-    * corpus, so the histogram is metadata-sized at any scale). Tmp +
-    * atomic rename + `#end` trailer: a torn write parses as absent and
-    * falls back to the in-query aggregate. */
-  private def writeLabelHist(dir: java.io.File,
-                             counts: Seq[(Int, Long)]): Unit = {
-    val sb = new StringBuilder
-    sb.append(counts.length).append('\n')
-    counts.sortBy(_._1).foreach { case (l, n) =>
-      sb.append(l).append(' ').append(n).append('\n')
+  /** Label-histogram sidecar (`_labels.txt`) — one `label count` line
+    * per distinct metadata label, written at graph-artifact build time
+    * so s25's selectivity estimate is a sidecar LOOKUP instead of a
+    * per-serve aggregate job (label cardinality is tiny next to the
+    * corpus, so the histogram is metadata-sized at any scale). */
+  private def writeLabelHist(dir: java.io.File, counts: Seq[(Int, Long)]): Unit =
+    graft.FsUtil.writeSidecar(new java.io.File(dir, "_labels.txt"),
+      counts.sortBy(_._1).map { case (l, n) => s"$l $n" })
+
+  private[graft] def readLabelHist(dir: java.io.File): Option[Map[Int, Long]] =
+    graft.FsUtil.readSidecar(new java.io.File(dir, "_labels.txt")) { ls =>
+      ls.map { l =>
+        val Array(label, n) = l.trim.split(" ")
+        label.toInt -> n.toLong
+      }.toMap
     }
-    sb.append("#end\n")
-    val tmp = java.io.File.createTempFile("_labels", ".tmp", dir)
-    java.nio.file.Files.writeString(tmp.toPath, sb.toString)
-    java.nio.file.Files.move(tmp.toPath,
-      new java.io.File(dir, "_labels.txt").toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  private[graft] def readLabelHist(dir: java.io.File): Option[Map[Int, Long]] = {
-    val f = new java.io.File(dir, "_labels.txt")
-    if (!f.isFile) None
-    else try {
-      val lines = java.nio.file.Files.readAllLines(f.toPath)
-      val n = lines.get(0).trim.toInt
-      require(lines.size == n + 2 && lines.get(n + 1).trim == "#end",
-        "label sidecar truncated")
-      Some((1 to n).map { i =>
-        val p = lines.get(i).trim.split(" ")
-        require(p.length == 2, "label sidecar line malformed")
-        p(0).toInt -> p(1).toLong
-      }.toMap)
-    } catch { case _: Exception => None }
-  }
-
-  private[graft] def readAnchors(dir: java.io.File): (Array[(Int, Array[Double])], Int) = {
-    val lines = java.nio.file.Files
-      .readAllLines(new java.io.File(dir, "_anchors.txt").toPath)
-    val header = lines.get(0).trim.split(" ")
-    require(header.length == 3, "anchor sidecar header malformed")
-    val nCells = header(0).toInt
-    val nAnchors = header(1).toInt
-    val dim = header(2).toInt
-    require(lines.size == nAnchors + 2 && lines.get(nAnchors + 1).trim == "#end",
-      "anchor sidecar truncated")
-    val anchors = (1 to nAnchors).map { i =>
-      val parts = lines.get(i).trim.split(" ")
-      require(parts.length == dim + 1, "anchor sidecar coord count drifted")
-      (parts(0).toInt,
-        parts.drop(1).map(t => java.lang.Double.longBitsToDouble(t.toLong)))
-    }.toArray
-    (anchors, nCells)
-  }
 
   /** Builds (once) the persisted IVF index: the corpus with its argmax
     * cell, int8 codes and integer norm, written as parquet PARTITIONED
@@ -1061,36 +982,14 @@ object Similarity {
     * no training — the sidecar carries the anchors); builds it once
     * otherwise. */
   private[graft] def ivfIndex(s: SparkSession, d: String)
-      : (String, Array[(Int, Array[Double])], Int) = {
-    indexCache.keys.foreach { case k @ (sess, _) =>
-      if (sess.sparkContext.isStopped) indexCache.remove(k)
-    }
-    if (indexCache.size >= 8 && !indexCache.contains((s, d)))
-      indexCache.remove(indexCache.head._1) // local: arbitrary (hash-order) eviction on a size-capped driver cache map; rebuild finds the on-disk marker
+      : (String, Array[(Int, Array[Double])], Int) =
     indexCache.getOrElseUpdate((s, d), {
-      val dir = new java.io.File(indexRoot, s"graft-ivf-${corpusFingerprint(d)}")
-      // a malformed/stale-geometry sidecar (e.g. written by an older
-      // build) must degrade to a REBUILD, never a crash
-      def reuse(): Option[(Array[(Int, Array[Double])], Int)] =
-        if (new java.io.File(dir, "_SUCCESS").isFile &&
-            new java.io.File(dir, "_anchors.txt").isFile)
-          try Some(readAnchors(dir)) catch { case _: Exception => None }
-        else None
-      reuse() match {
-        case Some((anchors, nCells)) =>
-          artifactStatus(dir.getAbsolutePath) = "found"
-          (dir.getAbsolutePath, anchors, nCells)
-        case None =>
+      val (path, (anchors, nCells)) =
+        graft.FsUtil.publishDir(artifactDir("ivf", d))(readAnchors) { tmp =>
           val e = prepared(s, d)
           val nCells = ivfCells(e.count())
           val anchors = trainedAnchors(s, d, e)
           val books = pqBooks(s, d, e)
-          // cross-process guard: build into a unique temp dir, then one
-          // atomic directory rename publishes it — a concurrent reader
-          // either sees the complete index or none (Spark's in-place
-          // overwrite would delete files under a live reader's scan)
-          val tmp = new java.io.File(indexRoot,
-            dir.getName + s".build-${ProcessHandle.current().pid()}")
           // label is the FIRST partition key: a metadata-filtered search
           // (s11) prunes whole label directories before any vector is
           // read; the cell level below it keeps s7's probe pruning.
@@ -1112,43 +1011,10 @@ object Similarity {
             .write.mode("overwrite").partitionBy("label", "cell")
             .parquet(tmp.getAbsolutePath)
           writeAnchors(tmp, anchors, nCells)
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-            f.delete()
-          }
-          // Publish via one atomic rename. If it fails, a concurrent
-          // builder may be mid-publish: re-check reuse() with a short
-          // backoff (their rename lands between our check and any
-          // destructive move — the TOCTOU window). A junk destination is
-          // moved ASIDE via an atomic rename (never recursively deleted
-          // in place — a concurrent reader mid-scan of a valid index
-          // must not hit vanishing files), then our build renames in.
-          // Any remaining doubt serves from the temp dir: always valid.
-          def publish(): String =
-            if (tmp.renameTo(dir)) dir.getAbsolutePath
-            else {
-              var attempts = 0
-              var reused = reuse().isDefined
-              while (!reused && attempts < 3) {
-                Thread.sleep(100L << attempts)
-                reused = reuse().isDefined
-                attempts += 1
-              }
-              if (reused) { rm(tmp); dir.getAbsolutePath }
-              else {
-                val aside = new java.io.File(indexRoot,
-                  dir.getName + s".stale-${ProcessHandle.current().pid()}")
-                if (dir.exists() && dir.renameTo(aside)) rm(aside)
-                if (tmp.renameTo(dir)) dir.getAbsolutePath
-                else tmp.getAbsolutePath
-              }
-            }
-          val published = publish()
-          artifactStatus(published) = "built"
-          (published, anchors, nCells)
-      }
+          (anchors, nCells)
+        }
+      (path, anchors, nCells)
     })
-  }
 
   private[graft] def ivfIndexPath(s: SparkSession, d: String): String =
     ivfIndex(s, d)._1
@@ -1269,37 +1135,18 @@ object Similarity {
     * bit-identically to a from-scratch build over the union with the
     * same anchors, and the recall gate holds against exact S1. */
   private val incrIndexCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String),
-      (String, Array[(Int, Array[Double])], Int)]
+    new graft.FsUtil.SessionMemo[String, (String, Array[(Int, Array[Double])], Int)]
 
   /** Like [[ivfIndex]], durable across sessions: the dir is keyed by
-    * the corpus fingerprint, and a `_graft_complete` marker (written
-    * only after the append lands) gates reuse — a crash mid-build
-    * leaves no marker and the next caller rebuilds under overwrite
-    * semantics, so the append can never be applied twice. */
+    * the corpus fingerprint and published by [[graft.FsUtil.publishDir]]
+    * only after the append lands, so a crash mid-build publishes
+    * nothing and the append can never be applied twice. */
   private[graft] def incrIndexPath(s: SparkSession, d: String,
                                    fromScratch: Boolean = false)
-      : (String, Array[(Int, Array[Double])], Int) = {
-    incrIndexCache.keys.foreach { case k @ (sess, _) =>
-      if (sess.sparkContext.isStopped) incrIndexCache.remove(k)
-    }
-    val key = (s, if (fromScratch) d + "#scratch" else d)
-    if (incrIndexCache.size >= 8 && !incrIndexCache.contains(key))
-      incrIndexCache.remove(incrIndexCache.head._1) // local: arbitrary (hash-order) eviction on a size-capped driver cache map; rebuild finds the on-disk marker
-    incrIndexCache.getOrElseUpdate(key, {
-      val dir = new java.io.File(indexRoot,
-        s"graft-ivf-incr-${corpusFingerprint(d)}" +
-          (if (fromScratch) "-scratch" else ""))
-      val done = new java.io.File(dir, "_graft_complete")
-      val reusable =
-        if (done.isFile && new java.io.File(dir, "_anchors.txt").isFile)
-          try Some(readAnchors(dir)) catch { case _: Exception => None }
-        else None
-      if (reusable.isDefined) {
-        artifactStatus(dir.getAbsolutePath) = "found"
-        val (anchors, nCells) = reusable.get
-        (dir.getAbsolutePath, anchors, math.max(4, nCells / 4))
-      } else {
+      : (String, Array[(Int, Array[Double])], Int) =
+    incrIndexCache.getOrElseUpdate((s, if (fromScratch) d + "#scratch" else d), {
+      val dir = new java.io.File(artifactDir("ivf-incr", d).getPath + (if (fromScratch) "-scratch" else ""))
+      val (path, (anchors, nCells)) = graft.FsUtil.publishDir(dir)(readAnchors) { tmp =>
         val raw = embeddings(s, d)
         val base = raw.filter(col("vec_id") % 10 =!= 9)
         val eBase = base.select(col("vec_id"),
@@ -1308,25 +1155,23 @@ object Similarity {
         val nCells = ivfCells(eBase.count())
         val anchors = trainAnchors(
           eBase.select(col("vec_id"), col("v"), col("nrm")), nCells, iters = 2)
-        val path = dir.getAbsolutePath
+        val out = tmp.getAbsolutePath
         // one file per cell dir per generation — see ivfIndex's build
         if (fromScratch)
           assignQuantize(raw, anchors).repartition(col("cell"))
-            .write.mode("overwrite").partitionBy("cell").parquet(path)
+            .write.mode("overwrite").partitionBy("cell").parquet(out)
         else {
           assignQuantize(base, anchors).repartition(col("cell"))
-            .write.mode("overwrite").partitionBy("cell").parquet(path)
+            .write.mode("overwrite").partitionBy("cell").parquet(out)
           assignQuantize(raw.filter(col("vec_id") % 10 === 9), anchors)
             .repartition(col("cell"))
-            .write.mode("append").partitionBy("cell").parquet(path)
+            .write.mode("append").partitionBy("cell").parquet(out)
         }
-        writeAnchors(dir, anchors, nCells)
-        java.nio.file.Files.writeString(done.toPath, "ok\n")
-        artifactStatus(path) = "built"
-        (path, anchors, math.max(4, nCells / 4))
+        writeAnchors(tmp, anchors, nCells)
+        (anchors, nCells)
       }
+      (path, anchors, math.max(4, nCells / 4))
     })
-  }
 
   /** Durable BASE-ONLY generation (the 90% slice with frozen anchors,
     * cell-partitioned, sidecar'd) — the starting point a streaming
@@ -1336,29 +1181,13 @@ object Similarity {
     * s8's batch-appended artifact. Fingerprint-keyed and write-once
     * like every other index artifact; returns (path, anchors, nCells). */
   private val baseIndexCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String),
-      (String, Array[(Int, Array[Double])], Int)]
+    new graft.FsUtil.SessionMemo[String, (String, Array[(Int, Array[Double])], Int)]
 
   private[graft] def baseIndexPath(s: SparkSession, d: String)
-      : (String, Array[(Int, Array[Double])], Int) = {
-    baseIndexCache.keys.foreach { case k @ (sess, _) =>
-      if (sess.sparkContext.isStopped) baseIndexCache.remove(k)
-    }
-    if (baseIndexCache.size >= 8 && !baseIndexCache.contains((s, d)))
-      baseIndexCache.remove(baseIndexCache.head._1) // local: arbitrary (hash-order) eviction on a size-capped driver cache map; rebuild finds the on-disk marker
+      : (String, Array[(Int, Array[Double])], Int) =
     baseIndexCache.getOrElseUpdate((s, d), {
-      val dir = new java.io.File(indexRoot,
-        s"graft-ivf-base-${corpusFingerprint(d)}")
-      val done = new java.io.File(dir, "_graft_complete")
-      val reusable =
-        if (done.isFile && new java.io.File(dir, "_anchors.txt").isFile)
-          try Some(readAnchors(dir)) catch { case _: Exception => None }
-        else None
-      reusable match {
-        case Some((anchors, nCells)) =>
-          artifactStatus(dir.getAbsolutePath) = "found"
-          (dir.getAbsolutePath, anchors, nCells)
-        case None =>
+      val (path, (anchors, nCells)) =
+        graft.FsUtil.publishDir(artifactDir("ivf-base", d))(readAnchors) { tmp =>
           val base = embeddings(s, d).filter(col("vec_id") % 10 =!= 9)
           val eBase = base.select(col("vec_id"),
               graft.functions.VectorFunctions.toDoubleArray(col("embedding")).as("v"))
@@ -1366,17 +1195,14 @@ object Similarity {
           val nCells = ivfCells(eBase.count())
           val anchors = trainAnchors(
             eBase.select(col("vec_id"), col("v"), col("nrm")), nCells, iters = 2)
-          val path = dir.getAbsolutePath
           // one file per cell dir — see ivfIndex's build
           assignQuantize(base, anchors).repartition(col("cell"))
-            .write.mode("overwrite").partitionBy("cell").parquet(path)
-          writeAnchors(dir, anchors, nCells)
-          java.nio.file.Files.writeString(done.toPath, "ok\n")
-          artifactStatus(path) = "built"
-          (path, anchors, nCells)
-      }
+            .write.mode("overwrite").partitionBy("cell").parquet(tmp.getAbsolutePath)
+          writeAnchors(tmp, anchors, nCells)
+          (anchors, nCells)
+        }
+      (path, anchors, nCells)
     })
-  }
 
   /** Ingest-time index builds, callable from a bench/driver warmup:
     * building a persisted index (or training the persisted PQ
@@ -1385,7 +1211,7 @@ object Similarity {
     * artifacts already exist. */
   def ensureIndexes(s: SparkSession, d: String): Seq[(String, String)] = {
     // each artifact reports found-vs-built FROM THE BUILD PATH ITSELF
-    // ([[artifactStatus]], recorded at the reuse/build decision point,
+    // ([[graft.FsUtil.artifactStatus]], recorded at the reuse/build decision point,
     // not from a separate filesystem pre-check that can race a
     // concurrent builder or miss an in-memory cache hit): a bench run
     // whose warmup did NOT find/build an index is self-diagnosing —
@@ -1394,7 +1220,7 @@ object Similarity {
     // repo-written artifact (a stderr-only report is discarded by any
     // tail-window consumer — the round-9 lesson).
     def report(name: String, path: String): (String, String) = {
-      val status = artifactStatus.getOrElse(path, "cached")
+      val status = graft.FsUtil.artifactStatus.getOrElse(path, "cached")
       System.err.println(s"[bench] $name: $status at $path")
       name -> status
     }
@@ -1405,7 +1231,7 @@ object Similarity {
       report("graph_index", graphIndexPath(s, d)._1),
       report("graph_incr", graphIncrPath(s, d)._1),
       report("graph_fold", graphFoldPath(s, d)),
-      { pqBooks(s, d, prepared(s, d)); report("pq_codebooks", pqBooksPath(d).getParent) },
+      { pqBooks(s, d, prepared(s, d)); report("pq_codebooks", pqBooksPath(d).getAbsolutePath) },
       { opqRot(s, d, prepared(s, d))
         report("opq_rotation", opqRotPath(d).getAbsolutePath) },
       { opqBooks(s, d, prepared(s, d))
@@ -1727,85 +1553,44 @@ object Similarity {
     * — ≥ 0.7 vs the exact top-K over the final corpus. Scale: fold
     * cost ∝ affected cells + |delta| (never corpus); both generations
     * are immutable — readers mid-probe on gen0 are undisturbed, the
-    * path swap is the only mutation, exactly [[ivfIndex]]'s
-    * atomic-publish discipline. */
+    * path swap is the only mutation, the discipline
+    * [[graft.FsUtil.publishDir]] gives every durable artifact. */
   /** The s14 identity WITNESS: a from-scratch encode of the FINAL
     * corpus (updates applied, deletes removed) with gen0's frozen
     * anchors + books. Bit-deterministic from the corpus alone, so it
     * is a DURABLE fingerprint-keyed artifact like the indexes it
     * witnesses — built once, reused by every later s14 invocation
     * (the st12 base-rebuild lesson: never re-pay ingest for a frame
-    * that cannot change). Same build/publish discipline as
-    * [[ivfIndex]]: unique temp + atomic rename, torn dir degrades to
-    * rebuild. */
-  private[graft] def s14RebuildPath(s: SparkSession, d: String): String = {
-    val dir = new java.io.File(indexRoot, s"graft-s14-final-${corpusFingerprint(d)}")
-    if (new java.io.File(dir, "_SUCCESS").isFile) {
-      artifactStatus(dir.getAbsolutePath) = "found"
-      return dir.getAbsolutePath
-    }
-    val (_, anchors, _) = ivfIndex(s, d)
-    val books = pqBooks(s, d, prepared(s, d))
-    val finalCorpus = updatedCorpus(s, d)
-      .join(broadcast(tombstones(s, d)), Seq("vec_id"), "left_anti")
-    val tmp = new java.io.File(indexRoot,
-      dir.getName + s".build-${ProcessHandle.current().pid()}")
-    assignQuantize(finalCorpus, anchors, Some(books))
-      .repartition(col("label"), col("cell"))
-      .write.mode("overwrite").partitionBy("label", "cell")
-      .parquet(tmp.getAbsolutePath)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete()
-    }
-    val path =
-      if (tmp.renameTo(dir)) dir.getAbsolutePath
-      else if (new java.io.File(dir, "_SUCCESS").isFile) { rm(tmp); dir.getAbsolutePath }
-      else tmp.getAbsolutePath
-    artifactStatus(path) = "built"
-    path
-  }
+    * that cannot change), published by [[graft.FsUtil.publishDir]]. */
+  private[graft] def s14RebuildPath(s: SparkSession, d: String): String =
+    graft.FsUtil.publishDir(artifactDir("s14-final", d))(_ => Some(())) { tmp =>
+      val (_, anchors, _) = ivfIndex(s, d)
+      val books = pqBooks(s, d, prepared(s, d))
+      val finalCorpus = updatedCorpus(s, d)
+        .join(broadcast(tombstones(s, d)), Seq("vec_id"), "left_anti")
+      assignQuantize(finalCorpus, anchors, Some(books))
+        .repartition(col("label"), col("cell"))
+        .write.mode("overwrite").partitionBy("label", "cell")
+        .parquet(tmp.getAbsolutePath)
+    }._1
 
   /** Durable, fingerprint-keyed parquet materialization of a
     * bit-deterministic witness frame — [[s14RebuildPath]]'s discipline
     * generalized to reference ANSWERS: built once per corpus
-    * content-version, atomically published (unique temp + rename,
-    * torn dir degrades to rebuild), reused by every later invocation.
-    * The frames cached here are exact brute-force top-K references —
-    * tiny (≤ \|queries\|·K rows) but each costing a full corpus scan
-    * to recompute, which steady-state gate runs must not re-pay (the
-    * st12 base-reuse lesson applied to the gate's own baselines). The
-    * reuse/build decision is recorded in [[artifactStatus]] under the
-    * canonical dir path so the bench warmup report stays
-    * self-evidencing. */
+    * content-version by [[graft.FsUtil.publishDir]], reused by every
+    * later invocation. The frames cached here are exact brute-force
+    * top-K references — tiny (≤ \|queries\|·K rows) but each costing a
+    * full corpus scan to recompute, which steady-state gate runs must
+    * not re-pay (the st12 base-reuse lesson applied to the gate's own
+    * baselines). */
   private def durableWitness(s: SparkSession, name: String, d: String)
-                            (build: => DataFrame): DataFrame = {
-    val dir = new java.io.File(indexRoot, s"graft-$name-${corpusFingerprint(d)}")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete()
-    }
-    val path =
-      if (new java.io.File(dir, "_SUCCESS").isFile) {
-        artifactStatus(dir.getAbsolutePath) = "found"
-        dir.getAbsolutePath
-      } else {
-        val tmp = new java.io.File(indexRoot,
-          dir.getName + s".build-${ProcessHandle.current().pid()}")
-        build.coalesce(1).write.mode("overwrite").parquet(tmp.getAbsolutePath)
-        val p =
-          if (tmp.renameTo(dir)) dir.getAbsolutePath
-          else if (new java.io.File(dir, "_SUCCESS").isFile) { rm(tmp); dir.getAbsolutePath }
-          else tmp.getAbsolutePath
-        artifactStatus(dir.getAbsolutePath) = "built"
-        p
-      }
-    s.read.parquet(path)
-  }
+                            (build: => DataFrame): DataFrame =
+    s.read.parquet(graft.FsUtil.publishDir(artifactDir(name, d))(_ => Some(())) { tmp =>
+      build.coalesce(1).write.mode("overwrite").parquet(tmp.getAbsolutePath)
+    }._1)
 
   private[graft] def witnessPath(name: String, d: String): String =
-    new java.io.File(indexRoot, s"graft-$name-${corpusFingerprint(d)}")
-      .getAbsolutePath
+    artifactDir(name, d).getAbsolutePath
 
   /** st18's serving-identity baseline: the one-shot batch probe over
     * the durable index — deterministic from (corpus, index), so it is
@@ -1941,13 +1726,11 @@ object Similarity {
       updatedCorpus(s, d).join(broadcast(upd), Seq("vec_id"))
         .join(broadcast(tomb), Seq("vec_id"), "left_anti"),
       anchors, Some(books))
-    val pid = ProcessHandle.current().pid()
-    val gen1 = new java.io.File(indexRoot, s"graft-s14-gen1-$pid")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete()
-    }
-    rm(gen1)
+    // scratch generation: owner-tagged, so a killed run's gen1 is
+    // reclaimed by the next run instead of accumulating
+    graft.FsUtil.reclaimOrphans(indexRoot, "graft-s14-gen1-")
+    val gen1 = new java.io.File(indexRoot, s"graft-s14-gen1-${graft.FsUtil.ownerTag}")
+    graft.FsUtil.deleteTree(gen1)
     try {
       // FOLD: targeted compaction, then the append — S12 + S8 composed.
       // The delta is the LSM memtable: broadcast-sized by construction,
@@ -2000,7 +1783,7 @@ object Similarity {
         .withColumn("recall_ok", lit(recall >= 0.7))
         .withColumn("fold_ok", lit(foldOk))
         .withColumn("filtered_ok", lit(filteredOk))
-    } finally rm(gen1) // the rebuild witness is durable; only gen1 is scratch
+    } finally graft.FsUtil.deleteTree(gen1) // the rebuild witness is durable; only gen1 is scratch
   }
 
   // ------------------------------------------------------------- S9
@@ -2233,53 +2016,18 @@ object Similarity {
     * sidecar instead of paying the training scan. The matrix rides
     * beside the OPQ codebooks in the fingerprint-keyed dir; raw
     * IEEE-754 bits, so load ≡ retrain bit-for-bit. */
-  private val opqRotCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String),
-      Array[Array[Double]]]
+  private val opqRotCache = new graft.FsUtil.SessionMemo[String, Array[Array[Double]]]
 
   private[graft] def opqRotPath(d: String): java.io.File =
-    new java.io.File(indexRoot, s"graft-opq-${corpusFingerprint(d)}/_rotation.txt")
-
-  private def loadRotationFile(f: java.io.File): Option[Array[Array[Double]]] =
-    if (f.isFile)
-      try {
-        val lines = java.nio.file.Files.readAllLines(f.toPath)
-        if (lines.size != PqDim) None
-        else Some(Array.tabulate(PqDim) { r =>
-          val coords = lines.get(r).trim.split(" ")
-            .map(t => java.lang.Double.longBitsToDouble(t.toLong))
-          require(coords.length == PqDim)
-          coords
-        })
-      } catch { case _: Exception => None }
-    else None
+    new java.io.File(artifactDir("opq", d), "_rotation.txt")
 
   private[graft] def opqRot(s: SparkSession, d: String,
-                            e: => DataFrame): Array[Array[Double]] = {
-    opqRotCache.keys.foreach { case k @ (sess, _) =>
-      if (sess.sparkContext.isStopped) opqRotCache.remove(k)
-    }
-    if (opqRotCache.size >= 8 && !opqRotCache.contains((s, d)))
-      opqRotCache.remove(opqRotCache.head._1) // local: arbitrary (hash-order) eviction on a size-capped driver cache map; rebuild finds the on-disk marker
-    opqRotCache.getOrElseUpdate((s, d), {
-      val f = opqRotPath(d)
-      loadRotationFile(f) match {
-        case Some(r) =>
-          artifactStatus(f.getAbsolutePath) = "found"
-          r
-        case None =>
-          artifactStatus(f.getAbsolutePath) = "built"
-          val r = opqRotation(e)
-          val sb = new StringBuilder
-          r.foreach { row =>
-            sb.append(row.map(x =>
-              java.lang.Double.doubleToLongBits(x).toString).mkString(" ")).append('\n')
-          }
-          publishSidecar(f, sb.toString, "opq rotation")
-          r
-      }
-    })
-  }
+                            e: => DataFrame): Array[Array[Double]] =
+    opqRotCache.getOrElseUpdate((s, d),
+      graft.FsUtil.resolveSidecar(opqRotPath(d)) { ls =>
+        require(ls.size == PqDim, "opq rotation sidecar geometry drifted")
+        ls.map(l => bitsOf(l.trim.split(" ").toSeq, PqDim)).toArray
+      }(opqRotation(e), _.toSeq.map(bitsLine)))
 
   /** OPQ codebooks — trained in the ROTATED basis over the same
     * corpus, persisted like [[pqBooks]] (same dir as the rotation:
@@ -2287,36 +2035,18 @@ object Similarity {
     * meaningless without exactly this R). iters=2 matches the
     * original in-query s15 training, so stored codes are bit-equal to
     * what s15 used to encode in-flight. */
-  private val opqBookCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String),
-      Array[Array[Array[Double]]]]
+  private val opqBookCache = new graft.FsUtil.SessionMemo[String, Array[Array[Array[Double]]]]
 
   private[graft] def opqBooksPath(d: String): java.io.File =
-    new java.io.File(indexRoot, s"graft-opq-${corpusFingerprint(d)}/_books.txt")
+    new java.io.File(artifactDir("opq", d), "_books.txt")
 
   private[graft] def opqBooks(s: SparkSession, d: String,
-                              e: => DataFrame): Array[Array[Array[Double]]] = {
-    opqBookCache.keys.foreach { case k @ (sess, _) =>
-      if (sess.sparkContext.isStopped) opqBookCache.remove(k)
-    }
-    if (opqBookCache.size >= 8 && !opqBookCache.contains((s, d)))
-      opqBookCache.remove(opqBookCache.head._1) // local: arbitrary (hash-order) eviction on a size-capped driver cache map; rebuild finds the on-disk marker
-    opqBookCache.getOrElseUpdate((s, d), {
-      val f = opqBooksPath(d)
-      loadBooksFile(f) match {
-        case Some(books) =>
-          artifactStatus(f.getAbsolutePath) = "found"
-          books
-        case None =>
-          artifactStatus(f.getAbsolutePath) = "built"
-          val frame = e
-          val books =
-            trainPqCodebooks(rotated(frame, opqRot(s, d, frame)), iters = 2)
-          publishSidecar(f, booksBody(books), "opq codebook")
-          books
-      }
-    })
-  }
+                              e: => DataFrame): Array[Array[Array[Double]]] =
+    opqBookCache.getOrElseUpdate((s, d),
+      graft.FsUtil.resolveSidecar(opqBooksPath(d))(parseBooks)({
+        val frame = e
+        trainPqCodebooks(rotated(frame, opqRot(s, d, frame)), iters = 2)
+      }, booksLines))
 
   /** Driver/executor-side rotation kernel — the SAME fixed-order
     * inner loop as [[rotated]]'s mapPartitions, so a vector rotated
@@ -2371,79 +2101,26 @@ object Similarity {
     * encodes and scores bit-identically without touching the corpus;
     * metadata drift causes a false retrain (safe), never stale books.
     * Driver-side arrays (M·K·sub doubles — tiny). */
-  private val pqBookCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String),
-      Array[Array[Array[Double]]]]
+  private val pqBookCache = new graft.FsUtil.SessionMemo[String, Array[Array[Array[Double]]]]
 
   private[graft] def pqBooksPath(d: String): java.io.File =
-    new java.io.File(indexRoot, s"graft-pq-${corpusFingerprint(d)}/_books.txt")
+    new java.io.File(artifactDir("pq", d), "_books.txt")
 
-  /** Codebook sidecar codec, shared by the PQ and OPQ artifacts: one
+  /** Codebook sidecar payload, shared by the PQ and OPQ artifacts: one
     * line per (subspace, centroid), coords as raw IEEE-754 long bits.
-    * A malformed / wrong-geometry file loads as None → retrain. */
-  private def loadBooksFile(f: java.io.File): Option[Array[Array[Array[Double]]]] =
-    if (f.isFile)
-      try {
-        val lines = java.nio.file.Files.readAllLines(f.toPath)
-        if (lines.size != PqM * PqK) None
-        else Some(Array.tabulate(PqM, PqK) { (m, c) =>
-          val coords = lines.get(m * PqK + c).trim.split(" ")
-            .map(t => java.lang.Double.longBitsToDouble(t.toLong))
-          require(coords.length == PqSub)
-          coords
-        })
-      } catch { case _: Exception => None }
-    else None
-
-  /** UNIQUE temp + atomic move (the writeAnchors contract): a fixed
-    * shared tmp name would let two concurrent trainers interleave
-    * (A renames while B is mid-write to the same path) and publish
-    * a torn file. A failed move is logged, not swallowed — the
-    * loader's validation would degrade it to a silent retrain. */
-  private def publishSidecar(f: java.io.File, body: String, what: String): Unit = {
-    f.getParentFile.mkdirs()
-    val tmp = java.io.File.createTempFile(f.getName, ".tmp", f.getParentFile)
-    java.nio.file.Files.writeString(tmp.toPath, body)
-    try java.nio.file.Files.move(tmp.toPath, f.toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    catch { case e: Exception =>
-      System.err.println(s"[graft] $what publish failed (will retrain next session): $e")
-      tmp.delete()
-    }
+    * A wrong-geometry file parses as a fault → retrain. */
+  private def parseBooks(ls: IndexedSeq[String]): Array[Array[Array[Double]]] = {
+    require(ls.size == PqM * PqK, "codebook sidecar geometry drifted")
+    Array.tabulate(PqM, PqK)((m, c) => bitsOf(ls(m * PqK + c).trim.split(" ").toSeq, PqSub))
   }
 
-  private def booksBody(books: Array[Array[Array[Double]]]): String = {
-    val sb = new StringBuilder
-    books.foreach(_.foreach { cvec =>
-      sb.append(cvec.map(x =>
-        java.lang.Double.doubleToLongBits(x).toString).mkString(" ")).append('\n')
-    })
-    sb.toString
-  }
+  private def booksLines(books: Array[Array[Array[Double]]]): Seq[String] =
+    books.toSeq.flatMap(_.toSeq.map(bitsLine))
 
   private[graft] def pqBooks(s: SparkSession, d: String,
-                             e: DataFrame): Array[Array[Array[Double]]] = {
-    pqBookCache.keys.foreach { case k @ (sess, _) =>
-      if (sess.sparkContext.isStopped) pqBookCache.remove(k)
-    }
-    if (pqBookCache.size >= 8 && !pqBookCache.contains((s, d)))
-      pqBookCache.remove(pqBookCache.head._1) // local: arbitrary (hash-order) eviction on a size-capped driver cache map; rebuild finds the on-disk marker
-    pqBookCache.getOrElseUpdate((s, d), {
-      val f = pqBooksPath(d)
-      // malformed or stale-geometry sidecar → retrain, never crash
-      loadBooksFile(f) match {
-        case Some(books) =>
-          artifactStatus(f.getParent) = "found"
-          books
-        case None =>
-          artifactStatus(f.getParent) = "built"
-          val books = trainPqCodebooks(e)
-          publishSidecar(f, booksBody(books), "pq codebook")
-          books
-      }
-    })
-  }
+                             e: DataFrame): Array[Array[Array[Double]]] =
+    pqBookCache.getOrElseUpdate((s, d),
+      graft.FsUtil.resolveSidecar(pqBooksPath(d))(parseBooks)(trainPqCodebooks(e), booksLines))
 
   /** S9: product-quantization ANN with ADC scoring — the third
     * compressed-domain representation in the family (S5 = scalar int8,
@@ -3767,54 +3444,35 @@ object Similarity {
     * sorted on vec_id — the beam's `isin` fetches prune to row groups
     * by min/max stats, the local analog of bucket-pruned point reads —
     * and `reps/` the per-cell entry points; anchors ride the same
-    * `_anchors.txt` sidecar as the IVF artifacts, and the
-    * `_graft_complete` marker gates reuse (write-once; a crash leaves
-    * no marker and the next caller rebuilds under overwrite
-    * semantics). Building is ingest work ([[ensureIndexes]]); the s21
-    * query times the SERVE path, like s7 vs its index build. */
+    * `_anchors.txt` sidecar as the IVF artifacts, next to the
+    * `_labels.txt` histogram. Published by [[graft.FsUtil.publishDir]];
+    * both sidecars must read back whole for reuse. Building is ingest
+    * work ([[ensureIndexes]]); the s21 query times the SERVE path,
+    * like s7 vs its index build. */
   private val graphIndexCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String),
-      (String, Array[(Int, Array[Double])])]
+    new graft.FsUtil.SessionMemo[String, (String, Array[(Int, Array[Double])])]
 
   private[graft] def graphIndexPath(s: SparkSession, d: String)
-      : (String, Array[(Int, Array[Double])]) = {
-    graphIndexCache.keys.foreach { case k @ (sess, _) =>
-      if (sess.sparkContext.isStopped) graphIndexCache.remove(k)
-    }
-    if (graphIndexCache.size >= 8 && !graphIndexCache.contains((s, d)))
-      graphIndexCache.remove(graphIndexCache.head._1) // local: arbitrary (hash-order) eviction on a size-capped driver cache map; rebuild finds the on-disk marker
-    graphIndexCache.getOrElseUpdate((s, d), {
-      val dir = new java.io.File(indexRoot,
-        s"graft-graph-${corpusFingerprint(d)}")
-      val done = new java.io.File(dir, "_graft_complete")
-      val reusable =
-        if (done.isFile && new java.io.File(dir, "_anchors.txt").isFile)
-          try Some(readAnchors(dir)) catch { case _: Exception => None }
-        else None
-      reusable match {
-        case Some((anchors, _)) =>
-          artifactStatus(dir.getAbsolutePath) = "found"
-          (dir.getAbsolutePath, anchors)
-        case None =>
-          val e = prepared(s, d)
-          val anchors = trainedAnchors(s, d, e)
-          val path = dir.getAbsolutePath
-          diversifyAdjacency(s21Graph(e, anchors, keep = DiversifyPool))
-            .repartitionByRange(col("vec_id"))
-            .sortWithinPartitions("vec_id")
-            .write.mode("overwrite").parquet(s"$path/adj")
-          s21CellReps(e, anchors)
-            .coalesce(1).write.mode("overwrite").parquet(s"$path/reps")
-          writeAnchors(dir, anchors, anchors.length)
-          writeLabelHist(dir, embeddings(s, d)
-            .groupBy(col("label")).agg(count(lit(1)).as("n"))
-            .collect().map(r => r.getInt(0) -> r.getLong(1)).toSeq) // bounded: one row per label
-          java.nio.file.Files.writeString(done.toPath, "ok\n")
-          artifactStatus(path) = "built"
-          (path, anchors)
-      }
-    })
-  }
+      : (String, Array[(Int, Array[Double])]) =
+    graphIndexCache.getOrElseUpdate((s, d),
+      graft.FsUtil.publishDir(artifactDir("graph", d)) { dir =>
+        readLabelHist(dir).flatMap(_ => readAnchors(dir)).map(_._1)
+      } { tmp =>
+        val e = prepared(s, d)
+        val anchors = trainedAnchors(s, d, e)
+        val path = tmp.getAbsolutePath
+        diversifyAdjacency(s21Graph(e, anchors, keep = DiversifyPool))
+          .repartitionByRange(col("vec_id"))
+          .sortWithinPartitions("vec_id")
+          .write.mode("overwrite").parquet(s"$path/adj")
+        s21CellReps(e, anchors)
+          .coalesce(1).write.mode("overwrite").parquet(s"$path/reps")
+        writeAnchors(tmp, anchors, anchors.length)
+        writeLabelHist(tmp, embeddings(s, d)
+          .groupBy(col("label")).agg(count(lit(1)).as("n"))
+          .collect().map(r => r.getInt(0) -> r.getLong(1)).toSeq) // bounded: one row per label
+        anchors
+      })
 
   /** S21: graph-based ANN — the DiskANN/HNSW-family member completing
     * the ladder (flat scan s1, hash buckets s2, inverted file s3/s6,
@@ -4398,71 +4056,51 @@ object Similarity {
     * as a read-side-merged delta layer instead of an in-place rewrite.
     * A fold that rewrites base/adj with the merged lists is the
     * compaction analog (s14's discipline), not needed at delta sizes
-    * that fit a read-side union. */
+    * that fit a read-side union. Published by
+    * [[graft.FsUtil.publishDir]]. */
   private val graphIncrCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String),
-      (String, Array[(Int, Array[Double])])]
+    new graft.FsUtil.SessionMemo[String, (String, Array[(Int, Array[Double])])]
 
   private[graft] def graphIncrPath(s: SparkSession, d: String)
-      : (String, Array[(Int, Array[Double])]) = {
-    graphIncrCache.keys.foreach { case k @ (sess, _) =>
-      if (sess.sparkContext.isStopped) graphIncrCache.remove(k)
-    }
-    if (graphIncrCache.size >= 8 && !graphIncrCache.contains((s, d)))
-      graphIncrCache.remove(graphIncrCache.head._1) // local: arbitrary (hash-order) eviction on a size-capped driver cache map; rebuild finds the on-disk marker
-    graphIncrCache.getOrElseUpdate((s, d), {
-      val dir = new java.io.File(indexRoot,
-        s"graft-graph-incr-${corpusFingerprint(d)}")
-      val done = new java.io.File(dir, "_graft_complete")
-      val reusable =
-        if (done.isFile && new java.io.File(dir, "_anchors.txt").isFile)
-          try Some(readAnchors(dir)) catch { case _: Exception => None }
-        else None
-      reusable match {
-        case Some((anchors, _)) =>
-          artifactStatus(dir.getAbsolutePath) = "found"
-          (dir.getAbsolutePath, anchors)
-        case None =>
-          val e = prepared(s, d)
-          val base = e.filter(col("vec_id") % 10 =!= 9)
-          val batch = e.filter(col("vec_id") % 10 === 9)
-          val anchors = trainAnchors(
-            base.select(col("vec_id"), col("v"), col("nrm")),
-            ivfCells(base.count()), iters = 2) // frozen at creation (s8's contract)
-          val path = dir.getAbsolutePath
-          diversifyAdjacency(s21Graph(base, anchors, keep = DiversifyPool))
-            .repartitionByRange(col("vec_id"))
-            .sortWithinPartitions("vec_id")
-            .write.mode("overwrite").parquet(s"$path/base/adj")
-          // reps land BEFORE the delta: the bridge search below seeds
-          // from them, exactly like the serve path will
-          s21CellReps(base, anchors)
-            .coalesce(1).write.mode("overwrite").parquet(s"$path/reps")
-          val baseAdj = s.read.parquet(s"$path/base/adj")
-          val bridge = bridgeEdges(s,
-            ids => baseAdj.filter(col("vec_id").isin(ids: _*)),
-            anchors, s.read.parquet(s"$path/reps"), batch,
-            beamForAnchors(anchors))
-          val fwd = withBridge(graphAdjacency(
-            base.withColumn("sel", lit(false))
-              .unionByName(batch.withColumn("sel", lit(true))), anchors),
-            bridge)
-            .localCheckpoint(true) // consumed twice: delta write + back-links
-          fwd.repartitionByRange(col("vec_id"))
-            .sortWithinPartitions("vec_id")
-            .write.mode("overwrite").parquet(s"$path/delta/adj")
-          fwd.select(explode(col("nbrs")).as("vec_id"),
-            col("vec_id").as("extra"))
-            .repartitionByRange(col("vec_id"))
-            .sortWithinPartitions("vec_id")
-            .write.mode("overwrite").parquet(s"$path/back")
-          writeAnchors(dir, anchors, anchors.length)
-          java.nio.file.Files.writeString(done.toPath, "ok\n")
-          artifactStatus(path) = "built"
-          (path, anchors)
-      }
-    })
-  }
+      : (String, Array[(Int, Array[Double])]) =
+    graphIncrCache.getOrElseUpdate((s, d),
+      graft.FsUtil.publishDir(artifactDir("graph-incr", d))(readAnchors(_).map(_._1)) { tmp =>
+        val e = prepared(s, d)
+        val base = e.filter(col("vec_id") % 10 =!= 9)
+        val batch = e.filter(col("vec_id") % 10 === 9)
+        val anchors = trainAnchors(
+          base.select(col("vec_id"), col("v"), col("nrm")),
+          ivfCells(base.count()), iters = 2) // frozen at creation (s8's contract)
+        val path = tmp.getAbsolutePath
+        diversifyAdjacency(s21Graph(base, anchors, keep = DiversifyPool))
+          .repartitionByRange(col("vec_id"))
+          .sortWithinPartitions("vec_id")
+          .write.mode("overwrite").parquet(s"$path/base/adj")
+        // reps land BEFORE the delta: the bridge search below seeds
+        // from them, exactly like the serve path will
+        s21CellReps(base, anchors)
+          .coalesce(1).write.mode("overwrite").parquet(s"$path/reps")
+        val baseAdj = s.read.parquet(s"$path/base/adj")
+        val bridge = bridgeEdges(s,
+          ids => baseAdj.filter(col("vec_id").isin(ids: _*)),
+          anchors, s.read.parquet(s"$path/reps"), batch,
+          beamForAnchors(anchors))
+        val fwd = withBridge(graphAdjacency(
+          base.withColumn("sel", lit(false))
+            .unionByName(batch.withColumn("sel", lit(true))), anchors),
+          bridge)
+          .localCheckpoint(true) // consumed twice: delta write + back-links
+        fwd.repartitionByRange(col("vec_id"))
+          .sortWithinPartitions("vec_id")
+          .write.mode("overwrite").parquet(s"$path/delta/adj")
+        fwd.select(explode(col("nbrs")).as("vec_id"),
+          col("vec_id").as("extra"))
+          .repartitionByRange(col("vec_id"))
+          .sortWithinPartitions("vec_id")
+          .write.mode("overwrite").parquet(s"$path/back")
+        writeAnchors(tmp, anchors, anchors.length)
+        anchors
+      })
 
   /** Fetch-time cap on back-link extras merged into a node's list: a
     * hub node accumulating many reverse edges between folds must not
@@ -4735,34 +4373,17 @@ object Similarity {
     * providing — then re-prunes to top-DEG by exact cosine. Cost is
     * tombstone-proportional: repair candidates = edges INTO tombstones
     * × DEG, never corpus²; the rewrite itself is one pass over the
-    * merged adjacency. Published write-once under its own marker with
-    * a partial destination cleared first (the st12 crash-idempotency
-    * lesson); entry reps are re-derived from the folded node set so a
-    * tombstoned representative cannot survive as a seed. */
-  private val graphFoldCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+    * merged adjacency. Published by [[graft.FsUtil.publishDir]], so a
+    * crashed fold publishes nothing; entry reps are re-derived from the
+    * folded node set so a tombstoned representative cannot survive as
+    * a seed. */
+  private val graphFoldCache = new graft.FsUtil.SessionMemo[String, String]
 
-  private[graft] def graphFoldPath(s: SparkSession, d: String): String = {
-    graphFoldCache.keys.foreach { case k @ (sess, _) =>
-      if (sess.sparkContext.isStopped) graphFoldCache.remove(k)
-    }
-    if (graphFoldCache.size >= 8 && !graphFoldCache.contains((s, d)))
-      graphFoldCache.remove(graphFoldCache.head._1) // local: arbitrary (hash-order) eviction on a size-capped driver cache map; rebuild finds the on-disk marker
+  private[graft] def graphFoldPath(s: SparkSession, d: String): String =
     graphFoldCache.getOrElseUpdate((s, d), {
       val (incrPath, anchors) = graphIncrPath(s, d)
-      val dir = new java.io.File(indexRoot,
-        s"graft-graph-fold-${corpusFingerprint(d)}")
-      val done = new java.io.File(dir, "_graft_complete")
-      val path = dir.getAbsolutePath
-      if (done.isFile) { artifactStatus(path) = "found"; path }
-      else {
-        // a crashed fold left a partial generation: start clean
-        if (dir.isDirectory) {
-          val walk = java.nio.file.Files.walk(dir.toPath)
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => java.nio.file.Files.deleteIfExists(p))
-          finally walk.close()
-        }
+      graft.FsUtil.publishDir(artifactDir("graph-fold", d))(readAnchors(_).map(_ => ())) { tmp =>
+        val path = tmp.getAbsolutePath
         val tomb = broadcast(tombstones(s, d))
         // materialized read-side merge: base ∪ delta rows with
         // back-link extras folded into the neighbor lists
@@ -4838,13 +4459,9 @@ object Similarity {
         // must not survive as an entry point)
         s21CellReps(folded.select(col("vec_id"), col("v"), col("nrm")), anchors)
           .coalesce(1).write.mode("overwrite").parquet(s"$path/reps")
-        writeAnchors(dir, anchors, anchors.length)
-        java.nio.file.Files.writeString(done.toPath, "ok\n")
-        artifactStatus(path) = "built"
-        path
-      }
+        writeAnchors(tmp, anchors, anchors.length)
+      }._1
     })
-  }
 
   /** S24 query: serve the standard probe from the FOLDED generation —
     * no lazy mask left to apply (the fold made deletes physical) — and

@@ -243,38 +243,18 @@ object Streaming {
     val root = if (shm.isDirectory && shm.canWrite) shm
                else new java.io.File(sys.props("java.io.tmpdir"))
     new java.io.File(root,
-      s"graft-ckpt-$name-$ownerTag-${java.util.UUID.randomUUID}")
+      s"graft-ckpt-$name-${graft.FsUtil.ownerTag}-${java.util.UUID.randomUUID}")
   }
 
   /** `finally` cannot run under kill -9: a process killed mid-query
     * leaves its workspace/checkpoint on disk forever (seen once — a
     * killed run's st12 residue then failed every later residue-free
-    * spec). So every scratch dir embeds its owner pid (`-P<pid>X-`)
-    * and each creator first garbage-collects same-prefix dirs whose
-    * owner process is dead — residue from a killed run is reclaimed by
-    * the next run instead of accumulating. Dirs from naming schemes
-    * without an owner tag are reclaimed only past a 30-minute age so a
-    * live externally-managed dir is never raced. */
-  private def ownerTag: String = s"P${ProcessHandle.current().pid()}X"
-  private val OwnerPat = ".*P([0-9]+)X.*".r
-  private def orphaned(dirName: String, mtime: Long): Boolean = dirName match {
-    case OwnerPat(pid) =>
-      !ProcessHandle.of(pid.toLong)
-        .map[java.lang.Boolean](_.isAlive).orElse(java.lang.Boolean.FALSE)
-    case _ => System.currentTimeMillis() - mtime > 30L * 60 * 1000
-  }
-  private def sweepOrphans(name: String): Unit = {
-    val roots = Seq(new java.io.File(sys.props("java.io.tmpdir")),
-      new java.io.File("/dev/shm"))
-    roots.foreach { r =>
-      Option(r.listFiles()).getOrElse(Array.empty[java.io.File]).foreach { f =>
-        val n = f.getName
-        if ((n.startsWith(s"graft_$name") || n.startsWith(s"graft-ckpt-$name")) &&
-            f.isDirectory && orphaned(n, f.lastModified()))
-          graft.FsUtil.deleteTree(f)
-      }
-    }
-  }
+    * spec). So every scratch dir embeds its owner tag
+    * ([[graft.FsUtil.ownerTag]]) and each creator first reclaims the
+    * same-prefix dirs whose owner is gone ([[graft.FsUtil.reclaimOrphans]]). */
+  private def sweepOrphans(name: String): Unit =
+    Seq(new java.io.File(sys.props("java.io.tmpdir")), new java.io.File("/dev/shm"))
+      .foreach(graft.FsUtil.reclaimOrphans(_, s"graft_$name", s"graft-ckpt-$name"))
 
   /** Workspace lifecycle for queries that stage a scratch copy of a
     * durable artifact (st12's streamed index generation): creates the
@@ -286,13 +266,12 @@ object Streaming {
   private[graft] def withWorkspace[A](name: String)(body: (String, java.io.File) => A): A = {
     sweepOrphans(name)
     val work = java.nio.file.Files.createTempDirectory(
-      s"graft_$name$ownerTag").toString
+      s"graft_$name${graft.FsUtil.ownerTag}").toString
     val ckpt = ckptDir(name)
     try body(work, ckpt)
     finally {
-      def rm(f: java.io.File): Unit = graft.FsUtil.deleteTree(f)
-      rm(ckpt)
-      rm(new java.io.File(work))
+      graft.FsUtil.deleteTree(ckpt)
+      graft.FsUtil.deleteTree(new java.io.File(work))
     }
   }
 
@@ -309,8 +288,7 @@ object Streaming {
     val dst = new java.io.File(dir, name)
     java.nio.file.Files.copy(part.toPath, dst.toPath)
     dst.setLastModified(mtime)
-    def rm(f: java.io.File): Unit = graft.FsUtil.deleteTree(f)
-    rm(new java.io.File(tmp))
+    graft.FsUtil.deleteTree(new java.io.File(tmp))
   }
 
   /** Runs a bounded streaming query to a memory sink and returns the
@@ -324,13 +302,7 @@ object Streaming {
         .option("checkpointLocation", ckpt.getAbsolutePath)
         .outputMode(mode).trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(ckpt)
-    }
+    } finally graft.FsUtil.deleteTree(ckpt)
     s.table(name)
   }
 
@@ -994,8 +966,8 @@ object Streaming {
   }
 
   /** The applied-epochs manifest of a generation: one epoch id per
-    * line. Reads empty when absent; updated by whole-file write + one
-    * ATOMIC_MOVE rename, so a reader never sees a torn manifest and a
+    * line. Reads empty when absent; updated by
+    * [[graft.FsUtil.writeAtomic]], so a reader never sees a torn manifest and a
     * fold generation's hardlinked copy is never written through (the
     * rename replaces the link). */
   private def readAppliedEpochs(gen: String): Set[Long] = {
@@ -1010,15 +982,9 @@ object Streaming {
     }
   }
 
-  private def markEpochApplied(gen: String, applied: Set[Long]): Unit = {
-    val dir = java.nio.file.Paths.get(gen)
-    val tmp = java.nio.file.Files.createTempFile(dir, "_applied_epochs", ".tmp")
-    java.nio.file.Files.writeString(tmp,
+  private def markEpochApplied(gen: String, applied: Set[Long]): Unit =
+    graft.FsUtil.writeAtomic(java.nio.file.Paths.get(gen, "_applied_epochs.txt"),
       applied.toSeq.sorted.mkString("", "\n", "\n"))
-    java.nio.file.Files.move(tmp, dir.resolve("_applied_epochs.txt"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
 
   /** Starts (or RESTARTS, from the same checkpoint) st12's ingest
     * stream. The sink contract is EXACTLY-ONCE under foreachBatch's
@@ -1074,14 +1040,7 @@ object Streaming {
         if (genSeq.get() < genOf) genSeq.set(genOf)
       }
     }
-    def persistPointer(gen: String): Unit = {
-      val tmp = java.nio.file.Files.createTempFile(
-        pointerPath.getParent, "_current", ".tmp")
-      java.nio.file.Files.writeString(tmp, gen)
-      java.nio.file.Files.move(tmp, pointerPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    }
+    def persistPointer(gen: String): Unit = graft.FsUtil.writeAtomic(pointerPath, gen)
     s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(inDir)
       .writeStream
@@ -1119,11 +1078,7 @@ object Streaming {
                     java.nio.file.StandardCopyOption.REPLACE_EXISTING)
                 }
             }
-            def rm(f: java.io.File): Unit = {
-              if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-              f.delete()
-            }
-            rm(new java.io.File(stage))
+            graft.FsUtil.deleteTree(new java.io.File(stage))
             markEpochApplied(live, applied + id)
           }
           // compaction trigger — metadata reads for the batch's own
@@ -1309,9 +1264,8 @@ object Streaming {
         .orderBy(col("user_id"))
         .localCheckpoint(true)
     } finally {
-      def rm(f: java.io.File): Unit = graft.FsUtil.deleteTree(f)
-      rm(ckpt)
-      rm(new java.io.File(work))
+      graft.FsUtil.deleteTree(ckpt)
+      graft.FsUtil.deleteTree(new java.io.File(work))
     }
   }
 
@@ -2253,8 +2207,7 @@ object Streaming {
           }
           publish("delta", s"$gDir/delta/adj")
           publish("back", s"$gDir/back")
-          def rm(f: java.io.File): Unit = graft.FsUtil.deleteTree(f)
-          rm(new java.io.File(stage))
+          graft.FsUtil.deleteTree(new java.io.File(stage))
           markEpochApplied(gDir, applied + id)
         }
       }

@@ -437,23 +437,37 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
-  test("torn anchor sidecar degrades to rebuild, never a partial probe") {
-    val r1 = Similarity.s7AnnIndexProbe(spark, sf001)
-      .collect().map(_.toSeq).sortBy(_.toString)
-    val dir = new java.io.File(Similarity.ivfIndexPath(spark, sf001))
-    val f = new java.io.File(dir, "_anchors.txt")
-    val lines = java.nio.file.Files.readAllLines(f.toPath)
-    // drop the trailer and the last anchor: the file still parses
-    // line-by-line, which is exactly the failure the trailer catches
-    val torn = (0 until lines.size - 2).map(lines.get).mkString("", "\n", "\n")
-    java.nio.file.Files.writeString(f.toPath, torn)
-    val fresh = spark.newSession()
-    val r2 = Similarity.s7AnnIndexProbe(fresh, sf001)
-      .collect().map(_.toSeq).sortBy(_.toString)
-    assert(r2.sameElements(r1), "rebuild after a torn sidecar diverged")
-    val repaired = java.nio.file.Files.readAllLines(f.toPath)
-    assert(repaired.get(repaired.size - 1).trim == "#end",
-      "torn sidecar was not rewritten by the rebuild")
+  // every sidecar kind: (kind, its file, what a session resolves from it)
+  private def books(b: Array[Array[Array[Double]]]): Seq[Any] = b.toSeq.map(_.toSeq.map(_.toSeq))
+  Seq[(String, () => java.io.File, org.apache.spark.sql.SparkSession => Seq[Any])](
+    ("anchor", () => new java.io.File(Similarity.ivfIndexPath(spark, sf001), "_anchors.txt"),
+      s => Similarity.s7AnnIndexProbe(s, sf001).collect().map(_.toSeq).sortBy(_.toString).toSeq),
+    ("label", () => new java.io.File(Similarity.graphIndexPath(spark, sf001)._1, "_labels.txt"),
+      s => Similarity.readLabelHist(new java.io.File(Similarity.graphIndexPath(s, sf001)._1)).toSeq),
+    ("PQ codebook", () => Similarity.pqBooksPath(sf001),
+      s => books(Similarity.pqBooks(s, sf001, Similarity.prepared(s, sf001)))),
+    ("OPQ rotation", () => Similarity.opqRotPath(sf001),
+      s => Similarity.opqRot(s, sf001, Similarity.prepared(s, sf001)).toSeq.map(_.toSeq)),
+    ("OPQ codebook", () => Similarity.opqBooksPath(sf001),
+      s => books(Similarity.opqBooks(s, sf001, Similarity.prepared(s, sf001))))
+  ).foreach { case (kind, file, resolve) =>
+    test(s"torn $kind sidecar degrades to rebuild, never a partial probe") {
+      val r1 = resolve(spark)
+      assert(r1.nonEmpty)
+      val f = file()
+      val lines = java.nio.file.Files.readAllLines(f.toPath)
+      // drop the trailer and the last payload line: the file still
+      // parses line-by-line, which is exactly the failure the trailer
+      // catches
+      val torn = (0 until lines.size - 2).map(lines.get).mkString("", "\n", "\n")
+      java.nio.file.Files.writeString(f.toPath, torn)
+      // a new session has no memo entry: it must read the torn file
+      val r2 = resolve(spark.newSession())
+      assert(r2 == r1, s"rebuild after a torn $kind sidecar diverged")
+      val repaired = java.nio.file.Files.readAllLines(f.toPath)
+      assert(repaired.get(repaired.size - 1).trim == "#end",
+        s"torn $kind sidecar was not rewritten by the rebuild")
+    }
   }
 
   test("index root is configurable: durability holds under a non-tmp root") {
@@ -980,11 +994,11 @@ class PipelineSpec extends AnyFunSuite {
     // reuse: drop the in-memory resolve cache so the second call MUST
     // take the on-disk marker path, then require "found" — accepting
     // "built" here would let a rebuild-every-time bug pass silently
-    Multimodal.dropBandedIdxCacheEntry(spark, sf001, "audio")
+    Multimodal.bandedIdxMemo.remove((spark, (sf001, "audio")))
     val path2 = Multimodal.audioIndexPath(spark, sf001)
     assert(path2 == path)
-    assert(Similarity.artifactStatus(path) == "found",
-      s"second resolve did not reuse the durable artifact: ${Similarity.artifactStatus(path)}")
+    assert(graft.FsUtil.artifactStatus(path) == "found",
+      s"second resolve did not reuse the durable artifact: ${graft.FsUtil.artifactStatus(path)}")
     // stored bands ≡ a fresh fingerprint pass banded the same way
     val stored = spark.read.parquet(s"$path/bands")
       .select(col("doc_id"), col("afp"), col("band"), col("sig"))
@@ -1001,6 +1015,24 @@ class PipelineSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(plan.contains("bands"),
       "mm11's plan does not scan the durable banded store")
+  }
+
+  test("a resolve reclaims the temp and aside dirs a killed builder left beside its artifact") {
+    val path = Multimodal.audioIndexPath(spark, sf001)
+    // a short-lived child process stands in for the killed builder
+    val child = new ProcessBuilder("true").start()
+    child.waitFor()
+    val dead = child.pid()
+    val planted = Seq("build", "stale").map { kind =>
+      val d = new java.io.File(s"$path.$kind-P${dead}X-planted")
+      java.nio.file.Files.createDirectories(d.toPath.resolve("bands"))
+      java.nio.file.Files.writeString(d.toPath.resolve("bands/part-0"), "torn")
+      d
+    }
+    Multimodal.bandedIdxMemo.remove((spark, (sf001, "audio")))
+    assert(Multimodal.audioIndexPath(spark, sf001) == path)
+    planted.foreach(d => assert(!d.exists(), s"residue of a dead builder survived: $d"))
+    assert(new java.io.File(path, graft.FsUtil.Marker).isFile, "the artifact is not complete")
   }
 
   test("mm14 image probe: every +64-brightness query resolves to its " +
@@ -1024,11 +1056,11 @@ class PipelineSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val path = Multimodal.imageIndexPath(spark, sf001)
     assert(new java.io.File(path, "_graft_complete").isFile)
-    Multimodal.dropBandedIdxCacheEntry(spark, sf001, "image")
+    Multimodal.bandedIdxMemo.remove((spark, (sf001, "image")))
     val path2 = Multimodal.imageIndexPath(spark, sf001)
     assert(path2 == path)
-    assert(Similarity.artifactStatus(path) == "found",
-      s"second resolve did not reuse the durable artifact: ${Similarity.artifactStatus(path)}")
+    assert(graft.FsUtil.artifactStatus(path) == "found",
+      s"second resolve did not reuse the durable artifact: ${graft.FsUtil.artifactStatus(path)}")
     // stored bands ≡ a fresh dHash pass banded the same way
     val stored = spark.read.parquet(s"$path/bands")
       .select(col("doc_id"), col("dhash"), col("band"), col("sig"))

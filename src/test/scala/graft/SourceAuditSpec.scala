@@ -199,4 +199,21 @@ class SourceAuditSpec extends AnyFunSuite {
     }
     assert(hits.isEmpty, s"a private block-vector helper is back in MatrixQueries.scala:\n${hits.mkString("\n")}")
   }
+
+  test("one artifact layer: outside FsUtil, src/main renames, atomically moves, creates temp files, " +
+    "writes completion markers, sweeps stopped sessions and deletes trees by hand nowhere") {
+    val privateCopy = java.util.regex.Pattern.compile(
+      """renameTo\(|ATOMIC_MOVE|createTempFile\(|_graft_complete|sparkContext\.isStopped|def rm\(""")
+    val root = repoRoot
+    val hits = scalaFiles(new java.io.File(root, "src/main/scala"))
+      .filterNot(_.getName == "FsUtil.scala")
+      .flatMap { f =>
+        val rel = root.toPath.relativize(f.toPath.toAbsolutePath.normalize)
+        scala.io.Source.fromFile(f, "UTF-8").getLines().zipWithIndex.collect {
+          case (line, i) if privateCopy.matcher(code(line)).find() => s"$rel:${i + 1}: ${line.trim}"
+        }
+      }
+    assert(hits.isEmpty,
+      s"${hits.size} lines bypass graft.FsUtil's artifact protocol:\n${hits.mkString("\n")}")
+  }
 }
