@@ -4218,71 +4218,80 @@ object Similarity {
     * sorted+deduped for order-independence and the back-link leg is
     * budgeted ([[FetchBackBudget]]) so a hub's frontier contribution is
     * bounded by DEG + budget between folds. Below [[FetchLocalMaxIds]]
-    * the merge runs on the driver off ONE shuffle-free three-leg scan
-    * (round-16: the per-round groupBy+join cost a shuffle per beam hop
-    * at gate shapes); the merged lists are identical by construction —
-    * sorted-distinct union with the id-ascending budget prefix — and
-    * the hub-budget spec covers both lanes. */
+    * the merge runs on the driver off ONE shuffle-free scan (round-16:
+    * the per-round groupBy+join cost a shuffle per beam hop at gate
+    * shapes); past it, one groupBy does the same merge. The two lanes
+    * give identical lists by construction — sorted-distinct union with
+    * the id-ascending budget prefix — and the hub-budget spec covers
+    * both. */
   private[graft] def fetchIncr(s: SparkSession, path: String,
                         ids: Seq[Long]): DataFrame =
     fetchIncrFn(s, path)(ids)
 
-  /** Curried [[fetchIncr]]: builds the three store frames ONCE per
-    * serve/ingest call — file listing and parquet footer reads are not
-    * free, and a beam pays one fetch per ROUND (the round-16 fix
-    * [[graft.streaming.Streaming]]'s fetchAppliedState already had);
-    * each round's call only adds the key filter that prunes row
-    * groups. */
+  /** Curried [[fetchIncr]] over an artifact dir. */
   private[graft] def fetchIncrFn(s: SparkSession, path: String)
-      : Seq[Long] => DataFrame = {
-    val b0 = s.read.parquet(s"$path/base/adj")
-    val dl0 = s.read.parquet(s"$path/delta/adj")
-    val bk0 = s.read.parquet(s"$path/back")
-    ids => fetchIncrFrom(s, b0, dl0, bk0, ids)
+      : Seq[Long] => DataFrame =
+    fetchIncrFn(s, s"$path/base/adj", Seq(s"$path/delta/adj"), Seq(s"$path/back"))
+
+  /** [[fetchIncr]] over explicit legs: the base dir, then the delta and
+    * back-link files or dirs — for a streamed store, the applied
+    * epochs' files only ([[graft.streaming.Epochs.appliedFiles]]); an
+    * empty leg is absent. The store frames are built ONCE per
+    * serve/ingest call (file listing and parquet footers are not free,
+    * and a beam pays one fetch per ROUND); each call only adds the key
+    * filter that prunes row groups.
+    *
+    * One node row per id: when several rows carry an id, the latest
+    * epoch's wins — base before delta, delta files by the id in their
+    * `epoch-<id>` name (an epoch file lists an id at most once) — so
+    * the answer does not depend on the order in which a scan returns
+    * files (Spark packs a scan's splits largest first). */
+  private[graft] def fetchIncrFn(s: SparkSession, base: String,
+      delta: Seq[String], back: Seq[String]): Seq[Long] => DataFrame = {
+    val node = Seq(col("vec_id"), col("v"), col("nrm"), col("nbrs"))
+    val epochName = regexp_extract(col("_metadata.file_name"), "^epoch-(\\d+)\\.", 1)
+    val base0 = s.read.parquet(base).select(node :+ lit(-1L).as("epoch"): _*)
+    val nodes0 =
+      if (delta.isEmpty) base0
+      else base0.unionByName(s.read.parquet(delta: _*).select(node :+
+        when(epochName === "", lit(0L)).otherwise(epochName.cast("long")).as("epoch"): _*))
+    val back0 =
+      if (back.isEmpty) None
+      else Some(s.read.parquet(back: _*).select(col("vec_id"), col("extra")))
+    ids => fetchIncrFrom(s, nodes0, back0, ids)
   }
 
-  private def fetchIncrFrom(s: SparkSession, b0: DataFrame, dl0: DataFrame,
-                            bk0: DataFrame, ids: Seq[Long]): DataFrame = {
-    val b = b0.filter(col("vec_id").isin(ids: _*))
-    val dl = dl0.filter(col("vec_id").isin(ids: _*))
+  private def fetchIncrFrom(s: SparkSession, nodes0: DataFrame,
+                            back0: Option[DataFrame], ids: Seq[Long]): DataFrame = {
+    val key = col("vec_id").isin(ids: _*)
+    val nodes = nodes0.filter(key).select(col("vec_id"), col("epoch"), col("v"),
+      col("nrm"), col("nbrs"), lit(null).cast("bigint").as("extra"))
+    val raw = back0.fold(nodes)(b => nodes.unionByName(b.filter(key)
+      .select(col("vec_id"), lit(null).cast("bigint").as("epoch"),
+        lit(null).cast("array<double>").as("v"), lit(null).cast("double").as("nrm"),
+        lit(null).cast("array<bigint>").as("nbrs"), col("extra"))))
     if (ids.size <= FetchLocalMaxIds) {
       import s.implicits._
-      val nullArr = lit(null).cast("array<double>")
-      val raw = b.unionByName(dl)
-        .select(col("vec_id"), col("v"), col("nrm"), col("nbrs"),
-          lit(null).cast("bigint").as("extra"))
-        .unionByName(bk0
-          .filter(col("vec_id").isin(ids: _*))
-          .select(col("vec_id"), nullArr.as("v"),
-            lit(null).cast("double").as("nrm"),
-            lit(null).cast("array<bigint>").as("nbrs"), col("extra")))
-        .collect() // bounded: ≤ |ids| node rows + their back rows, ids ≤ FetchLocalMaxIds
-      val extras = raw.filter(!_.isNullAt(4))
-        .groupBy(_.getLong(0)).map { case (id, rows) =>
-          id -> rows.map(_.getLong(4)).sorted.take(FetchBackBudget).toSeq
-        }
-      val merged = raw.filter(_.isNullAt(4)).toSeq.map { r =>
-        val id = r.getLong(0)
-        val nbrs = r.getSeq[Long](3)
-        val nbrs2 = extras.get(id) match {
-          case Some(ex) => (nbrs ++ ex).distinct.sorted
-          case None => nbrs
-        }
-        (id, r.getSeq[Double](1), r.getDouble(2), nbrs2)
+      val rows = raw.collect() // bounded: ≤ |ids| node rows + their back rows, ids ≤ FetchLocalMaxIds
+      val (backRows, nodeRows) = rows.partition(!_.isNullAt(5))
+      val extras = backRows.groupBy(_.getLong(0)).map { case (id, rs) =>
+        id -> rs.map(_.getLong(5)).sorted.take(FetchBackBudget).toSeq
       }
-      merged.toDF("vec_id", "v", "nrm", "nbrs")
-    } else {
-      val bk = bk0
-        .filter(col("vec_id").isin(ids: _*))
-        .groupBy("vec_id").agg(
-          slice(array_sort(collect_list(col("extra"))), 1, FetchBackBudget)
-            .as("extra"))
-      b.unionByName(dl).join(bk, Seq("vec_id"), "left")
-        .select(col("vec_id"), col("v"), col("nrm"),
-          when(col("extra").isNull, col("nbrs"))
+      nodeRows.groupBy(_.getLong(0)).toSeq.map { case (id, rs) =>
+        val r = rs.maxBy(_.getLong(1))
+        val nbrs = r.getSeq[Long](4)
+        (id, r.getSeq[Double](2), r.getDouble(3),
+          extras.get(id).fold(nbrs)(ex => (nbrs ++ ex).distinct.sorted))
+      }.toDF("vec_id", "v", "nrm", "nbrs")
+    } else
+      raw.groupBy("vec_id").agg(
+          max_by(struct(col("v"), col("nrm"), col("nbrs")), col("epoch")).as("n"),
+          slice(array_sort(collect_list(col("extra"))), 1, FetchBackBudget).as("extra"))
+        .filter(col("n").isNotNull)
+        .select(col("vec_id"), col("n.v").as("v"), col("n.nrm").as("nrm"),
+          when(size(col("extra")) === 0, col("n.nbrs"))
             .otherwise(array_sort(array_distinct(
-              concat(col("nbrs"), col("extra"))))).as("nbrs"))
-    }
+              concat(col("n.nbrs"), col("extra"))))).as("nbrs"))
   }
 
   /** S22: graph-index APPEND — s8's ingest lane applied to the s21

@@ -280,15 +280,18 @@ object Streaming {
     * replays (st13/st16/st17) drain through `maxFilesPerTrigger`. */
   private def writeBatchFile(df: DataFrame, dir: String, name: String,
                              mtime: Long): Unit = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_split").toString
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head // local: java File array of the ONE coalesced part file
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    val dst = new java.io.File(dir, name)
-    java.nio.file.Files.copy(part.toPath, dst.toPath)
-    dst.setLastModified(mtime)
-    graft.FsUtil.deleteTree(new java.io.File(tmp))
+    sweepOrphans("split")
+    val tmp = java.nio.file.Files.createTempDirectory(
+      s"graft_split${graft.FsUtil.ownerTag}").toString
+    try {
+      df.coalesce(1).write.mode("overwrite").parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head // local: java File array of the ONE coalesced part file
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+      val dst = new java.io.File(dir, name)
+      java.nio.file.Files.copy(part.toPath, dst.toPath)
+      dst.setLastModified(mtime)
+    } finally graft.FsUtil.deleteTree(new java.io.File(tmp))
   }
 
   /** Runs a bounded streaming query to a memory sink and returns the
@@ -893,11 +896,10 @@ object Streaming {
     * any epoch count while readers of the old generation are
     * undisturbed (StreamingSpec's ≥8-epoch soak proves bit-identical
     * probes through the fold). Exactly-once under foreachBatch's
-    * at-least-once replay ([[st12StartIngest]]): deterministic
-    * `epoch-<id>` file names moved in atomically + a per-generation
-    * applied-epochs manifest carried through folds + a durable
-    * generation pointer — the kill-and-replay spec proves a forced
-    * epoch re-execution changes nothing. */
+    * at-least-once replay: each epoch is published through [[Epochs]]
+    * ([[st12StartIngest]]), its manifest carried through folds, plus a
+    * durable generation pointer — the kill-and-replay spec proves a
+    * forced epoch re-execution changes nothing. */
   def st12StreamIndexIngest(s0: SparkSession, d: String): DataFrame =
     st12IngestAt(s0, d, nEpochs = 3)
 
@@ -965,55 +967,23 @@ object Streaming {
     }
   }
 
-  /** The applied-epochs manifest of a generation: one epoch id per
-    * line. Reads empty when absent; updated by
-    * [[graft.FsUtil.writeAtomic]], so a reader never sees a torn manifest and a
-    * fold generation's hardlinked copy is never written through (the
-    * rename replaces the link). */
-  private def readAppliedEpochs(gen: String): Set[Long] = {
-    val f = new java.io.File(gen, "_applied_epochs.txt")
-    if (!f.isFile) Set.empty
-    else {
-      // close the handle: one leak per epoch per restart adds up over a
-      // long-lived ingest stream
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      try src.getLines().filter(_.nonEmpty).map(_.toLong).toSet
-      finally src.close()
-    }
-  }
-
-  private def markEpochApplied(gen: String, applied: Set[Long]): Unit =
-    graft.FsUtil.writeAtomic(java.nio.file.Paths.get(gen, "_applied_epochs.txt"),
-      applied.toSeq.sorted.mkString("", "\n", "\n"))
-
   /** Starts (or RESTARTS, from the same checkpoint) st12's ingest
-    * stream. The sink contract is EXACTLY-ONCE under foreachBatch's
-    * at-least-once replay, st18's epoch-keyed discipline applied to an
-    * LSM append:
+    * stream. Each epoch is applied exactly once through [[Epochs]]:
+    * its rows land as `cell=C/epoch-<id>.<k>.parquet` in the live
+    * generation, whose applied-epochs manifest is carried forward into
+    * every fold generation by [[Similarity.foldCells]]'s root-file
+    * copy, so a replay is a no-op even after a fold absorbed the
+    * epoch's files. The compaction trigger (small-file BYTES past a
+    * row group as the primary rule, file count past
+    * [[Similarity.MaxFilesPerCell]] as the listing backstop) runs on
+    * every epoch, applied or replayed-skipped, so a crash between
+    * manifest and fold cannot strand a cell past either bound; a fold
+    * that itself crashed before the pointer swap is restartable because
+    * [[Similarity.foldCells]] clears a partially-written destination
+    * generation before re-folding.
     *
-    *  - each epoch's rows land as DETERMINISTIC file names —
-    *    `cell=C/epoch-<id>.parquet` — staged by one Spark write and
-    *    moved in with REPLACE_EXISTING, so a replay of a crash between
-    *    the move and the manifest update rewrites identical bytes over
-    *    itself instead of appending a second copy;
-    *  - a per-generation `_applied_epochs.txt` manifest (updated by
-    *    atomic rename AFTER the files are in place, carried forward
-    *    into every fold generation by [[Similarity.foldCells]]'s
-    *    root-file copy) makes a replay of a FULLY applied epoch a
-    *    no-op — including after a compaction fold absorbed the
-    *    epoch's files into merged cell files;
-    *  - the compaction trigger (small-file BYTES past a row group as
-    *    the primary rule, file count past [[Similarity.MaxFilesPerCell]]
-    *    as the listing backstop) runs on every epoch, applied or
-    *    replayed-skipped, so a crash between manifest and fold cannot
-    *    strand a cell past either bound; a fold that itself crashed
-    *    before the pointer swap is restartable because [[Similarity
-    *    .foldCells]] clears a partially-written destination generation
-    *    before re-folding.
-    *
-    * StreamingSpec proves it the hard way (st18's kill-and-replay
-    * recipe): delete the last commit record, restart from the
-    * checkpoint, and the index content and probe answers are
+    * StreamingSpec deletes the last commit record, restarts from the
+    * checkpoint, and finds the index content and probe answers
     * bit-identical to the single-pass run. */
   private[graft] def st12StartIngest(s: SparkSession, schema: StructType,
       inDir: String, idxDir: String,
@@ -1041,65 +1011,40 @@ object Streaming {
       }
     }
     def persistPointer(gen: String): Unit = graft.FsUtil.writeAtomic(pointerPath, gen)
-    s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        beforeEpoch(id)
-        // one file per touched cell dir PER BATCH (the honest LSM
-        // append shape) — partitionBy from the batch's partitions
-        // would stack several files per cell per epoch; see ivfIndex's
-        // build for the measured cost of letting index file counts
-        // outgrow directories
-        val live = current.get()
-        val enc = Similarity.assignQuantize(batch, anchors).persist()
-        try {
-          // bounded: distinct cells of ONE micro-batch
-          val touched = enc.select(col("cell")).distinct()
-            .collect().map(_.getInt(0)).toSet
-          val applied = readAppliedEpochs(live)
-          if (!applied.contains(id)) {
-            // stage with Spark, publish by deterministic-name move
-            val stage = s"$idxDir.stage-epoch-$id"
-            enc.repartition(col("cell"))
-              .write.mode("overwrite").partitionBy("cell").parquet(stage)
-            touched.foreach { c =>
-              val cellDir = new java.io.File(stage, s"cell=$c")
-              Option(cellDir.listFiles()).getOrElse(Array.empty)
-                .filter(_.getName.endsWith(".parquet")).zipWithIndex
-                .foreach { case (f, k) =>
-                  val dstDir = java.nio.file.Paths.get(live, s"cell=$c")
-                  java.nio.file.Files.createDirectories(dstDir)
-                  // k is 0 for the designed one-file-per-cell stage;
-                  // deterministic suffixes keep replays idempotent even
-                  // if a writer change ever stages more
-                  java.nio.file.Files.move(f.toPath,
-                    dstDir.resolve(s"epoch-$id.$k.parquet"),
-                    java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-                }
-            }
-            graft.FsUtil.deleteTree(new java.io.File(stage))
-            markEpochApplied(live, applied + id)
-          }
-          // compaction trigger — metadata reads for the batch's own
-          // cells only, never a full-tree walk; runs on replays too.
-          // Primary trigger is BYTES (a row group's worth of small-file
-          // fragments), file count is the listing-cost backstop.
-          val over = Similarity.cellFileStats(live, touched, foldSmallBytes)
-            .filter(kv => Similarity.foldDue(kv._2, foldMaxFiles,
-              foldSmallBytes)).keySet
-          if (over.nonEmpty) {
-            val next = s"$idxDir-gen${genSeq.incrementAndGet()}"
-            Similarity.foldCells(s, live, next, over)
-            current.set(next)
-            persistPointer(next)
-          }
-        } finally enc.unpersist()
-        afterEpoch(id)
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
+    Epochs.drain(s, schema, inDir, ckpt) { (batch, id) =>
+      beforeEpoch(id)
+      // one file per touched cell dir PER BATCH (the honest LSM
+      // append shape) — partitionBy from the batch's partitions
+      // would stack several files per cell per epoch; see ivfIndex's
+      // build for the measured cost of letting index file counts
+      // outgrow directories
+      val live = current.get()
+      val enc = Similarity.assignQuantize(batch, anchors).persist()
+      try {
+        // bounded: distinct cells of ONE micro-batch
+        val touched = enc.select(col("cell")).distinct()
+          .collect().map(_.getInt(0)).toSet
+        Epochs.applyOnce(live, idxDir, id) { (stage, _) =>
+          enc.repartition(col("cell"))
+            .write.mode("overwrite").partitionBy("cell").parquet(stage)
+          touched.toSeq.map(c => s"cell=$c" -> s"$live/cell=$c")
+        }
+        // compaction trigger — metadata reads for the batch's own
+        // cells only, never a full-tree walk; runs on replays too.
+        // Primary trigger is BYTES (a row group's worth of small-file
+        // fragments), file count is the listing-cost backstop.
+        val over = Similarity.cellFileStats(live, touched, foldSmallBytes)
+          .filter(kv => Similarity.foldDue(kv._2, foldMaxFiles,
+            foldSmallBytes)).keySet
+        if (over.nonEmpty) {
+          val next = s"$idxDir-gen${genSeq.incrementAndGet()}"
+          Similarity.foldCells(s, live, next, over)
+          current.set(next)
+          persistPointer(next)
+        }
+      } finally enc.unpersist()
+      afterEpoch(id)
+    }
   }
 
   // ------------------------------------------------------------ ST13
@@ -1171,9 +1116,7 @@ object Streaming {
       .head.getLong(0) // bounded: ONE-row aggregate
     val nBuckets = st13BucketCount(approxKeys)
     st13LastBuckets = nBuckets
-    val work = java.nio.file.Files.createTempDirectory("graft_st13").toString
-    val ckpt = ckptDir("st13")
-    try {
+    withWorkspace("st13") { (work, ckpt) =>
       // The change feed arrives as 3 files ⇒ 3 micro-batches, split the
       // way a key-partitioned CDC topic drains: the first two batches
       // carry DISJOINT key ranges (even/odd users' earlier events — so
@@ -1191,70 +1134,65 @@ object Streaming {
       }
       val genPtr = new java.util.concurrent.atomic.AtomicReference[String](null)
       val genCnt = new java.util.concurrent.atomic.AtomicInteger(0)
-      val q = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val byKey = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("user_id"))
-            .orderBy(col("ts").desc, col("event_id").desc)
-          // batch-local CDC rows: latest per key + how many changes
-          val delta = batch
-            .withColumn("rn", row_number().over(byKey))
-            .withColumn("cnt", count(lit(1)).over(
-              org.apache.spark.sql.expressions.Window.partitionBy(col("user_id"))))
-            .filter(col("rn") === 1).drop("rn")
-            .withColumn("bucket", pmod(col("user_id"), lit(nBuckets)).cast("int"))
-            .localCheckpoint(true)
-          val affected = delta.select(col("bucket")).distinct()
-            .collect().map(_.getInt(0)).toSet // bounded: <= nBuckets ints
-          val old = genPtr.get()
-          val newGen = s"$work/gen${genCnt.incrementAndGet()}"
-          // MERGE as union + latest-wins: snapshot rows and batch rows
-          // are both "candidates"; per key the newest (ts, event_id)
-          // survives and the change counts ADD — associative by
-          // construction, so micro-batch boundaries cannot show
-          val deltaCand = delta.select(col("bucket"), col("user_id"),
-            col("ts"), col("event_id"), col("event_type"), col("value"),
-            col("cnt").as("n_updates"))
-          val merged =
-            if (old == null) deltaCand
-            else {
-              val cur = s.read.parquet(old)
-                .filter(col("bucket").isin(affected.toSeq.map(_.asInstanceOf[Any]): _*))
-              val byKeyDesc = org.apache.spark.sql.expressions.Window
-                .partitionBy(col("user_id"))
-                .orderBy(col("ts").desc, col("event_id").desc)
-              val perKey = org.apache.spark.sql.expressions.Window
-                .partitionBy(col("user_id"))
-              cur.unionByName(deltaCand)
-                .withColumn("tot", sum(col("n_updates")).over(perKey))
-                .withColumn("mrn", row_number().over(byKeyDesc))
-                .filter(col("mrn") === 1)
-                .select(col("bucket"), col("user_id"), col("ts"),
-                  col("event_id"), col("event_type"), col("value"),
-                  col("tot").as("n_updates"))
-            }
-          // one file per bucket dir — see Similarity.ivfIndex's build
-          merged.repartition(col("bucket"))
-            .write.mode("overwrite").partitionBy("bucket").parquet(newGen)
-          // untouched buckets survive byte-for-byte: file-level copy
-          // (generations are immutable ⇒ hardlink, copy fallback)
-          var copied = 0
-          if (old != null) {
-            (0 until nBuckets).filterNot(affected).foreach { b =>
-              val bd = new java.io.File(old, s"bucket=$b")
-              if (bd.isDirectory) {
-                copied += 1
-                graft.FsUtil.linkTree(bd.getAbsolutePath, s"$newGen/bucket=$b")
-              }
+      val q = Epochs.drain(s, ev.schema, inDir, ckpt.getAbsolutePath) { (batch, _) =>
+        val byKey = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("user_id"))
+          .orderBy(col("ts").desc, col("event_id").desc)
+        // batch-local CDC rows: latest per key + how many changes
+        val delta = batch
+          .withColumn("rn", row_number().over(byKey))
+          .withColumn("cnt", count(lit(1)).over(
+            org.apache.spark.sql.expressions.Window.partitionBy(col("user_id"))))
+          .filter(col("rn") === 1).drop("rn")
+          .withColumn("bucket", pmod(col("user_id"), lit(nBuckets)).cast("int"))
+          .localCheckpoint(true)
+        val affected = delta.select(col("bucket")).distinct()
+          .collect().map(_.getInt(0)).toSet // bounded: <= nBuckets ints
+        val old = genPtr.get()
+        val newGen = s"$work/gen${genCnt.incrementAndGet()}"
+        // MERGE as union + latest-wins: snapshot rows and batch rows
+        // are both "candidates"; per key the newest (ts, event_id)
+        // survives and the change counts ADD — associative by
+        // construction, so micro-batch boundaries cannot show
+        val deltaCand = delta.select(col("bucket"), col("user_id"),
+          col("ts"), col("event_id"), col("event_type"), col("value"),
+          col("cnt").as("n_updates"))
+        val merged =
+          if (old == null) deltaCand
+          else {
+            val cur = s.read.parquet(old)
+              .filter(col("bucket").isin(affected.toSeq.map(_.asInstanceOf[Any]): _*))
+            val byKeyDesc = org.apache.spark.sql.expressions.Window
+              .partitionBy(col("user_id"))
+              .orderBy(col("ts").desc, col("event_id").desc)
+            val perKey = org.apache.spark.sql.expressions.Window
+              .partitionBy(col("user_id"))
+            cur.unionByName(deltaCand)
+              .withColumn("tot", sum(col("n_updates")).over(perKey))
+              .withColumn("mrn", row_number().over(byKeyDesc))
+              .filter(col("mrn") === 1)
+              .select(col("bucket"), col("user_id"), col("ts"),
+                col("event_id"), col("event_type"), col("value"),
+                col("tot").as("n_updates"))
+          }
+        // one file per bucket dir — see Similarity.ivfIndex's build
+        merged.repartition(col("bucket"))
+          .write.mode("overwrite").partitionBy("bucket").parquet(newGen)
+        // untouched buckets survive byte-for-byte: file-level copy
+        // (generations are immutable ⇒ hardlink, copy fallback)
+        var copied = 0
+        if (old != null) {
+          (0 until nBuckets).filterNot(affected).foreach { b =>
+            val bd = new java.io.File(old, s"bucket=$b")
+            if (bd.isDirectory) {
+              copied += 1
+              graft.FsUtil.linkTree(bd.getAbsolutePath, s"$newGen/bucket=$b")
             }
           }
-          st13LastBatches = st13LastBatches :+ ((affected.size, copied))
-          genPtr.set(newGen)
         }
-        .option("checkpointLocation", ckpt.getAbsolutePath)
-        .trigger(Trigger.AvailableNow()).start()
+        st13LastBatches = st13LastBatches :+ ((affected.size, copied))
+        genPtr.set(newGen)
+      }
       q.awaitTermination()
       val fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
       s.read.parquet(genPtr.get())
@@ -1263,9 +1201,6 @@ object Streaming {
           col("value").as("last_value"), col("n_updates"))
         .orderBy(col("user_id"))
         .localCheckpoint(true)
-    } finally {
-      graft.FsUtil.deleteTree(ckpt)
-      graft.FsUtil.deleteTree(new java.io.File(work))
     }
   }
 
@@ -1692,43 +1627,39 @@ object Streaming {
     * demonstrates); the index build is ingest work shared with s7
     * (found durable, not rebuilt), and the identity baseline is a
     * fingerprint-keyed durable witness (s14's discipline).
-    * Exactly-once: the sink write is keyed by EPOCH — each batch's
-    * answers land in their own `batch-<epochId>` directory with mode
-    * OVERWRITE — so foreachBatch's at-least-once replay (crash after
-    * the sink write but before the checkpoint commit, then restart)
-    * rewrites the same epoch's answers in place instead of
-    * double-appending them. StreamingSpec proves it the hard way:
-    * kill after the first commit, delete that commit record to force
-    * a genuine epoch replay, restart from the checkpoint, and the
-    * served union still bit-matches the one-shot witness. */
-  def st18StreamAnnServe(s0: SparkSession, d: String): DataFrame = {
+    * Exactly-once: the epoch-keyed OVERWRITE sink of [[Epochs.serve]].
+    * StreamingSpec kills after the first commit, deletes that commit
+    * record to force a genuine epoch replay, restarts from the
+    * checkpoint, and the served union still bit-matches the one-shot
+    * witness. */
+  def st18StreamAnnServe(s0: SparkSession, d: String): DataFrame =
+    // the baseline is a durable fingerprint-keyed witness (s14's
+    // discipline) — found, not re-probed, on every later run
+    serveStreamed(s0, d, "st18", st18StartServing)(
+      graft.operators.Similarity.st18OneShotWitness)
+
+  /** The serve side of st18 and st20: [[st18WriteInputs]]' three query
+    * epochs drain through `start` and the served union is gated
+    * against `oneShot` ([[Epochs.servedGate]]). */
+  private def serveStreamed(s0: SparkSession, d: String, tag: String,
+      start: (SparkSession, String, StructType, String, String, String) =>
+        org.apache.spark.sql.streaming.StreamingQuery)
+      (oneShot: (SparkSession, String) => DataFrame): DataFrame = {
     val s = scoped(s0)
-    withWorkspace("st18") { (work, ckpt) =>
-      val inDir = s"$work/in"
-      val outDir = s"$work/out"
-      val schema = st18WriteInputs(s, d, inDir)
-      st18StartServing(s, d, schema, inDir, outDir, ckpt.getAbsolutePath)
-        .awaitTermination()
-      val served = s.read.parquet(s"$outDir/batch-*")
-      // bounded: the identity gate compares ≤ NQueries·K rows — driver-side
-      // multiset equality, not exceptAll shuffles
-      val servedRows = served.select(col("query_id"), col("neighbor_id"),
-        col("cos4"), col("rn"), col("batch_id")).collect()
-      // the baseline is a durable fingerprint-keyed witness (s14's
-      // discipline) — found, not re-probed, on every later run
-      val oneShot = graft.operators.Similarity.st18OneShotWitness(s, d).collect() // bounded: <= NQueries*K witness rows
-      def multiset(rs: Array[org.apache.spark.sql.Row], w: Int) =
-        rs.map(_.toSeq.take(w)).groupBy(identity).view.mapValues(_.length).toMap // local: Seq.take on already-collected gate rows
-      val ok = multiset(servedRows, 4) == multiset(oneShot, 4)
-      val nBatches = servedRows.map(_.getLong(4)).distinct.length.toLong
-      served
-        .withColumn("n_batches", lit(nBatches))
-        .withColumn("serve_ok", lit(ok))
-        .withColumn("batches_ok", lit(nBatches == 3L))
-        .orderBy(col("query_id"), col("rn"))
-        .localCheckpoint(true) // eager: outDir dies with the workspace
+    withWorkspace(tag) { (work, ckpt) =>
+      val (inDir, outDir) = (s"$work/in", s"$work/out")
+      start(s, d, st18WriteInputs(s, d, inDir), inDir, outDir,
+        ckpt.getAbsolutePath).awaitTermination()
+      Epochs.servedGate(s, outDir, oneShot(s, d), nEpochs = 3)
     }
   }
+
+  /** A query epoch's (vec_id, v, nrm) frame: the embedding as doubles
+    * and its norm, the shape every index probe and insert takes. */
+  private def vectors(batch: DataFrame): DataFrame =
+    batch.select(col("vec_id"),
+        graft.functions.VectorFunctions.toDoubleArray(col("embedding")).as("v"))
+      .withColumn("nrm", sqrt(graft.functions.VectorFunctions.vecNorm2(col("v"))))
 
   /** Writes the three mtime-pinned query micro-batch files for
     * [[st18StreamAnnServe]] (vec_id % 3 split) and returns their
@@ -1748,38 +1679,18 @@ object Streaming {
   }
 
   /** Starts (or RESTARTS, from the same checkpoint) the st18 serving
-    * stream. The sink contract is the exactly-once half of the
-    * operator: every epoch's answers are written with mode OVERWRITE
-    * into the epoch's own `batch-<epochId>` directory, so a replayed
-    * epoch — foreachBatch is at-least-once across restarts —
-    * rewrites identical bytes in place rather than appending a second
-    * copy. (One streaming query per sink dir; with several, key the
-    * dir by (queryId, epochId).) Probing is deterministic per epoch:
-    * the input file set for an epoch is fixed by the checkpoint's
-    * offsets log and the index generation is immutable, so an
-    * overwrite never changes surviving bytes, only restores them. */
+    * stream: each query epoch is answered by the s7 probe of the
+    * immutable IVF index and served through [[Epochs.serve]]. */
   private[graft] def st18StartServing(s: SparkSession, d: String,
                                       schema: StructType, inDir: String,
                                       outDir: String, ckpt: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Similarity
-    import graft.functions.VectorFunctions.vecNorm2
     val (path, anchors, nCells) = Similarity.ivfIndex(s, d)
     val nProbe = math.max(4, nCells / 4)
-    s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val prep = batch
-          .select(col("vec_id"),
-            graft.functions.VectorFunctions.toDoubleArray(col("embedding")).as("v"))
-          .withColumn("nrm", sqrt(vecNorm2(col("v"))))
-        Similarity.probeIndex(s, path, prep, anchors, nProbe)
-          .withColumn("batch_id", lit(id))
-          .write.mode("overwrite").parquet(s"$outDir/batch-$id")
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
+    Epochs.serve(s, schema, inDir, outDir, ckpt) { batch =>
+      Similarity.probeIndex(s, path, vectors(batch), anchors, nProbe)
+    }
   }
 
   // ------------------------------------------------------------- ST20
@@ -1790,78 +1701,40 @@ object Streaming {
     * drain against the IMMUTABLE graph artifact through the same
     * [[graft.operators.Similarity.graphBeamAuto]] dispatch as every
     * one-shot serve (the exec lane's second streaming consumer);
-    * exactly-once via st18's per-epoch OVERWRITE sink contract.
-    * Gates: `serve_ok` — the union of the per-batch answers is
-    * multiset-identical to the one-shot graph probe over the same
-    * query set (batch splitting must not perturb a point-read serve:
-    * per-query beam state is independent, so equality is exact) —
-    * and `batches_ok` (all three micro-batches drained). */
-  def st20StreamGraphServe(s0: SparkSession, d: String): DataFrame = {
-    val s = scoped(s0)
-    withWorkspace("st20") { (work, ckpt) =>
-      val inDir = s"$work/in"
-      val outDir = s"$work/out"
-      val schema = st18WriteInputs(s, d, inDir) // same 3-batch query split
-      val q = st20StartServing(s, d, schema, inDir, outDir,
-        ckpt.getAbsolutePath)
-      q.awaitTermination()
-      val served = s.read.parquet(s"$outDir/batch-*")
-      // bounded: the identity gate compares ≤ NQueries·K rows —
-      // driver-side multiset equality, st18's shape
-      val servedRows = served.select(col("query_id"), col("neighbor_id"),
-        col("cos4"), col("rn"), col("batch_id")).collect()
-      val oneShot = graft.operators.Similarity.s21AnnGraph(s, d)
-        .select(col("query_id"), col("neighbor_id"), col("cos4"), col("rn"))
-        .collect() // bounded: ≤ NQueries·K one-shot rows
-      def multiset(rs: Array[org.apache.spark.sql.Row], w: Int) =
-        rs.map(_.toSeq.take(w)).groupBy(identity).view.mapValues(_.length).toMap // local: Seq.take on already-collected gate rows
-      val ok = multiset(servedRows, 4) == multiset(oneShot, 4)
-      val nBatches = servedRows.map(_.getLong(4)).distinct.length.toLong
-      served
-        .withColumn("n_batches", lit(nBatches))
-        .withColumn("serve_ok", lit(ok))
-        .withColumn("batches_ok", lit(nBatches == 3L))
-        .orderBy(col("query_id"), col("rn"))
-        .localCheckpoint(true) // eager: outDir dies with the workspace
-    }
-  }
+    * exactly-once and gated through [[Epochs]], as st18 is. Gates:
+    * `serve_ok` — the union of the per-batch answers is
+    * multiset-identical to the one-shot graph probe over the same query
+    * set (batch splitting must not perturb a point-read serve: per-query
+    * beam state is independent, so equality is exact) — and
+    * `batches_ok` (all three micro-batches drained). */
+  def st20StreamGraphServe(s0: SparkSession, d: String): DataFrame =
+    serveStreamed(s0, d, "st20", st20StartServing)(
+      graft.operators.Similarity.s21AnnGraph)
 
   /** Starts (or RESTARTS, from the same checkpoint) the st20 graph
-    * serving stream — st18's sink contract (epoch-keyed OVERWRITE
-    * directories) over the graph beam instead of the IVF probe. */
+    * serving stream: [[Epochs.serve]] over the graph beam instead of
+    * the IVF probe. */
   private[graft] def st20StartServing(s: SparkSession, d: String,
                                       schema: StructType, inDir: String,
                                       outDir: String, ckpt: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Similarity
-    import graft.functions.VectorFunctions.vecNorm2
     val (path, anchors) = Similarity.graphIndexPath(s, d)
     val g = s.read.parquet(s"$path/adj")
     val reps = s.read.parquet(s"$path/reps")
-    s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val prep = batch
-          .select(col("vec_id"),
-            graft.functions.VectorFunctions.toDoubleArray(col("embedding")).as("v"))
-          .withColumn("nrm", sqrt(vecNorm2(col("v"))))
-          .localCheckpoint(true) // consumed by seeds + the beam query side
-        val scored = Similarity.graphBeamAuto(s,
-          ids => g.filter(col("vec_id").isin(ids: _*)),
-          prep.select(col("vec_id").as("query_id"), col("v").as("qv"),
-            col("nrm").as("qn")),
-          Similarity.graphSeeds(prep, anchors, reps),
-          beam = Similarity.beamForAnchors(anchors))
-          .filter(col("query_id") =!= col("neighbor_id"))
-        Similarity.rerank(scored)
-          .select(col("query_id"), col("neighbor_id"), col("cos4"), col("rn"))
-          .withColumn("batch_id", lit(id))
-          .write.mode("overwrite").parquet(s"$outDir/batch-$id")
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
+    Epochs.serve(s, schema, inDir, outDir, ckpt) { batch =>
+      val prep = vectors(batch)
+        .localCheckpoint(true) // consumed by seeds + the beam query side
+      val scored = Similarity.graphBeamAuto(s,
+        ids => g.filter(col("vec_id").isin(ids: _*)),
+        prep.select(col("vec_id").as("query_id"), col("v").as("qv"),
+          col("nrm").as("qn")),
+        Similarity.graphSeeds(prep, anchors, reps),
+        beam = Similarity.beamForAnchors(anchors))
+        .filter(col("query_id") =!= col("neighbor_id"))
+      Similarity.rerank(scored)
+        .select(col("query_id"), col("neighbor_id"), col("cos4"), col("rn"))
+    }
   }
 
   // ------------------------------------------------------------- ST19
@@ -1873,13 +1746,10 @@ object Streaming {
     * forward lists against base + the APPLIED epochs' rows (s22's
     * kernel — the exact sel-sparse lane, so epoch lists are
     * deterministic functions of the applied state) plus the reverse
-    * back-link delta, and publishes both as DETERMINISTIC
-    * `epoch-<id>.parquet` files moved in with REPLACE_EXISTING, with
-    * the applied-epochs manifest updated by atomic rename AFTER the
-    * move — st12's exactly-once recipe verbatim: a replay of a crash
-    * between move and manifest recomputes against the SAME pre-epoch
-    * state (unapplied files are excluded from the candidate read) and
-    * rewrites identical bytes over themselves.
+    * back-link delta, and publishes both legs through [[Epochs]]: a
+    * replay of a crash between move and manifest recomputes against
+    * the SAME pre-epoch state (unapplied files are excluded from the
+    * candidate read) and rewrites identical bytes over themselves.
     *
     * Epoch-order note (FreshDiskANN semantics): an epoch's rows see
     * base + earlier epochs as candidates, later arrivals reach them
@@ -1903,30 +1773,28 @@ object Streaming {
     * a production vector service taking many SMALL epochs pays the
     * whole shard (and its base-frame shuffle) per epoch. The search
     * lane instead runs ONE beam search per inserted point against the
-    * current applied state (base + applied epochs, the same 3-way
-    * merged point fetch serving uses): the visited set IS the
-    * candidate list, pruned to the top-DEG exact cosines, and the
-    * back-link delta is derived exactly as in the batch lane — epoch
-    * cost ∝ batch · beam · DEG point reads, shard-free and
-    * base-shuffle-free. The exactly-once publish recipe (deterministic
-    * epoch files moved in, manifest renamed AFTER) is shared verbatim,
-    * and a replay recomputes against the same applied-only state, so
-    * every st19 replay/identity property holds per lane. Gates: the
-    * same three as st19 (`append_ok`, reach ≥ 0.9, recall ≥ 0.7 vs
-    * exact) — the spec additionally bounds the search lane's recall
-    * against the batch lane's on the same corpus. */
+    * current applied state (base + applied epochs, the same merged
+    * point fetch serving uses): the visited set IS the candidate list,
+    * pruned to the top-DEG exact cosines, and the back-link delta is
+    * derived exactly as in the batch lane — epoch cost ∝ batch · beam
+    * · DEG point reads, shard-free and base-shuffle-free. Both lanes
+    * publish through [[Epochs]] and recompute a replay against the same
+    * applied-only state, so every st19 replay/identity property holds
+    * per lane. Gates: the same three as st19 (`append_ok`, reach ≥ 0.9,
+    * recall ≥ 0.7 vs exact) — the spec additionally bounds the search
+    * lane's recall against the batch lane's on the same corpus. */
   def st21StreamGraphInsert(s0: SparkSession, d: String): DataFrame =
-    st19IngestAt(s0, d, nEpochs = 3, lane = "search", tag = "st21")
+    st19IngestAt(s0, d, nEpochs = 3, searchLane = true, tag = "st21")
 
   private[graft] def st19IngestAt(s0: SparkSession, d: String, nEpochs: Int,
-                                  lane: String = "batch",
+                                  searchLane: Boolean = false,
                                   tag: String = "st19")
       : DataFrame = {
     import graft.operators.Similarity
     val s = scoped(s0)
     val raw = graft.sources.Tables.embeddings(s, d)
     val (incrPath, anchors) = Similarity.graphIncrPath(s, d)
-    withWorkspace("st19") { (work, ckpt) =>
+    withWorkspace(tag) { (work, ckpt) =>
       val gDir = s"$work/graph"
       // hardlink the immutable base generation + entry reps into the
       // workspace (st12's staging; links cost metadata only and the
@@ -1938,7 +1806,7 @@ object Streaming {
       raw.filter(col("vec_id") % 10 === 9).repartition(nEpochs)
         .write.parquet(inDir)
       st19StartIngest(s, raw.schema, inDir, gDir, anchors,
-        ckpt.getAbsolutePath, lane = lane).awaitTermination()
+        ckpt.getAbsolutePath, searchLane = searchLane).awaitTermination()
       // exactly-once audit: the delta store holds every batch id
       // exactly once and nothing else
       val batchIds = raw.filter(col("vec_id") % 10 === 9).select(col("vec_id"))
@@ -1947,8 +1815,8 @@ object Streaming {
       val appendedOk = deltaIds.count() == nBatch &&
         deltaIds.distinct().count() == nBatch &&
         deltaIds.join(batchIds, Seq("vec_id"), "left_anti").count() == 0
-      // serve through the streamed artifact: the same 3-way merged
-      // point fetch + fused serve/reach beam as s22
+      // serve through the streamed artifact: the same merged point
+      // fetch + fused serve/reach beam as s22
       val e = Similarity.prepared(s, d)
       val sample = e.filter(col("vec_id") % 10 === 9)
         .orderBy(col("vec_id")).limit(32).localCheckpoint(true)
@@ -1957,7 +1825,7 @@ object Streaming {
         Similarity.fetchIncrFn(s, gDir), anchors, reps, e, sample)
       val all = scored.filter(col("query_id") < Similarity.nQueries &&
         col("query_id") =!= col("neighbor_id"))
-      Similarity.withRecallGate(s, d, "st19",
+      Similarity.withRecallGate(s, d, tag,
         Similarity.rerank(all).select(col("query_id"), col("neighbor_id"),
           col("cos4"), col("rn")),
         floor = 0.7)
@@ -1968,251 +1836,110 @@ object Streaming {
     }
   }
 
-  /** Applied-state point fetch for the search lane: base + the APPLIED
-    * epochs' delta/back files only (the replay-determinism contract —
-    * a half-published epoch's own files must not feed its recompute),
-    * merged exactly like [[Similarity.fetchIncr]] including the
-    * [[Similarity.FetchBackBudget]] hub bound. */
-  private def fetchAppliedState(s: SparkSession, gDir: String,
-      applied: Set[Long]): Seq[Long] => DataFrame = {
-    import graft.operators.Similarity
-    val epochFile = "^epoch-(\\d+)\\.parquet$".r
-    def appliedFiles(leg: String): Seq[String] =
-      Option(new java.io.File(s"$gDir/$leg").listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .filter(f => epochFile.findFirstMatchIn(f.getName)
-          .exists(mm => applied.contains(mm.group(1).toLong)))
-        .map(_.getAbsolutePath).toSeq.sorted
-    // the three store frames are built ONCE per epoch (file listing +
-    // parquet footers are not free, and a beam pays one fetch PER
-    // ROUND); each round's call only adds the key filter, which is
-    // what prunes row groups
-    val base0 = s.read.parquet(s"$gDir/base/adj")
-      .select(col("vec_id"), col("v"), col("nrm"), col("nbrs"))
-    val dFiles = appliedFiles("delta/adj")
-    val delta0 =
-      if (dFiles.isEmpty) None
-      else Some(s.read.parquet(dFiles: _*)
-        .select(col("vec_id"), col("v"), col("nrm"), col("nbrs")))
-    val bFiles = appliedFiles("back")
-    val back0 =
-      if (bFiles.isEmpty) None
-      else Some(s.read.parquet(bFiles: _*))
-    ids => {
-      val base = base0.filter(col("vec_id").isin(ids: _*))
-      val nodes = delta0 match {
-        case None => base
-        case Some(dl) =>
-          base.unionByName(dl.filter(col("vec_id").isin(ids: _*)))
-      }
-      back0 match {
-        case None => nodes
-        case Some(b0) if ids.size <= Similarity.FetchLocalMaxIds =>
-          // round-16: driver-side three-leg merge at beam-round frontier
-          // sizes — one shuffle-free scan instead of a groupBy + join
-          // per round; identical lists ([[Similarity.fetchIncr]]'s
-          // local lane, same bounded-collect contract)
-          import s.implicits._
-          val raw = nodes
-            .select(col("vec_id"), col("v"), col("nrm"), col("nbrs"),
-              lit(null).cast("bigint").as("extra"))
-            .unionByName(b0.filter(col("vec_id").isin(ids: _*))
-              .select(col("vec_id"), lit(null).cast("array<double>").as("v"),
-                lit(null).cast("double").as("nrm"),
-                lit(null).cast("array<bigint>").as("nbrs"), col("extra")))
-            .collect() // bounded: ≤ |ids| node rows + their back rows, ids ≤ FetchLocalMaxIds
-          val extras = raw.filter(!_.isNullAt(4))
-            .groupBy(_.getLong(0)).map { case (id, rows) =>
-              id -> rows.map(_.getLong(4)).sorted
-                .take(Similarity.FetchBackBudget).toSeq
-            }
-          raw.filter(_.isNullAt(4)).toSeq.map { r =>
-            val nbrs = r.getSeq[Long](3)
-            val nbrs2 = extras.get(r.getLong(0)) match {
-              case Some(ex) => (nbrs ++ ex).distinct.sorted
-              case None => nbrs
-            }
-            (r.getLong(0), r.getSeq[Double](1), r.getDouble(2), nbrs2)
-          }.toDF("vec_id", "v", "nrm", "nbrs")
-        case Some(b0) =>
-          val bk = b0.filter(col("vec_id").isin(ids: _*))
-            .groupBy("vec_id").agg(
-              slice(array_sort(collect_list(col("extra"))),
-                1, Similarity.FetchBackBudget).as("extra"))
-          nodes.join(bk, Seq("vec_id"), "left")
-            .select(col("vec_id"), col("v"), col("nrm"),
-              when(col("extra").isNull, col("nbrs"))
-                .otherwise(array_sort(array_distinct(
-                  concat(col("nbrs"), col("extra"))))).as("nbrs"))
-      }
-    }
-  }
-
-  /** Measured lane-cost constants (BASELINE round-16 shoot-out, 100×
-    * corpus, 8 GiB harness): the BATCH lane re-shuffles base + batch
-    * through the shard kernel every epoch — ~19 s over 3 epochs at a
-    * 450k-row base ⇒ ~14 µs per shuffled row — while the SEARCH lane
-    * pays one convergence-length beam per inserted point, round-
-    * latency-bound in a job-per-hop execution model: ~478 s per
-    * ~6.7k-insert epoch ⇒ ~71 ms per point, INDEPENDENT of base size.
-    * The two lanes share the exactly-once publish contract, so the
-    * dispatch is pure cost arithmetic. */
-  private[graft] val BatchLaneSecPerRow = 14e-6
-  private[graft] val SearchLaneSecPerInsert = 0.071
-
-  /** Round-16 refinement #2 closed: the insert lane is picked by the
-    * MEASURED cost model, not by declaration — `search` exactly when
-    * its per-point cost undercuts the batch lane's per-epoch base
-    * shuffle, which at these constants is bases past ~5000× the epoch
-    * batch (the ≥10⁸-row serving-tier regime the search lane exists
-    * for). st19/st21 keep their declared lanes as the two benchmarked
-    * extremes; `lane = "auto"` dispatches per epoch through this. */
-  private[graft] def insertLaneFor(nBase: Long, nBatch: Long): String =
-    if (SearchLaneSecPerInsert * nBatch <
-        BatchLaneSecPerRow * (nBase.toDouble + nBatch)) "search" else "batch"
-
   /** Starts (or RESTARTS, from the same checkpoint) st19's graph
-    * ingest stream. Sink contract as documented on
-    * [[st19StreamGraphIngest]]. */
+    * ingest stream, the batch lane or (`searchLane`) st21's. Sink
+    * contract as documented on [[st19StreamGraphIngest]]. */
   private[graft] def st19StartIngest(s: SparkSession, schema: StructType,
       inDir: String, gDir: String,
       anchors: Array[(Int, Array[Double])], ckpt: String,
-      lane: String = "batch")
+      searchLane: Boolean = false)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Similarity
-    import graft.functions.VectorFunctions.vecNorm2
-    require(lane == "batch" || lane == "search" || lane == "auto",
-      s"unknown insert lane: $lane")
-    s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val applied = readAppliedEpochs(gDir)
-        if (!applied.contains(id)) {
-          // candidate state = base + APPLIED epochs only: a replay of
-          // a crash between the move and the manifest must recompute
-          // against the same pre-epoch state (the half-published
-          // epoch's own files are excluded), making the rewrite
-          // byte-identical
+    Epochs.drain(s, schema, inDir, ckpt) { (batch, id) =>
+      Epochs.applyOnce(gDir, gDir, id) { (stage, applied) =>
+        // candidate state = base + APPLIED epochs only: a replay of
+        // a crash between the move and the manifest must recompute
+        // against the same pre-epoch state (the half-published
+        // epoch's own files are excluded), making the rewrite
+        // byte-identical
+        val deltaFiles = Epochs.appliedFiles(s"$gDir/delta/adj", applied)
+        val fetch = Similarity.fetchIncrFn(s, s"$gDir/base/adj", deltaFiles,
+          Epochs.appliedFiles(s"$gDir/back", applied))
+        val reps = s.read.parquet(s"$gDir/reps")
+        val bprep = vectors(batch)
+          .withColumn("sel", lit(true))
+          .localCheckpoint(true) // both lanes consume it repeatedly
+        val fwd = (if (!searchLane) {
           val base = s.read.parquet(s"$gDir/base/adj")
             .select(col("vec_id"), col("v"), col("nrm"))
             .withColumn("sel", lit(false))
-          val deltaDir = new java.io.File(s"$gDir/delta/adj")
-          val epochFile = "^epoch-(\\d+)\\.parquet$".r
-          val appliedFiles = Option(deltaDir.listFiles())
-            .getOrElse(Array.empty[java.io.File])
-            .filter(f => epochFile.findFirstMatchIn(f.getName)
-              .exists(mm => applied.contains(mm.group(1).toLong)))
-            .map(_.getAbsolutePath)
           val prev =
-            if (appliedFiles.isEmpty) base.limit(0)
-            else s.read.parquet(appliedFiles.toIndexedSeq: _*)
+            if (deltaFiles.isEmpty) base.limit(0)
+            else s.read.parquet(deltaFiles: _*)
               .select(col("vec_id"), col("v"), col("nrm"))
               .withColumn("sel", lit(false))
-          val bprep = batch.select(col("vec_id"),
-            graft.functions.VectorFunctions.toDoubleArray(col("embedding")).as("v"))
-            .withColumn("nrm", sqrt(vecNorm2(col("v"))))
-            .withColumn("sel", lit(true))
-            .localCheckpoint(true) // both lanes consume it repeatedly
-          // auto: per-epoch dispatch by the measured cost model — the
-          // counts are parquet metadata reads, not scans
-          val effLane =
-            if (lane != "auto") lane
-            else insertLaneFor(base.count() + prev.count(), bprep.count())
-          val fwd = (if (effLane == "batch")
-            // BRIDGE edges (Similarity.bridgeEdges): the shard kNN
-            // alone packs a clustered epoch's lists with same-epoch
-            // siblings — zero applied-state edges, zero back-links,
-            // an unreachable island (the clustered-fixture audit).
-            // Each batch node's top-BridgeK beam results against the
-            // APPLIED state (the same replay-deterministic fetch the
-            // search lane uses) union into its forward list, so the
-            // epoch stays reachable through exactly the carriers
-            // serving will expand. Cost ∝ batch · beam point reads —
-            // the lane's per-epoch base shuffle still dominates.
-            // the bridge search runs at the BASE width, not the wide
-            // incr serving width: it needs ~BridgeK reachable carriers
-            // near the point, not a recall-grade answer, and the
-            // α-diversified base navigates at L = base width at every
-            // measured decade — per-epoch cost stays batch-linear with
-            // a small constant (the reach gate adjudicates sufficiency)
-            Similarity.withBridge(
-              Similarity.graphAdjacency(
-                base.unionByName(prev).unionByName(bprep), anchors),
-              Similarity.bridgeEdges(s, fetchAppliedState(s, gDir, applied),
-                anchors, s.read.parquet(s"$gDir/reps"), bprep,
-                Similarity.beamForAnchors(anchors)))
-          else {
-            // SEARCH lane (st21): one beam search per inserted point
-            // against the applied state — the visited set is the
-            // candidate list (FreshDiskANN's insert), pruned to the
-            // top-DEG exact cosines with the family's (-cos4, id) tie.
-            // Epochs run as CHUNKED driver-loop mini-batches (sorted
-            // ids, ≤ GraphBeamExecMinQueries per chunk): per-query
-            // beams are independent, so chunking is content-neutral,
-            // driver state stays bounded at any epoch size, and the
-            // insert never pays the executor lane's per-round job
-            // overhead (measured: a 6.7k-query epoch through the exec
-            // lane cost ~8 min at the 100× corpus; the same epoch as
-            // 14 driver chunks is point-read-bounded).
-            val reps = s.read.parquet(s"$gDir/reps")
-            val beamW = Similarity.beamForAnchorsWide(anchors)
-            val chunks = batch.select(col("vec_id"))
-              .collect().map(_.getLong(0)).sorted // bounded: one epoch's batch ids
-              .grouped(Similarity.GraphBeamExecMinQueries).toSeq
-            val fetch = fetchAppliedState(s, gDir, applied)
-            val scored = chunks.map { chunk =>
-              val q = bprep.filter(col("vec_id").isin(chunk.toSeq: _*))
-              Similarity.graphBeam(s, fetch,
-                q.select(col("vec_id").as("query_id"), col("v").as("qv"),
-                  col("nrm").as("qn")),
-                Similarity.graphSeeds(q, anchors, reps), beam = beamW)
-            }.reduce(_ unionByName _)
-              .filter(col("query_id") =!= col("neighbor_id"))
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy(col("query_id"))
-              .orderBy(col("cos4").desc, col("neighbor_id"))
-            // per-point window: partitions are epoch-batch-bounded
-            val lists = scored
-              .withColumn("rn", row_number().over(w))
-              .filter(col("rn") <= Similarity.GraphDeg)
-              .groupBy(col("query_id"))
-              .agg(expr("transform(array_sort(collect_list(struct(rn, neighbor_id)))," +
-                " x -> x.neighbor_id)").as("nbrs"))
-            // LEFT from the batch: a point whose beam found nothing
-            // still lands in the delta exactly once (append_ok)
-            bprep.select(col("vec_id"), col("v"), col("nrm"))
-              .join(lists, col("vec_id") === col("query_id"), "left")
-              .select(col("vec_id"), col("v"), col("nrm"),
-                coalesce(col("nbrs"),
-                  expr("CAST(array() AS array<bigint>)")).as("nbrs"))
-          })
-            .localCheckpoint(true) // consumed twice: delta + back staging
-          // stage with Spark, publish by deterministic-name move
-          val stage = s"$gDir.stage-epoch-$id"
-          fwd.coalesce(1).write.mode("overwrite").parquet(s"$stage/delta")
-          fwd.select(explode(col("nbrs")).as("vec_id"),
-              col("vec_id").as("extra"))
-            .coalesce(1).write.mode("overwrite").parquet(s"$stage/back")
-          def publish(leg: String, dstDir: String): Unit = {
-            val parts = new java.io.File(s"$stage/$leg").listFiles()
-              .filter(_.getName.endsWith(".parquet")) // local: the ONE coalesced part file
-            java.nio.file.Files.createDirectories(
-              java.nio.file.Paths.get(dstDir))
-            parts.foreach { f =>
-              java.nio.file.Files.move(f.toPath,
-                java.nio.file.Paths.get(dstDir, s"epoch-$id.parquet"),
-                java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-            }
-          }
-          publish("delta", s"$gDir/delta/adj")
-          publish("back", s"$gDir/back")
-          graft.FsUtil.deleteTree(new java.io.File(stage))
-          markEpochApplied(gDir, applied + id)
-        }
+          // BRIDGE edges (Similarity.bridgeEdges): the shard kNN
+          // alone packs a clustered epoch's lists with same-epoch
+          // siblings — zero applied-state edges, zero back-links,
+          // an unreachable island (the clustered-fixture audit).
+          // Each batch node's top-BridgeK beam results against the
+          // APPLIED state (the same replay-deterministic fetch the
+          // search lane uses) union into its forward list, so the
+          // epoch stays reachable through exactly the carriers
+          // serving will expand. Cost ∝ batch · beam point reads —
+          // the lane's per-epoch base shuffle still dominates.
+          // the bridge search runs at the BASE width, not the wide
+          // incr serving width: it needs ~BridgeK reachable carriers
+          // near the point, not a recall-grade answer, and the
+          // α-diversified base navigates at L = base width at every
+          // measured decade — per-epoch cost stays batch-linear with
+          // a small constant (the reach gate adjudicates sufficiency)
+          Similarity.withBridge(
+            Similarity.graphAdjacency(
+              base.unionByName(prev).unionByName(bprep), anchors),
+            Similarity.bridgeEdges(s, fetch, anchors, reps, bprep,
+              Similarity.beamForAnchors(anchors)))
+        } else {
+          // SEARCH lane (st21): one beam search per inserted point
+          // against the applied state — the visited set is the
+          // candidate list (FreshDiskANN's insert), pruned to the
+          // top-DEG exact cosines with the family's (-cos4, id) tie.
+          // Epochs run as CHUNKED driver-loop mini-batches (sorted
+          // ids, ≤ GraphBeamExecMinQueries per chunk): per-query
+          // beams are independent, so chunking is content-neutral,
+          // driver state stays bounded at any epoch size, and the
+          // insert never pays the executor lane's per-round job
+          // overhead (measured: a 6.7k-query epoch through the exec
+          // lane cost ~8 min at the 100× corpus; the same epoch as
+          // 14 driver chunks is point-read-bounded).
+          val beamW = Similarity.beamForAnchorsWide(anchors)
+          val chunks = batch.select(col("vec_id"))
+            .collect().map(_.getLong(0)).sorted // bounded: one epoch's batch ids
+            .grouped(Similarity.GraphBeamExecMinQueries).toSeq
+          val scored = chunks.map { chunk =>
+            val q = bprep.filter(col("vec_id").isin(chunk.toSeq: _*))
+            Similarity.graphBeam(s, fetch,
+              q.select(col("vec_id").as("query_id"), col("v").as("qv"),
+                col("nrm").as("qn")),
+              Similarity.graphSeeds(q, anchors, reps), beam = beamW)
+          }.reduce(_ unionByName _)
+            .filter(col("query_id") =!= col("neighbor_id"))
+          val w = org.apache.spark.sql.expressions.Window
+            .partitionBy(col("query_id"))
+            .orderBy(col("cos4").desc, col("neighbor_id"))
+          // per-point window: partitions are epoch-batch-bounded
+          val lists = scored
+            .withColumn("rn", row_number().over(w))
+            .filter(col("rn") <= Similarity.GraphDeg)
+            .groupBy(col("query_id"))
+            .agg(expr("transform(array_sort(collect_list(struct(rn, neighbor_id)))," +
+              " x -> x.neighbor_id)").as("nbrs"))
+          // LEFT from the batch: a point whose beam found nothing
+          // still lands in the delta exactly once (append_ok)
+          bprep.select(col("vec_id"), col("v"), col("nrm"))
+            .join(lists, col("vec_id") === col("query_id"), "left")
+            .select(col("vec_id"), col("v"), col("nrm"),
+              coalesce(col("nbrs"),
+                expr("CAST(array() AS array<bigint>)")).as("nbrs"))
+        })
+          .localCheckpoint(true) // consumed twice: delta + back staging
+        fwd.coalesce(1).write.mode("overwrite").parquet(s"$stage/delta")
+        fwd.select(explode(col("nbrs")).as("vec_id"),
+            col("vec_id").as("extra"))
+          .coalesce(1).write.mode("overwrite").parquet(s"$stage/back")
+        Seq("delta" -> s"$gDir/delta/adj", "back" -> s"$gDir/back")
       }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
+    }
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

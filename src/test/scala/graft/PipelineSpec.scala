@@ -2501,18 +2501,6 @@ class PipelineSpec extends AnyFunSuite {
       "sidecar histogram drifted from the corpus label counts")
   }
 
-  test("st19/st21 auto lane dispatch follows the measured cost model") {
-    // the recorded 100× shoot-out shape: 450k-row base, 6.7k-insert
-    // epochs — the batch lane won outright there
-    assert(Streaming.insertLaneFor(450000L, 6700L) === "batch")
-    // the ≥10⁸-row serving-tier regime the search lane exists for
-    assert(Streaming.insertLaneFor(200000000L, 6700L) === "search")
-    // crossover ≈ 5000× the epoch batch at the measured constants
-    val nb = 10000L
-    assert(Streaming.insertLaneFor(2500L * nb, nb) === "batch")
-    assert(Streaming.insertLaneFor(10000L * nb, nb) === "search")
-  }
-
   test("s22 graph append: recall + reachability gates, delta discipline, determinism") {
     import org.apache.spark.sql.functions._
     val exact = topk(Similarity.s1BruteForce(spark, sf01))

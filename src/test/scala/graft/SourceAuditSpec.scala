@@ -216,4 +216,31 @@ class SourceAuditSpec extends AnyFunSuite {
     assert(hits.isEmpty,
       s"${hits.size} lines bypass graft.FsUtil's artifact protocol:\n${hits.mkString("\n")}")
   }
+
+  test("one epoch layer: outside graft.streaming.Epochs, src/main reads no applied-epochs manifest, " +
+    "stages no epoch, moves no file over another and globs no served epochs, and the budgeted " +
+    "base/delta/back merge exists once, in Similarity.fetchIncrFrom") {
+    val root = repoRoot
+    // FsUtil's atomic write and linkTree replace files too: that is the
+    // artifact layer, not a copy of the epoch publish
+    val epochToken = java.util.regex.Pattern.compile(
+      """_applied_epochs|stage-epoch|REPLACE_EXISTING|batch-\*""")
+    val defLine = java.util.regex.Pattern.compile("""^\s*(?:private\S*\s+)?def\s+(\w+)""")
+    val hits = scalaFiles(new java.io.File(root, "src/main/scala")).flatMap { f =>
+      val rel = root.toPath.relativize(f.toPath.toAbsolutePath.normalize)
+      val lines = scala.io.Source.fromFile(f, "UTF-8").getLines().map(code).toVector
+      lines.zipWithIndex.collect {
+        case (c, i) if epochToken.matcher(c).find() &&
+            !Set("Epochs.scala", "FsUtil.scala")(f.getName) =>
+          s"$rel:${i + 1}: ${c.trim}"
+        case (c, i) if c.contains("FetchBackBudget") && !c.contains("val FetchBackBudget") &&
+            !(f.getName == "Similarity.scala" &&
+              lines.take(i + 1).reverseIterator.map(defLine.matcher(_))
+                .find(_.find()).exists(_.group(1) == "fetchIncrFrom")) =>
+          s"$rel:${i + 1}: ${c.trim}"
+      }
+    }
+    assert(hits.isEmpty,
+      s"${hits.size} lines copy a part of the epoch layer or of the merged fetch:\n${hits.mkString("\n")}")
+  }
 }

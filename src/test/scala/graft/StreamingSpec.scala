@@ -14,10 +14,22 @@ class StreamingSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTest.session
   val sf = "/root/testdata/sf0.001"
 
+  /** Every fixture dir a test makes: owner-tagged, so the dirs of a
+    * killed run are reclaimable by their dead owner's pid, and deleted
+    * when the test ends, pass or fail. */
+  private val fixtures = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+  private def tempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(s"${prefix}_${FsUtil.ownerTag}").toFile
+    fixtures.add(d)
+    d.toString
+  }
+  override def withFixture(test: NoArgTest) =
+    try super.withFixture(test)
+    finally while (!fixtures.isEmpty) FsUtil.deleteTree(fixtures.poll())
+
   test("watermark drops data later than the delay in append mode") {
-    import java.nio.file.Files
     import spark.implicits._
-    val in = Files.createTempDirectory("graft_late_in").toString
+    val in = tempDir("graft_late_in")
     // one query, maxFilesPerTrigger=1 → one micro-batch per file, the
     // watermark advancing between batches (a restart-based variant is
     // impossible here: the memory sink only supports checkpoint
@@ -63,11 +75,11 @@ class StreamingSpec extends AnyFunSuite {
 
   test("checkpointed query resumes across restarts: old state merges with new files") {
     import java.nio.file.Files
-    val in = Files.createTempDirectory("graft_ckpt_in").toString
-    val cp = Files.createTempDirectory("graft_ckpt_cp").toString
+    val in = tempDir("graft_ckpt_in")
+    val cp = tempDir("graft_ckpt_cp")
     val ev = graft.sources.Tables.events(spark, sf).cache()
     def writeHalf(pred: org.apache.spark.sql.Column, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft_ckpt_tmp").toString
+      val tmp = tempDir("graft_ckpt_tmp")
       ev.filter(pred).coalesce(1).write.mode("overwrite").parquet(tmp)
       val f = new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet")).head
       Files.copy(f.toPath, java.nio.file.Paths.get(s"$in/$name.parquet"))
@@ -93,8 +105,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("foreachBatch sink persists micro-batch results that reassemble the batch answer") {
-    import java.nio.file.Files
-    val outDir = Files.createTempDirectory("graft_feb").toString
+    val outDir = tempDir("graft_feb")
     val ev = graft.sources.Tables.events(spark, sf)
     val schema = ev.schema
     // foreachBatch is the production escape hatch: arbitrary batch sinks
@@ -124,7 +135,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("windowed agg over two micro-batches equals single-batch result") {
     import java.nio.file.Files
-    val srcDir = Files.createTempDirectory("graft_stream_src").toString
+    val srcDir = tempDir("graft_stream_src")
     val ev = graft.sources.Tables.events(spark, sf).cache()
 
     // split input by event_id parity into two parquet files that arrive
@@ -133,7 +144,7 @@ class StreamingSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$srcDir/b0")
     val firstFile = new java.io.File(s"$srcDir/b0").listFiles()
       .filter(_.getName.endsWith(".parquet")).head
-    val in = Files.createTempDirectory("graft_stream_in").toString
+    val in = tempDir("graft_stream_in")
     Files.copy(firstFile.toPath, java.nio.file.Paths.get(s"$in/part0.parquet"))
 
     val stream = spark.readStream.schema(ev.schema)
@@ -178,9 +189,9 @@ class StreamingSpec extends AnyFunSuite {
 
     // time-split: first half of the month arrives in batch 0, rest in batch 1
     val tMid = java.sql.Timestamp.valueOf("2024-01-15 00:00:00")
-    val in = Files.createTempDirectory("graft_sess_in").toString
+    val in = tempDir("graft_sess_in")
     def deliver(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = Files.createTempDirectory("graft_sess_b").toString
+      val tmp = tempDir("graft_sess_b")
       df.coalesce(1).write.mode("overwrite").parquet(tmp)
       val f = new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet")).head
       Files.copy(f.toPath, java.nio.file.Paths.get(s"$in/$name.parquet"))
@@ -248,9 +259,9 @@ class StreamingSpec extends AnyFunSuite {
     // the old 1-hour horizon this replay re-emits far-apart duplicates
     // and the batch DISTINCT oracle breaks.
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val in = Files.createTempDirectory("graft_st7_in").toString
+    val in = tempDir("graft_st7_in")
     for (b <- 0 until 3) {
-      val tmp = Files.createTempDirectory("graft_st7_b").toString
+      val tmp = tempDir("graft_st7_b")
       docs.filter(col("doc_id") % 3 === b).coalesce(1).write.mode("overwrite").parquet(tmp)
       val f = new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet")).head
       Files.copy(f.toPath, java.nio.file.Paths.get(s"$in/b$b.parquet"))
@@ -284,9 +295,9 @@ class StreamingSpec extends AnyFunSuite {
     // rule pass plus a commutative windowed aggregate must land on the
     // same per-(hour, lang) keep rates as a single-batch replay.
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val in = Files.createTempDirectory("graft_st9_in").toString
+    val in = tempDir("graft_st9_in")
     for (b <- 0 until 3) {
-      val tmp = Files.createTempDirectory("graft_st9_b").toString
+      val tmp = tempDir("graft_st9_b")
       docs.filter(col("doc_id") % 3 === b).coalesce(1).write.mode("overwrite").parquet(tmp)
       val f = new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet")).head
       Files.copy(f.toPath, java.nio.file.Paths.get(s"$in/b$b.parquet"))
@@ -341,10 +352,10 @@ class StreamingSpec extends AnyFunSuite {
     // must continue session numbering through the tombstone state
     val byTime = events.orderBy(col("ts"), col("event_id")).collect()
     val n = byTime.length
-    val in = Files.createTempDirectory("graft_st11_in").toString
+    val in = tempDir("graft_st11_in")
     Seq(byTime.slice(0, n / 3), byTime.slice(n / 3, 2 * n / 3),
         byTime.slice(2 * n / 3, n)).zipWithIndex.foreach { case (rows, b) =>
-      val tmp = Files.createTempDirectory("graft_st11_b").toString
+      val tmp = tempDir("graft_st11_b")
       spark.createDataFrame(
         spark.sparkContext.parallelize(rows.toIndexedSeq), events.schema)
         .coalesce(1).write.mode("overwrite").parquet(tmp)
@@ -359,7 +370,7 @@ class StreamingSpec extends AnyFunSuite {
     val stream = scoped.readStream.schema(events.schema)
       .option("maxFilesPerTrigger", "1").parquet(in)
     val out = graft.streaming.Streaming.st11Transform(scoped, stream)
-    val ckpt = Files.createTempDirectory("graft_st11_ck").toString
+    val ckpt = tempDir("graft_st11_ck")
     val q = out.writeStream.format("memory").queryName("graft_st11mb")
       .option("checkpointLocation", ckpt)
       .outputMode(OutputMode.Append())
@@ -410,9 +421,9 @@ class StreamingSpec extends AnyFunSuite {
     // final answer is right only if ValueState accumulates across them
     val events = graft.sources.Tables.events(spark, sf)
       .select(col("event_id"), col("ts"), col("user_id"), col("value"))
-    val in = Files.createTempDirectory("graft_st10_in").toString
+    val in = tempDir("graft_st10_in")
     for (b <- 0 until 3) {
-      val tmp = Files.createTempDirectory("graft_st10_b").toString
+      val tmp = tempDir("graft_st10_b")
       events.filter(col("event_id") % 3 === b).coalesce(1)
         .write.mode("overwrite").parquet(tmp)
       val f = new java.io.File(tmp).listFiles()
@@ -435,7 +446,7 @@ class StreamingSpec extends AnyFunSuite {
     val stream = scoped.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(in)
     val out = graft.streaming.Streaming.st10Transform(scoped, stream)
-    val ckpt = Files.createTempDirectory("graft_st10_ck").toString
+    val ckpt = tempDir("graft_st10_ck")
     val q = out.writeStream.format("memory").queryName("graft_st10mb")
       .option("checkpointLocation", ckpt)
       .outputMode(OutputMode.Append())
@@ -503,7 +514,7 @@ class StreamingSpec extends AnyFunSuite {
   test("st12 compaction trigger unit: bytes rule counts only files below " +
     "the row-group threshold; count backstop fires independently") {
     import graft.operators.Similarity
-    val dir = java.nio.file.Files.createTempDirectory("graft_trig").toString
+    val dir = tempDir("graft_trig")
     def put(cell: Int, name: String, size: Int): Unit = {
       val d = new java.io.File(dir, s"cell=$cell"); d.mkdirs()
       java.nio.file.Files.write(new java.io.File(d, name).toPath,
@@ -531,7 +542,7 @@ class StreamingSpec extends AnyFunSuite {
     "written destination generation does not duplicate rows") {
     import graft.operators.Similarity
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("graft_refold").toString
+    val work = tempDir("graft_refold")
     val src = s"$work/gen0"
     (0 until 40).map(i => (i.toLong, i % 4)).toDF("vec_id", "cell")
       .repartition(col("cell"))
@@ -628,7 +639,7 @@ class StreamingSpec extends AnyFunSuite {
       walk(new java.io.File(root)).map(f => f.getAbsolutePath -> f.length).toSet
     }
     val baseBefore = snapshot(basePath)
-    val work = java.nio.file.Files.createTempDirectory("graft_soak").toString
+    val work = tempDir("graft_soak")
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
     }
@@ -790,8 +801,7 @@ class StreamingSpec extends AnyFunSuite {
     // run the streamed ingest but capture the workspace artifact
     // content before teardown, via the epoch hook
     val raw = graft.sources.Tables.embeddings(spark, sf)
-    val work = java.nio.file.Files.createTempDirectory("graft_st19_one")
-      .toString
+    val work = tempDir("graft_st19_one")
     def rm(f: java.io.File): Unit = graft.FsUtil.deleteTree(f)
     try {
       val gDir = s"$work/graph"
@@ -824,6 +834,114 @@ class StreamingSpec extends AnyFunSuite {
       "single-epoch streamed back-links diverged from the batch append's")
   }
 
+  test("merged fetch over applied epochs: two stores with the same content, " +
+    "differing only in epoch file sizes and order, give identical forward " +
+    "lists with one node row per id, the latest applied epoch's") {
+    import graft.operators.Similarity
+    import graft.streaming.Epochs
+    val s = spark
+    import s.implicits._
+    def adj(rows: Seq[(Long, Seq[Long])]) = rows
+      .map { case (id, nbrs) => (id, Array.fill(64)(id.toDouble), 1.0, nbrs) }
+      .toDF("vec_id", "v", "nrm", "nbrs")
+    def back(fwd: Seq[(Long, Seq[Long])]) =
+      fwd.flatMap { case (id, nbrs) => nbrs.map(n => (n, id)) }.toDF("vec_id", "extra")
+    // epoch 0 appends 100..149; epoch 1 appends 150..199 and re-lists
+    // node 100 with a new list; epoch 2 is half-published (its files
+    // are in place, the manifest does not list it)
+    val e0 = (100L until 150L).map(i => i -> Seq(i % 10))
+    val e1 = (100L -> Seq(5L, 7L)) +: (150L until 200L).map(i => i -> Seq(i % 10))
+    val e2 = Seq(100L -> Seq(9L), 200L -> Seq(9L))
+    val epochs = Seq(0L -> e0, 1L -> e1, 2L -> e2)
+    // one parquet file per epoch leg; `big` writes it without dictionary
+    // or compression, several times the size of the default encoding
+    def writeLeg(df: org.apache.spark.sql.DataFrame, dir: String, id: Long,
+                 big: Boolean): Long = {
+      val tmp = tempDir("graft_fetch_leg")
+      val w = df.coalesce(1).write.mode("overwrite")
+      (if (big) w.option("compression", "none").option("parquet.enable.dictionary", "false")
+       else w).parquet(tmp)
+      val part = new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet")).head
+      val dst = java.nio.file.Paths.get(dir, s"epoch-$id.0.parquet")
+      java.nio.file.Files.createDirectories(dst.getParent)
+      java.nio.file.Files.move(part.toPath, dst)
+      dst.toFile.length
+    }
+    def store(order: Seq[Long], bigEpoch: Long): (String, Map[Long, Long]) = {
+      val dir = tempDir("graft_fetch_store")
+      adj((0L until 10L).map(i => i -> Seq((i + 1) % 10))).write.parquet(s"$dir/base/adj")
+      val sizes = order.map { e =>
+        val rows = epochs.find(_._1 == e).get._2
+        writeLeg(back(rows), s"$dir/back", e, big = false)
+        e -> writeLeg(adj(rows), s"$dir/delta/adj", e, big = e == bigEpoch)
+      }.toMap
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "_applied_epochs.txt"), "0\n1\n")
+      (dir, sizes)
+    }
+    val (a, sizesA) = store(Seq(0L, 1L, 2L), bigEpoch = 0L)
+    val (b, sizesB) = store(Seq(2L, 1L, 0L), bigEpoch = 1L)
+    assert(sizesA(0L) > sizesA(1L) && sizesB(0L) < sizesB(1L),
+      s"the fixture must invert the epoch file sizes: A=$sizesA B=$sizesB")
+    val ids = (0L until 10L) ++ (100L to 200L)
+    def lists(dir: String, reverse: Boolean, ids: Seq[Long]): Map[Long, Seq[Long]] = {
+      val applied = Epochs.applied(dir)
+      def files(leg: String) = {
+        val fs = Epochs.appliedFiles(s"$dir/$leg", applied)
+        if (reverse) fs.reverse else fs
+      }
+      val rows = Similarity.fetchIncrFn(s, s"$dir/base/adj", files("delta/adj"),
+        files("back"))(ids).collect()
+      val got = rows.map(r => r.getLong(0) -> r.getSeq[Long](3).toSeq)
+      assert(got.map(_._1).distinct.length == got.length,
+        s"several node rows for one id: ${got.groupBy(_._1).filter(_._2.length > 1).keys}")
+      got.toMap
+    }
+    val la = lists(a, reverse = false, ids)
+    val lb = lists(b, reverse = true, ids)
+    assert(la == lb, "the same content fetched different lists")
+    assert(la(100L) == Seq(5L, 7L), s"node 100 is not epoch 1's row: ${la(100L)}")
+    assert(!la.contains(200L) && !la(9L).contains(200L),
+      "the unapplied epoch leaked into the fetch")
+    assert(la.keySet == ids.filter(_ < 200L).toSet)
+    // the distributed lane (past FetchLocalMaxIds ids) applies the same rule
+    val wide = ids ++ (1000000L until 1000000L + Similarity.FetchLocalMaxIds)
+    assert(lists(a, reverse = false, wide) == la && lists(b, reverse = true, wide) == la,
+      "the distributed merge differs from the driver merge")
+  }
+
+  test("epoch drain: one epoch per input file under its source-log batch id, " +
+    "also when a restart plans one micro-batch over two files") {
+    import spark.implicits._
+    val in = tempDir("graft_drain_in")
+    val ckpt = s"${tempDir("graft_drain_ck")}/ck"
+    val t0 = System.currentTimeMillis() - 60000
+    def put(i: Long): Unit = {
+      val tmp = tempDir("graft_drain_t")
+      Seq(i).toDF("x").coalesce(1).write.mode("overwrite").parquet(tmp)
+      val part = new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet")).head
+      val dst = new java.io.File(in, s"f$i.parquet")
+      java.nio.file.Files.copy(part.toPath, dst.toPath)
+      dst.setLastModified(t0 + i * 1000)
+    }
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Seq[Long])]()
+    def run(): Unit = graft.streaming.Epochs.drain(spark,
+        new org.apache.spark.sql.types.StructType().add("x", "long"), in, ckpt) { (b, id) =>
+      seen.add(id -> b.collect().map(_.getLong(0)).toSeq) // bounded: one row per file
+    }.awaitTermination()
+    put(0); put(1); run()
+    // the crash window: the source logged batch 1's file, but neither
+    // the offsets log nor the commit log holds batch 1; the restart
+    // plans batch 1 over the logged file AND the next new one
+    Seq("offsets", "commits").foreach { d =>
+      Seq("1", ".1.crc").foreach(n => new java.io.File(s"$ckpt/$d", n).delete())
+    }
+    assert(new java.io.File(s"$ckpt/sources/0/1").isFile)
+    put(2); run()
+    import scala.jdk.CollectionConverters._
+    assert(seen.asScala.toSeq == Seq(0L -> Seq(0L), 1L -> Seq(1L), 1L -> Seq(1L), 2L -> Seq(2L)),
+      "each file must drain as its own epoch, replayed under the same id")
+  }
+
   test("st19 exactly-once: kill after the first commit, force an epoch " +
     "replay — no double-append, content identical to the straight run") {
     import graft.operators.Similarity
@@ -838,10 +956,8 @@ class StreamingSpec extends AnyFunSuite {
         .select(col("vec_id"), col("nbrs")).collect()
         .map(r => (r.getLong(0), r.getSeq[Long](1).toSeq)).toSet
     def rm(f: java.io.File): Unit = graft.FsUtil.deleteTree(f)
-    val workA = java.nio.file.Files
-      .createTempDirectory("graft_st19_replay").toString
-    val workB = java.nio.file.Files
-      .createTempDirectory("graft_st19_straight").toString
+    val workA = tempDir("graft_st19_replay")
+    val workB = tempDir("graft_st19_straight")
     try {
       // straight 3-epoch run → reference content
       stage(s"$workB/graph")
@@ -932,8 +1048,7 @@ class StreamingSpec extends AnyFunSuite {
     "no double-append, index content bit-identical to the batch append") {
     import graft.operators.Similarity
     val (basePath, anchors, nCells) = Similarity.baseIndexPath(spark, sf)
-    val work = java.nio.file.Files.createTempDirectory("graft_st12_restart")
-      .toString
+    val work = tempDir("graft_st12_restart")
     def rm(f: java.io.File): Unit = graft.FsUtil.deleteTree(f)
     try {
       val idxDir = s"$work/index"
@@ -1039,9 +1154,9 @@ class StreamingSpec extends AnyFunSuite {
     "eviction; incremental arrival filters at the current watermark (st17's basis)") {
     import java.nio.file.Files
     import spark.implicits._
-    val work = Files.createTempDirectory("graft_wmlag").toString
+    val work = tempDir("graft_wmlag")
     def writeOne(dir: String, name: String, mtime: Long, ts: Seq[String]): Unit = {
-      val tmp = Files.createTempDirectory("graft_wmlag_t").toString
+      val tmp = tempDir("graft_wmlag_t")
       ts.toDF("raw").select(col("raw").cast("timestamp").as("ts"))
         .coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
@@ -1062,7 +1177,7 @@ class StreamingSpec extends AnyFunSuite {
     writeOne(inA, "b0.parquet", t0, Seq("2024-01-01 10:00:00", "2024-01-01 20:00:00"))
     writeOne(inA, "b1.parquet", t0 + 10000, Seq("2024-01-01 10:30:00"))
     def drain(in: String, name: String): Long = {
-      val ck = Files.createTempDirectory("graft_wmlag_ck").toString
+      val ck = tempDir("graft_wmlag_ck")
       spark.catalog.dropTempView(name)
       val q = spark.readStream.schema("ts timestamp")
         .option("maxFilesPerTrigger", "1").parquet(in)
@@ -1085,7 +1200,7 @@ class StreamingSpec extends AnyFunSuite {
     // incremental arrival: the SAME 2-batch layout drops with no lag
     val inC = s"$work/c"
     writeOne(inC, "c0.parquet", t0, Seq("2024-01-01 10:00:00", "2024-01-01 20:00:00"))
-    val ck = Files.createTempDirectory("graft_wmlag_ck").toString
+    val ck = tempDir("graft_wmlag_ck")
     spark.catalog.dropTempView("graft_wmlag_c")
     val q = spark.readStream.schema("ts timestamp").parquet(inC)
       .withWatermark("ts", "1 hour")
@@ -1148,8 +1263,7 @@ class StreamingSpec extends AnyFunSuite {
     "epoch replay, restart from the checkpoint — served union still " +
     "bit-matches the one-shot witness") {
     val sf01 = "/root/testdata/sf0.01"
-    val work = java.nio.file.Files.createTempDirectory("graft_st18_restart")
-      .toString
+    val work = tempDir("graft_st18_restart")
     def rm(f: java.io.File): Unit = graft.FsUtil.deleteTree(f)
     try {
       val inDir = s"$work/in"; val outDir = s"$work/out"
