@@ -52,7 +52,7 @@ object BlockCholesky {
       IntStream.range(k + 1, q).parallel().forEach { i =>
         if (colK(i) != null) piv(i) = toDM(solveXU(fromDM(colK(i)), lkkT))
       }
-      BlockSweep.Step(piv, (j, col, b) => update(col, j, k, b))
+      BlockSweep.Step(piv, (j, col, _, b) => update(col, j, k, b))
     }
   }
 

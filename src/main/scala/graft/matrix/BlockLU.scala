@@ -11,9 +11,10 @@ import LocalLA._
   * rows only within each block row (the reference's contract — pivoting
   * confined to base-case blocks with the permutation carried as an index
   * vector, reference Matrix/LUDecomposition.java:92-106,141-146).
-  * `lines` is the persisted factor, partitioned by `HashPartitioner(q)`:
-  * line i holds L_ij (j<i), the packed L\U_ii and U_ij (j>i); L and U
-  * are narrow views of it. */
+  * `lines` is the persisted factor in the row layout
+  * ([[BlockModel.RowPartitioner]]): line i holds L_ij (j<i), the packed
+  * L\U_ii and U_ij (j>i); L and U are narrow views of it that keep the
+  * layout. */
 final case class BlockLUResult(lines: BlockSweep.Lines, perms: Array[Array[Int]], n: Int, blk: Int) {
   val l: Blocks = view(_ >= _, splitLU(_)._1)
   val u: Blocks = view(_ <= _, splitLU(_)._2)
@@ -22,15 +23,15 @@ final case class BlockLUResult(lines: BlockSweep.Lines, perms: Array[Array[Int]]
     perms.zipWithIndex.flatMap { case (p, k) => p.map(_ + k * blk) }
 
   private def view(keep: (Int, Int) => Boolean, diag: Array[Array[Double]] => Array[Array[Double]]): Blocks =
-    lines.flatMap { case (i, row) =>
+    lines.mapPartitions(_.flatMap { case (i, row) =>
       row.indices.iterator.filter(j => row(j) != null && keep(i, j))
         .map(j => ((i, j), if (i == j) toDM(diag(fromDM(row(j)))) else row(j)))
-    }
+    }, preservesPartitioning = true)
 }
 
 /** Right-looking blocked LU factorization on block rows, one
   * [[BlockSweep]] (q+1 jobs: one per step, one to materialize the
-  * factor).
+  * factor; A in the row layout is grouped into rows with no shuffle).
   *
   * The reference realizes the same math as a recursive 2×2 quadrant
   * scheme over MapReduce: base-case `ludcmp` on the driver, distributed
@@ -70,7 +71,7 @@ object BlockLU {
       IntStream.range(k + 1, q).parallel().forEach { j =>
         if (rowK(j) != null) piv(j) = toDM(forwardSolveUnitLower(packed, permuteRows(fromDM(rowK(j)), indx)))
       }
-      BlockSweep.Step(piv, (i, row, b) => eliminate(row, i, k, indx, b))
+      BlockSweep.Step(piv, (i, row, _, b) => eliminate(row, i, k, indx, b))
     }
     BlockLUResult(lu, perms, n, blk)
   }

@@ -1,6 +1,7 @@
 package graft.matrix
 
-import org.apache.spark.SparkContext
+import scala.reflect.ClassTag
+import org.apache.spark.{Partition, Partitioner, SparkContext, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.mllib.linalg.{DenseMatrix => MlDM, Matrix => MlM}
 import org.apache.spark.mllib.linalg.distributed.BlockMatrix
@@ -12,9 +13,49 @@ import org.apache.spark.mllib.linalg.distributed.BlockMatrix
   * block files carry the global extent in-band
   * (/root/reference/Matrix/LUDecomposition.java:153-192); here the extent
   * is the block index, and an absent block is a zero block.
+  *
+  * One row layout, [[RowPartitioner]]: block (i, j) and line i live in
+  * partition i. [[MatrixGen.blocks]], [[fromRows]], the inverse, the LU
+  * factor's views and the solutions produce it, and [[BlockSweep.group]]
+  * and [[Inversion.solveFactored]] group such input into lines without
+  * a shuffle.
   */
 object BlockModel {
   type Blocks = RDD[((Int, Int), MlDM)]
+
+  /** Block row layout over q partitions: key (i, j) and key i go to
+    * partition i. Equal only to a RowPartitioner of the same q, never to
+    * a HashPartitioner, which places (i, j) elsewhere: Spark skips the
+    * shuffle of a join or group exactly when the partitioners are equal. */
+  final class RowPartitioner(val q: Int) extends Partitioner {
+    def numPartitions: Int = q
+    def getPartition(key: Any): Int = key match {
+      case (i: Int, _) => i
+      case i: Int => i
+    }
+    override def equals(other: Any): Boolean = other match {
+      case p: RowPartitioner => p.q == q
+      case _ => false
+    }
+    override def hashCode: Int = 31 * q + 7
+  }
+
+  /** q partitions in [[RowPartitioner]] layout, partition i holding
+    * `row(i)`: a source that places block row i where the sweeps group
+    * it, with nothing shuffled. */
+  private[matrix] final class RowRDD[T: ClassTag](sc: SparkContext, q: Int, row: Int => Iterator[T])
+      extends RDD[T](sc, Nil) {
+    override val partitioner: Option[Partitioner] = Some(new RowPartitioner(q))
+    protected def getPartitions: Array[Partition] =
+      Array.tabulate[Partition](q)(i => new Partition { def index: Int = i })
+    def compute(split: Partition, context: TaskContext): Iterator[T] = row(split.index)
+  }
+
+  /** `a` keyed by block row, block (i, j) becoming (i, f((i, j), block));
+    * the row layout is kept when `a` has it. */
+  private[matrix] def byRow[V](a: Blocks, q: Int)(f: ((Int, Int), MlDM) => V): RDD[(Int, V)] =
+    a.mapPartitions(_.map { case (ij, m) => (ij._1, f(ij, m)) },
+      preservesPartitioning = a.partitioner.contains(new RowPartitioner(q)))
 
   /** GEMM via MLlib BlockMatrix (GridPartitioner + netlib gemm per block
     * pair — the Spark-native form of the reference's Schur row·row dot
@@ -82,7 +123,7 @@ object BlockModel {
   }
 
   /** Build uniform blocks from a distributed row representation
-    * `(rowIndex, values)` — one shuffle keyed by block id, the Spark
+    * `(rowIndex, values)` — one shuffle into the row layout, the Spark
     * analog of the reference's parallel physical partitioner
     * (/root/reference/Matrix/Partition_A.java:64-274). */
   def fromRows(rows: RDD[(Long, Array[Double])], n: Int, blk: Int): Blocks = {
@@ -94,7 +135,7 @@ object BlockModel {
         val slice = java.util.Arrays.copyOfRange(vec, bj * blk, (bj + 1) * blk)
         ((bi, bj), (iLoc, slice))
       }
-    }.groupByKey(math.max(rows.getNumPartitions, q)).mapValues { parts =>
+    }.groupByKey(new RowPartitioner(q)).mapValues { parts =>
       val rowsArr = Array.ofDim[Double](blk, blk)
       parts.foreach { case (iLoc, slice) => rowsArr(iLoc) = slice }
       LocalLA.toDM(rowsArr)

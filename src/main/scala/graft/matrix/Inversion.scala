@@ -1,7 +1,7 @@
 package graft.matrix
 
 import java.util.stream.IntStream
-import org.apache.spark.{HashPartitioner, SparkContext}
+import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.mllib.linalg.{DenseMatrix => MlDM}
 import org.apache.spark.rdd.RDD
@@ -22,10 +22,12 @@ import LocalLA.{backSolveUpper, forwardSolveUnitLower, fromDM, toDM}
   * Each block product, fused with its update, is one
   * [[BlockKernel.gemm]] pass (C + s·A·B), as in every sweep here.
   * It runs on [[BlockSweep]], the protocol BlockLU and BlockCholesky
-  * share: A is grouped by block row once, its only shuffle; each step
-  * broadcasts row k with D⁻¹ in place of M_kk, one broadcast per block
-  * (at most n·blk doubles), and releases the previous step's RDD and
-  * broadcasts once its job has materialized the rows. The pivot
+  * share: A is grouped by block row once, with no shuffle when A is in
+  * the row layout ([[BlockModel.RowPartitioner]]) and one otherwise;
+  * each step fetches only M_kk and broadcasts only D⁻¹ (blk² doubles
+  * each way), every row i≠k reads M_kj from row k in the step's cache,
+  * and the previous step's RDD and broadcasts are released once its job
+  * has materialized the rows. The pivot
   * inversion is the driver's serial work between two step jobs, while
   * every executor core idles; its solves run in column panels across
   * the driver's cores. The last step runs in the caller's action.
@@ -46,26 +48,30 @@ object Inversion {
     sweep(a, n / blk, blk)
   }
 
-  /** Step k broadcasts row k with D⁻¹ in slot k (no task reads M_kk). */
+  /** Step k fetches M_kk and broadcasts D⁻¹ alone; the result keeps the row layout. */
   private def sweep(a: Blocks, q: Int, blk: Int): Blocks =
-    BlockSweep.run(a.sparkContext, BlockSweep.group(a, q, q), 0 until q, q, materialize = false) { (k, rowK) =>
-      val piv = rowK.clone()
+    BlockSweep.run(a.sparkContext, BlockSweep.group(a, q, q), 0 until q, q, materialize = false,
+        fetch = (k, j) => j == k) { (k, rowK) =>
+      val piv = new Array[MlDM](q)
       piv(k) = invertPivot(Option(rowK(k)).getOrElse(MlDM.zeros(blk, blk)))
-      BlockSweep.Step(piv, (i, row, b) => eliminate(row, i, k, b))
-    }.flatMap { case (i, row) => row.iterator.zipWithIndex.collect { case (m, j) if m != null => ((i, j), m) } }
+      BlockSweep.Step(piv, (i, row, lineK, b) => eliminate(row, i, k, b(k), lineK))
+    }.mapPartitions(_.flatMap { case (i, row) => row.iterator.zipWithIndex.collect { case (m, j) if m != null => ((i, j), m) } },
+      preservesPartitioning = true)
 
-  /** Step k of the sweep on block row i; `piv` holds row k's broadcasts. */
-  private def eliminate(row: Array[MlDM], i: Int, k: Int, piv: Array[Broadcast[MlDM]]): Array[MlDM] =
+  /** Step k of the sweep on block row i: `dInv` is D⁻¹'s broadcast,
+    * `rowK` reads row k of the step's input (not called by row k). */
+  private def eliminate(row: Array[MlDM], i: Int, k: Int, dInvB: Broadcast[MlDM], rowK: () => Array[MlDM]): Array[MlDM] =
     if (i != k && row(k) == null) row // N = 0
     else {
-      val dInv = piv(k).value
+      val dInv = dInvB.value
       if (i == k) Array.tabulate(row.length)(j => if (j == k) dInv else if (row(j) == null) null else gemm(null, 1, dInv, row(j)))
       else {
         val negC = gemm(null, -1, row(k), dInv)
+        val mk = rowK()
         Array.tabulate(row.length) { j =>
           if (j == k) negC
-          else if (piv(j) == null) row(j)
-          else gemm(row(j), 1, negC, piv(j).value)
+          else if (mk(j) == null) row(j)
+          else gemm(row(j), 1, negC, mk(j))
         }
       }
     }
@@ -144,13 +150,14 @@ object Inversion {
   }
 
   /** [[solve]] against an existing factor, which stays persisted. P·B
-    * is joined onto the factor's lines, a shuffle of B only. 2q jobs, and
-    * the last step runs in the caller's action: 2q+1 with it. */
+    * is joined onto the factor's lines, which are in the row layout: no
+    * shuffle when B is too, one shuffle of B otherwise. 2q jobs, and the
+    * last step runs in the caller's action: 2q+1 with it. */
   def solveFactored(sc: SparkContext, lu: BlockLUResult, b: Blocks, m: Int): Blocks = {
     val blk = lu.blk; val q = lu.n / blk; val w = (m + blk - 1) / blk; val perms = lu.perms
     // the permutation is block-diagonal: within-block row remaps
-    val pb = b.map { case ((i, j), mb) => (i, (j, toDM(LocalLA.permuteRows(fromDM(mb), perms(i))))) }
-    val lines = lu.lines.cogroup(pb, new HashPartitioner(q)).mapValues { case (rows, bs) =>
+    val pb = byRow(b, q) { case ((i, j), mb) => (j, toDM(LocalLA.permuteRows(fromDM(mb), perms(i)))) }
+    val lines = lu.lines.cogroup(pb, new RowPartitioner(q)).mapValues { case (rows, bs) =>
       val line = java.util.Arrays.copyOf(rows.headOption.getOrElse(new Array[MlDM](q)), q + w)
       bs.foreach { case (j, mb) => line(q + j) = mb }
       line
@@ -197,8 +204,9 @@ object Inversion {
       val d = fromDM(Option(line(k)).getOrElse(MlDM.zeros(blk, blk)))
       val piv = new Array[MlDM](q + w)
       IntStream.range(q, q + w).parallel().forEach(c => if (line(c) != null) piv(c) = toDM(solve(d, fromDM(line(c)))))
-      BlockSweep.Step(piv, (i, row, b) => substituteRow(row, if (down) i > k else i < k, i == k, k, b))
-    }.flatMap { case (i, line) => (q until q + w).iterator.filter(line(_) != null).map(c => ((i, c - q), line(c))) }
+      BlockSweep.Step(piv, (i, row, _, b) => substituteRow(row, if (down) i > k else i < k, i == k, k, b))
+    }.mapPartitions(_.flatMap { case (i, line) => (q until q + w).iterator.filter(line(_) != null).map(c => ((i, c - q), line(c))) },
+      preservesPartitioning = true)
   }
 
   /** One line's step k; `piv` holds line k's solved B slots. */

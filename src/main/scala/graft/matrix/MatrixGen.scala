@@ -36,14 +36,14 @@ object MatrixGen {
     a
   }
 
-  /** Distributed n×n blocks, n % blk == 0. */
+  /** Distributed n×n blocks, n % blk == 0, in the row layout
+    * ([[BlockModel.RowPartitioner]]): partition i generates block row i,
+    * so no block is shuffled, here or when a sweep groups them. */
   def blocks(sc: SparkContext, n: Int, blk: Int, seed: Long, diagBoost: Double = 0.0): BlockModel.Blocks = {
     require(n % blk == 0, s"n=$n must be a multiple of blk=$blk")
     val q = n / blk
-    val ids = for (bi <- 0 until q; bj <- 0 until q) yield (bi, bj)
-    sc.parallelize(ids, math.min(ids.size, 64)).map { case (bi, bj) =>
-      ((bi, bj), LocalLA.toDM(localBlock(blk, seed, bi, bj, diagBoost)))
-    }
+    new BlockModel.RowRDD(sc, q, bi =>
+      Iterator.tabulate(q)(bj => ((bi, bj), LocalLA.toDM(localBlock(blk, seed, bi, bj, diagBoost)))))
   }
 
   /** Same matrix assembled locally (test oracle). */

@@ -12,13 +12,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * co-partitioned Schur cogroup,
   * /root/reference/Matrix/LUDecomposition.java:653-659 — bucketing is
   * the declarative Spark form of that manual exchange.) */
-class BucketedJoinSpec extends AnyFunSuite {
+class BucketedJoinSpec extends AnyFunSuite with SparkTest.TempDirs {
   lazy val spark: SparkSession = SparkTest.session
 
   test("bucketed tables join without any Exchange") {
-    import java.nio.file.Files
     // external tables via explicit path — warehouse dir is static config
-    val wh = Files.createTempDirectory("graft_wh").toString
+    val wh = tempDir("graft_wh")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force the SMJ path
     try {
       val sf = "/root/testdata/sf0.001"

@@ -9,7 +9,7 @@ import org.apache.spark.mllib.linalg.{DenseMatrix => MlDM}
   * residual bounds against the verified semantics L·U = A[indx,:] and
   * A⁻¹[:,indx] = U⁻¹·L⁻¹, plus local-vs-distributed agreement and the
   * M6 byte round trip on the reference golden files. */
-class MatrixSpec extends AnyFunSuite {
+class MatrixSpec extends AnyFunSuite with SparkTest.TempDirs {
   lazy val spark = SparkTest.session
   lazy val sc = spark.sparkContext
   val seed = 42L
@@ -72,8 +72,9 @@ class MatrixSpec extends AnyFunSuite {
   }
 
   /** Exactly equal block sets: same keys, same bits in every block. */
-  private def assertSameBits(got: Blocks, want: Map[(Int, Int), MlDM], what: String): Unit = {
-    val g = got.collect().toMap
+  private def assertSameBits(got: Blocks, want: Map[(Int, Int), MlDM], what: String): Unit =
+    assertSameBits(got.collect().toMap, want, what)
+  private def assertSameBits(g: Map[(Int, Int), MlDM], want: Map[(Int, Int), MlDM], what: String): Unit = {
     assert(g.keySet == want.keySet, s"$what: block keys differ")
     for ((key, m) <- want)
       assert(java.util.Arrays.equals(toDense(g(key)).values, toDense(m).values), s"$what $key not bit-identical")
@@ -342,6 +343,54 @@ class MatrixSpec extends AnyFunSuite {
     }
   }
 
+  test("row layout: on MatrixGen input the inverse, BlockLU.factor and solveFactored shuffle nothing; " +
+    "an unlaid-out copy takes exactly one shuffle and gives the same bits (q=4, q=8)") {
+    val blk = 16
+    for (q <- Seq(4, 8)) {
+      val n = q * blk; val m = 2 * blk
+      val a = MatrixGen.blocks(sc, n, blk, seed, diagBoost = n.toDouble).persist()
+      val b = MatrixGen.blocks(sc, n, blk, seed + 1).filter { case ((_, j), _) => j < 2 }.persist()
+      // map drops the partitioner: the same blocks, in no declared layout
+      val aCopy = a.map(identity).persist(); val bCopy = b.map(identity).persist()
+      Seq(a, b, aCopy, bCopy).foreach(_.count())
+      assert(a.partitioner.contains(new RowPartitioner(q)) && aCopy.partitioner.isEmpty)
+      // the blocks `body` returns, after checking the shuffles its action ran
+      def shuffles[A](what: String, laidOut: Boolean)(body: => A): A = {
+        val (bytes, stages, out) = org.apache.spark.ShuffleCounter(sc)(body)
+        if (laidOut) assert(bytes == 0 && stages == 0, s"q=$q $what: $stages shuffles, $bytes bytes")
+        else assert(bytes > 0 && stages == 1, s"q=$q unlaid-out $what: $stages shuffles, $bytes bytes")
+        out
+      }
+      def blocks(x: => Blocks) = x.collect().toMap
+      assertSameBits(shuffles("inverse", laidOut = false)(blocks(Inversion.inverse(sc, aCopy, n, blk))),
+        shuffles("inverse", laidOut = true)(blocks(Inversion.inverse(sc, a, n, blk))), s"q=$q inverse")
+      val lu = shuffles("BlockLU.factor", laidOut = true)(BlockLU.factor(sc, a, n, blk))
+      val luCopy = shuffles("BlockLU.factor", laidOut = false)(BlockLU.factor(sc, aCopy, n, blk))
+      assertSameBits(luCopy.l, blocks(lu.l), s"q=$q L"); assertSameBits(luCopy.u, blocks(lu.u), s"q=$q U")
+      assertSameBits(shuffles("solveFactored", laidOut = false)(blocks(Inversion.solveFactored(sc, lu, bCopy, m))),
+        shuffles("solveFactored", laidOut = true)(blocks(Inversion.solveFactored(sc, lu, b, m))), s"q=$q X")
+      sc.getPersistentRDDs.values.filterNot(r => Set(a.id, b.id, aCopy.id, bCopy.id)(r.id)).foreach(_.unpersist())
+      Seq(a, b, aCopy, bCopy).foreach(_.unpersist())
+    }
+  }
+
+  test("RowPartitioner equals no HashPartitioner: joins of row-laid-out and hash-partitioned blocks still match every key") {
+    import org.apache.spark.HashPartitioner
+    val q = 4; val blk = 8; val n = q * blk
+    val rows = new RowPartitioner(q)
+    assert(!(rows: org.apache.spark.Partitioner).isInstanceOf[HashPartitioner])
+    assert(rows != new HashPartitioner(q) && new HashPartitioner(q) != rows)
+    assert(rows == new RowPartitioner(q) && rows != new RowPartitioner(q + 1))
+    val a = MatrixGen.blocks(sc, n, blk, seed)
+    val hashed = a.map(identity).partitionBy(new HashPartitioner(q))
+    assert(a.partitioner.contains(rows) && hashed.partitioner.contains(new HashPartitioner(q)))
+    assert(maxAbsDiff(a, hashed) == 0.0 && maxAbsDiff(hashed, a) == 0.0)
+    for ((x, y) <- Seq((a, hashed), (hashed, a))) {
+      val joined = x.fullOuterJoin(y).collect()
+      assert(joined.length == q * q && joined.forall { case (_, (l, r)) => l.isDefined && r.isDefined })
+    }
+  }
+
   test("inverse: an exactly singular leading pivot block raises pivotClamps") {
     // A = [[0, I], [I, I]] is nonsingular (A⁻¹ = [[−I, I], [I, 0]]), but
     // its leading diagonal block is zero: block-confined pivoting must
@@ -411,9 +460,9 @@ class MatrixSpec extends AnyFunSuite {
     a.count()
     val before = org.apache.spark.LiveBroadcasts[MlDM](sc)
     Inversion.inverse(sc, a, n, blk).count()
-    // the last step's q blocks (D⁻¹ and row q−1) stay for the caller's action
+    // a step broadcasts D⁻¹ alone; the last step's stays for the caller's action
     eventually(timeout(10.seconds)) {
-      assert((org.apache.spark.LiveBroadcasts[MlDM](sc) -- before).size <= q)
+      assert((org.apache.spark.LiveBroadcasts[MlDM](sc) -- before).size <= 1)
     }
     a.unpersist()
   }
@@ -423,8 +472,10 @@ class MatrixSpec extends AnyFunSuite {
     val a = MatrixGen.local(n, n, 5L, diagBoost = n.toDouble)
     val rows = spark.sparkContext.parallelize(
       a.indices.map(i => (i.toLong, a(i))), 8)
-    val inv = Inversion.inverseAny(spark.sparkContext, rows, n, blk)
-      .collect().sortBy(_._1).map(_._2)
+    // one shuffle of A into the row layout, one of A⁻¹ back into rows
+    val (_, shuffles, inv0) = org.apache.spark.ShuffleCounter(sc)(Inversion.inverseAny(sc, rows, n, blk).collect())
+    assert(shuffles == 2, s"inverseAny ran $shuffles shuffles")
+    val inv = inv0.sortBy(_._1).map(_._2)
     val prod = LocalLA.gemm(a, inv)
     var resid = 0.0
     for (i <- 0 until n; j <- 0 until n) {
@@ -712,11 +763,14 @@ class MatrixSpec extends AnyFunSuite {
   }
 
   test("reliable checkpoint: LU under sc.setCheckpointDir writes recoverable state") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toFile
+    val dir = new java.io.File(tempDir("graft_ckpt"))
+    val n = 128; val blk = 32
+    val inverse = Inversion.inverse(sc, MatrixGen.blocks(sc, n, blk, seed), n, blk).collect().toMap
     sc.setCheckpointDir(dir.getPath)
     try {
-      val n = 128; val blk = 32
       val a = MatrixGen.blocks(sc, n, blk, seed)
+      // the updates read row k from checkpointed steps: the same bits
+      assertSameBits(Inversion.inverse(sc, a, n, blk), inverse, "checkpointed inverse")
       val lu = BlockLU.factor(sc, a, n, blk)
       val prod = multiply(lu.l, lu.u, blk, n.toLong, n.toLong, n.toLong)
       val permsB = sc.broadcast(lu.perms)
@@ -735,7 +789,7 @@ class MatrixSpec extends AnyFunSuite {
 
   test("distributed sink + windowed/transposed re-read (2048², 16 files)") {
     val n = 2048; val blk = 512
-    val dir = java.nio.file.Files.createTempDirectory("refsink").toFile.getPath
+    val dir = tempDir("graft_refsink")
     val blocks = MatrixGen.blocks(sc, n, blk, seed)
     MatrixBlockIO.writeBlocks(MatrixBlockIO.toRefBlocks(blocks, blk), dir)
     assert(new java.io.File(dir).listFiles().length == (n / blk) * (n / blk))
@@ -769,7 +823,7 @@ class MatrixSpec extends AnyFunSuite {
   }
 
   test("codec round trip on generated block + distributed read") {
-    val dir = java.nio.file.Files.createTempDirectory("refblocks").toFile
+    val dir = tempDir("graft_refblocks")
     val data = MatrixGen.local(64, 16, seed)
     val b = MatrixBlockIO.RefBlock(0, 64, 0, 64, Array.tabulate(64)(identity), data)
     MatrixBlockIO.write(s"$dir/A.0", b)

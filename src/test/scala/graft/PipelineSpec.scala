@@ -12,7 +12,7 @@ import graft.streaming.Streaming
   * candidate completeness, and the encoding assumption mm1's oracle
   * rests on. Runs at sf0.001/sf0.01 — small enough for CI, same code
   * paths as 100 TB. */
-class PipelineSpec extends AnyFunSuite {
+class PipelineSpec extends AnyFunSuite with SparkTest.TempDirs {
   val sf001 = "/root/testdata/sf0.001"
   val sf01 = "/root/testdata/sf0.01"
   lazy val spark: SparkSession = SparkTest.session
@@ -1213,7 +1213,7 @@ class PipelineSpec extends AnyFunSuite {
     // compacted generation, bit for bit
     val (srcPath, anchors, nCells) = Similarity.ivfIndex(spark, d)
     val nProbe = math.max(4, nCells / 4)
-    val dst = java.nio.file.Files.createTempDirectory("graft_s12_compact").toString
+    val dst = tempDir("graft_s12_compact")
     Similarity.compactIndex(spark, srcPath, dst, tomb)
     val masked = Similarity.probeIndex(spark, srcPath,
         Similarity.prepared(spark, d), anchors, nProbe, Some(tomb))
@@ -1278,7 +1278,7 @@ class PipelineSpec extends AnyFunSuite {
     // equal a full rebuild over the updated corpus with the same anchors
     val (srcPath, anchors, nCells) = Similarity.ivfIndex(spark, d)
     val nProbe = math.max(4, nCells / 4)
-    val scratch = java.nio.file.Files.createTempDirectory("graft_s13").toString
+    val scratch = tempDir("graft_s13")
     Similarity.assignQuantize(Similarity.updatedCorpus(spark, d), anchors)
       .write.mode("overwrite").partitionBy("cell").parquet(scratch)
     val upd = Similarity.updatedIds(spark, d)
@@ -2137,7 +2137,7 @@ class PipelineSpec extends AnyFunSuite {
       .find(x20Bucket(_) >= 95L)
     assert(t1.nonEmpty && t2.nonEmpty, "tag scan found no straddling pair")
     assert(x20Bucket(t1.get) < 90L && x20Bucket(t2.get) >= 95L)
-    val dir = java.nio.file.Files.createTempDirectory("graft_x31").toString
+    val dir = tempDir("graft_x31")
     Seq((0L, t1.get), (1L, t2.get)).toDF("doc_id", "text")
       .write.parquet(s"$dir/documents.parquet")
     val got = Dedup.x31LeakageSplit(spark, dir).collect()

@@ -10,12 +10,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * only "layout" tool is its directory-tree-as-schema
   * (/root/reference/Matrix/Read_LU.java:40-64); Hive-style partitioning
   * is the engine's declarative equivalent. */
-class SinkSpec extends AnyFunSuite {
+class SinkSpec extends AnyFunSuite with SparkTest.TempDirs {
   lazy val spark: SparkSession = SparkTest.session
   val sf = "/root/testdata/sf0.001"
 
   test("partitioned parquet sink prunes partitions on read") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val dir = tempDir("graft_part")
     val ev = graft.sources.Tables.events(spark, sf)
     ev.write.partitionBy("event_type").mode("overwrite").parquet(dir)
 
@@ -30,7 +30,7 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("documents partitioned by lang: lang='en' scans exactly one partition") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_lang").toString
+    val dir = tempDir("graft_lang")
     val docs = graft.sources.Tables.documents(spark, sf)
     docs.write.partitionBy("lang").mode("overwrite").parquet(dir)
 
@@ -48,7 +48,7 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("csv and json sources round-trip the relational schema") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_fmt").toString
+    val dir = tempDir("graft_fmt")
     val nat = spark.read.parquet(s"$sf/nation.parquet")
     nat.write.option("header", "true").mode("overwrite").csv(s"$dir/csv")
     nat.write.mode("overwrite").json(s"$dir/json")
@@ -61,7 +61,7 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("orc source round-trips lineitem incl. timestamps, with predicate pushdown") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_orc").toString
+    val dir = tempDir("graft_orc")
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
     li.write.mode("overwrite").orc(dir)
     val back = spark.read.orc(dir)

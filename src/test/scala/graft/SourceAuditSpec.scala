@@ -168,6 +168,20 @@ class SourceAuditSpec extends AnyFunSuite {
     assert(noKernel.isEmpty, s"no block kernel call in ${noKernel.mkString(", ")}")
   }
 
+  test("one line layout, raw rows off the broadcast: BlockSweep, Inversion, BlockLU and BlockCholesky " +
+    "construct no HashPartitioner, and Inversion.scala clones no rowK") {
+    val hits = Seq("BlockSweep", "Inversion", "BlockLU", "BlockCholesky").flatMap { name =>
+      val f = new java.io.File(repoRoot, s"src/main/scala/graft/matrix/$name.scala")
+      val lines = scala.io.Source.fromFile(f, "UTF-8").getLines().map(code).toVector
+      assert(lines.exists(_.contains(s"object $name")), s"$f is not the $name source")
+      lines.zipWithIndex.collect {
+        case (c, i) if c.contains("HashPartitioner") || (name == "Inversion" && c.contains("rowK.clone()")) =>
+          s"$name.scala:${i + 1}: ${c.trim}"
+      }
+    }
+    assert(hits.isEmpty, s"a second line layout or the raw-row broadcast is back:\n${hits.mkString("\n")}")
+  }
+
   test("the solves keep the solution and the factor diagonals off the driver: " +
     "Inversion.scala calls no collectAsMap or parallelize") {
     val f = new java.io.File(repoRoot, "src/main/scala/graft/matrix/Inversion.scala")

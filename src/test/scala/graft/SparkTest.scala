@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.{Outcome, TestSuite}
 
 /** One shared local session for the whole test run. */
 object SparkTest {
@@ -15,5 +16,20 @@ object SparkTest {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** The one source of a suite's fixture dirs: owner-tagged, so the
+    * dirs of a killed run are reclaimable by their dead owner's pid,
+    * and deleted when the test that made them ends, pass or fail. */
+  trait TempDirs extends TestSuite {
+    private val fixtures = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+    protected def tempDir(prefix: String): String = {
+      val d = java.nio.file.Files.createTempDirectory(s"${prefix}_${FsUtil.ownerTag}").toFile
+      fixtures.add(d)
+      d.toString
+    }
+    abstract override def withFixture(test: NoArgTest): Outcome =
+      try super.withFixture(test)
+      finally while (!fixtures.isEmpty) FsUtil.deleteTree(fixtures.poll())
   }
 }

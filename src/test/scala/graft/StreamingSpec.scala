@@ -10,22 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * ONE batch (the AvailableNow bounded replay st1 uses) or as multiple
   * micro-batches with state carried between them — i.e., the stateful
   * aggregate really is incremental, not a batch job in disguise. */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with SparkTest.TempDirs {
   lazy val spark: SparkSession = SparkTest.session
   val sf = "/root/testdata/sf0.001"
-
-  /** Every fixture dir a test makes: owner-tagged, so the dirs of a
-    * killed run are reclaimable by their dead owner's pid, and deleted
-    * when the test ends, pass or fail. */
-  private val fixtures = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
-  private def tempDir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"${prefix}_${FsUtil.ownerTag}").toFile
-    fixtures.add(d)
-    d.toString
-  }
-  override def withFixture(test: NoArgTest) =
-    try super.withFixture(test)
-    finally while (!fixtures.isEmpty) FsUtil.deleteTree(fixtures.poll())
 
   test("watermark drops data later than the delay in append mode") {
     import spark.implicits._

@@ -9,22 +9,33 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   * is read, so no job start is still in flight. */
 object JobCounter {
   def apply[A](sc: SparkContext)(body: => A): (Int, A) = {
-    val group = s"job-counter-${java.util.UUID.randomUUID()}"
     val jobs = new AtomicInteger
-    val listener = new SparkListener {
+    val r = CountedGroup(sc)(group => new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty(SparkContext.SPARK_JOB_GROUP_ID) == group)
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
+        if (CountedGroup.in(group, e.properties)) jobs.incrementAndGet()
+    })(body)
+    (jobs.get, r)
+  }
+}
+
+/** Runs `body` in a job group of its own with `listener(group)` attached,
+  * and drains the listener bus before returning. */
+private[spark] object CountedGroup {
+  def apply[A](sc: SparkContext)(listener: String => SparkListener)(body: => A): A = {
+    val group = s"counted-${java.util.UUID.randomUUID()}"
+    val l = listener(group)
+    sc.addSparkListener(l)
     sc.setJobGroup(group, "counted")
     try {
       val r = body
       sc.listenerBus.waitUntilEmpty()
-      (jobs.get, r)
+      r
     } finally {
       sc.clearJobGroup()
-      sc.removeSparkListener(listener)
+      sc.removeSparkListener(l)
     }
   }
+
+  def in(group: String, props: java.util.Properties): Boolean =
+    props != null && props.getProperty(SparkContext.SPARK_JOB_GROUP_ID) == group
 }
