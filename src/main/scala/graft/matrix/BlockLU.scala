@@ -63,7 +63,7 @@ object BlockLU {
     val lu = BlockSweep.run(sc, BlockSweep.group(blocks, q, q), 0 until q, q, materialize = true) { (k, rowK) =>
       val packed = fromDM(Option(rowK(k)).getOrElse(MlDM.zeros(blk, blk)))
       val indx = ludcmp(packed)
-      Inversion.countClamps(packed)
+      Inversion.pivotClamps.addAndGet(Inversion.clamps(packed))
       perms(k) = indx
       // packed is L below its diagonal, U on and above; each solve reads only its own triangle
       val piv = new Array[MlDM](q)

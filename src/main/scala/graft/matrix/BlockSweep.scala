@@ -12,7 +12,8 @@ import BlockModel.{Blocks, RowPartitioner}
   * block rows, [[BlockCholesky]] on block columns and the substitution
   * solves on [factor row | right-hand side] lines. A q×q block matrix
   * is held as q lines, each an array of its blocks (q slots, more when
-  * the lines carry a right-hand side), null for an absent (zero) block,
+  * the lines carry a right-hand side or, in the inverse, their own pivot
+  * inverse), null for an absent (zero) block,
   * line i in partition i ([[BlockModel.RowPartitioner]]):
   *
   *   group the blocks into lines once     [no shuffle for row-laid-out
@@ -20,26 +21,32 @@ import BlockModel.{Blocks, RowPartitioner}
   *   for k in the step order:
   *     one job materializes step k−1, fetches the slots of line k
   *       the step asks for
-  *     pivot work on them                            [driver, its cores]
+  *     pivot work on them         [driver, its cores; none in the inverse]
   *     broadcast the step's blocks, one per broadcast, concurrently
   *     one narrow update of every line: partition i reads line i and,
   *       only if its update asks, line k, both from the step's cache
   *     release step k−1's RDD and broadcasts
   *
-  * What a step of the inverse moves, n = q·blk. It fetches only M_kk
-  * and broadcasts only D⁻¹; its updates read M_kj from line k:
+  * What a step of the inverse moves, n = q·blk. Each line carries its
+  * own pivot inverse D⁻¹, which the task that updates it makes (see
+  * [[Inversion]]): a step fetches only line k's clamp count and
+  * broadcasts nothing; its updates read M_kj and D⁻¹ from line k:
   *
-  *   |                                 | shipping row k | this sweep     |
-  *   |---------------------------------|----------------|----------------|
-  *   | driver receives                 | n·blk doubles  | blk² doubles   |
-  *   | driver broadcasts               | n·blk doubles  | blk² doubles   |
-  *   | each update task not on the     | —              | n·blk doubles, |
-  *   | executor holding line k reads   |                | block manager  |
+  *   |                          | shipping row k | M_kk to the   | this sweep      |
+  *   |                          |                | driver        |                 |
+  *   |--------------------------|----------------|---------------|-----------------|
+  *   | driver receives          | n·blk doubles  | blk² doubles  | one count       |
+  *   | driver broadcasts        | n·blk doubles  | blk² doubles  | nothing         |
+  *   | each update task not on  | —              | n·blk doubles | (n+blk)·blk     |
+  *   | the executor holding     |                | from the      | doubles from    |
+  *   | line k reads             |                | block manager | the block mgr   |
   *
   * In local mode that read is of the cached line in the same process.
   * On a cluster it trades the broadcast's torrent fan-out for q−1 reads
-  * from the one executor that caches line k; nothing here has measured
-  * that trade on a cluster. LU, Cholesky and the solves broadcast the
+  * from the one executor that caches line k, and the inverse's pivot
+  * panels, run inside a task, use the executor's cores beyond the
+  * task's one slot; nothing here has measured either on a cluster.
+  * LU, Cholesky and the solves broadcast the
   * blocks their driver step computes (U_kj, L_ik, Y_k) and read no line
   * k: a factorization fetches line k whole (n·blk doubles), a solve with
   * m right-hand sides its diagonal block and B's slots. Each step's

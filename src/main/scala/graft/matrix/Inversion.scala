@@ -15,22 +15,28 @@ import LocalLA.{backSolveUpper, forwardSolveUnitLower, fromDM, toDM}
   * The inverse is one in-place block Gauss-Jordan sweep over the block
   * rows M of A, the same 2n³ flops as LU + triangular inverses + GEMM:
   *
-  *   for k in 0..q-1:  D⁻¹ = M_kk⁻¹ on the driver, then one narrow job
-  *     row k:   M_kj ← D⁻¹·M_kj (j≠k), M_kk ← D⁻¹
+  *   for k in 0..q-1:  one narrow job
+  *     row k:   M_kj ← D⁻¹·M_kj (j≠k), M_kk ← D⁻¹      (D⁻¹ = M_kk⁻¹)
   *     row i≠k: N = −M_ik·D⁻¹, M_ij ← M_ij + N·M_kj (j≠k), M_ik ← N
+  *     row k+1, then: D⁻¹ of its new M_{k+1,k+1}, kept in its line
   *
   * Each block product, fused with its update, is one
   * [[BlockKernel.gemm]] pass (C + s·A·B), as in every sweep here.
   * It runs on [[BlockSweep]], the protocol BlockLU and BlockCholesky
   * share: A is grouped by block row once, with no shuffle when A is in
-  * the row layout ([[BlockModel.RowPartitioner]]) and one otherwise;
-  * each step fetches only M_kk and broadcasts only D⁻¹ (blk² doubles
-  * each way), every row i≠k reads M_kj from row k in the step's cache,
-  * and the previous step's RDD and broadcasts are released once its job
-  * has materialized the rows. The pivot
-  * inversion is the driver's serial work between two step jobs, while
-  * every executor core idles; its solves run in column panels across
-  * the driver's cores. The last step runs in the caller's action.
+  * the row layout ([[BlockModel.RowPartitioner]]) and one otherwise,
+  * and the previous step's RDD is released once its job has
+  * materialized the rows. The pivot never leaves the tasks: each line
+  * carries its own D⁻¹, inverted where the line is (M_00 by the
+  * grouping, M_{k+1,k+1} by step k's task of row k+1), and every row
+  * i≠k reads D⁻¹ and M_kj from row k in the step's cache. A step
+  * broadcasts nothing and fetches only row k's clamp count, so the
+  * driver's work between two step jobs is the job launch. The
+  * inversion's solves run in column panels across the cores of the JVM
+  * that runs the task: in local mode those are the cores the other
+  * rows' tasks run on; on a cluster the panels use the executor's cores
+  * beyond the task's one slot, a trade nothing here has measured. The
+  * last step runs in the caller's action.
   * The pivot blocks are the Schur complements BlockLU factors, so
   * pivoting stays inside diagonal blocks (the reference's contract), and
   * D⁻¹ = U⁻¹·L⁻¹·P carries the permutation. Absent blocks are zero
@@ -48,45 +54,68 @@ object Inversion {
     sweep(a, n / blk, blk)
   }
 
-  /** Step k fetches M_kk and broadcasts D⁻¹ alone; the result keeps the row layout. */
-  private def sweep(a: Blocks, q: Int, blk: Int): Blocks =
-    BlockSweep.run(a.sparkContext, BlockSweep.group(a, q, q), 0 until q, q, materialize = false,
-        fetch = (k, j) => j == k) { (k, rowK) =>
-      val piv = new Array[MlDM](q)
-      piv(k) = invertPivot(Option(rowK(k)).getOrElse(MlDM.zeros(blk, blk)))
-      BlockSweep.Step(piv, (i, row, lineK, b) => eliminate(row, i, k, b(k), lineK))
-    }.mapPartitions(_.flatMap { case (i, row) => row.iterator.zipWithIndex.collect { case (m, j) if m != null => ((i, j), m) } },
+  /** Line i carries q blocks, then D⁻¹ = M_ii⁻¹ (slot q) and its clamp
+    * count (slot q+1) from the step before i's own until step i reads
+    * them. The grouping puts every line i in partition i and inverts
+    * M_00; step k's task of line k+1 inverts the new M_{k+1,k+1}. Step
+    * k fetches only slot q+1 of line k and broadcasts nothing; the
+    * result keeps the row layout and drops slots q and q+1. */
+  private def sweep(a: Blocks, q: Int, blk: Int): Blocks = {
+    val lines = BlockSweep.group(a, q, q + 2).mapPartitionsWithIndex({ (i, it) =>
+      val line = if (it.hasNext) it.next()._2 else new Array[MlDM](q + 2)
+      Iterator.single((i, if (i == 0) withPivotInverse(line, 0, q, blk) else line))
+    }, preservesPartitioning = true)
+    BlockSweep.run(a.sparkContext, lines, 0 until q, q + 2, materialize = false, fetch = (_, j) => j == q + 1) { (k, lineK) =>
+      pivotClamps.addAndGet(lineK(q + 1).values(0).toLong)
+      BlockSweep.Step(Array.empty, { (i, row, lineK, _) =>
+        val next = eliminate(row, i, k, q, lineK)
+        if (i == k + 1) withPivotInverse(next, i, q, blk) else next
+      })
+    }.mapPartitions(_.flatMap { case (i, row) => (0 until q).iterator.collect { case j if row(j) != null => ((i, j), row(j)) } },
       preservesPartitioning = true)
+  }
 
-  /** Step k of the sweep on block row i: `dInv` is D⁻¹'s broadcast,
-    * `rowK` reads row k of the step's input (not called by row k). */
-  private def eliminate(row: Array[MlDM], i: Int, k: Int, dInvB: Broadcast[MlDM], rowK: () => Array[MlDM]): Array[MlDM] =
+  /** A copy of line i with D⁻¹ of its pivot M_ii (a zero block when
+    * absent) in slot q and its clamp count, as a 1×1 block, in slot q+1. */
+  private def withPivotInverse(line: Array[MlDM], i: Int, q: Int, blk: Int): Array[MlDM] = {
+    val (dInv, clamps) = invertPivot(Option(line(i)).getOrElse(MlDM.zeros(blk, blk)))
+    val out = line.clone()
+    out(q) = dInv
+    out(q + 1) = new MlDM(1, 1, Array(clamps.toDouble))
+    out
+  }
+
+  /** Step k of the sweep on line i: row k takes D⁻¹ from its own slot q,
+    * a row i≠k reads it and M_kj from line k (`lineK`, not called by row
+    * k). Slots q and q+1 come out empty. A line with no block at all
+    * (block row i of A absent) stays so. */
+  private def eliminate(row: Array[MlDM], i: Int, k: Int, q: Int, lineK: () => Array[MlDM]): Array[MlDM] =
     if (i != k && row(k) == null) row // N = 0
-    else {
-      val dInv = dInvB.value
-      if (i == k) Array.tabulate(row.length)(j => if (j == k) dInv else if (row(j) == null) null else gemm(null, 1, dInv, row(j)))
-      else {
-        val negC = gemm(null, -1, row(k), dInv)
-        val mk = rowK()
-        Array.tabulate(row.length) { j =>
-          if (j == k) negC
-          else if (mk(j) == null) row(j)
-          else gemm(row(j), 1, negC, mk(j))
-        }
+    else if (i == k) {
+      val dInv = row(q)
+      if ((0 until q).forall(row(_) == null)) new Array[MlDM](row.length)
+      else Array.tabulate(row.length)(j => if (j == k) dInv else if (j >= q || row(j) == null) null else gemm(null, 1, dInv, row(j)))
+    } else {
+      val mk = lineK()
+      val negC = gemm(null, -1, row(k), mk(q))
+      Array.tabulate(row.length) { j =>
+        if (j == k) negC
+        else if (j >= q || mk(j) == null) row(j)
+        else gemm(row(j), 1, negC, mk(j))
       }
     }
 
-  /** D⁻¹ with partial pivoting inside the block: ludcmp gives P·D = L·U,
-    * so D⁻¹ = U⁻¹·L⁻¹·P, two substitutions against P·I. They run in
-    * column panels, one per driver core, each on its own slice of P·I,
-    * writing its columns of D⁻¹ in place. A column's flops and their
-    * order do not depend on the panel, so D⁻¹ is bit-identical to one
-    * serial solve. */
-  private[graft] def invertPivot(d: MlDM): MlDM = {
+  /** D⁻¹ with partial pivoting inside the block, and the number of
+    * pivots `ludcmp` clamped: ludcmp gives P·D = L·U, so
+    * D⁻¹ = U⁻¹·L⁻¹·P, two substitutions against P·I. They run in column
+    * panels, one per core of the JVM it runs in, each on its own slice
+    * of P·I, writing its columns of D⁻¹ in place. A column's flops and
+    * their order do not depend on the panel, so D⁻¹ is bit-identical to
+    * one serial solve. */
+  private[graft] def invertPivot(d: MlDM): (MlDM, Int) = {
     val n = d.numRows
     val packed = fromDM(d)
     val indx = LocalLA.ludcmp(packed)
-    countClamps(packed)
     val inv = new Array[Double](n * n)
     val panels = math.max(1, math.min(Runtime.getRuntime.availableProcessors, n / 64))
     IntStream.range(0, panels).parallel().forEach { p =>
@@ -104,7 +133,7 @@ object Inversion {
         c += 1
       }
     }
-    new MlDM(n, n, inv)
+    (new MlDM(n, n, inv), clamps(packed))
   }
 
   /** Inverse for ARBITRARY n (not a block multiple) over a row
@@ -128,12 +157,14 @@ object Inversion {
   /** Pivots clamped to [[LocalLA.Tiny]] by block-confined pivoting, in
     * the sweep's pivot blocks and in [[BlockLU.factor]]'s diagonal
     * blocks: nonzero means such a block was exactly singular, so the
-    * result is not faithful to A even if A is nonsingular. */
+    * result is not faithful to A even if A is nonsingular. Only the
+    * driver adds to it, once per pivot block: the sweep's tasks return
+    * their counts through the step jobs' results. */
   val pivotClamps = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Adds the pivots `ludcmp` clamped in `packed`, its in-place result, to [[pivotClamps]]. */
-  private[matrix] def countClamps(packed: Array[Array[Double]]): Unit =
-    pivotClamps.addAndGet(packed.indices.count(j => packed(j)(j) == LocalLA.Tiny))
+  /** The pivots `ludcmp` clamped in `packed`, its in-place result. */
+  private[matrix] def clamps(packed: Array[Array[Double]]): Int =
+    packed.indices.count(j => packed(j)(j) == LocalLA.Tiny)
 
   /** solve(A, X) = B by blocked triangular substitution (the
     * reference's O12 TRSM semantics,

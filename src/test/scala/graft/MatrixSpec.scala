@@ -309,7 +309,9 @@ class MatrixSpec extends AnyFunSuite with SparkTest.TempDirs {
     for (q <- Seq(1, 3, 5)) {
       val n = q * blk
       val a = MatrixGen.blocks(sc, n, blk, seed + q, diagBoost = n.toDouble)
-      val dist = toLocal(Inversion.inverse(sc, a, n, blk), n, n, blk)
+      val inv = Inversion.inverse(sc, a, n, blk).collect()
+      assert(inv.map(_._1).sorted.toSeq == (for (i <- 0 until q; j <- 0 until q) yield (i, j)), s"q=$q keys")
+      val dist = toLocal(sc.parallelize(inv.toSeq), n, n, blk)
       val loc = MatrixGen.local(n, blk, seed + q, diagBoost = n.toDouble)
       assert(residual(loc, dist) < 1e-6 * n, s"q=$q residual")
       assert(LocalLA.maxAbsDiff(dist, gepInverse(loc)) < 1e-9 * n, s"q=$q vs oracle")
@@ -398,7 +400,12 @@ class MatrixSpec extends AnyFunSuite with SparkTest.TempDirs {
     val blk = 8; val n = 2 * blk
     val a = Array.tabulate(n, n)((i, j) => if (i >= blk && i == j || (i - j).abs == blk) 1.0 else 0.0)
     val before = Inversion.pivotClamps.get()
-    Inversion.inverse(sc, localToBlocks(sc, a, blk), n, blk).count()
+    val inv = Inversion.inverse(sc, localToBlocks(sc, a, blk), n, blk)
+    inv.count()
+    assert(Inversion.pivotClamps.get() - before == blk)
+    // the driver counts each pivot block once: a second action on the
+    // un-persisted result adds nothing
+    inv.count()
     assert(Inversion.pivotClamps.get() - before == blk)
     // a pivot-safe matrix clamps nothing
     val ok = Inversion.pivotClamps.get()
@@ -420,9 +427,8 @@ class MatrixSpec extends AnyFunSuite with SparkTest.TempDirs {
       val (l, u) = LocalLA.splitLU(packed)
       val pI = Array.tabulate(n, n)((r, c) => if (indx(r) == c) 1.0 else 0.0)
       val serial = LocalLA.toDM(LocalLA.backSolveUpper(u, LocalLA.forwardSolveUnitLower(l, pI)))
-      val before = Inversion.pivotClamps.get()
-      val panel = Inversion.invertPivot(LocalLA.toDM(a))
-      assert(Inversion.pivotClamps.get() - before == clamps, s"n=$n clamps")
+      val (panel, panelClamps) = Inversion.invertPivot(LocalLA.toDM(a))
+      assert(panelClamps == clamps, s"n=$n clamps")
       assert(java.util.Arrays.equals(panel.values, serial.values), s"n=$n not bit-identical")
       clamps
     }
@@ -451,20 +457,52 @@ class MatrixSpec extends AnyFunSuite with SparkTest.TempDirs {
     assert(LocalLA.transpose(Array.empty[Array[Double]]).isEmpty)
   }
 
-  test("inverse releases every step's broadcasts but the last's (q=4)") {
-    import org.apache.spark.mllib.linalg.{DenseMatrix => MlDM}
-    import org.scalatest.concurrent.Eventually._
-    import org.scalatest.time.SpanSugar._
-    val blk = 16; val q = 4; val n = q * blk
-    val a = MatrixGen.blocks(sc, n, blk, seed, diagBoost = n.toDouble).persist()
-    a.count()
-    val before = org.apache.spark.LiveBroadcasts[MlDM](sc)
-    Inversion.inverse(sc, a, n, blk).count()
-    // a step broadcasts D⁻¹ alone; the last step's stays for the caller's action
-    eventually(timeout(10.seconds)) {
-      assert((org.apache.spark.LiveBroadcasts[MlDM](sc) -- before).size <= 1)
+  test("inverse(...).count() broadcasts no block and no task returns one (q=4, q=8)") {
+    // one block is 128 KB at blk=128: a step that fetched M_kk or
+    // broadcast D⁻¹ (q of each per inverse before D⁻¹ moved into the
+    // lines) fails here
+    val blk = 128
+    for (q <- Seq(4, 8)) {
+      val n = q * blk
+      val a = MatrixGen.blocks(sc, n, blk, seed, diagBoost = n.toDouble).persist()
+      a.count()
+      val live = org.apache.spark.LiveBroadcasts[MlDM](sc)
+      val (traffic, _) = org.apache.spark.TrafficCounter(sc, classOf[MlDM])(Inversion.inverse(sc, a, n, blk).count())
+      assert(traffic.broadcasts == 0, s"q=$q: $traffic")
+      // each task returns about 1 KB of accumulator updates; all q+1
+      // jobs together return less than one block
+      assert(traffic.maxTaskResultBytes < 8 * 1024, s"q=$q: $traffic")
+      assert(traffic.resultBytes < blk * blk * 8, s"q=$q: $traffic")
+      assert((org.apache.spark.LiveBroadcasts[MlDM](sc) -- live).isEmpty, s"q=$q: a block broadcast is live")
+      a.unpersist()
     }
-    a.unpersist()
+  }
+
+  test("inverse edge cases: block-diagonal and block-lower-triangular A match the local oracle " +
+    "with absent blocks absent; an absent block row keeps its key set and clamp count") {
+    val blk = 16; val q = 4; val n = q * blk
+    // A with only the blocks `keep` names: the distributed blocks and the local copy
+    def sparse(keep: (Int, Int) => Boolean): (Blocks, Array[Array[Double]]) = {
+      val a = MatrixGen.local(n, blk, seed, diagBoost = n.toDouble)
+      for (i <- 0 until n; j <- 0 until n if !keep(i / blk, j / blk)) a(i)(j) = 0.0
+      (localToBlocks(sc, a, blk).filter { case ((i, j), _) => keep(i, j) }, a)
+    }
+    def keys(keep: (Int, Int) => Boolean) = (for (i <- 0 until q; j <- 0 until q if keep(i, j)) yield (i, j)).toSet
+    for ((what, keep) <- Seq[(String, (Int, Int) => Boolean)](("block-diagonal", _ == _), ("block-lower-triangular", _ >= _))) {
+      val (blocks, a) = sparse(keep)
+      val before = Inversion.pivotClamps.get()
+      val inv = Inversion.inverse(sc, blocks, n, blk).collect().toMap
+      assert(Inversion.pivotClamps.get() == before, s"$what: clamped")
+      assert(inv.keySet == keys(keep), s"$what: keys")
+      assert(LocalLA.maxAbsDiff(toLocal(sc.parallelize(inv.toSeq), n, n, blk), gepInverse(a)) < 1e-9 * n, s"$what vs oracle")
+    }
+    // block row 2 absent: singular, so only its pivot block clamps (all
+    // blk pivots of a zero block), and line 2 emits nothing
+    val rowAbsent: (Int, Int) => Boolean = (i, _) => i != 2
+    val before = Inversion.pivotClamps.get()
+    val inv = Inversion.inverse(sc, sparse(rowAbsent)._1, n, blk).collect().toMap
+    assert(Inversion.pivotClamps.get() - before == blk)
+    assert(inv.keySet == keys(rowAbsent))
   }
 
   test("inverseAny: arbitrary n (not a block multiple) via identity padding") {

@@ -182,6 +182,20 @@ class SourceAuditSpec extends AnyFunSuite {
     assert(hits.isEmpty, s"a second line layout or the raw-row broadcast is back:\n${hits.mkString("\n")}")
   }
 
+  test("the inverse's pivot stays in its tasks: Inversion.sweep's BlockSweep.Step carries no blocks, " +
+    "and sweep calls no invertPivot on the driver") {
+    val f = new java.io.File(repoRoot, "src/main/scala/graft/matrix/Inversion.scala")
+    val lines = scala.io.Source.fromFile(f, "UTF-8").getLines().map(code).toVector
+    val start = lines.indexWhere(_.contains("def sweep("))
+    assert(start >= 0, s"$f has no sweep")
+    // sweep's code runs to the next member of the object
+    val end = lines.indexWhere(l => l.startsWith("  ") && !l.startsWith("   ") && l.trim.nonEmpty, start + 1)
+    val body = lines.slice(start, if (end < 0) lines.length else end).mkString("\n")
+    val steps = "BlockSweep\\.Step\\(\\s*([^,]*)".r.findAllMatchIn(body).map(_.group(1).trim).toList
+    assert(steps == List("Array.empty"), s"sweep's steps carry blocks: ${steps.mkString(", ")}")
+    assert(!body.contains("invertPivot"), "sweep calls invertPivot itself; only its line tasks may")
+  }
+
   test("the solves keep the solution and the factor diagonals off the driver: " +
     "Inversion.scala calls no collectAsMap or parallelize") {
     val f = new java.io.File(repoRoot, "src/main/scala/graft/matrix/Inversion.scala")
